@@ -49,16 +49,14 @@ object ScoreFunctions {
   def score(name: String, a: Column, b: Column): Column =
     score(resolve(name), a, b)
 
+  // E2 QuickVectorDistance and E5 AngularDistance are reached by name
+  // through `score(name, …)`.
   // E1 VectorDistance — euclidean over min(len) dims
   def vectorDistance(a: Column, b: Column): Column = score(ScoreKind.L2, a, b)
-  // E2 QuickVectorDistance — L1 over min(len) dims
-  def quickVectorDistance(a: Column, b: Column): Column = score(ScoreKind.L1, a, b)
   // E3 VectorMultiplication — dot product over min(len) dims
   def vectorMultiplication(a: Column, b: Column): Column = score(ScoreKind.Dot, a, b)
   // E4 CosineSimilarity — zero-padded, clamped, zero-norm-guarded
   def cosineSimilarity(a: Column, b: Column): Column = score(ScoreKind.Cosine, a, b)
-  // E5 AngularDistance — 1 - acos(cos)/π
-  def angularDistance(a: Column, b: Column): Column = score(ScoreKind.Angular, a, b)
 
   // ---------------------------------------------------------------------
   // HOF-composed executable spec (identical semantics, CodegenFallback).

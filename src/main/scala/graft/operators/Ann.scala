@@ -318,12 +318,7 @@ object Ann {
     (model.transform(prepared).drop("__v"), model.clusterCenters.map(_.toArray))
   }
 
-  /** J2 via IVF: probe the `nProbe` cells whose centroids are nearest the
-    * query (tiny driver-side argmin over the model), then exact kNN inside
-    * the probed cells — a partition-pruned scan when the table is stored
-    * bucketed by `cluster`. */
-  /** The `nProbe` cluster ids nearest the (normalized-if-needed) query —
-    * shared by every IVF probe path so none can drop the normalization. */
+  /** The `nProbe` cluster ids nearest the (normalized-if-needed) query. */
   private def nearestCells(centroids: Array[Array[Double]], query: Seq[Float],
       cfg: SearchConfig, nProbe: Int): Array[Int] = {
     val norm = needsNormalize(cfg.scoreFuncName)
@@ -341,6 +336,10 @@ object Ann {
       .take(nProbe).map(_._2)
   }
 
+  /** J2 via IVF: probe the `nProbe` cells whose centroids are nearest the
+    * query (tiny driver-side argmin over the model), then exact kNN inside
+    * the probed cells — a partition-pruned scan when the table is stored
+    * bucketed by `cluster`. */
   def ivfSearch(indexed: DataFrame, centroids: Array[Array[Double]],
       query: Seq[Float], cfg: SearchConfig, nProbe: Int): DataFrame = {
     val probes = nearestCells(centroids, query, cfg, nProbe)
@@ -584,25 +583,6 @@ object Ann {
     }
   }
 
-  /** Delete-set twin of [[ivfCompact]] (compact takes the KEEP set; a
-    * [[graft.operators.SnapshotDiff]] hands you `removed ∪ changed`):
-    * rewrite the stored index WITHOUT `ids` under the same versioned
-    * swap; changed-vector update composes as remove-then-[[ivfAppend]]
-    * with the new embeddings (fixed quantizer — the documented append
-    * contract). */
-  def ivfRemove(spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: DataFrame, idCol: String,
-      sweepGraceMs: Long = SweepGraceMs): (DataFrame, Array[Array[Double]]) = {
-    val (stored, centroids) = ivfLoad(spark, dir)
-    require(stored.columns.contains(idCol),
-      s"ivfRemove: stored index has no column '$idCol' (has ${stored.columns.mkString(", ")})")
-    val kept = stored.join(
-      ids.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    ivfSave(dir, kept, centroids, sweepGraceMs)
-    (kept, centroids)
-  }
-
   // ------------------------------------------------------------------- PQ
 
   /** Train a product-quantization codebook: `m` seeded KMeans fits, one
@@ -703,33 +683,6 @@ object Ann {
       s"score ${cfg.scoreFuncName} needs a codebook trained with " +
         "pqTrain(..., normalize = true): squared-L2 ADC only ranks like " +
         "cosine/angular on the unit sphere")
-
-  /** IVF×PQ, the canonical 100-TB ANN composition: the coarse quantizer
-    * prunes to `nProbe` cells (partition pruning on the stored layout)
-    * and the scan inside the surviving cells scores CODES only (ADC),
-    * with the exact refine on the shortlist. `encodedIndexed` = ivfBuild
-    * output + pqEncode codes in one table, stored partitioned by
-    * `cluster`. */
-  def ivfPqSearch(encodedIndexed: DataFrame, centroids: Array[Array[Double]],
-      cb: graft.functions.PqCodebook, query: Seq[Float], cfg: SearchConfig,
-      nProbe: Int, refine: Int = 8): DataFrame = {
-    val probes = nearestCells(centroids, query, cfg, nProbe)
-    pqSearch(encodedIndexed.filter(col("cluster").isin(probes: _*)),
-      cb, query, cfg, refine)
-  }
-
-  /** IVF×SQ8: coarse cells prune the scan (partition pruning on the
-    * stored layout), the surviving cells shortlist on dequantized int8
-    * codes, exact refine on the originals. The codebook-free sibling of
-    * [[ivfPqSearch]] — heavier codes (dim bytes vs m) but no training
-    * and a deterministic, oracle-replayable quantizer. */
-  def ivfSq8Search(encodedIndexed: DataFrame, centroids: Array[Array[Double]],
-      query: Seq[Float], cfg: SearchConfig, nProbe: Int,
-      refine: Int = 4): DataFrame = {
-    val probes = nearestCells(centroids, query, cfg, nProbe)
-    sq8Search(encodedIndexed.filter(col("cluster").isin(probes: _*)),
-      query, cfg, refine)
-  }
 
   /** Batch IVF×PQ — the full 100-TB batch-ANN composition: every query
     * probes its `nProbe` nearest cells (partition-pruned on the stored
@@ -841,31 +794,6 @@ object Ann {
     val q2 = queries.withColumn("__cand_q", col(Search.QueryIdCol))
     Search.multiSearch(shortQ, q2, cfg, joinCols = Seq("__cand_q"))
       .drop("__cand_q")
-  }
-
-  /** Split-table PQ scan — the memory story at full scale: the ADC pass
-    * reads a CODES-ONLY table (m ints per row — the index that fits in
-    * RAM/page cache), and only the k·refine shortlist joins back to the
-    * fat vectors table for the exact re-score (a broadcast semi-join;
-    * bucket the vectors table by `idCol` to make it a pruned lookup). */
-  def pqSearchSplit(codes: DataFrame, vectors: DataFrame, idCol: String,
-      cb: graft.functions.PqCodebook, query: Seq[Float], cfg: SearchConfig,
-      refine: Int = 8): DataFrame = {
-    requirePqScoreSpace(cb, cfg)
-    val lut = pqLut(cb, query)
-    // JSON-filter configs need the label columns IN the codes table (the
-    // filter must precede the bounded shortlist) — shortlistGuard enforces
-    val shortlist = shortlistGuard(
-      codes.withColumn("__adc", graft.functions.PqAdc(col("codes"), lut)),
-      cfg, col("__adc"))
-      .orderBy(col("__adc").asc, col(idCol).asc) // deterministic under ADC ties
-      .limit(cfg.limit * refine)
-      .select(idCol)
-    // filters were applied row-locally on the codes scan; the exact
-    // re-score must NOT re-apply them — the skinny vectors table need not
-    // carry the label columns at all (that's the point of the split)
-    Search.search(vectors.join(broadcast(shortlist), idCol), query,
-      cfg.copy(filters = Nil, groupFilters = Nil))
   }
 
   /** The query's m×ksub squared-L2 lookup table vs every sub-centroid. */

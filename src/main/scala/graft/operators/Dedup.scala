@@ -582,16 +582,6 @@ object Dedup {
       .filter(col("shared") >= minHits)
   }
 
-  /** Purge wrapper for [[ngramContaminationBloom]]. */
-  def decontaminateExactBloom(train: DataFrame, eval: DataFrame,
-      idCol: String, textCol: String, n: Int = 13, minHits: Long = 1L,
-      bitsPerGram: Int = 8): DataFrame =
-    train.join(
-      ngramContaminationBloom(train, eval, idCol, textCol, n, minHits,
-        bitsPerGram)
-        .select(col("id_l").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-
   // --------------------------------------------------- span-level stripping
 
   /** SPAN-level boilerplate removal — the complement of doc-level dedup:

@@ -209,7 +209,7 @@ object LangId {
     * SPEC of the kernel (LangIdSpec pins row-identical output); the SQL
     * shape the DuckDB oracle replays. NOT the runtime path (see
     * [[scoreDocs]]). */
-  def scoreDocsExpanded(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def scoreDocsExpanded(docs: DataFrame, idCol: String, textCol: String,
       model: LidModel, passthrough: Seq[String] = Nil): DataFrame = {
     checkReserved(idCol, passthrough)
     val spark = docs.sparkSession

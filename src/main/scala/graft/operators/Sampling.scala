@@ -98,12 +98,6 @@ object Sampling {
     }
   }
 
-  /** Seeded uniform sample — thin wrapper documenting the tradeoff: fast
-    * and distributed, but partition-layout dependent; use the
-    * deterministic variant when reproducibility across engines matters. */
-  def seededFraction(df: DataFrame, fraction: Double, seed: Long): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
-
   /** Deterministic global shuffle order: every id gets its position in
     * the total order (idHash(id), id) — the epoch-shuffle a training
     * pipeline needs (reproducible order, resumable positions) WITHOUT a

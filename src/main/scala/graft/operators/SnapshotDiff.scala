@@ -32,16 +32,6 @@ object SnapshotDiff {
   val Changed = "changed"
   val Unchanged = "unchanged"
 
-  /** 128-bit content fingerprint — two independent 64-bit xxhash lanes
-    * (the second over a salted input) packed in one struct, for corpora
-    * past the 64-bit birthday envelope. Drop-in `fp` argument for
-    * [[diff]]/[[census]] (the struct compares null-safely like any
-    * scalar); the polyhash/xxhash64 single-lane fingerprints stay the
-    * oracle-replayable defaults. */
-  def fp128(content: Column): Column =
-    struct(xxhash64(content).as("h"),
-      xxhash64(lit("graft-h2"), content).as("h2"))
-
   /** Row-level diff: one row per id present in EITHER snapshot, with its
     * status and (optionally) `carry` columns taken from the new side,
     * falling back to the old side for removed rows. `fp` is evaluated

@@ -295,7 +295,7 @@ object LmQueries {
 
   // --------------------------- per-doc rejection audit (r11)
 
-  /** Gate thresholds with PROBED margins (AuditProbe, sf0.01 en-LM full
+  /** Gate thresholds with PROBED margins (measured at sf0.01, en-LM full
     * vocab): real docs avg_logprob ∈ [−3.74, −3.24], planted spam −3.65,
     * planted all-OOV gibberish −10.28 → −6.0 separates by ≥2.3 nats both
     * sides; real docs avg_logodds ≥ 2.26, spam −3.30 → −1.0 separates by

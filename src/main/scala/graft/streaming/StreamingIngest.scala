@@ -67,26 +67,6 @@ object StreamingIngest {
       }
   }
 
-  /** Custom keyed state via mapGroupsWithState: running per-key event
-    * counts that survive across micro-batches — the Spark-native shape for
-    * any stateful per-entity logic (the reference's closest analog is its
-    * per-dataset RecentInsertCount, data.go:54). State lives in the
-    * streaming state store (RocksDB/HDFS-backed on a cluster). */
-  def runningCounts(events: DataFrame, keyCol: String)
-      : org.apache.spark.sql.Dataset[(String, Long)] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events.select(col(keyCol).cast("string")).as[String]
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, (String, Long)](
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[String], state: GroupState[Long]) =>
-          val next = state.getOption.getOrElse(0L) + rows.size
-          state.update(next)
-          (key, next)
-      }
-  }
-
   /** Event-time windowed counts with a watermark — the standard streaming
     * aggregation the reference lacks entirely (its "streaming" is RPC
     * result streaming); included as the §2.7 Spark-native surface. */

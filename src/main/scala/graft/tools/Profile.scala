@@ -44,10 +44,9 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     // the listener bus is asynchronous: without a drain, late events from
-    // run N bleed into run N+1's counters (ADVICE r12). The bus API is
-    // private[spark]; a short sleep after each timed action is an ample
-    // drain for a measurement tool (events are driver-local, micro-batched)
-    def drainListenerBus(): Unit = Thread.sleep(400)
+    // run N bleed into run N+1's counters (ADVICE r12)
+    def drainListenerBus(): Unit =
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
 
     def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

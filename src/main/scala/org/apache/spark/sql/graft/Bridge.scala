@@ -37,4 +37,10 @@ object Bridge {
     * appears via SQL function resolution). */
   def convertedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Block until every listener-bus event posted so far has reached every
+    * listener (`LiveListenerBus.waitUntilEmpty` is `private[spark]`);
+    * throws a `TimeoutException` if the bus has not drained in a minute. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -281,13 +281,17 @@ class AnnSpec extends SparkTestBase {
       .filter($"c".isNull).count() == 1L)
   }
 
-  test("ivfRemove == ivfCompact with the complement; update = remove+append") {
+  test("ivfCompact with the complement keep-set; update = compact+append") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-rm").toString
     val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 8,
       normalize = false)
     Ann.ivfSave(dir, indexed, centroids)
+    // a delete set (SnapshotDiff's removed ∪ changed) becomes the keep-set
+    // of the stored ids minus the deleted ones
+    def complement(gone: org.apache.spark.sql.DataFrame) =
+      Ann.ivfLoad(spark, dir)._1.select("vec_id").join(gone, Seq("vec_id"), "left_anti")
     val gone = emb.filter($"vec_id" % 3 === 0).select("vec_id")
-    val (kept, after) = Ann.ivfRemove(spark, dir, gone, "vec_id",
+    val (kept, after) = Ann.ivfCompact(spark, dir, complement(gone), "vec_id",
       sweepGraceMs = 0L)
     assert(after.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq)
     val want = emb.filter($"vec_id" % 3 =!= 0)
@@ -295,12 +299,13 @@ class AnnSpec extends SparkTestBase {
     assert(kept.select("vec_id").as[Long].collect().toSet == want)
     assert(Ann.ivfLoad(spark, dir)._1
       .select("vec_id").as[Long].collect().toSet == want)
-    // changed-vector update: remove the id, append its new embedding —
+    // changed-vector update: drop the id, append its new embedding —
     // reachable again through the FIXED quantizer
     val moved = emb.filter($"vec_id" === 1L)
       .select($"vec_id", $"embedding")
-    Ann.ivfRemove(spark, dir, moved.select("vec_id"), "vec_id",
+    Ann.ivfCompact(spark, dir, complement(moved.select("vec_id")), "vec_id",
       sweepGraceMs = 0L)
+    assert(Ann.ivfLoad(spark, dir)._1.filter($"vec_id" === 1L).isEmpty)
     Ann.ivfAppend(spark, dir, moved, "embedding", normalize = false)
     val (loaded, cents) = Ann.ivfLoad(spark, dir)
     val hit = Ann.ivfSearch(loaded, cents, queryVec(1L),
@@ -574,21 +579,6 @@ class AnnSpec extends SparkTestBase {
     encoded.unpersist()
   }
 
-  test("IVF x PQ composition and split-table PQ keep recall") {
-    val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 8, normalize = false)
-    val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
-    val both = Ann.pqEncode(indexed, "embedding", cb).cache()
-    val rIvfPq = recallAt10("VectorDistance", higher = false,
-      (q, c) => Ann.ivfPqSearch(both, centroids, cb, q, c, nProbe = 6, refine = 8))
-    assert(rIvfPq >= 0.7, s"IVFxPQ recall $rIvfPq") // two approximations stack
-    // split tables: codes-only ADC scan, shortlist joins back to vectors
-    val codes = both.select("vec_id", "codes")
-    val rSplit = recallAt10("VectorDistance", higher = false,
-      (q, c) => Ann.pqSearchSplit(codes, emb, "vec_id", cb, q, c, refine = 8))
-    assert(rSplit >= 0.8, s"split PQ recall $rSplit")
-    both.unpersist()
-  }
-
   test("batch IVF x PQ: compressed batch scan keeps recall vs exact batch") {
     val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 8, normalize = false)
     val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
@@ -637,15 +627,6 @@ class AnnSpec extends SparkTestBase {
       .select(Search.QueryIdCol, "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(full == exact, "nProbe=k with a wide refine must equal exact")
-    encoded.unpersist()
-  }
-
-  test("IVF x SQ8 composition keeps recall") {
-    val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 8, normalize = false)
-    val encoded = Ann.sq8Encode(indexed, "embedding").cache()
-    val r = recallAt10("VectorDistance", higher = false,
-      (q, c) => Ann.ivfSq8Search(encoded, centroids, q, c, nProbe = 6, refine = 4))
-    assert(r >= 0.7, s"IVFxSQ8 recall $r") // two approximations stack
     encoded.unpersist()
   }
 
@@ -726,18 +707,6 @@ class AnnSpec extends SparkTestBase {
     val encoded = Ann.pqEncode(lab, "embedding", cb)
     assert(Ann.pqSearch(encoded, cb, queryVec(0L), c, refine = 4).count() == 10,
       "pq shortlist is filter-blind")
-    // split layout: a codes table WITHOUT the label column cannot honor the
-    // filter before its bounded shortlist — must refuse, not under-deliver
-    intercept[IllegalArgumentException] {
-      Ann.pqSearchSplit(encoded.select("vec_id", "codes"), lab, "vec_id",
-        cb, queryVec(0L), c)
-    }
-    // codes WITH labels + a SKINNY vectors table (no labels) is the
-    // intended split: filter happens once on the codes scan, the exact
-    // re-score must not demand the label columns again
-    val split = Ann.pqSearchSplit(encoded.select("vec_id", "codes", "label"),
-      emb, "vec_id", cb, queryVec(0L), c, refine = 4)
-    assert(split.count() == 10, "split shortlist is filter-blind or re-filters")
   }
 
   test("route: Annoy* names go approximate, others exact (search.go:136-141)") {

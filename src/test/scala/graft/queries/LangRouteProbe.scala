@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * (r12): prints the avg_logprob distribution of each LID-predicted
   * language slice of documents(doc_id < 150) under ITS OWN
   * slice-trained bigram LM, so the gate threshold can be pinned with
-  * measured margins (the AuditProbe discipline).
+  * measured margins, like the audit gates in LmQueries.
   * sbt "Test/runMain graft.queries.LangRouteProbe /root/testdata/sf0.01"
   */
 object LangRouteProbe {

@@ -146,24 +146,6 @@ class StreamingIngestSpec extends SparkTestBase {
     assert(state.filter(col("id") === 12L).isEmpty)
   }
 
-  test("mapGroupsWithState: running counts accumulate across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[String]
-    val counts = StreamingIngest.runningCounts(stream.toDF.toDF("user"), "user")
-    val q = counts.toDF("user", "n").writeStream
-      .format("memory").queryName("rc").outputMode("update").start()
-    try {
-      stream.addData("a", "a", "b")
-      q.processAllAvailable()
-      stream.addData("a", "b", "b")
-      q.processAllAvailable()
-      // update mode: last emitted row per key reflects the running total
-      val last = spark.table("rc").groupBy("user").agg(max("n").as("n"))
-        .as[(String, Long)].collect().toMap
-      assert(last == Map("a" -> 3L, "b" -> 3L))
-    } finally q.stop()
-  }
-
   test("watermarked windowed counts over an event stream") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String)]
