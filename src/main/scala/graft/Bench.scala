@@ -82,12 +82,14 @@ object Bench {
     // from the SAME constant the timing loop uses (ADVICE r8). ONLY the
     // contract-shaped no-arg run writes it: an arg-filtered dev run would
     // silently clobber the full-set artifact with a partial one.
+    val master = spark.sparkContext.master
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val self =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""failed":$failed,"sf":"$sfJson",""" +
         s""""config":{"spark":"${spark.version}",""" +
-        s""""master":"${spark.sparkContext.master}",""" +
-        s""""shufflePartitions":"${spark.conf.get("spark.sql.shuffle.partitions")}",""" +
+        s""""master":"$master",""" +
+        s""""shufflePartitions":"$shufflePartitions",""" +
         s""""queryCount":${results.size},"bestOf":$bestOf,""" +
         s""""slowBestOf":$slowBestOf,"slowCutoffSec":$slowCutoffSec,""" +
         s""""wallClockUtc":"${java.time.Instant.now()}"}}"""
@@ -96,13 +98,43 @@ object Bench {
     // that cannot be compared across rounds (this happened once — the
     // committed artifact silently became an sf0.01 run)
     val benchGradeSf = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+    // ... and never over an artifact from another run config: numbers
+    // from local[8] and local[32] cannot be compared across rounds either
     if (only.isEmpty && benchGradeSf)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
-        self.getBytes("UTF-8"))
-      catch { case scala.util.control.NonFatal(e) =>
+      try {
+        val path = java.nio.file.Paths.get("BENCH_SELF.json")
+        val conflict =
+          if (!java.nio.file.Files.exists(path)) None
+          else overwriteConflict(new String(java.nio.file.Files.readAllBytes(path),
+            "UTF-8"), master, shufflePartitions)
+        conflict match {
+          case Some(msg) => System.err.println(msg)
+          case None => java.nio.file.Files.write(path, self.getBytes("UTF-8"))
+        }
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write BENCH_SELF.json: $e") }
     else if (only.isEmpty)
       System.err.println(s"[bench] dev SF dir $sfDir — BENCH_SELF.json not written")
     spark.stop()
+  }
+
+  /** Why a run under (`master`, `shufflePartitions`) must not overwrite the
+    * `BENCH_SELF.json` text `existing`: a one-line message naming both
+    * configs when the artifact's `config.master` or
+    * `config.shufflePartitions` differs, None when they match or the text
+    * carries no config to compare. */
+  def overwriteConflict(existing: String, master: String,
+      shufflePartitions: String): Option[String] = {
+    val config = scala.util.Try(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(existing).path("config"))
+      .toOption.filter(_.isObject)
+    config.flatMap { c =>
+      val (oldMaster, oldParts) =
+        (c.path("master").asText(""), c.path("shufflePartitions").asText(""))
+      if (oldMaster == master && oldParts == shufflePartitions) None
+      else Some(s"[bench] BENCH_SELF.json not overwritten: it holds a run with " +
+        s"master=$oldMaster shufflePartitions=$oldParts, this run has " +
+        s"master=$master shufflePartitions=$shufflePartitions")
+    }
   }
 }

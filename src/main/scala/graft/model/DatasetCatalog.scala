@@ -106,17 +106,34 @@ final class DatasetCatalog(spark: SparkSession, rootDir: String) {
       st.isFile && st.getPath.getName.startsWith("part-"))
   }
 
+  /** The relation last resolved per name, with the committed version path
+    * it was read from. */
+  private val resolved = TrieMap.empty[String, (String, DataFrame)]
+
   /** Read a dataset's table (empty Datum-schema table when never written).
     * Resolution order: bucketed session table (keeps bucket metadata) →
     * sidecar-committed version → top-level part files (a bucketed layout
     * from a previous session, readable but without bucket metadata) →
-    * empty. */
+    * empty.
+    *
+    * The `_current` sidecar is re-read on every call, so a commit by this
+    * catalog or by another one on the same root is seen on the next call.
+    * A committed version is resolved once: each `data_*` dir is written
+    * once under a fresh name and never appended to, so while the sidecar
+    * names the same dir the stored relation (schema and file listing) is
+    * still exact, and the per-call footer-inference job is skipped. */
   def table(name: String): DataFrame = {
     getOrCreate(name)
     if (bucketedNames.contains(name) && spark.catalog.tableExists(name))
       spark.table(name)
     else currentVersionPath(name) match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => resolved.get(name) match {
+        case Some((`p`, df)) => df
+        case _ =>
+          val df = spark.read.parquet(p)
+          resolved.put(name, (p, df))
+          df
+      }
       case None if hasTopLevelParts(dataPath(name)) =>
         spark.read.parquet(dataPath(name))
       case None => spark.createDataFrame(

@@ -73,11 +73,55 @@ class DatasetCatalogSpec extends SparkTestBase {
     // the superseded version survives the sweep grace window — the committed
     // copy a crash mid-write would fall back to is never deleted eagerly
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/data/ds", v1)))
+    // the committed version's relation is resolved before the torn write
+    val warm = c.table("ds")
     // torn write: data lands but the sidecar swap never happens → readers
     // keep resolving the committed version
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$dir/data/ds", s"data_${System.nanoTime()}"))
     assert(c.table("ds").count() == 1)
+    assert(c.table("ds") eq warm)
+  }
+
+  /** Jobs started by `body` on this thread (tagged with a private job
+    * group, so work from elsewhere in the JVM is not counted). */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val group = s"catalog-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "DatasetCatalogSpec job count")
+    try {
+      val r = body
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("table: an unchanged committed version is read with no job; every commit is seen next call") {
+    import spark.implicits._
+    val dir = tmp()
+    val c1 = new DatasetCatalog(spark, dir)
+    def ids(c: DatasetCatalog) = c.table("ds").select($"id").as[Long].collect().sorted.toSeq
+    c1.write("ds", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    assert(ids(c1) == Seq(1L, 2L))
+    val (_, jobs) = jobsIn(c1.table("ds"))
+    assert(jobs == 0, s"repeat read of an unchanged version started $jobs jobs")
+    assert(ids(c1) == Seq(1L, 2L))
+    // a commit through the same catalog
+    c1.write("ds", Seq((3L, "c")).toDF("id", "v"))
+    assert(ids(c1) == Seq(3L))
+    // a commit through a second catalog on the same root
+    new DatasetCatalog(spark, dir).write("ds", Seq((4L, "d"), (5L, "e")).toDF("id", "v"))
+    assert(ids(c1) == Seq(4L, 5L))
   }
 
   test("a versioned write supersedes an earlier bucketed write of the same name") {
