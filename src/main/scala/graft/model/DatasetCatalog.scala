@@ -162,11 +162,7 @@ final class DatasetCatalog(spark: SparkSession, rootDir: String) {
     * the write action completes. */
   private def writeVersioned(name: String)(write: String => Unit): Unit = {
     getOrCreate(name)
-    val dir = dataPath(name)
-    val version = VersionedDir.newVersion()
-    write(s"$dir/$version")
-    VersionedDir.writeSidecar(spark, dir, CurrentSidecar, Seq(version))
-    VersionedDir.sweepOldVersions(spark, dir, CurrentSidecar, VersionedDir.SweepGraceMs)
+    VersionedDir.commit(spark, dataPath(name), CurrentSidecar, Seq(_))(write)
     // a bucketed session table registered earlier now points at STALE data
     // (it lists only top-level part files, never the new data_* subdir) —
     // without this, table() would keep serving, and upsertInto keep merging

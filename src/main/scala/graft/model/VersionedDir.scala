@@ -5,9 +5,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Versioned-directory persistence with an atomic sidecar swap — the
   * shared analog of the reference's Annoy index save + atomic swap
-  * (data/newsync.go:169-222), used by the ANN index savers
-  * ([[graft.operators.Ann.ivfSave]]/`pqSave`) and the dataset catalog's
-  * table writes.
+  * (data/newsync.go:169-222). [[commit]] is the one save path; its
+  * committers are the dataset catalog's table writes
+  * ([[DatasetCatalog]]), the IVF and PQ index savers
+  * ([[graft.operators.Ann.ivfSave]] / `pqSave`), the cluster state
+  * (`Clustering.clusterSave`), the lexical index
+  * (`TextRetrieval.indexSave` and its compact/remove rewrites), sketch
+  * profiles (`Sketches.profileSave`), attribute frames
+  * (`Attributes.attrSave`) and the stored query encodings in
+  * `graft.queries.AnnQueries` (SQ8, IVF×PQ, IVF×SQ8, RP, BQ, PCA).
   *
   * Protocol: each save writes data into a FRESH `data_<nanos>` subdir,
   * then atomically renames a sidecar whose first line names that subdir.
@@ -15,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   * write and sidecar rename) leaves the previous sidecar pointing at the
   * previous, complete data — an in-place `mode("overwrite")` would instead
   * delete the only copy before the new one commits. Superseded data dirs
-  * are swept best-effort AFTER the swap.
+  * are swept best-effort AFTER the swap, once they are older than the
+  * fixed [[SweepGraceMs]] (10 minutes; not a per-call setting).
   *
   * All I/O goes through the Hadoop FileSystem resolved from the dir's own
   * scheme, NOT driver-local java.nio — the data parquet is written by
@@ -24,10 +31,24 @@ import org.apache.spark.sql.SparkSession
   */
 object VersionedDir {
 
-  /** Default sweep grace: longer than any plausible sidecar-rename lag. */
+  /** Sweep grace: longer than any plausible sidecar-rename lag. */
   val SweepGraceMs: Long = 10 * 60 * 1000L
 
-  def newVersion(): String = s"data_${System.nanoTime()}"
+  private def newVersion(): String = s"data_${System.nanoTime()}"
+
+  /** Commit one new version of the state under `dir`: `write` fills the
+    * fresh `dir/data_<nanos>` path, then `sidecar` is swapped to
+    * `lines(version)` (its first line must name the version, alone or as
+    * `version;...`), then superseded versions are swept. An exception
+    * from `write` leaves the sidecar — and so what readers serve —
+    * unchanged. */
+  def commit(spark: SparkSession, dir: String, sidecar: String,
+      lines: String => Seq[String])(write: String => Unit): Unit = {
+    val version = newVersion()
+    write(s"$dir/$version")
+    writeSidecar(spark, dir, sidecar, lines(version))
+    sweepOldVersions(spark, dir, sidecar)
+  }
 
   def fsAndPath(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -69,18 +90,18 @@ object VersionedDir {
     *  - the kept version is whatever the sidecar names NOW (re-read after
     *    our rename) — if a concurrent save won the sidecar race, its data
     *    survives and ours is the stale one;
-    *  - only versions whose mtime is older than `graceMs` are deleted — a
-    *    writer mid-`parquet` (data written, sidecar not yet renamed) has a
-    *    fresh mtime and is spared; genuinely orphaned dirs age out and the
-    *    NEXT save sweeps them.
+    *  - only versions whose mtime is older than [[SweepGraceMs]] are
+    *    deleted — a writer mid-`parquet` (data written, sidecar not yet
+    *    renamed) has a fresh mtime and is spared; genuinely orphaned dirs
+    *    age out and the NEXT save sweeps them.
     * Best-effort, ignores IO races; without the sweep a periodic rebuild
     * leaks one full table copy per save. */
-  def sweepOldVersions(spark: SparkSession, dir: String,
-      sidecarName: String, graceMs: Long): Unit = {
+  private def sweepOldVersions(spark: SparkSession, dir: String,
+      sidecarName: String): Unit = {
     val (fs, base) = fsAndPath(spark, dir)
     // sidecar line 1 is `version` (IVF/catalog) or `version;...` (PQ)
     val keep = readSidecar(spark, dir, sidecarName).head.split(";")(0)
-    val cutoff = System.currentTimeMillis() - graceMs
+    val cutoff = System.currentTimeMillis() - SweepGraceMs
     fs.listStatus(base).iterator
       .filter(st => st.getPath.getName.startsWith("data_") &&
         st.getPath.getName != keep && st.getModificationTime < cutoff)

@@ -431,39 +431,32 @@ object Ann {
     * complete data+centroids — never new data under old centroids (a
     * fresh KMeans fit's cluster ids bear no relation to old centroid
     * indices). Superseded data dirs are swept best-effort AFTER the swap. */
-  def ivfSave(dir: String, indexed: DataFrame, centroids: Array[Array[Double]],
-      sweepGraceMs: Long = SweepGraceMs): Unit = {
-    val version = graft.model.VersionedDir.newVersion()
-    // ONE writer task per cell: without the repartition every shuffled
-    // task holds rows of ~every cluster and writes a file into ~every
-    // partition dir — ~k × tasks tiny files (the r12 decade measured the
-    // 5.25M auto-k probe at 29.6 s against ~330k such files, vs ~2 s
-    // against one-file-per-cell). The extra shuffle is build-time cost,
-    // which amortizes; probes pay the file count forever.
-    indexed.repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/$version")
-    val spark = indexed.sparkSession
-    graft.model.VersionedDir.writeSidecar(spark, dir, "centroids.csv",
-      version +: centroids.map(_.mkString(",")).toSeq)
-    graft.model.VersionedDir.sweepOldVersions(spark, dir, "centroids.csv", sweepGraceMs)
+  def ivfSave(dir: String, indexed: DataFrame,
+      centroids: Array[Array[Double]]): Unit =
+    graft.model.VersionedDir.commit(indexed.sparkSession, dir, "centroids.csv",
+        _ +: centroids.map(_.mkString(",")).toSeq) { path =>
+      // ONE writer task per cell: without the repartition every shuffled
+      // task holds rows of ~every cluster and writes a file into ~every
+      // partition dir — ~k × tasks tiny files (the r12 decade measured the
+      // 5.25M auto-k probe at 29.6 s against ~330k such files, vs ~2 s
+      // against one-file-per-cell). The extra shuffle is build-time cost,
+      // which amortizes; probes pay the file count forever.
+      indexed.repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster").parquet(path)
+    }
+
+  /** The IVF sidecar: (version the data lives in, centroids). */
+  private def readIvfSidecar(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (String, Array[Array[Double]]) = {
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "centroids.csv")
+    (lines.head, lines.tail.map(_.split(",").map(_.toDouble)).toArray)
   }
-
-  // Sidecar/versioned-dir mechanics (Hadoop-FS I/O, atomic swap, sweep
-  // guards) live in graft.model.VersionedDir, shared with DatasetCatalog.
-  private def readSidecar(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Seq[String] =
-    graft.model.VersionedDir.readSidecar(spark, dir, name)
-
-  /** Default sweep grace: longer than any plausible sidecar-rename lag. */
-  val SweepGraceMs: Long = graft.model.VersionedDir.SweepGraceMs
 
   /** Load a persisted IVF index: (partitioned data, centroids), resolving
     * the versioned data dir through the sidecar (see [[ivfSave]]). */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Array[Array[Double]]) = {
-    val lines = readSidecar(spark, dir, "centroids.csv")
-    val version = lines.head
-    val centroids = lines.tail.map(_.split(",").map(_.toDouble)).toArray
+    val (version, centroids) = readIvfSidecar(spark, dir)
     (spark.read.parquet(s"$dir/$version"), centroids)
   }
 
@@ -483,9 +476,7 @@ object Ann {
     * append resolved. Returns the assigned batch. */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
       rows: DataFrame, featureCol: String, normalize: Boolean): DataFrame = {
-    val lines = readSidecar(spark, dir, "centroids.csv")
-    val version = lines.head
-    val centroids = lines.tail.map(_.split(",").map(_.toDouble)).toArray
+    val (version, centroids) = readIvfSidecar(spark, dir)
     // a null vector has no nearest centroid; letting it through would file
     // the row under a null hive partition no probe ever scans — refuse
     // loudly instead (the row is unreachable, which is never intended)
@@ -516,11 +507,22 @@ object Ann {
     * kept — the rewrite reads THROUGH the sidecar, so it sees them.
     * Same single-writer contract as every saver here. */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepIds: DataFrame, idCol: String,
-      sweepGraceMs: Long = SweepGraceMs): (DataFrame, Array[Array[Double]]) = {
+      keepIds: DataFrame, idCol: String): (DataFrame, Array[Array[Double]]) = {
+    val (kept, centroids) = ivfKept(spark, dir, keepIds, idCol, "ivfCompact")
+    ivfSave(dir, kept, centroids)
+    (kept, centroids)
+  }
+
+  /** The stored index's rows whose `idCol` is in `keepIds`, materialized,
+    * with the stored centroids. `site` names the caller in the errors for
+    * a stored index missing `idCol` or any of `needCols`. */
+  private def ivfKept(spark: org.apache.spark.sql.SparkSession, dir: String,
+      keepIds: DataFrame, idCol: String, site: String,
+      needCols: String*): (DataFrame, Array[Array[Double]]) = {
     val (stored, centroids) = ivfLoad(spark, dir)
-    require(stored.columns.contains(idCol),
-      s"ivfCompact: stored index has no column '$idCol' (has ${stored.columns.mkString(", ")})")
+    for (c <- idCol +: needCols)
+      require(stored.columns.contains(c),
+        s"$site: stored index has no column '$c' (has ${stored.columns.mkString(", ")})")
     val kept = stored.join(
       keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       // the rewrite reads the OLD version while writing the NEW one: the
@@ -529,7 +531,6 @@ object Ann {
       // save (single-writer holds, but lazy evaluation would also thrash
       // the scan once per partition writer)
       .localCheckpoint(true)
-    ivfSave(dir, kept, centroids, sweepGraceMs)
     (kept, centroids)
   }
 
@@ -548,18 +549,13 @@ object Ann {
   def ivfCompactAuto(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepIds: DataFrame, idCol: String, featureCol: String,
       normalize: Boolean, targetCellRows: Long = IvfTargetCellRows,
-      driftFactor: Double = 2.0, seed: Long = 42L,
-      sweepGraceMs: Long = SweepGraceMs): (DataFrame, Array[Array[Double]]) = {
+      driftFactor: Double = 2.0,
+      seed: Long = 42L): (DataFrame, Array[Array[Double]]) = {
     require(driftFactor >= 1.0,
       s"ivfCompactAuto: driftFactor must be >= 1, got $driftFactor")
-    val (stored, centroids) = ivfLoad(spark, dir)
-    require(stored.columns.contains(idCol),
-      s"ivfCompactAuto: stored index has no column '$idCol' (has ${stored.columns.mkString(", ")})")
-    require(stored.columns.contains(featureCol),
-      s"ivfCompactAuto: stored index has no column '$featureCol' (has ${stored.columns.mkString(", ")})")
-    val kept = stored.join(
-      keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-      .localCheckpoint(true) // materialized: counted AND rewritten below
+    // materialized: counted AND rewritten below
+    val (kept, centroids) =
+      ivfKept(spark, dir, keepIds, idCol, "ivfCompactAuto", featureCol)
     val n = kept.count()
     val kStored = centroids.length
     val kAuto = ivfAutoK(n, targetCellRows)
@@ -569,7 +565,7 @@ object Ann {
     if (!drifted) {
       log.info(s"ivfCompactAuto: $n rows, stored k=$kStored within " +
         s"${driftFactor}x of auto k=$kAuto -> centroids preserved")
-      ivfSave(dir, kept, centroids, sweepGraceMs)
+      ivfSave(dir, kept, centroids)
       (kept, centroids)
     } else {
       log.info(s"ivfCompactAuto: $n rows, stored k=$kStored drifted past " +
@@ -578,7 +574,7 @@ object Ann {
       // checkpoint (never the old version's files) — safe under the swap
       val (indexed, cents) = ivfBuild(kept.drop("cluster"), featureCol,
         k = -1, normalize, seed, targetCellRows = targetCellRows)
-      ivfSave(dir, indexed, cents, sweepGraceMs)
+      ivfSave(dir, indexed, cents)
       (indexed, cents)
     }
   }
@@ -827,19 +823,15 @@ object Ann {
   /** Persist / load a PQ index: encoded codes table + codebook sidecar,
     * same versioned atomic-swap protocol as [[ivfSave]]. */
   def pqSave(dir: String, encoded: DataFrame,
-      cb: graft.functions.PqCodebook, sweepGraceMs: Long = SweepGraceMs): Unit = {
-    val version = graft.model.VersionedDir.newVersion()
-    encoded.write.mode("overwrite").parquet(s"$dir/$version")
-    val spark = encoded.sparkSession
-    val header = s"$version;${cb.m};${cb.subDim};${cb.normalized}"
-    graft.model.VersionedDir.writeSidecar(spark, dir, "codebook.csv",
-      header +: cb.centers.flatMap(_.map(_.mkString(","))).toSeq)
-    graft.model.VersionedDir.sweepOldVersions(spark, dir, "codebook.csv", sweepGraceMs)
-  }
+      cb: graft.functions.PqCodebook): Unit =
+    graft.model.VersionedDir.commit(encoded.sparkSession, dir, "codebook.csv",
+        version => s"$version;${cb.m};${cb.subDim};${cb.normalized}" +:
+          cb.centers.flatMap(_.map(_.mkString(","))).toSeq)(
+      encoded.write.mode("overwrite").parquet(_))
 
   def pqLoad(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, graft.functions.PqCodebook) = {
-    val lines = readSidecar(spark, dir, "codebook.csv")
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "codebook.csv")
     val header = lines.head.split(";")
     val (version, m, subDim) = (header(0), header(1).toInt, header(2).toInt)
     // 3-field headers predate the normalized flag (raw-space codebooks)

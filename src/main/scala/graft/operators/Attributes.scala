@@ -62,12 +62,9 @@ object Attributes {
       id: String): Unit = {
     require(attrs.columns.contains(id),
       s"attrSave: id column '$id' not in ${attrs.columns.mkString(", ")}")
-    val version = VersionedDir.newVersion()
-    attrs.write.mode("overwrite").parquet(s"$dir/$version")
-    VersionedDir.writeSidecar(spark, dir, Sidecar,
-      Seq(version, s"id $id",
-        s"attrs ${attrs.columns.filter(_ != id).mkString(",")}"))
-    VersionedDir.sweepOldVersions(spark, dir, Sidecar, VersionedDir.SweepGraceMs)
+    VersionedDir.commit(spark, dir, Sidecar, Seq(_, s"id $id",
+        s"attrs ${attrs.columns.filter(_ != id).mkString(",")}"))(
+      attrs.write.mode("overwrite").parquet(_))
   }
 
   /** Load the current attribute frame and its id column. */

@@ -213,10 +213,8 @@ object Clustering {
     * leaves the previous sidecar pointing at the previous complete
     * data+centroids, never new rows under old centroids. `Double.toString`
     * round-trips exactly, so loaded centroids are bit-identical. */
-  def clusterSave(dir: String, assigned: DataFrame, centroids: Array[Centroid],
-      sweepGraceMs: Long = Ann.SweepGraceMs): Unit = {
-    val version = graft.model.VersionedDir.newVersion()
-    val spark = assigned.sparkSession
+  def clusterSave(dir: String, assigned: DataFrame,
+      centroids: Array[Centroid]): Unit = {
     val counts = assigned.groupBy(col("cluster").cast("int").as("__c"))
       .agg(count(lit(1)).as("__n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -229,17 +227,24 @@ object Clustering {
     // files — tiny-file fan-out locally AND at scale. AQE sizes the
     // rebalanced partitions (coalesces small, splits a skewed hot
     // cluster), so file count tracks data volume, not task topology.
-    if (counts.isEmpty)
-      assigned.hint("rebalance").write.mode("overwrite").parquet(s"$dir/$version")
-    else
-      assigned.hint("rebalance", col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/$version")
-    graft.model.VersionedDir.writeSidecar(spark, dir, "cluster_centroids.csv",
-      version +: centroids.map(c =>
-        (Seq(c.id.toString, counts.getOrElse(c.id, 0L).toString) ++
-          c.v.map(_.toString)).mkString(",")).toSeq)
-    graft.model.VersionedDir.sweepOldVersions(spark, dir, "cluster_centroids.csv", sweepGraceMs)
+    graft.model.VersionedDir.commit(assigned.sparkSession, dir, Sidecar,
+        sidecarLines(_, centroids, counts)) { path =>
+      if (counts.isEmpty)
+        assigned.hint("rebalance").write.mode("overwrite").parquet(path)
+      else
+        assigned.hint("rebalance", col("cluster"))
+          .write.mode("overwrite").partitionBy("cluster").parquet(path)
+    }
   }
+
+  private val Sidecar = "cluster_centroids.csv"
+
+  /** Sidecar body: the version, then one `id,count,dim…` line per centroid. */
+  private def sidecarLines(version: String, centroids: Array[Centroid],
+      counts: Map[Int, Long]): Seq[String] =
+    version +: centroids.map(c =>
+      (Seq(c.id.toString, counts.getOrElse(c.id, 0L).toString) ++
+        c.v.map(_.toString)).mkString(",")).toSeq
 
   /** A loaded persisted cluster state: assigned rows, centroids, and the
     * per-cluster row counts the running-mean update needs. */
@@ -254,8 +259,12 @@ object Clustering {
   }
 
   def clusterLoadState(spark: org.apache.spark.sql.SparkSession,
-      dir: String): ClusterState = {
-    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "cluster_centroids.csv")
+      dir: String): ClusterState =
+    stateAt(spark, dir, graft.model.VersionedDir.readSidecar(spark, dir, Sidecar))
+
+  /** The state a read of the sidecar (`lines`) names. */
+  private def stateAt(spark: org.apache.spark.sql.SparkSession, dir: String,
+      lines: Seq[String]): ClusterState = {
     val parsed = lines.tail.map { ln =>
       val parts = ln.split(",")
       // legacy sidecar (pre per-cluster counts): field 2 is the first
@@ -288,9 +297,9 @@ object Clustering {
     * stricter. Returns the updated state view. */
   def clusterAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
       admitted: DataFrame): ClusterState = {
-    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "cluster_centroids.csv")
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, Sidecar)
     val version = lines.head
-    val st = clusterLoadState(spark, dir)
+    val st = stateAt(spark, dir, lines)
     // An EMPTY state was written UNPARTITIONED (see clusterSave — a
     // zero-row partitionBy write leaves no files at all), and a legacy
     // sidecar carries no counts: in either case an in-place partitioned
@@ -313,10 +322,8 @@ object Clustering {
     admitted.select(st.assigned.columns.map(col): _*)
       .hint("rebalance", col("cluster")) // file count ∝ batch volume (guide §6)
       .write.mode("append").partitionBy("cluster").parquet(s"$dir/$version")
-    graft.model.VersionedDir.writeSidecar(spark, dir, "cluster_centroids.csv",
-      version +: st.centroids.map(c =>
-        (Seq(c.id.toString, counts2.getOrElse(c.id, 0L).toString) ++
-          c.v.map(_.toString)).mkString(",")).toSeq)
+    graft.model.VersionedDir.writeSidecar(spark, dir, Sidecar,
+      sidecarLines(version, st.centroids, counts2))
     ClusterState(spark.read.parquet(s"$dir/$version"), st.centroids, counts2)
   }
 
@@ -334,8 +341,8 @@ object Clustering {
     * content somewhere deterministic. */
   def clusterCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepIds: Option[DataFrame] = None, idCol: String = "vec_id",
-      featureCol: String = "embedding", refresh: Boolean = false,
-      sweepGraceMs: Long = graft.model.VersionedDir.SweepGraceMs): ClusterState = {
+      featureCol: String = "embedding",
+      refresh: Boolean = false): ClusterState = {
     val st = clusterLoadState(spark, dir)
     val kept = keepIds.fold(st.assigned)(ids =>
       st.assigned.join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi"))
@@ -350,7 +357,7 @@ object Clustering {
         val merged = st.centroids.map(c => recomputed.getOrElse(c.id, c))
         (assign(kept.drop("cluster"), merged, featureCol).drop("dist"), merged)
       }
-    clusterSave(dir, rows2, cents2, sweepGraceMs)
+    clusterSave(dir, rows2, cents2)
     clusterLoadState(spark, dir)
   }
 }

@@ -98,13 +98,10 @@ object Sketches {
   /** Persist a profile under `dir` (versioned data dir + atomic sidecar
     * swap; sidecar records the sketch params for the update-compat check). */
   def profileSave(spark: SparkSession, dir: String, profile: DataFrame,
-      groupCol: String, params: Params = Params()): Unit = {
-    val version = VersionedDir.newVersion()
-    profile.write.mode("overwrite").parquet(s"$dir/$version")
-    VersionedDir.writeSidecar(spark, dir, Sidecar,
-      Seq(version, s"params ${params.lgK} ${params.kllK}", s"group $groupCol"))
-    VersionedDir.sweepOldVersions(spark, dir, Sidecar, VersionedDir.SweepGraceMs)
-  }
+      groupCol: String, params: Params = Params()): Unit =
+    VersionedDir.commit(spark, dir, Sidecar,
+        Seq(_, s"params ${params.lgK} ${params.kllK}", s"group $groupCol"))(
+      profile.write.mode("overwrite").parquet(_))
 
   /** Load the current profile (and its params). */
   def profileLoad(spark: SparkSession, dir: String): (DataFrame, Params, String) = {

@@ -302,9 +302,8 @@ object TextRetrieval {
     * so appended stats never accumulate FP drift. totalTokens is
     * recovered from n·avgdl here (exact: the product's FP error is far
     * below 0.5 for any total < 2^53, so the round is the true total). */
-  def indexSave(dir: String, postings: DataFrame, stats: CorpusStats,
-      sweepGraceMs: Long = graft.model.VersionedDir.SweepGraceMs): Unit =
-    indexSaveImpl(dir, postings, stats, None, None, sweepGraceMs)
+  def indexSave(dir: String, postings: DataFrame, stats: CorpusStats): Unit =
+    indexSaveImpl(dir, postings, stats, None, None)
 
   /** [[indexSave]] with the postings-visible totals ([[corpusStatsFull]]'s
     * last two fields) recorded as two extra sidecar fields. An index saved
@@ -313,14 +312,8 @@ object TextRetrieval {
     * postings (r13, guide §2.4); a 3-field sidecar falls back to the
     * recompute path — same results, corpus-sized stats pass. */
   def indexSave(dir: String, postings: DataFrame, stats: CorpusStats,
-      postingsN: Long, postingsTotal: Long, sweepGraceMs: Long): Unit =
-    indexSaveImpl(dir, postings, stats, Some((postingsN, postingsTotal)),
-      None, sweepGraceMs)
-
-  def indexSave(dir: String, postings: DataFrame, stats: CorpusStats,
       postingsN: Long, postingsTotal: Long): Unit =
-    indexSaveImpl(dir, postings, stats, Some((postingsN, postingsTotal)),
-      None, graft.model.VersionedDir.SweepGraceMs)
+    indexSaveImpl(dir, postings, stats, Some((postingsN, postingsTotal)), None)
 
   /** The one save implementation: postings, then the df summary — either
     * the supplied vocabulary-sized table (the incremental-remove path) or
@@ -329,22 +322,21 @@ object TextRetrieval {
     * sidecar swap. */
   private def indexSaveImpl(dir: String, postings: DataFrame,
       stats: CorpusStats, postingsStats: Option[(Long, Long)],
-      dfTable: Option[DataFrame], sweepGraceMs: Long): Unit = {
-    val version = graft.model.VersionedDir.newVersion()
+      dfTable: Option[DataFrame]): Unit = {
     val spark = postings.sparkSession
-    postings.write.mode("overwrite").parquet(s"$dir/$version/postings")
-    val dfSummary = dfTable.getOrElse(
-      spark.read.parquet(s"$dir/$version/postings")
-        .groupBy(col(TermCol)).agg(count(lit(1)).as("__df")))
-    dfSummary
-      .repartitionByRange(8, col(TermCol))
-      .sortWithinPartitions(TermCol)
-      .write.mode("overwrite").parquet(s"$dir/$version/df")
     val statsLine = s"${stats.n},${stats.avgdl},${math.round(stats.n * stats.avgdl)}" +
       postingsStats.fold("") { case (pn, pt) => s",$pn,$pt" }
-    graft.model.VersionedDir.writeSidecar(spark, dir, IndexSidecar,
-      Seq(version, statsLine))
-    graft.model.VersionedDir.sweepOldVersions(spark, dir, IndexSidecar, sweepGraceMs)
+    graft.model.VersionedDir.commit(spark, dir, IndexSidecar,
+        Seq(_, statsLine)) { path =>
+      postings.write.mode("overwrite").parquet(s"$path/postings")
+      val dfSummary = dfTable.getOrElse(
+        spark.read.parquet(s"$path/postings")
+          .groupBy(col(TermCol)).agg(count(lit(1)).as("__df")))
+      dfSummary
+        .repartitionByRange(8, col(TermCol))
+        .sortWithinPartitions(TermCol)
+        .write.mode("overwrite").parquet(s"$path/df")
+    }
   }
 
   private def readStatsLine(line: String)
@@ -367,8 +359,12 @@ object TextRetrieval {
     * any [[indexAppend]] delta segments (a tiny term-pruned agg — the
     * pushed `In(term)` predicate still reaches every segment file). */
   def indexLoad(spark: org.apache.spark.sql.SparkSession,
-      dir: String): LexIndex = {
-    val lines = graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar)
+      dir: String): LexIndex =
+    indexAt(spark, dir, graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar))
+
+  /** The index a read of the sidecar (`lines`) names. */
+  private def indexAt(spark: org.apache.spark.sql.SparkSession, dir: String,
+      lines: Seq[String]): LexIndex = {
     val (stats, _, _) = readStatsLine(lines(1))
     LexIndex(spark.read.parquet(s"$dir/${lines.head}/postings"),
       spark.read.parquet(s"$dir/${lines.head}/df")
@@ -427,8 +423,7 @@ object TextRetrieval {
     * kept — such docs can never match a query; filter them before
     * indexing if exact N parity with the raw corpus matters. */
   def indexCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepIds: DataFrame, idCol: String,
-      sweepGraceMs: Long = graft.model.VersionedDir.SweepGraceMs): LexIndex = {
+      keepIds: DataFrame, idCol: String): LexIndex = {
     val old = indexLoad(spark, dir)
     val kept = old.postings.join(
         keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
@@ -440,7 +435,7 @@ object TextRetrieval {
       // concurrent task — the r12 decade leg OOM'd an 8 GB driver there.
       // Disk blocks serialize through a bounded stream per task.
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    saveKept(spark, dir, kept, idCol, sweepGraceMs)
+    saveKept(spark, dir, kept, idCol)
   }
 
   /** Delete-set twin of [[indexCompact]] (compact takes the KEEP set;
@@ -490,10 +485,9 @@ object TextRetrieval {
 
   def indexRemove(spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, idCol: String,
-      sweepGraceMs: Long = graft.model.VersionedDir.SweepGraceMs,
       incrementalBytes: Long = RemoveIncrementalBytes): LexIndex = {
-    val old = indexLoad(spark, dir)
     val lines = graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar)
+    val old = indexAt(spark, dir, lines)
     val (_, _, pstats) = readStatsLine(lines(1))
     // the id set feeds the anti-join (kept) and — on the incremental path
     // — the semi-join (removed); it is id-column-only and each consumer
@@ -533,15 +527,13 @@ object TextRetrieval {
         .select(col(TermCol),
           (col("__df") - coalesce(col("__rdf"), lit(0L))).as("__df"))
         .filter(col("__df") > 0)
-      indexSaveImpl(dir, kept, stats2, Some((n2, ptot2)), Some(newDf),
-        sweepGraceMs)
+      indexSaveImpl(dir, kept, stats2, Some((n2, ptot2)), Some(newDf))
       indexLoad(spark, dir)
-    } else saveKept(spark, dir, kept, idCol, sweepGraceMs)
+    } else saveKept(spark, dir, kept, idCol)
   }
 
   private def saveKept(spark: org.apache.spark.sql.SparkSession,
-      dir: String, kept: DataFrame, idCol: String,
-      sweepGraceMs: Long): LexIndex = {
+      dir: String, kept: DataFrame, idCol: String): LexIndex = {
     val row = kept.select(col(idCol), col("__dl")).distinct()
       .agg(count(lit(1)), sum(col("__dl"))).head()
     val n = row.getLong(0)
@@ -550,7 +542,7 @@ object TextRetrieval {
     // stats recomputed from kept postings ARE the postings totals — keep
     // the 5-field sidecar alive through compacts so later removes stay on
     // the incremental path
-    indexSaveImpl(dir, kept, stats, Some((n, total)), None, sweepGraceMs)
+    indexSaveImpl(dir, kept, stats, Some((n, total)), None)
     indexLoad(spark, dir)
   }
 

@@ -5,6 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.VersionedDir
 import graft.operators.{Ann, Search, SearchConfig}
 
 /** ANN operators (SURVEY.md §2.4 J2) as driver queries. Every query is
@@ -151,22 +152,24 @@ object AnnQueries {
     * (which replays encode from the raw embeddings) still hash-matches. */
   private val sq8Cache = TrieMap.empty[(SparkSession, String), DataFrame]
 
+  /** The stored encoding under `idxDir`: built through `write` (handed
+    * the fresh version path) when no version is committed yet, then read
+    * from the version the `_current` sidecar names. */
+  private def storedEncoding(s: SparkSession, idxDir: String)(
+      write: String => Unit): DataFrame = {
+    if (!VersionedDir.sidecarExists(s, idxDir, "_current"))
+      VersionedDir.commit(s, idxDir, "_current", Seq(_))(write)
+    s.read.parquet(
+      s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
+  }
+
   private def sq8Index(s: SparkSession, dir: String): DataFrame = {
     val idxDir = "/tmp/graft_sq8_idx/" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}"
-    sq8Cache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
-        val version = VersionedDir.newVersion()
-        Ann.sq8Encode(Tables(s, dir, "embeddings"), "embedding")
-          .write.mode("overwrite").parquet(s"$idxDir/$version")
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
-      }
-      s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
-    })
+    sq8Cache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+      Ann.sq8Encode(Tables(s, dir, "embeddings"), "embedding")
+        .write.mode("overwrite").parquet(_)))
   }
 
   /** One-row verification summary of an approximate result vs its exact
@@ -256,19 +259,9 @@ object AnnQueries {
     val idxDir = "/tmp/graft_ivfpq_idx/" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k${IvfK}m8k16"
-    ivfPqCache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
-        val (indexed, _) = ivfIndex(s, dir)
-        val version = VersionedDir.newVersion()
-        Ann.pqEncode(indexed, "embedding", cb)
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/$version")
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
-      }
-      s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
-    })
+    ivfPqCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+      Ann.pqEncode(ivfIndex(s, dir)._1, "embedding", cb)
+        .write.mode("overwrite").partitionBy("cluster").parquet(_)))
   }
 
   /** Batch IVF×PQ: 100 queries, pruned cells + code-only ADC scan +
@@ -292,19 +285,9 @@ object AnnQueries {
     val idxDir = "/tmp/graft_ivfsq8_idx/" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k${IvfK}"
-    ivfSq8Cache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
-        val (indexed, _) = ivfIndex(s, dir)
-        val version = VersionedDir.newVersion()
-        Ann.sq8Encode(indexed, "embedding")
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/$version")
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
-      }
-      s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
-    })
+    ivfSq8Cache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+      Ann.sq8Encode(ivfIndex(s, dir)._1, "embedding")
+        .write.mode("overwrite").partitionBy("cluster").parquet(_)))
   }
 
   /** Batch IVF×SQ8: 100 queries, pruned cells + dequantized int8 scoring
@@ -376,18 +359,9 @@ object AnnQueries {
     val idxDir = "/tmp/graft_rp_idx/" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_p$RpDim"
-    rpCache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
-        val version = VersionedDir.newVersion()
-        Ann.rpEncode(Tables(s, dir, "embeddings"), "embedding", RpDim)
-          .write.mode("overwrite").parquet(s"$idxDir/$version")
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
-      }
-      s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
-    })
+    rpCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+      Ann.rpEncode(Tables(s, dir, "embeddings"), "embedding", RpDim)
+        .write.mode("overwrite").parquet(_)))
   }
 
   /** Binary sign-bit quantization: the third query family with a FULL
@@ -403,19 +377,10 @@ object AnnQueries {
     val idxDir = "/tmp/graft_bq_idx/" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}"
-    bqCache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
-        val emb = Tables(s, dir, "embeddings")
-        val dim = emb.select(size(col("embedding"))).head.getInt(0)
-        val version = VersionedDir.newVersion()
-        Ann.bqEncode(emb, "embedding", dim)
-          .write.mode("overwrite").parquet(s"$idxDir/$version")
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
-      }
-      s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
+    bqCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir) { path =>
+      val emb = Tables(s, dir, "embeddings")
+      val dim = emb.select(size(col("embedding"))).head.getInt(0)
+      Ann.bqEncode(emb, "embedding", dim).write.mode("overwrite").parquet(path)
     })
   }
 
@@ -459,19 +424,12 @@ object AnnQueries {
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k$PcaK"
     pcaCache.getOrElseUpdate((s, idxDir), {
-      import graft.model.VersionedDir
-      if (!VersionedDir.sidecarExists(s, idxDir, "_current")) {
+      val enc = storedEncoding(s, idxDir) { path =>
         val emb = Tables(s, dir, "embeddings")
         val m = Pca.fit(emb, "embedding", k = PcaK)
-        val version = VersionedDir.newVersion()
-        Pca.pcaEncode(emb, "embedding", m)
-          .write.mode("overwrite").parquet(s"$idxDir/$version")
+        Pca.pcaEncode(emb, "embedding", m).write.mode("overwrite").parquet(path)
         Pca.pcaSave(s, idxDir, m)
-        VersionedDir.writeSidecar(s, idxDir, "_current", Seq(version))
-        VersionedDir.sweepOldVersions(s, idxDir, "_current", VersionedDir.SweepGraceMs)
       }
-      val enc = s.read.parquet(
-        s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
       (enc, Pca.pcaLoad(s, idxDir))
     })
   }

@@ -176,8 +176,7 @@ class AnnSpec extends SparkTestBase {
     Ann.ivfAppend(spark, dir, rest, "embedding", normalize = false)
     // purge every vec_id divisible by 3 (hits saved AND appended rows)
     val keep = emb.filter($"vec_id" % 3 =!= 0).select("vec_id")
-    val (kept, after) = Ann.ivfCompact(spark, dir, keep, "vec_id",
-      sweepGraceMs = 0L)
+    val (kept, after) = Ann.ivfCompact(spark, dir, keep, "vec_id")
     assert(after.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq) // unchanged
     val (loaded, _) = Ann.ivfLoad(spark, dir)
     val ids = loaded.select("vec_id").as[Long].collect().toSet
@@ -231,12 +230,12 @@ class AnnSpec extends SparkTestBase {
     // auto k for 500 rows at 64/cell is 8 — exactly 2.0x the stored 4,
     // NOT past the (strict) 2.0 drift bound: compact keeps the quantizer
     val (kept1, c1) = Ann.ivfCompactAuto(spark, dir, allIds, "vec_id",
-      "embedding", normalize = false, targetCellRows = 64L, sweepGraceMs = 0L)
+      "embedding", normalize = false, targetCellRows = 64L)
     assert(c1.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq)
     assert(kept1.count() == 500L)
     // at 16 rows/cell auto k is 32 — 8x the stored 4: quantizer refits
     val (kept2, c2) = Ann.ivfCompactAuto(spark, dir, allIds, "vec_id",
-      "embedding", normalize = false, targetCellRows = 16L, sweepGraceMs = 0L)
+      "embedding", normalize = false, targetCellRows = 16L)
     assert(c2.length == Ann.ivfAutoK(500L, 16L)) // 32
     assert(kept2.count() == 500L)
     // the refit index is stored and probes exactly at nProbe = all cells
@@ -252,7 +251,7 @@ class AnnSpec extends SparkTestBase {
     // auto k for ~63 rows at 16/cell is 4, an 8x shrink: refit again
     val few = emb.filter($"vec_id" % 8 === 0).select("vec_id")
     val (kept3, c3) = Ann.ivfCompactAuto(spark, dir, few, "vec_id",
-      "embedding", normalize = false, targetCellRows = 16L, sweepGraceMs = 0L)
+      "embedding", normalize = false, targetCellRows = 16L)
     assert(c3.length == Ann.ivfAutoK(kept3.count(), 16L))
     assert(c3.length < c2.length)
   }
@@ -291,8 +290,7 @@ class AnnSpec extends SparkTestBase {
     def complement(gone: org.apache.spark.sql.DataFrame) =
       Ann.ivfLoad(spark, dir)._1.select("vec_id").join(gone, Seq("vec_id"), "left_anti")
     val gone = emb.filter($"vec_id" % 3 === 0).select("vec_id")
-    val (kept, after) = Ann.ivfCompact(spark, dir, complement(gone), "vec_id",
-      sweepGraceMs = 0L)
+    val (kept, after) = Ann.ivfCompact(spark, dir, complement(gone), "vec_id")
     assert(after.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq)
     val want = emb.filter($"vec_id" % 3 =!= 0)
       .select("vec_id").as[Long].collect().toSet
@@ -303,8 +301,7 @@ class AnnSpec extends SparkTestBase {
     // reachable again through the FIXED quantizer
     val moved = emb.filter($"vec_id" === 1L)
       .select($"vec_id", $"embedding")
-    Ann.ivfCompact(spark, dir, complement(moved.select("vec_id")), "vec_id",
-      sweepGraceMs = 0L)
+    Ann.ivfCompact(spark, dir, complement(moved.select("vec_id")), "vec_id")
     assert(Ann.ivfLoad(spark, dir)._1.filter($"vec_id" === 1L).isEmpty)
     Ann.ivfAppend(spark, dir, moved, "embedding", normalize = false)
     val (loaded, cents) = Ann.ivfLoad(spark, dir)
@@ -332,13 +329,17 @@ class AnnSpec extends SparkTestBase {
   test("ivfSave sweep keeps the version the sidecar names, drops the rest") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-sweep").toString
     val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 4, normalize = false)
-    Ann.ivfSave(dir, indexed, centroids, sweepGraceMs = 0L)
+    Ann.ivfSave(dir, indexed, centroids)
     // plant an orphan data dir (a save whose sidecar rename lost a race)
     val orphan = java.nio.file.Paths.get(dir, "data_0_orphan")
     java.nio.file.Files.createDirectories(orphan)
-    // second save sweeps superseded versions (grace 0 = everything is old
-    // enough; the default 10-min grace spares in-progress writers)
-    Ann.ivfSave(dir, indexed, centroids, sweepGraceMs = 0L)
+    // age the orphan and the first version past the sweep grace (younger
+    // dirs are spared as possible in-progress writers), so the second
+    // save sweeps both
+    val aged = System.currentTimeMillis() - graft.model.VersionedDir.SweepGraceMs - 60000L
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("data_"))
+      .foreach(f => assert(f.setLastModified(aged)))
+    Ann.ivfSave(dir, indexed, centroids)
     val kept = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("data_")).toSet
     val named = java.nio.file.Files

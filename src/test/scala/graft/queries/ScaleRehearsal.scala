@@ -1129,13 +1129,11 @@ object ScaleRehearsal {
         println(f"[sf1] cluster_save_hint_$tag%-8s   ${wA}%7.2f s files=${dataFiles(dirA)}")
         // WITHOUT the hint (the pre-r12 write shape, inlined)
         val dirB = s"$Dir10/cl_nohint_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-        val vB = graft.model.VersionedDir.newVersion()
         val tB = System.nanoTime()
-        assigned.write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$dirB/$vB")
-        graft.model.VersionedDir.writeSidecar(spark, dirB, "cluster_centroids.csv",
-          vB +: cents.map(c => (Seq(c.id.toString, "0") ++
-            c.v.map(_.toString)).mkString(",")))
+        graft.model.VersionedDir.commit(spark, dirB, "cluster_centroids.csv",
+            _ +: cents.map(c => (Seq(c.id.toString, "0") ++
+              c.v.map(_.toString)).mkString(",")).toSeq)(
+          assigned.write.mode("overwrite").partitionBy("cluster").parquet(_))
         val wB = (System.nanoTime() - tB) / 1e9
         println(f"[sf1] cluster_save_nohint_$tag%-8s ${wB}%7.2f s files=${dataFiles(dirB)}")
         // partition-pruned one-cluster probe on each layout
@@ -1249,8 +1247,7 @@ object ScaleRehearsal {
         val keep = d10.select("doc_id").unionByName(added.select("doc_id"))
           .filter($"doc_id" % 50 =!= 0)
         t0 = System.nanoTime()
-        TextRetrieval.indexCompact(spark, idxDir, keep, "doc_id",
-          sweepGraceMs = 0L)
+        TextRetrieval.indexCompact(spark, idxDir, keep, "doc_id")
         println(f"[sf1] lex_compact2pct_5m        ${(System.nanoTime() - t0) / 1e9}%7.2f s")
         // diff sync vs fresh rebuild: v2 = 2% removed / 1% changed / 2% added
         val v2 = d10.filter($"doc_id" % 50 =!= 0)
