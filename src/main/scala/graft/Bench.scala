@@ -56,13 +56,10 @@ object Bench {
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // sfDir is user input on the one-line JSON protocol — escape like
-    // Verify.q does (query names are identifier-safe and need none)
-    val sfJson = sfDir.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfJson"}"""
+    // sfDir is user input on the one-line JSON protocol — escaped by
+    // Verify.jsonString (query names are identifier-safe and need none)
+    val sfJson = Verify.jsonString(sfDir)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":$sfJson}"""
     println(line)
     // VERDICT r12 #2: the full line above is ~7 KB for 182 queries and the
     // driver's log capture keeps only a short output TAIL — two rounds
@@ -72,8 +69,7 @@ object Bench {
     // tail window of a few hundred bytes still contains one complete,
     // parseable JSON line. The full line keeps the original contract; the
     // complete per-query map is also persisted in BENCH_SELF.json below.
-    val short = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":${results.size},"failed":$failed,"sf":"$sfJson"}"""
-    println(short)
+    println(summaryLine(total, results, sfDir))
     // ALSO persist the complete artifact at the repo root (VERDICT r7 #3):
     // the driver's log capture has head-truncated the printed line two
     // rounds running, so cross-round comparison gets a self-written file
@@ -86,7 +82,7 @@ object Bench {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val self =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""failed":$failed,"sf":"$sfJson",""" +
+        s""""failed":$failed,"sf":$sfJson,""" +
         s""""config":{"spark":"${spark.version}",""" +
         s""""master":"$master",""" +
         s""""shufflePartitions":"$shufflePartitions",""" +
@@ -116,6 +112,16 @@ object Bench {
     else if (only.isEmpty)
       System.err.println(s"[bench] dev SF dir $sfDir — BENCH_SELF.json not written")
     spark.stop()
+  }
+
+  /** The short summary line: total, query count, failed list (queries
+    * that threw report -1) and the SF dir. */
+  private[graft] def summaryLine(total: Double, results: Seq[(String, Double)],
+      sfDir: String): String = {
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries_n":${results.size},""" +
+      s""""failed":$failed,"sf":${Verify.jsonString(sfDir)}}"""
   }
 
   /** Why a run under (`master`, `shufflePartitions`) must not overwrite the

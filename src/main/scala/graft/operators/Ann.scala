@@ -431,9 +431,12 @@ object Ann {
     * complete data+centroids — never new data under old centroids (a
     * fresh KMeans fit's cluster ids bear no relation to old centroid
     * indices). Superseded data dirs are swept best-effort AFTER the swap. */
+  /** The IVF index sidecar ([[ivfSave]]). */
+  val IvfSidecar = "centroids.csv"
+
   def ivfSave(dir: String, indexed: DataFrame,
       centroids: Array[Array[Double]]): Unit =
-    graft.model.VersionedDir.commit(indexed.sparkSession, dir, "centroids.csv",
+    graft.model.VersionedDir.commit(indexed.sparkSession, dir, IvfSidecar,
         _ +: centroids.map(_.mkString(",")).toSeq) { path =>
       // ONE writer task per cell: without the repartition every shuffled
       // task holds rows of ~every cluster and writes a file into ~every
@@ -448,7 +451,7 @@ object Ann {
   /** The IVF sidecar: (version the data lives in, centroids). */
   private def readIvfSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, Array[Array[Double]]) = {
-    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "centroids.csv")
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, IvfSidecar)
     (lines.head, lines.tail.map(_.split(",").map(_.toDouble)).toArray)
   }
 
@@ -820,22 +823,28 @@ object Ann {
     }
   }
 
+  /** The PQ index sidecar ([[pqSave]]): a `version;m;subDim;normalized`
+    * header, then the codebook's sub-centroids. */
+  val PqSidecar = "codebook.csv"
+
   /** Persist / load a PQ index: encoded codes table + codebook sidecar,
     * same versioned atomic-swap protocol as [[ivfSave]]. */
   def pqSave(dir: String, encoded: DataFrame,
       cb: graft.functions.PqCodebook): Unit =
-    graft.model.VersionedDir.commit(encoded.sparkSession, dir, "codebook.csv",
+    graft.model.VersionedDir.commit(encoded.sparkSession, dir, PqSidecar,
         version => s"$version;${cb.m};${cb.subDim};${cb.normalized}" +:
           cb.centers.flatMap(_.map(_.mkString(","))).toSeq)(
       encoded.write.mode("overwrite").parquet(_))
 
   def pqLoad(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, graft.functions.PqCodebook) = {
-    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "codebook.csv")
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, PqSidecar)
     val header = lines.head.split(";")
-    val (version, m, subDim) = (header(0), header(1).toInt, header(2).toInt)
-    // 3-field headers predate the normalized flag (raw-space codebooks)
-    val normalized = header.length > 3 && header(3).toBoolean
+    require(header.length == 4,
+      s"$dir/$PqSidecar header '${lines.head}' is not version;m;subDim;normalized " +
+        "— an older PQ index format; rebuild it with pqSave")
+    val (version, m, subDim, normalized) =
+      (header(0), header(1).toInt, header(2).toInt, header(3).toBoolean)
     val flat = lines.tail.map(_.split(",").map(_.toFloat)).toArray
     val centers = flat.grouped(flat.length / m).toArray
     (spark.read.parquet(s"$dir/$version"),

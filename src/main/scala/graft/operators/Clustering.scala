@@ -267,14 +267,13 @@ object Clustering {
       lines: Seq[String]): ClusterState = {
     val parsed = lines.tail.map { ln =>
       val parts = ln.split(",")
-      // legacy sidecar (pre per-cluster counts): field 2 is the first
-      // centroid component, a double — detect by the '.'/exponent it must
-      // carry (counts are pure integers) and default its count to 0 so
-      // previously persisted states still load (ADVICE r9). The next
-      // save/compact rewrites in the current format.
-      val legacy = parts(1).exists(c => c == '.' || c == 'e' || c == 'E')
-      if (legacy) (Centroid(parts(0).toInt, parts.drop(1).map(_.toDouble)), 0L)
-      else (Centroid(parts(0).toInt, parts.drop(2).map(_.toDouble)), parts(1).toLong)
+      // field 2 is the per-cluster count, an integer; an older sidecar put
+      // the first centroid component (a Double.toString) there
+      val count = parts(1).toLongOption
+      require(count.isDefined,
+        s"$dir/$Sidecar line '$ln' is not id,count,dim… — an older " +
+          "cluster state format; rebuild it with clusterSave")
+      (Centroid(parts(0).toInt, parts.drop(2).map(_.toDouble)), count.get)
     }
     ClusterState(spark.read.parquet(s"$dir/${lines.head}"),
       parsed.map(_._1).toArray, parsed.map(p => p._1.id -> p._2).toMap)
@@ -301,12 +300,12 @@ object Clustering {
     val version = lines.head
     val st = stateAt(spark, dir, lines)
     // An EMPTY state was written UNPARTITIONED (see clusterSave — a
-    // zero-row partitionBy write leaves no files at all), and a legacy
-    // sidecar carries no counts: in either case an in-place partitioned
-    // append would mix `cluster=` subdirs into a flat layout and the next
-    // read dies in partition discovery (ADVICE r9, the purge-then-append
-    // hole). Fall back to a FULL versioned save of old ∪ new — atomic
-    // under the sidecar swap, and it migrates the layout/format.
+    // zero-row partitionBy write leaves no files at all): an in-place
+    // partitioned append would mix `cluster=` subdirs into a flat layout
+    // and the next read dies in partition discovery (ADVICE r9, the
+    // purge-then-append hole). Fall back to a FULL versioned save of
+    // old ∪ new — atomic under the sidecar swap, and it migrates the
+    // layout.
     if (st.counts.values.sum == 0L) {
       val merged = st.assigned.unionByName(
         admitted.select(st.assigned.columns.map(col): _*))

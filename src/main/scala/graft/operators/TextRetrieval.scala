@@ -297,23 +297,19 @@ object TextRetrieval {
     * dir is an append-only DELTA LOG ([[indexAppend]] adds segments,
     * loads merge them); a full save writes the single base segment.
     *
-    * The sidecar carries (n, avgdl, totalTokens): the exact integer
-    * token total is what [[indexAppend]] updates — adding exact longs —
-    * so appended stats never accumulate FP drift. totalTokens is
-    * recovered from n·avgdl here (exact: the product's FP error is far
-    * below 0.5 for any total < 2^53, so the round is the true total). */
-  def indexSave(dir: String, postings: DataFrame, stats: CorpusStats): Unit =
-    indexSaveImpl(dir, postings, stats, None, None)
-
-  /** [[indexSave]] with the postings-visible totals ([[corpusStatsFull]]'s
-    * last two fields) recorded as two extra sidecar fields. An index saved
-    * this way lets [[indexRemove]] update stats and df by SUBTRACTION
-    * (delta-sized work) instead of re-aggregating the corpus-sized kept
-    * postings (r13, guide §2.4); a 3-field sidecar falls back to the
-    * recompute path — same results, corpus-sized stats pass. */
+    * The sidecar carries one line `n,avgdl,totalTokens,postingsN,postingsTotal`:
+    *  - the exact integer token total is what [[indexAppend]] updates —
+    *    adding exact longs — so appended stats never accumulate FP drift.
+    *    It is recovered from n·avgdl here (exact: the product's FP error
+    *    is far below 0.5 for any total < 2^53, so the round is the true
+    *    total);
+    *  - the postings-visible totals ([[corpusStatsFull]]'s last two
+    *    fields) let [[indexRemove]] update stats and df by SUBTRACTION
+    *    (delta-sized work) instead of re-aggregating the corpus-sized kept
+    *    postings (r13, guide §2.4). */
   def indexSave(dir: String, postings: DataFrame, stats: CorpusStats,
       postingsN: Long, postingsTotal: Long): Unit =
-    indexSaveImpl(dir, postings, stats, Some((postingsN, postingsTotal)), None)
+    indexSaveImpl(dir, postings, stats, (postingsN, postingsTotal), None)
 
   /** The one save implementation: postings, then the df summary — either
     * the supplied vocabulary-sized table (the incremental-remove path) or
@@ -321,11 +317,11 @@ object TextRetrieval {
     * — a cheap columnar pass, not a corpus-lineage recompute) — then the
     * sidecar swap. */
   private def indexSaveImpl(dir: String, postings: DataFrame,
-      stats: CorpusStats, postingsStats: Option[(Long, Long)],
+      stats: CorpusStats, postingsStats: (Long, Long),
       dfTable: Option[DataFrame]): Unit = {
     val spark = postings.sparkSession
-    val statsLine = s"${stats.n},${stats.avgdl},${math.round(stats.n * stats.avgdl)}" +
-      postingsStats.fold("") { case (pn, pt) => s",$pn,$pt" }
+    val statsLine = s"${stats.n},${stats.avgdl},${math.round(stats.n * stats.avgdl)}," +
+      s"${postingsStats._1},${postingsStats._2}"
     graft.model.VersionedDir.commit(spark, dir, IndexSidecar,
         Seq(_, statsLine)) { path =>
       postings.write.mode("overwrite").parquet(s"$path/postings")
@@ -339,19 +335,17 @@ object TextRetrieval {
     }
   }
 
-  private def readStatsLine(line: String)
-      : (CorpusStats, Long, Option[(Long, Long)]) = {
+  /** The sidecar stats line ([[indexSave]]): (stats, exact token total,
+    * postings-visible (docs, tokens)). */
+  private def readStatsLine(dir: String, line: String)
+      : (CorpusStats, Long, (Long, Long)) = {
     val parts = line.split(",")
-    val n = parts(0).toLong
-    val avgdl = parts(1).toDouble
-    // older two-field sidecars (no exact total): recover it — exact for
-    // any real corpus, see indexSave
-    val total = if (parts.length > 2) parts(2).toLong else math.round(n * avgdl)
-    // 5-field sidecars additionally carry the postings-visible totals
-    // (docs with ≥1 posting row, their exact token sum) — see indexSave
-    val pstats = if (parts.length > 4) Some((parts(3).toLong, parts(4).toLong))
-      else None
-    (CorpusStats(n, avgdl), total, pstats)
+    require(parts.length == 5,
+      s"$dir/$IndexSidecar stats line '$line' is not " +
+        "n,avgdl,totalTokens,postingsN,postingsTotal — an older lexical " +
+        "index format; rebuild it with indexSave")
+    (CorpusStats(parts(0).toLong, parts(1).toDouble), parts(2).toLong,
+      (parts(3).toLong, parts(4).toLong))
   }
 
   /** Load a persisted lexical index, resolving the versioned data dir
@@ -365,7 +359,7 @@ object TextRetrieval {
   /** The index a read of the sidecar (`lines`) names. */
   private def indexAt(spark: org.apache.spark.sql.SparkSession, dir: String,
       lines: Seq[String]): LexIndex = {
-    val (stats, _, _) = readStatsLine(lines(1))
+    val (stats, _, _) = readStatsLine(dir, lines(1))
     LexIndex(spark.read.parquet(s"$dir/${lines.head}/postings"),
       spark.read.parquet(s"$dir/${lines.head}/df")
         .groupBy(col(TermCol)).agg(sum(col("__df")).as("__df")),
@@ -390,7 +384,7 @@ object TextRetrieval {
       docs: DataFrame, idCol: String, textCol: String): CorpusStats = {
     val lines = graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar)
     val version = lines.head
-    val (stats, total, pstats) = readStatsLine(lines(1))
+    val (stats, total, (pn, ptot)) = readStatsLine(dir, lines(1))
     val batch = indexBuild(docs, idCol, textCol) // AQE sizes the delta
       .localCheckpoint(true) // one tokenize pass feeds postings and df
     batch.write.mode("append").parquet(s"$dir/$version/postings")
@@ -399,14 +393,13 @@ object TextRetrieval {
       .write.mode("append").parquet(s"$dir/$version/df")
     // batch stats from the DOCS, not the postings: a zero-token doc has
     // no posting rows but still counts toward N/avgdl. The same single
-    // pass also yields the batch's postings-visible totals, so a 5-field
-    // sidecar stays exact across appends (legacy 3-field stays 3-field).
+    // pass also yields the batch's postings-visible totals, so the
+    // sidecar's postings totals stay exact across appends.
     val (bs, bpn, bptot) = corpusStatsFull(docs, textCol)
     val n2 = stats.n + bs.n
     val total2 = total + math.round(bs.n * bs.avgdl)
     val stats2 = CorpusStats(n2, if (n2 == 0) 0.0 else total2.toDouble / n2)
-    val statsLine = s"${stats2.n},${stats2.avgdl},$total2" +
-      pstats.fold("") { case (pn, pt) => s",${pn + bpn},${pt + bptot}" }
+    val statsLine = s"${stats2.n},${stats2.avgdl},$total2,${pn + bpn},${ptot + bptot}"
     graft.model.VersionedDir.writeSidecar(spark, dir, IndexSidecar,
       Seq(version, statsLine))
     stats2
@@ -488,7 +481,7 @@ object TextRetrieval {
       incrementalBytes: Long = RemoveIncrementalBytes): LexIndex = {
     val lines = graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar)
     val old = indexAt(spark, dir, lines)
-    val (_, _, pstats) = readStatsLine(lines(1))
+    val (_, _, (pn, ptot)) = readStatsLine(dir, lines(1))
     // the id set feeds the anti-join (kept) and — on the incremental path
     // — the semi-join (removed); it is id-column-only and each consumer
     // broadcasts it, so recomputing beats a checkpoint job
@@ -496,9 +489,7 @@ object TextRetrieval {
     val kept = old.postings.join(idSet, Seq(idCol), "left_anti")
       // DISK_ONLY: corpus-sized rewrite (the indexCompact rationale)
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val incremental = pstats.isDefined &&
-      postingsBytes(spark, dir, lines.head) >= incrementalBytes
-    if (incremental) {
+    if (postingsBytes(spark, dir, lines.head) >= incrementalBytes) {
       // Incremental stats + df (r13, VERDICT r12 #3 / guide §2.4): the
       // sidecar carries the exact postings-doc and token totals, so the
       // new stats are OLD − REMOVED — a delta-sized semi-join instead
@@ -511,7 +502,6 @@ object TextRetrieval {
       // including a zero-token doc). The removed-side frame is consumed
       // twice (stats agg, df agg) — each is a pruned columnar re-scan
       // of the stored postings, cheaper than a checkpoint round-trip.
-      val (pn, ptot) = pstats.get
       val removed = old.postings.join(idSet, Seq(idCol), "left_semi")
       val rrow = removed.select(col(idCol), col("__dl")).distinct()
         .agg(count(lit(1)), sum(col("__dl"))).head()
@@ -527,7 +517,7 @@ object TextRetrieval {
         .select(col(TermCol),
           (col("__df") - coalesce(col("__rdf"), lit(0L))).as("__df"))
         .filter(col("__df") > 0)
-      indexSaveImpl(dir, kept, stats2, Some((n2, ptot2)), Some(newDf))
+      indexSaveImpl(dir, kept, stats2, (n2, ptot2), Some(newDf))
       indexLoad(spark, dir)
     } else saveKept(spark, dir, kept, idCol)
   }
@@ -539,10 +529,8 @@ object TextRetrieval {
     val n = row.getLong(0)
     val total = if (row.isNullAt(1)) 0L else row.getLong(1)
     val stats = CorpusStats(n, if (n == 0) 0.0 else total.toDouble / n)
-    // stats recomputed from kept postings ARE the postings totals — keep
-    // the 5-field sidecar alive through compacts so later removes stay on
-    // the incremental path
-    indexSaveImpl(dir, kept, stats, Some((n, total)), None)
+    // stats recomputed from kept postings ARE the postings totals
+    indexSaveImpl(dir, kept, stats, (n, total), None)
     indexLoad(spark, dir)
   }
 

@@ -1,7 +1,5 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,45 +44,20 @@ object AnnQueries {
 
   private val IvfK = 8
 
-  /** Content fingerprint of a parquet source: part-file count + total
-    * bytes + newest mtime over the files INSIDE the directory. A parquet
-    * "file" from the driver is a directory whose own length/mtime barely
-    * track content (regenerated data of equal dir-entry size would serve a
-    * stale index) — the part files are what changes. */
-  private[queries] def sourceFingerprint(path: String): String = {
-    val root = new java.io.File(path)
-    // fall back to the entry itself for a plain file OR a dir holding no
-    // plain files (interrupted generation leaving only _temporary):
-    // `Seq.empty.max` would throw an opaque UnsupportedOperationException
-    val parts = Option(root.listFiles()).map(_.toSeq.filter(_.isFile))
-      .filter(_.nonEmpty).getOrElse(Seq(root))
-    s"${parts.size}_${parts.map(_.length).sum}_${parts.map(_.lastModified).max}"
-  }
+  /** A stored IVF index ([[Ann.ivfSave]]) over `dir`'s embeddings, built
+    * once per source fingerprint and params ([[Artifacts]]). */
+  private def storedIvf(s: SparkSession, dir: String, params: String)(
+      build: DataFrame => (DataFrame, Array[Array[Double]]))
+      : (DataFrame, Array[Array[Double]]) =
+    Artifacts.stored(s, Artifacts.key("ivf", dir, "embeddings", params),
+        Ann.IvfSidecar) { d =>
+      val (indexed, centroids) = build(Tables(s, dir, "embeddings"))
+      Ann.ivfSave(d, indexed, centroids)
+    }(Ann.ivfLoad(s, _))
 
-  /** Stored-index cache. The cache key is the RESOLVED index directory —
-    * tagged with the source content fingerprint and build params — so
-    * regenerated testdata or changed parameters miss the memo (the
-    * stale-source guard holds mid-JVM, not only on first access). The
-    * session rides in the key as the OBJECT (not an identity hash, which
-    * can collide across GC'd sessions and would hand back DataFrames bound
-    * to a stopped session); the strong reference is fine — driver/test
-    * sessions are few and long-lived. */
-  private val ivfCache = TrieMap.empty[(SparkSession, String), (DataFrame, Array[Array[Double]])]
-
-  private def ivfIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
-    val idxDir = "/tmp/graft_ivf_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k${IvfK}"
-    ivfCache.getOrElseUpdate((s, idxDir), {
-      val marker = java.nio.file.Paths.get(idxDir, "centroids.csv")
-      if (!java.nio.file.Files.exists(marker)) {
-        val (indexed, centroids) =
-          Ann.ivfBuild(Tables(s, dir, "embeddings"), "embedding", k = IvfK, normalize = false)
-        Ann.ivfSave(idxDir, indexed, centroids)
-      }
-      Ann.ivfLoad(s, idxDir)
-    })
-  }
+  private def ivfIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
+    storedIvf(s, dir, s"_k$IvfK")(
+      Ann.ivfBuild(_, "embedding", k = IvfK, normalize = false))
 
   /** Auto-sized stored IVF index ([[Ann.ivfBuild]] with k ≤ 0): the cell
     * count comes out of [[Ann.ivfAutoK]], not the caller — the round-11
@@ -95,20 +68,9 @@ object AnnQueries {
     * as GREATEST(kMin, CEIL(count/64)). */
   private val AutoCellRows = 64L
 
-  private def ivfAutoIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
-    val idxDir = "/tmp/graft_ivf_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_auto$AutoCellRows"
-    ivfCache.getOrElseUpdate((s, idxDir), {
-      val marker = java.nio.file.Paths.get(idxDir, "centroids.csv")
-      if (!java.nio.file.Files.exists(marker)) {
-        val (indexed, centroids) = Ann.ivfBuild(Tables(s, dir, "embeddings"),
-          "embedding", k = -1, normalize = false, targetCellRows = AutoCellRows)
-        Ann.ivfSave(idxDir, indexed, centroids)
-      }
-      Ann.ivfLoad(s, idxDir)
-    })
-  }
+  private def ivfAutoIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
+    storedIvf(s, dir, s"_auto$AutoCellRows")(Ann.ivfBuild(_, "embedding",
+      k = -1, normalize = false, targetCellRows = AutoCellRows))
 
   /** Auto-k IVF probe: same single-query shape as [[ivf]], but the index
     * is auto-sized and the query EMITS the chosen cell count for the
@@ -127,55 +89,29 @@ object AnnQueries {
       .withColumn("k_cells", lit(k.toLong))
   }
 
-  /** Stored PQ index cache (same keying discipline as [[ivfIndex]]). */
-  private val pqCache = TrieMap.empty[(SparkSession, String), (DataFrame, graft.functions.PqCodebook)]
-
-  private def pqIndex(s: SparkSession, dir: String): (DataFrame, graft.functions.PqCodebook) = {
-    val idxDir = "/tmp/graft_pq_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_m8k16"
-    pqCache.getOrElseUpdate((s, idxDir), {
-      val marker = java.nio.file.Paths.get(idxDir, "codebook.csv")
-      if (!java.nio.file.Files.exists(marker)) {
-        val emb = Tables(s, dir, "embeddings")
-        val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
-        Ann.pqSave(idxDir, Ann.pqEncode(emb, "embedding", cb), cb)
-      }
-      Ann.pqLoad(s, idxDir)
-    })
-  }
+  /** Stored PQ index (same keying discipline as [[ivfIndex]]). */
+  private def pqIndex(s: SparkSession, dir: String): (DataFrame, graft.functions.PqCodebook) =
+    Artifacts.stored(s, Artifacts.key("pq", dir, "embeddings", "_m8k16"),
+        Ann.PqSidecar) { d =>
+      val emb = Tables(s, dir, "embeddings")
+      val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
+      Ann.pqSave(d, Ann.pqEncode(emb, "embedding", cb), cb)
+    }(Ann.pqLoad(s, _))
 
   /** Stored SQ8 index (same keying discipline as [[ivfIndex]]): the
     * encode pass is the build step, the query reads codes+scale from the
     * stored table — codes are deterministic integer math, so the stored
     * and freshly-encoded tables are value-identical and the DuckDB oracle
     * (which replays encode from the raw embeddings) still hash-matches. */
-  private val sq8Cache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The stored encoding under `idxDir`: built through `write` (handed
-    * the fresh version path) when no version is committed yet, then read
-    * from the version the `_current` sidecar names. */
-  private def storedEncoding(s: SparkSession, idxDir: String)(
-      write: String => Unit): DataFrame = {
-    if (!VersionedDir.sidecarExists(s, idxDir, "_current"))
-      VersionedDir.commit(s, idxDir, "_current", Seq(_))(write)
-    s.read.parquet(
-      s"$idxDir/${VersionedDir.readSidecar(s, idxDir, "_current").head}")
-  }
-
-  private def sq8Index(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = "/tmp/graft_sq8_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}"
-    sq8Cache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+  private def sq8Index(s: SparkSession, dir: String): DataFrame =
+    Artifacts.encoding(s, Artifacts.key("sq8", dir, "embeddings"))(
       Ann.sq8Encode(Tables(s, dir, "embeddings"), "embedding")
-        .write.mode("overwrite").parquet(_)))
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** One-row verification summary of an approximate result vs its exact
     * twin (see the object scaladoc): deterministic counts + booleans the
     * oracle replays as literals. */
-  private def annVerified(approx0: DataFrame, exact0: DataFrame,
+  private[queries] def annVerified(approx0: DataFrame, exact0: DataFrame,
       recallFloor: Option[Double], includeRowCount: Boolean = true): DataFrame = {
     // ONE pass over approx ∪ exact (r12, guide §2.4): the first cut ran
     // three aggregations plus two joins over two eagerly-checkpointed
@@ -184,15 +120,21 @@ object AnnQueries {
     // together, each input is consumed exactly once (no checkpoint jobs),
     // and the tiny join broadcasts. Queries missing from either side are
     // filtered (nr/ne > 0) — the inner-join semantics of the old per⋈ne.
-    // Precondition (holds for every caller): (q, vec_id) is unique per
-    // side — top-k outputs dedup by key, so the join never fans out.
+    // Precondition: (q, vec_id) is unique per side — top-k outputs dedup
+    // by key, so the join never fans out. Checked in the same aggregate: a
+    // repeated key makes a side's row count exceed its distinct ids.
+    def unique(side: String) = count(col(side)) ===
+      size(collect_set(when(col(side).isNotNull, col("vec_id"))))
     val a = approx0.select(col(Search.QueryIdCol).as("q"), col("vec_id"),
       col(Search.ScoreCol).cast("double").as("s"), lit(1).as("__a"))
     val e = exact0.select(col(Search.QueryIdCol).as("q"), col("vec_id"),
       lit(1).as("__e"))
     val j = a.join(e, Seq("q", "vec_id"), "full_outer")
       .groupBy("q").agg(
-        count(col("__a")).as("nr"),
+        when(unique("__a") && unique("__e"), count(col("__a")))
+          .otherwise(raise_error(lit(
+            "annVerified: (q, vec_id) repeats on a side; a top-k input must be unique per key")))
+          .as("nr"),
         min(when(col("__a").isNotNull, struct(col("s"), col("vec_id"))))
           .as("t1"),
         count(col("__e")).as("ne"),
@@ -252,17 +194,11 @@ object AnnQueries {
     * into cluster+codes and persisted — the query must probe the STORED
     * table, not pay a full-corpus encode per run (the round-1
     * benchmark-the-build mistake this file's header documents). */
-  private val ivfPqCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def ivfPqEncoded(s: SparkSession, dir: String,
-      cb: graft.functions.PqCodebook): DataFrame = {
-    val idxDir = "/tmp/graft_ivfpq_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k${IvfK}m8k16"
-    ivfPqCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+      cb: graft.functions.PqCodebook): DataFrame =
+    Artifacts.encoding(s, Artifacts.key("ivfpq", dir, "embeddings", s"_k${IvfK}m8k16"))(
       Ann.pqEncode(ivfIndex(s, dir)._1, "embedding", cb)
-        .write.mode("overwrite").partitionBy("cluster").parquet(_)))
-  }
+        .write.mode("overwrite").partitionBy("cluster").parquet(_))
 
   /** Batch IVF×PQ: 100 queries, pruned cells + code-only ADC scan +
     * bounded shortlists + exact refine — one plan over the stored index. */
@@ -279,16 +215,10 @@ object AnnQueries {
   /** Stored IVF×SQ8 layout: the ivf-assigned corpus sq8-encoded and
     * persisted partitioned by cluster, same discipline as
     * [[ivfPqEncoded]]. */
-  private val ivfSq8Cache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def ivfSq8Encoded(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = "/tmp/graft_ivfsq8_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k${IvfK}"
-    ivfSq8Cache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+  private def ivfSq8Encoded(s: SparkSession, dir: String): DataFrame =
+    Artifacts.encoding(s, Artifacts.key("ivfsq8", dir, "embeddings", s"_k$IvfK"))(
       Ann.sq8Encode(ivfIndex(s, dir)._1, "embedding")
-        .write.mode("overwrite").partitionBy("cluster").parquet(_)))
-  }
+        .write.mode("overwrite").partitionBy("cluster").parquet(_))
 
   /** Batch IVF×SQ8: 100 queries, pruned cells + dequantized int8 scoring
     * against the broadcast query column (no driver LUTs) + bounded
@@ -353,16 +283,10 @@ object AnnQueries {
     * O(d·projDim) projection per scan. Stored and fresh projections are
     * value-identical (pure function of the vector), so the full-replay
     * oracle — which recomputes from raw embeddings — keeps holding. */
-  private val rpCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def rpIndex(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = "/tmp/graft_rp_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_p$RpDim"
-    rpCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir)(
+  private def rpIndex(s: SparkSession, dir: String): DataFrame =
+    Artifacts.encoding(s, Artifacts.key("rp", dir, "embeddings", s"_p$RpDim"))(
       Ann.rpEncode(Tables(s, dir, "embeddings"), "embedding", RpDim)
-        .write.mode("overwrite").parquet(_)))
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** Binary sign-bit quantization: the third query family with a FULL
     * DuckDB replay — bit j of word w is `v[w·64+j] > 0`, so the packed
@@ -371,18 +295,12 @@ object AnnQueries {
     * the float vectors — the cheapest shortlist scan in the family). */
   private val BqRefine = 4
 
-  private val bqCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def bqIndex(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = "/tmp/graft_bq_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}"
-    bqCache.getOrElseUpdate((s, idxDir), storedEncoding(s, idxDir) { path =>
+  private def bqIndex(s: SparkSession, dir: String): DataFrame =
+    Artifacts.encoding(s, Artifacts.key("bq", dir, "embeddings")) { path =>
       val emb = Tables(s, dir, "embeddings")
       val dim = emb.select(size(col("embedding"))).head.getInt(0)
       Ann.bqEncode(emb, "embedding", dim).write.mode("overwrite").parquet(path)
-    })
-  }
+    }
 
   private def bq(s: SparkSession, dir: String): DataFrame =
     Ann.bqSearchEncoded(bqIndex(s, dir), queryVec(s, dir), cfg,
@@ -416,22 +334,19 @@ object AnnQueries {
   private val PcaK = 16
   private val PcaRefine = 32
 
-  private val pcaCache = TrieMap.empty[(SparkSession, String), (DataFrame, graft.operators.Pca.PcaModel)]
-
+  /** The PCA encoding plus its model sidecar, committed together under
+    * the encoding's [[Artifacts.Current]] swap. */
   private def pcaIndex(s: SparkSession, dir: String): (DataFrame, graft.operators.Pca.PcaModel) = {
     import graft.operators.Pca
-    val idxDir = "/tmp/graft_pca_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${sourceFingerprint(s"$dir/embeddings.parquet")}_k$PcaK"
-    pcaCache.getOrElseUpdate((s, idxDir), {
-      val enc = storedEncoding(s, idxDir) { path =>
+    Artifacts.stored(s, Artifacts.key("pca", dir, "embeddings", s"_k$PcaK"),
+        Artifacts.Current) { d =>
+      VersionedDir.commit(s, d, Artifacts.Current, Seq(_)) { path =>
         val emb = Tables(s, dir, "embeddings")
         val m = Pca.fit(emb, "embedding", k = PcaK)
         Pca.pcaEncode(emb, "embedding", m).write.mode("overwrite").parquet(path)
-        Pca.pcaSave(s, idxDir, m)
+        Pca.pcaSave(s, d, m)
       }
-      (enc, Pca.pcaLoad(s, idxDir))
-    })
+    }(d => (Artifacts.current(s, d), Pca.pcaLoad(s, d)))
   }
 
   /** Fit diagnostics as a one-row verification frame: driver-side basis

@@ -33,15 +33,13 @@ object BpeQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(String, Long)], Seq[(String, String)])]
-
-  private def trained(s: SparkSession, dir: String) =
-    mergeCache.getOrElseUpdate((s, dir), {
+  private def trained(s: SparkSession, dir: String)
+      : (Seq[(String, Long)], Seq[(String, String)]) =
+    Artifacts.memo(s, Artifacts.key("bpe", dir, "documents")) {
       val freq = Bpe.wordFreq(
         docs(s, dir).filter(col("lang") === "en"), "text", MaxTypes)
       (freq, Bpe.trainMerges(freq, NumMerges, MinPair))
-    })
+    }
 
   private def merges(s: SparkSession, dir: String): Seq[(String, String)] =
     trained(s, dir)._2

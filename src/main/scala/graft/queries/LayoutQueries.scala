@@ -1,7 +1,5 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,19 +16,16 @@ import graft.sources.Layout
   * (row-group footer skipping), not evaluate post-read. */
 object LayoutQueries {
 
-  private val cache = TrieMap.empty[(SparkSession, String), String]
+  /** A layout rewrite of `dir`'s documents, stored once ([[Artifacts]]);
+    * the write's `_SUCCESS` file is its commit marker. */
+  private def rewritten(s: SparkSession, family: String, dir: String)(
+      write: (DataFrame, String) => Unit): String =
+    Artifacts.stored(s, Artifacts.key(family, dir, "documents"), "_SUCCESS")(
+      write(Tables(s, dir, "documents"), _))(identity)
 
   private def layoutDir(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate((s, dir), {
-      val out = "/tmp/graft_layout/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        AnnQueries.sourceFingerprint(s"$dir/documents.parquet")
-      if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-        Layout.optimize(Tables(s, dir, "documents"), out,
-          partitionCols = Seq("lang"), sortCols = Seq("n_chars"))
-      }
-      out
-    })
+    rewritten(s, "layout", dir)(Layout.optimize(_, _,
+      partitionCols = Seq("lang"), sortCols = Seq("n_chars")))
 
   private def prunedScan(s: SparkSession, dir: String): DataFrame = {
     val scan = Layout.read(s, layoutDir(s, dir))
@@ -46,19 +41,9 @@ object LayoutQueries {
       .withColumn("filters_pushed", lit(filtersPushed))
   }
 
-  private val zorderCache = TrieMap.empty[(SparkSession, String), String]
-
   private def zorderDir(s: SparkSession, dir: String): String =
-    zorderCache.getOrElseUpdate((s, dir), {
-      val out = "/tmp/graft_zorder/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        AnnQueries.sourceFingerprint(s"$dir/documents.parquet")
-      if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-        Layout.zorder(Tables(s, dir, "documents"), out,
-          Seq("n_chars", "doc_id"), bits = 8, numRangeSplits = 16)
-      }
-      out
-    })
+    rewritten(s, "zorder", dir)(Layout.zorder(_, _,
+      Seq("n_chars", "doc_id"), bits = 8, numRangeSplits = 16))
 
   /** Z-order layout on (n_chars, doc_id): selective band scans on EACH
     * dimension replay exactly against the raw table (the rewrite changes
@@ -91,28 +76,32 @@ object LayoutQueries {
     byChars.unionByName(byId).withColumn("z_local", lit(local))
   }
 
-  private val bucketCache = TrieMap.empty[(SparkSession, String), (String, String)]
-
-  /** Bucketize customer and orders on the join key (8 buckets each) —
-    * once per (session, sf dir); table names carry the source
-    * fingerprint so a data refresh rebuilds. */
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketCache.getOrElseUpdate((s, dir), {
-      val fp = AnnQueries.sourceFingerprint(s"$dir/orders.parquet")
-      val base = "/tmp/graft_layout_bkt/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + s"_$fp"
-      val (ct, ot) = (s"graft_bkt_customer_$fp", s"graft_bkt_orders_$fp")
-      if (!s.catalog.tableExists(ct) ||
-          !new java.io.File(s"$base/customer/_SUCCESS").exists()) {
-        Layout.bucketize(Tables(s, dir, "customer"), ct,
-          s"$base/customer", Seq("c_custkey"), numBuckets = 8)
-        Layout.bucketize(
-          Tables(s, dir, "orders")
-            .withColumnRenamed("o_custkey", "c_custkey"), ot,
-          s"$base/orders", Seq("c_custkey"), numBuckets = 8)
+  /** Bucketize customer and orders on the join key (8 buckets each),
+    * stored once ([[Artifacts]]; orders is written last, so its
+    * `_SUCCESS` commits both). Table names carry the source fingerprint
+    * so a data refresh rebuilds; a JVM whose catalog has not seen the
+    * stored tables registers them over the stored files. */
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
+    val fp = Artifacts.sourceFingerprint(s"$dir/orders.parquet")
+    val (ct, ot) = (s"graft_bkt_customer_$fp", s"graft_bkt_orders_$fp")
+    Artifacts.stored(s, Artifacts.key("layout_bkt", dir, "orders"),
+        "orders/_SUCCESS") { base =>
+      Layout.bucketize(Tables(s, dir, "customer"), ct,
+        s"$base/customer", Seq("c_custkey"), numBuckets = 8)
+      Layout.bucketize(
+        Tables(s, dir, "orders")
+          .withColumnRenamed("o_custkey", "c_custkey"), ot,
+        s"$base/orders", Seq("c_custkey"), numBuckets = 8)
+    } { base =>
+      Seq(ct -> "customer", ot -> "orders").foreach { case (t, sub) =>
+        if (!s.catalog.tableExists(t))
+          s.sql(s"CREATE TABLE $t (${s.read.parquet(s"$base/$sub").schema.toDDL}) " +
+            "USING parquet CLUSTERED BY (c_custkey) SORTED BY (c_custkey) " +
+            s"INTO 8 BUCKETS LOCATION '$base/$sub'")
       }
       (ct, ot)
-    })
+    }
+  }
 
   /** Co-located join over same-bucketed tables: the plan must carry a
     * SortMergeJoin with ZERO Exchange — the shuffle was paid once at
@@ -152,9 +141,7 @@ object LayoutQueries {
     * row-identical — the aggregate replays exactly against the raw
     * table. */
   private def compactRoundTrip(s: SparkSession, dir: String): DataFrame = {
-    val base = "/tmp/graft_layout_cmp/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      AnnQueries.sourceFingerprint(s"$dir/documents.parquet")
+    val base = Artifacts.dir(Artifacts.key("layout_cmp", dir, "documents"))
     def fileCount = new java.io.File(base).listFiles()
       .count(f => f.isFile && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))

@@ -25,15 +25,13 @@ object LidQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, LangId.LidModel]
-
+  /** Trained on the built-in fixture, so one model per session. */
   private[queries] def model(s: SparkSession): LangId.LidModel =
-    modelCache.getOrElseUpdate(s, {
+    Artifacts.memo(s, "lid") {
       import s.implicits._
       LangId.train(LangIdFixture.Train.toDF("lang", "text"),
         "lang", "text", NMax, Cap)
-    })
+    }
 
   private def heldOutDf(s: SparkSession): DataFrame = {
     import s.implicits._

@@ -38,14 +38,15 @@ object LmQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** One trained model per source dir (the model is a bounded local
-    * artifact — see [[LanguageModel.BigramLM]]); training re-runs only
-    * when the session or dir changes, mirroring the lexical-index cache. */
-  private val lmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), LanguageModel.BigramLM]
+  /** One trained `family` model per source (the models are bounded local
+    * artifacts — see [[LanguageModel.BigramLM]]); training re-runs only
+    * when the session or the documents change ([[Artifacts]]). */
+  private def trained[A](s: SparkSession, dir: String, family: String)(
+      train: => A): A =
+    Artifacts.memo(s, Artifacts.key(family, dir, "documents"))(train)
 
   private def lm(s: SparkSession, dir: String): LanguageModel.BigramLM =
-    lmCache.getOrElseUpdate((s, dir), LanguageModel.trainBigram(
+    trained(s, dir, "lm")(LanguageModel.trainBigram(
       docs(s, dir).filter(col("lang") === "en"), "text",
       vocabCap = VocabCap, bigramMinCount = BigramMinCount))
 
@@ -57,12 +58,8 @@ object LmQueries {
 
   private val TrigramMinCount = 2
 
-  /** One trained trigram model per source dir ([[lm]] convention). */
-  private val triCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), LanguageModel.TrigramLM]
-
   private def triLm(s: SparkSession, dir: String): LanguageModel.TrigramLM =
-    triCache.getOrElseUpdate((s, dir), LanguageModel.trainTrigram(
+    trained(s, dir, "lm_tri")(LanguageModel.trainTrigram(
       docs(s, dir).filter(col("lang") === "en"), "text",
       vocabCap = VocabCap, bigramMinCount = BigramMinCount,
       trigramMinCount = TrigramMinCount))
@@ -83,11 +80,8 @@ object LmQueries {
 
   /** Trigram model updated with the French slice under the fixed
     * vocabulary ([[LanguageModel.lmUpdateTrigram]]). */
-  private val triUpdCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), LanguageModel.TrigramLM]
-
   private def updatedTriLm(s: SparkSession, dir: String): LanguageModel.TrigramLM =
-    triUpdCache.getOrElseUpdate((s, dir), LanguageModel.lmUpdateTrigram(
+    trained(s, dir, "lm_tri_fr")(LanguageModel.lmUpdateTrigram(
       triLm(s, dir), docs(s, dir).filter(col("lang") === "fr"), "text"))
 
   private def triUpdateScoreQ(s: SparkSession, dir: String): DataFrame =
@@ -101,11 +95,8 @@ object LmQueries {
 
   private val NgramOrder = 5
 
-  private val ngramCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.NgramLm.NgramModel]
-
   private def ngramLm(s: SparkSession, dir: String) =
-    ngramCache.getOrElseUpdate((s, dir), graft.operators.NgramLm.train(
+    trained(s, dir, s"lm_n$NgramOrder")(graft.operators.NgramLm.train(
       docs(s, dir).filter(col("lang") === "en"), "text", NgramOrder,
       vocabCap = VocabCap, minCount = BigramMinCount))
 
@@ -140,11 +131,8 @@ object LmQueries {
 
   /** Base LM updated with the French slice under the fixed vocabulary
     * ([[LanguageModel.lmUpdate]]); cached like the base model. */
-  private val updCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), LanguageModel.BigramLM]
-
   private def updatedLm(s: SparkSession, dir: String): LanguageModel.BigramLM =
-    updCache.getOrElseUpdate((s, dir), LanguageModel.lmUpdate(
+    trained(s, dir, "lm_fr")(LanguageModel.lmUpdate(
       lm(s, dir), docs(s, dir).filter(col("lang") === "fr"), "text"))
 
   private def updateScoreQ(s: SparkSession, dir: String): DataFrame =
@@ -271,13 +259,10 @@ object LmQueries {
   private val NbCap = 30
   private val NbScoreIdMax = 150
 
-  private val nbCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.QualityClassifier.NbModel]
-
   /** en (good) vs zh (bad) — disjoint token distributions on the
     * synthetic corpus, so the log-odds are strongly non-degenerate. */
   private def nbModel(s: SparkSession, dir: String) =
-    nbCache.getOrElseUpdate((s, dir), graft.operators.QualityClassifier.trainNb(
+    trained(s, dir, "nb")(graft.operators.QualityClassifier.trainNb(
       docs(s, dir).filter(col("lang") === "en"),
       docs(s, dir).filter(col("lang") === "zh"), "text", NbCap))
 
@@ -310,23 +295,19 @@ object LmQueries {
     maxMeanWordLen = 12, maxSymbolWordRatio = 1.0,
     minAlphaWordFrac = 0.3, minStopwordHits = 0)
 
-  private val auditLmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), LanguageModel.BigramLM]
   private def auditLm(s: SparkSession, dir: String) =
-    auditLmCache.getOrElseUpdate((s, dir), LanguageModel.trainBigram(
+    trained(s, dir, "lm_audit")(LanguageModel.trainBigram(
       docs(s, dir).filter(col("lang") === "en"), "text",
       vocabCap = 40, bigramMinCount = BigramMinCount, bigramCap = BigramCap))
 
-  private val auditNbCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.QualityClassifier.NbModel]
   private def auditNb(s: SparkSession, dir: String) =
-    auditNbCache.getOrElseUpdate((s, dir), {
+    trained(s, dir, "nb_audit") {
       import s.implicits._
       graft.operators.QualityClassifier.trainNb(
         docs(s, dir).filter(col("lang") === "en"),
         (0 until 20).map(i => (i.toLong, AuditSpamText)).toDF("doc_id", "text"),
         "text", vocabCap = 60)
-    })
+    }
 
   /** The audited curation chain over documents + three planted reject
     * families (2-word stubs → Gopher; 90 unique-OOV-token docs → LM;

@@ -76,26 +76,15 @@ object RetrievalQueries {
     * persisted term-sorted posting layout + stats sidecar
     * ([[TextRetrieval.indexSave]]) and every query run serves the STORED
     * index — the [[AnnQueries]] lifecycle (build out-of-band, query the
-    * saved layout), keyed the same way: resolved index dir tagged with
-    * the source content fingerprint, session object in the key. */
-  private val lexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), TextRetrieval.LexIndex]
-
-  private def lexIndex(s: SparkSession, dir: String): TextRetrieval.LexIndex = {
-    val idxDir = "/tmp/graft_lex_idx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      s"_${AnnQueries.sourceFingerprint(s"$dir/documents.parquet")}"
-    lexCache.getOrElseUpdate((s, idxDir), {
-      val marker = java.nio.file.Paths.get(idxDir, TextRetrieval.IndexSidecar)
-      if (!java.nio.file.Files.exists(marker)) {
-        val d = docs(s, dir)
-        TextRetrieval.indexSave(idxDir,
-          TextRetrieval.indexBuild(d, "doc_id", "text"),
-          TextRetrieval.corpusStats(d, "text"))
-      }
-      TextRetrieval.indexLoad(s, idxDir)
-    })
-  }
+    * saved layout), stored and keyed through [[Artifacts]]. */
+  private def lexIndex(s: SparkSession, dir: String): TextRetrieval.LexIndex =
+    Artifacts.stored(s, Artifacts.key("lex", dir, "documents"),
+        TextRetrieval.IndexSidecar) { idxDir =>
+      val d = docs(s, dir)
+      val (stats, pn, ptot) = TextRetrieval.corpusStatsFull(d, "text")
+      TextRetrieval.indexSave(idxDir,
+        TextRetrieval.indexBuild(d, "doc_id", "text"), stats, pn, ptot)
+    }(TextRetrieval.indexLoad(s, _))
 
   /** Same batch + contract as `retrieval_bm25_multi`, served from the
     * STORED index — shares that query's oracle verbatim: the pruned

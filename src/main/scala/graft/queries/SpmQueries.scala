@@ -45,10 +45,8 @@ object SpmQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Spm.SpmModel]
   private def model(s: SparkSession, dir: String): Spm.SpmModel =
-    modelCache.getOrElseUpdate((s, dir), Spm.train(
+    Artifacts.memo(s, Artifacts.key("spm", dir, "documents"))(Spm.train(
       docs(s, dir).filter(col("lang") === "en"), "text",
       MaxWords, MaxWordLen, MaxPieceLen, CandCap, EmIters))
 

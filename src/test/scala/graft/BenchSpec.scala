@@ -24,6 +24,14 @@ class BenchSpec extends AnyFunSuite {
     assert(byParts.get.linesIterator.size == 1)
   }
 
+  test("an SF dir holding a quote, a backslash and a tab still gives a JSON line") {
+    val sf = "/data/a\"b\\c\td"
+    val line = Bench.summaryLine(1.5, Seq("q1" -> 0.5, "q2" -> -1d), sf)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.path("sf").asText() == sf)
+    assert(json.path("queries_n").asInt() == 2 && json.path("failed").get(0).asText() == "q2")
+  }
+
   test("an artifact with no config, or not JSON, has nothing to compare") {
     assert(Bench.overwriteConflict("""{"metric":"total","value":1.0}""", "local[8]", "8").isEmpty)
     assert(Bench.overwriteConflict("not json {", "local[8]", "8").isEmpty)

@@ -648,6 +648,18 @@ class AnnSpec extends SparkTestBase {
     assert(after == before)
   }
 
+  test("a 3-field PQ header (no normalized flag) fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq-old").toString
+    val cb = Ann.pqTrain(emb.limit(50), "embedding", m = 8, ksub = 4)
+    Ann.pqSave(dir, Ann.pqEncode(emb.limit(50), "embedding", cb), cb)
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, Ann.PqSidecar)
+    graft.model.VersionedDir.writeSidecar(spark, dir, Ann.PqSidecar,
+      lines.head.split(";").take(3).mkString(";") +: lines.tail)
+    val e = intercept[IllegalArgumentException](Ann.pqLoad(spark, dir))
+    assert(e.getMessage.contains(s"$dir/${Ann.PqSidecar}") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+  }
+
   test("PQ: cosine config demands a normalized codebook; normalized keeps recall") {
     val raw = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
     val c = cfg("CosineSimilarity", higher = true)

@@ -165,7 +165,7 @@ class ClusterMaintenanceSpec extends SparkTestBase {
       Set(20L, 21L, 22L))
   }
 
-  test("legacy sidecar (no per-cluster counts) still loads") {
+  test("a count-less sidecar fails loudly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-clegacy").toString
     seedState(dir)
     val st0 = Clustering.clusterLoadState(spark, dir)
@@ -177,18 +177,10 @@ class ClusterMaintenanceSpec extends SparkTestBase {
       (c.id.toString +: c.v.map(_.toString)).mkString(",")).toSeq
     graft.model.VersionedDir.writeSidecar(
       spark, dir, "cluster_centroids.csv", legacy)
-    val st = Clustering.clusterLoadState(spark, dir)
-    assert(st.centroids.map(_.id).toSeq === st0.centroids.map(_.id).toSeq)
-    st.centroids.zip(st0.centroids).foreach { case (a, b) =>
-      assert(a.v.sameElements(b.v), s"legacy centroid ${a.id} mis-parsed") }
-    assert(st.counts.values.forall(_ == 0L),
-      "legacy counts default to 0 (unknown)")
-    // the first append after a legacy load migrates via a full save
-    val batch = Clustering.assign(
-      Seq((30L, vec(0.9, 0.1), 0)).toDF("vec_id", "embedding", "label"),
-      st.centroids, "embedding").drop("dist")
-    val st1 = Clustering.clusterAppend(spark, dir, batch)
-    assert(st1.counts === Map(0 -> 3L, 1 -> 1L))
+    val e = intercept[IllegalArgumentException](
+      Clustering.clusterLoadState(spark, dir))
+    assert(e.getMessage.contains(s"$dir/cluster_centroids.csv") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
   }
 
   test("compact purges by id and keeps empty clusters routable") {

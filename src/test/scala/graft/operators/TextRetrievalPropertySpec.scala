@@ -93,9 +93,9 @@ class TextRetrievalPropertySpec extends SparkTestBase {
           qdf, "query_id", "qtext", k = Int.MaxValue)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       val dir = java.nio.file.Files.createTempDirectory(s"lexprop$seed").toString
+      val (st, pn, ptot) = TextRetrieval.corpusStatsFull(df, "text")
       TextRetrieval.indexSave(dir,
-        TextRetrieval.indexBuild(df, "doc_id", "text"),
-        TextRetrieval.corpusStats(df, "text"))
+        TextRetrieval.indexBuild(df, "doc_id", "text"), st, pn, ptot)
       val idx = TextRetrieval.indexLoad(spark, dir)
       val viaIdx = TextRetrieval.bm25Indexed(idx, "doc_id",
           qdf, "query_id", "qtext", k = Int.MaxValue)

@@ -7,6 +7,13 @@ import graft.SparkTestBase
 class TextRetrievalSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** Save `docs` as a stored index under `dir` with its full stats. */
+  private def saveIndex(dir: String, docs: org.apache.spark.sql.DataFrame): Unit = {
+    val (st, pn, ptot) = TextRetrieval.corpusStatsFull(docs, "text")
+    TextRetrieval.indexSave(dir,
+      TextRetrieval.indexBuild(docs, "doc_id", "text"), st, pn, ptot)
+  }
+
   // Hand-checkable corpus: N=4, dl = 3,3,4,3 → avgdl = 3.25.
   private def corpus = Seq(
     (1L, "spark fast spark"),
@@ -109,9 +116,7 @@ class TextRetrievalSpec extends SparkTestBase {
     assert(e.getMessage.contains("distinct terms") &&
       e.getMessage.contains("split the batch"), e.getMessage)
     val dir = java.nio.file.Files.createTempDirectory("lexcap").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     val idx = TextRetrieval.indexLoad(spark, dir)
     val e2 = intercept[IllegalArgumentException] {
       TextRetrieval.bm25Indexed(idx, "doc_id", queries, "q", "t", k = 5,
@@ -153,8 +158,7 @@ class TextRetrievalSpec extends SparkTestBase {
   test("stored index: build→save→load serves exactly bm25Multi's rows, swap serves the newest version") {
     val dir = java.nio.file.Files.createTempDirectory("lexidx").toString
     val cs = TextRetrieval.corpusStats(corpus, "text")
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"), cs)
+    saveIndex(dir, corpus)
     val idx = TextRetrieval.indexLoad(spark, dir)
     assert(idx.stats == cs)
     // the stored df summary must equal the per-term document frequencies
@@ -173,18 +177,14 @@ class TextRetrievalSpec extends SparkTestBase {
     // versioned swap: a rebuild on a changed corpus replaces postings, df
     // and stats atomically; the reload must see the new version
     val corpus2 = corpus.filter(col("doc_id") =!= 4L)
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus2, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus2, "text"))
+    saveIndex(dir, corpus2)
     val stats2 = TextRetrieval.indexLoad(spark, dir).stats
     assert(stats2.n == 3L && stats2 != idx.stats)
   }
 
   test("indexAppend: appended docs serve immediately, stats and df merge exactly") {
     val dir = java.nio.file.Files.createTempDirectory("lexapp").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     // includes a ZERO-TOKEN doc: it has no postings but must still count
     // toward N/avgdl (the raw path's corpusStats counts it)
     val extra = Seq((5L, "spark stream"), (6L, "")).toDF("doc_id", "text")
@@ -206,9 +206,7 @@ class TextRetrievalSpec extends SparkTestBase {
 
   test("indexCompact: purge through the swap, appended survivors kept, delta log collapsed") {
     val dir = java.nio.file.Files.createTempDirectory("lexcomp").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     val extra = Seq((5L, "spark stream")).toDF("doc_id", "text")
     TextRetrieval.indexAppend(spark, dir, extra, "doc_id", "text")
     val union = corpus.unionByName(extra)
@@ -228,9 +226,7 @@ class TextRetrievalSpec extends SparkTestBase {
 
   test("indexRemove == indexCompact with the complement; update = remove+append") {
     val dir = java.nio.file.Files.createTempDirectory("lexrm").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     val idx2 = TextRetrieval.indexRemove(spark, dir,
       Seq(1L).toDF("doc_id"), "doc_id")
     val left = corpus.filter(col("doc_id") =!= 1L)
@@ -293,11 +289,21 @@ class TextRetrievalSpec extends SparkTestBase {
     assert(a2.stats == b2.stats && dfs(a2) == dfs(b2))
   }
 
+  test("a 3-field stats sidecar (no postings totals) fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("lexold").toString
+    saveIndex(dir, corpus)
+    val lines = graft.model.VersionedDir.readSidecar(
+      spark, dir, TextRetrieval.IndexSidecar)
+    graft.model.VersionedDir.writeSidecar(spark, dir, TextRetrieval.IndexSidecar,
+      Seq(lines.head, lines(1).split(",").take(3).mkString(",")))
+    val e = intercept[IllegalArgumentException](TextRetrieval.indexLoad(spark, dir))
+    assert(e.getMessage.contains(s"$dir/${TextRetrieval.IndexSidecar}") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+  }
+
   test("maxDfRatio cap drops hot terms BEFORE their postings are read") {
     val dir = java.nio.file.Files.createTempDirectory("lexidx3").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     val idx = TextRetrieval.indexLoad(spark, dir)
     // df: spark=2, table=2, the=1; N=4. ratio 0.4 → cap 1.6: spark and
     // table are cut, "the" survives → the query scores ONLY d4
@@ -318,9 +324,7 @@ class TextRetrievalSpec extends SparkTestBase {
 
   test("stored index plan: the batch vocabulary is pushed into the postings scan") {
     val dir = java.nio.file.Files.createTempDirectory("lexidx2").toString
-    TextRetrieval.indexSave(dir,
-      TextRetrieval.indexBuild(corpus, "doc_id", "text"),
-      TextRetrieval.corpusStats(corpus, "text"))
+    saveIndex(dir, corpus)
     val idx = TextRetrieval.indexLoad(spark, dir)
     val queries = Seq((1L, "spark table")).toDF("query_id", "qtext")
     val plan = TextRetrieval.bm25Indexed(idx, "doc_id",

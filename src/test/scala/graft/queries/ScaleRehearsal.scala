@@ -108,6 +108,13 @@ object ScaleRehearsal {
     * batch probes. Generated once (simhash signatures precomputed so
     * the timed legs measure PAIRING, not hashing). */
   private val Dir10 = "/tmp/graft_sf10"
+
+  /** A stored lexical index of `docs` under `dir`, with its full stats. */
+  private def saveLex(dir: String, docs: DataFrame): Unit = {
+    val (st, pn, ptot) = graft.operators.TextRetrieval.corpusStatsFull(docs, "text")
+    graft.operators.TextRetrieval.indexSave(dir,
+      graft.operators.TextRetrieval.indexBuild(docs, "doc_id", "text"), st, pn, ptot)
+  }
   private val NDocs10 = 5000000L
 
   private def gen10(spark: SparkSession): Unit = {
@@ -728,9 +735,7 @@ object ScaleRehearsal {
       // corpus size (the raw path rescans+explodes the corpus per batch)
       val idxDir = s"$Dir/lex_idx_${java.util.UUID.randomUUID().toString.take(8)}"
       val tBuild = System.nanoTime()
-      TextRetrieval.indexSave(idxDir,
-        TextRetrieval.indexBuild(docs, "doc_id", "text"),
-        TextRetrieval.corpusStats(docs, "text"))
+      saveLex(idxDir, docs)
       println(f"[sf1] bm25_index_build_52k      ${(System.nanoTime() - tBuild) / 1e9}%7.2f s")
       val idx = TextRetrieval.indexLoad(spark, idxDir)
       timed("bm25_indexed_52k")(TextRetrieval.bm25Indexed(
@@ -1007,9 +1012,7 @@ object ScaleRehearsal {
       def bm25Leg(tag: String, d: DataFrame): Unit = {
         val idxDir = s"$Dir10/lex_idx_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
         val tB = System.nanoTime()
-        TextRetrieval.indexSave(idxDir,
-          TextRetrieval.indexBuild(d, "doc_id", "text"),
-          TextRetrieval.corpusStats(d, "text"))
+        saveLex(idxDir, d)
         println(f"[sf1] bm25_index_build_$tag%-12s ${(System.nanoTime() - tB) / 1e9}%7.2f s")
         val idx = TextRetrieval.indexLoad(spark, idxDir)
         // warmup then timed probe
@@ -1229,9 +1232,7 @@ object ScaleRehearsal {
         import graft.functions.TextAnalysis
         val idxDir = s"$Dir10/lex_maint_${java.util.UUID.randomUUID().toString.take(8)}"
         var t0 = System.nanoTime()
-        TextRetrieval.indexSave(idxDir,
-          TextRetrieval.indexBuild(d10, "doc_id", "text"),
-          TextRetrieval.corpusStats(d10, "text"))
+        saveLex(idxDir, d10)
         println(f"[sf1] lex_build_5m              ${(System.nanoTime() - t0) / 1e9}%7.2f s")
         // append: 1% new docs (delta-sized work by contract)
         val added = spark.range(20000000L, 20052500L).map { id =>
@@ -1255,9 +1256,7 @@ object ScaleRehearsal {
             concat($"text", lit(" changed marker token"))).otherwise($"text"))
           .unionByName(added)
         val syncDir = s"$Dir10/lex_sync_${java.util.UUID.randomUUID().toString.take(8)}"
-        TextRetrieval.indexSave(syncDir,
-          TextRetrieval.indexBuild(d10, "doc_id", "text"),
-          TextRetrieval.corpusStats(d10, "text"))
+        saveLex(syncDir, d10)
         t0 = System.nanoTime()
         val d2 = SnapshotDiff.diff(d10, v2, "doc_id",
           TextAnalysis.fingerprint($"text")).localCheckpoint(true)
@@ -1270,9 +1269,7 @@ object ScaleRehearsal {
         val tSync = (System.nanoTime() - t0) / 1e9
         t0 = System.nanoTime()
         val freshDir = s"$Dir10/lex_fresh_${java.util.UUID.randomUUID().toString.take(8)}"
-        TextRetrieval.indexSave(freshDir,
-          TextRetrieval.indexBuild(v2, "doc_id", "text"),
-          TextRetrieval.corpusStats(v2, "text"))
+        saveLex(freshDir, v2)
         val tFresh = (System.nanoTime() - t0) / 1e9
         println(f"[sf1] lex_sync_5m               $tSync%7.2f s vs fresh v2 rebuild $tFresh%7.2f s")
         val synced = TextRetrieval.indexLoad(spark, syncDir)
@@ -2659,9 +2656,7 @@ object ScaleRehearsal {
         import graft.operators.TextRetrieval
         val idxDir = s"$Dir/lex_sync_${System.nanoTime()}"
         var t1 = System.nanoTime()
-        TextRetrieval.indexSave(idxDir,
-          TextRetrieval.indexBuild(corp, "doc_id", "text"),
-          TextRetrieval.corpusStats(corp, "text"))
+        saveLex(idxDir, corp)
         println(f"[sf1] lex_build_v1_525k         ${(System.nanoTime() - t1) / 1e9}%7.2f s")
         t1 = System.nanoTime()
         val d2 = SnapshotDiff.diff(corp, v2, "doc_id",
@@ -2675,9 +2670,7 @@ object ScaleRehearsal {
         val tSync = (System.nanoTime() - t1) / 1e9
         t1 = System.nanoTime()
         val freshDir = s"$Dir/lex_fresh_${System.nanoTime()}"
-        TextRetrieval.indexSave(freshDir,
-          TextRetrieval.indexBuild(v2, "doc_id", "text"),
-          TextRetrieval.corpusStats(v2, "text"))
+        saveLex(freshDir, v2)
         val tFresh = (System.nanoTime() - t1) / 1e9
         println(f"[sf1] lex_sync_525k             $tSync%7.2f s (diff + 15,750-doc delta) vs fresh v2 rebuild $tFresh%7.2f s")
         val synced = TextRetrieval.indexLoad(spark, idxDir)

@@ -177,9 +177,9 @@ class StreamingIngestSpec extends SparkTestBase {
     val idxDir = java.nio.file.Files.createTempDirectory("graft-stream-lex").toString
     // non-empty base: the index starts from a seed corpus, the stream grows it
     var state: DataFrame = Seq((0L, "seed words here")).toDF("doc_id", "text")
+    val (st, pn, ptot) = TextRetrieval.corpusStatsFull(state, "text")
     TextRetrieval.indexSave(idxDir,
-      TextRetrieval.indexBuild(state, "doc_id", "text"),
-      TextRetrieval.corpusStats(state, "text"))
+      TextRetrieval.indexBuild(state, "doc_id", "text"), st, pn, ptot)
 
     val stream = MemoryStream[(Long, String)]
     stream.addData((1L, "spark fast spark"), (2L, "slow table scan"))
