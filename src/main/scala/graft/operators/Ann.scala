@@ -11,23 +11,42 @@ import graft.functions.ScoreFunctions
 
 /** Approximate-nearest-neighbour search — the Spark-native stand-in for the
   * reference's Annoy index scan (SURVEY.md §2.4 J2, data/search.go:301-344).
+  * Every index is opt-in; exact brute force ([[Search]]) stays the semantic
+  * reference, like the reference's fallback when the index is absent.
   *
-  * Two strategies, both opt-in (exact brute force stays the semantic
-  * reference, like the reference's fallback when the index is absent):
+  * The family:
+  *  - LSH: MLlib BucketedRandomProjectionLSH for one query ([[lshSearch]]),
+  *    E2LSH band keys for a batch ([[lshMultiSearch]]). Cosine/angular
+  *    configs hash L2-normalized vectors (angular NN on the unit sphere ==
+  *    euclidean NN).
+  *  - IVF: a seeded KMeans coarse quantizer; queries probe the `nProbe`
+  *    nearest cells only ([[ivfSearch]], [[ivfMultiSearch]]). Stored
+  *    partitioned by `cluster`, a probe is a partition-pruned scan of
+  *    nProbe/k of the table — the classic 100-TB ANN layout.
+  *  - Compressed shortlist scans: PQ ([[pqSearch]], ADC over codes), SQ8
+  *    ([[sq8Search]], int8 codes), RP ([[rpSearch]], Rademacher JL
+  *    projection), BQ ([[bqSearch]], sign-bit Hamming), PCA
+  *    ([[Pca.pcaSearchEncoded]]), their batch forms ([[rpMultiSearch]],
+  *    [[bqMultiSearch]]) and the IVF×PQ / IVF×SQ8 batch compositions.
   *
-  *  - LSH (MLlib BucketedRandomProjectionLSH): euclidean random-projection
-  *    hashing; for angular/cosine scores vectors are L2-normalized first
-  *    (angular NN on the unit sphere == euclidean NN). Like Annoy, recall
-  *    < 1 and is spec-tested, not hash-matched.
-  *  - IVF (inverted file): a seeded KMeans coarse quantizer; queries probe
-  *    the `nProbe` nearest cells only. At cluster scale the data is
-  *    partitioned/bucketed by `cluster` so a probe is a partition-pruned
-  *    scan of nProbe/k of the table — the classic 100-TB ANN layout.
-  *
-  * Candidates from either index are re-scored with the exact score function
-  * and top-k'd, mirroring the reference's post-filter re-score
-  * (search.go:323-343).
-  */
+  * Every compressed shortlist keeps ONE contract — Jégou et al.'s
+  * shortlist-then-rerank (ICASSP 2011), the reference's post-filter
+  * re-score (search.go:323-343):
+  *  1. [[shortlistGuard]] before the bounded top-k: JSON filters, a
+  *     non-null feature and a defined (non-null, non-NaN) approximate
+  *     score. A filter-blind shortlist of k·refine rows keeps only
+  *     ~selectivity·k·refine survivors, and Spark orders nulls first
+  *     ascending and NaN first descending, so undefined rows would crowd
+  *     out every real candidate;
+  *  2. the best `limit·refine` rows by approximate score, ties cut by the
+  *     config's tie-break;
+  *  3. the exact rerank: [[Search.search]] for one query
+  *     ([[shortlistRerank]]), [[Search.multiSearch]] joined on the carried
+  *     query id for a batch ([[multiShortlistRerank]]). Filters, context
+  *     re-scoring, null/NaN drops and key dedup are the exact path's own,
+  *     so a batch answers each query exactly as the single path does.
+  * LSH and IVF candidates (bucket or cell members, no approximate score)
+  * go straight to the same exact re-score. */
 object Ann {
 
   /** L2-normalize an array<float> column (null-safe; zero vectors pass
@@ -632,14 +651,14 @@ object Ann {
     data.withColumn("codes", graft.functions.PqEncode(feat, cb))
   }
 
-  /** The approximate shortlist scans must mirror the exact paths' guards
-    * (Search.scala): JSON filters BEFORE the bounded top-k — a filter-blind
-    * shortlist of k·refine rows yields ~selectivity·k·refine survivors, far
-    * under k even when plenty match — and no null/NaN approximate scores in
-    * the shortlist, since Spark orders nulls FIRST ascending and NaN first
-    * descending, so undefined scores would crowd out every real candidate. */
-  private def shortlistGuard(df: DataFrame, cfg: SearchConfig,
-      approxScore: Column): DataFrame = {
+  // ------------------------------------------- shortlist → exact rerank
+
+  /** The approximate score every shortlist ranks by. */
+  private val ApproxCol = "__approx"
+
+  /** Step 1 of the object-level contract: which rows may enter a
+    * shortlist. Runs on the frame that carries [[ApproxCol]]. */
+  private def shortlistGuard(df: DataFrame, cfg: SearchConfig): DataFrame = {
     val filterCols =
       (if (cfg.filters.nonEmpty) Seq(cfg.labelCol) else Nil) ++
         (if (cfg.groupFilters.nonEmpty) Seq(cfg.groupLabelCol) else Nil)
@@ -647,29 +666,92 @@ object Ann {
       s"JSON filters configured but ${filterCols.filterNot(df.columns.contains).mkString(",")} " +
         "missing from the shortlist scan — carry the label columns into the codes table " +
         "or the shortlist is filter-blind and returns fewer than k rows")
+    // null or NaN, spelled with ONE reference to the score: the optimizer
+    // pushes this filter below the projection that computes the score and
+    // inlines it there, so every reference is one more evaluation per
+    // row — the two-reference spelling ran the unrolled RP fold three
+    // times per batch pair, ann_rp_multi 4.1 s against 1.4 s at sf0.1
     df.filter(Search.passesFilters(cfg))
-      .filter(approxScore.isNotNull && !isnan(approxScore))
+      .filter(col(cfg.featureCol).isNotNull)
+      .filter(!isnan(coalesce(col(ApproxCol), lit(Double.NaN))))
   }
 
-  /** PQ search: driver builds the query's m×ksub distance lookup table,
-    * the scan scores CODES only (codegen'd [[graft.functions.PqAdc]] —
-    * no vector math, TakeOrderedAndProject bounded heaps), and the
-    * `refine`-multiplied candidate pool is re-scored exactly on the
-    * original vectors. */
+  /** One query's shortlist → exact rerank: guard `df`, keep its best
+    * `limit·refine` rows by `approx` (descending when `descending`) as a
+    * `TakeOrderedAndProject` bounded heap, drop the approximate columns
+    * `drop`, and re-score the shortlist with [[Search.search]]. */
+  private[operators] def shortlistRerank(df: DataFrame, approx: Column,
+      descending: Boolean, query: Seq[Float], cfg: SearchConfig, refine: Int,
+      drop: String*): DataFrame = {
+    val a = col(ApproxCol)
+    val shortlist = shortlistGuard(df.withColumn(ApproxCol, approx), cfg)
+      .orderBy((if (descending) a.desc else a.asc) +:
+        cfg.tieBreakCol.map(col(_).asc).toSeq: _*)
+      .limit(cfg.limit * refine)
+      .drop(ApproxCol +: drop: _*)
+    Search.search(shortlist, query, cfg)
+  }
+
+  /** A batch's shortlist → exact rerank. `pairs` holds one row per
+    * (`query_id`, candidate); `approx` scores the pair, smaller is better.
+    * After the guard, `stage` keeps each query's best `k = limit·refine`
+    * pairs as (`query_id`, candidate row), and [[Search.multiSearch]]
+    * re-scores each candidate against exactly ITS query through the
+    * carried `__cand_q`. */
+  private def multiShortlistRerank(pairs: DataFrame, approx: Column,
+      queries: DataFrame, cfg: SearchConfig, refine: Int)(
+      stage: (DataFrame, Int) => DataFrame): DataFrame = {
+    val short = stage(shortlistGuard(pairs.withColumn(ApproxCol, approx), cfg),
+      cfg.limit * refine)
+    Search.multiSearch(short.withColumnRenamed(Search.QueryIdCol, "__cand_q"),
+        queries.withColumn("__cand_q", col(Search.QueryIdCol)), cfg,
+        joinCols = Seq("__cand_q"))
+      .drop("__cand_q")
+  }
+
+  /** Heap stage of [[multiShortlistRerank]]: a partial-aggregating
+    * `CollectTopK` per query that carries `payloadCols`, so at most k rows
+    * per query per partition cross the one shuffle. */
+  private def heapStage(payloadCols: Seq[String], cfg: SearchConfig)(
+      guarded: DataFrame, k: Int): DataFrame = {
+    val item = struct(
+      struct(col(ApproxCol).as("__a") +:
+        cfg.tieBreakCol.map(c => col(c).as("__t")).toSeq: _*).as("__o"),
+      struct(payloadCols.map(col): _*).as("__p"))
+    guarded.groupBy(col(Search.QueryIdCol))
+      .agg(Search.collectTopK(item, k).as("__arr"))
+      .select(col(Search.QueryIdCol), explode(col("__arr")).as("__e"))
+      .select(col(Search.QueryIdCol) +:
+        payloadCols.map(c => col(s"__e.__p.$c").as(c)): _*)
+  }
+
+  /** Window stage of [[multiShortlistRerank]]: rank NARROW (query, `tie`,
+    * score) triples — a `WindowGroupLimit` partial top-k, so at most k
+    * skinny rows per query per partition cross the shuffle and the wide
+    * corpus columns never ride the window — then broadcast the shortlisted
+    * ids back onto `data`. */
+  private def windowStage(data: DataFrame, tie: String)(
+      guarded: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(Search.QueryIdCol))
+      .orderBy(col(ApproxCol).asc, col(tie).asc)
+    val ids = guarded.select(col(Search.QueryIdCol), col(tie), col(ApproxCol))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k)
+      .select(col(Search.QueryIdCol), col(tie))
+    data.join(broadcast(ids), Seq(tie))
+  }
+
+  /** PQ search: the driver builds the query's m×ksub distance lookup
+    * table and the shortlist scores CODES only (codegen'd
+    * [[graft.functions.PqAdc]], no vector math). Quantization makes ADC
+    * ties frequent (distinct vectors, same codes); the tie-break keeps
+    * the shortlist deterministic. */
   def pqSearch(encoded: DataFrame, cb: graft.functions.PqCodebook,
       query: Seq[Float], cfg: SearchConfig, refine: Int = 4): DataFrame = {
     requirePqScoreSpace(cb, cfg)
-    val lut = pqLut(cb, query)
-    // quantization produces frequent ADC ties (distinct vectors, same
-    // codes) — the configured tie-break keeps the shortlist deterministic
-    val order = col("__adc").asc +: cfg.tieBreakCol.map(col(_).asc).toSeq
-    val candidates = shortlistGuard(
-      encoded.withColumn("__adc", graft.functions.PqAdc(col("codes"), lut)),
-      cfg, col("__adc"))
-      .orderBy(order: _*)
-      .limit(cfg.limit * refine)
-      .drop("__adc", "codes")
-    Search.search(candidates, query, cfg)
+    shortlistRerank(encoded, graft.functions.PqAdc(col("codes"), pqLut(cb, query)),
+      descending = false, query, cfg, refine, "codes")
   }
 
   /** An ADC shortlist ranks by squared L2 — valid for cosine/angular
@@ -688,10 +770,9 @@ object Ann {
     * layout via the broadcast equi-join on `cluster`), the surviving
     * cells are scored on CODES only (one codegen'd LUT lookup per
     * subspace per (row, query) — [[graft.functions.PqAdcMulti]] carries
-    * the whole batch's LUTs as one reference object), each query's
-    * `limit·refine` shortlist comes from a partial-aggregating bounded
-    * heap, and only the shortlist is re-scored exactly. One scan of the
-    * codes + two bounded-top-k shuffles, regardless of batch size.
+    * the whole batch's LUTs as one reference object), and each query's
+    * shortlist comes from the bounded heap ([[heapStage]]). One scan of
+    * the codes + two bounded-top-k shuffles, regardless of batch size.
     * Queries are collected to the driver for LUT construction — the
     * batch is broadcast-sized by contract, exactly like
     * [[Search.multiSearch]]'s broadcast. */
@@ -721,40 +802,20 @@ object Ann {
     val probed = queries.join(broadcast(idxDf), Seq(Search.QueryIdCol))
       .select(col(Search.QueryIdCol), col("__qidx"),
         explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster"))
-    val payloadCols = encodedIndexed.columns.filterNot(_ == "codes").toSeq
-    val scored = shortlistGuard(
-      pruneToProbedCells(encodedIndexed, probed)
-        .join(broadcast(probed), Seq("cluster"))
-        .withColumn("__adc", graft.functions.PqAdcMulti(col("codes"), col("__qidx"), luts)),
-      cfg, col("__adc"))
-    // per-query shortlist: bounded partial heaps, limit·refine rows per
-    // query cross the one shuffle (ADC ties broken by the tie-break col)
-    val item = struct(
-      struct(col("__adc").as("__a") +:
-        cfg.tieBreakCol.map(c => col(c).as("__t")).toSeq: _*).as("__o"),
-      struct(payloadCols.map(col): _*).as("__p"))
-    val short = scored.groupBy(col(Search.QueryIdCol))
-      .agg(Search.collectTopKPublic(item, cfg.limit * refine).as("__arr"))
-      .select(col(Search.QueryIdCol), explode(col("__arr")).as("__e"))
-      .select(col(Search.QueryIdCol) +:
-        payloadCols.map(c => col(s"__e.__p.$c").as(c)): _*)
-    // exact re-score through the standard batch merge: each shortlisted
-    // row pairs with exactly ITS query via the carried id
-    val shortQ = short.withColumnRenamed(Search.QueryIdCol, "__cand_q")
-    val q2 = queries.withColumn("__cand_q", col(Search.QueryIdCol))
-    Search.multiSearch(shortQ, q2, cfg, joinCols = Seq("__cand_q"))
-      .drop("__cand_q")
+    multiShortlistRerank(
+      pruneToProbedCells(encodedIndexed, probed).join(broadcast(probed), Seq("cluster")),
+      graft.functions.PqAdcMulti(col("codes"), col("__qidx"), luts),
+      queries, cfg, refine)(
+      heapStage(encodedIndexed.columns.filterNot(_ == "codes").toSeq, cfg))
   }
 
   /** Batch IVF×SQ8 — the codebook-free sibling of [[ivfPqMultiSearch]]:
     * every query probes its `nProbe` nearest cells (broadcast equi-join
-    * on `cluster` over the stored partitioned layout), surviving cells
-    * score DEQUANTIZED int8 codes against the query vector carried on
-    * the broadcast side (`code · scale` through the codegen'd score
+    * on `cluster` over the stored partitioned layout), and surviving
+    * cells score DEQUANTIZED int8 codes against the query vector carried
+    * on the broadcast side (`code · scale` through the codegen'd score
     * kernel — no driver-side LUT collection at all, the whole batch is
-    * pure columns), each query's `limit·refine` shortlist comes from a
-    * partial-aggregating bounded heap, and only the shortlist re-scores
-    * exactly. One scan of the codes + two bounded-top-k shuffles,
+    * pure columns). One scan of the codes + two bounded-top-k shuffles,
     * regardless of batch size. Approximate scores round to 6 like
     * [[sq8Search]], so single-query and batch shortlists bucket
     * borderline candidates identically. */
@@ -770,29 +831,13 @@ object Ann {
         explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster"))
     val deq = transform(col("codes"), c => c.cast("double") * col("__scale"))
     val approx = round(ScoreFunctions.score(cfg.scoreFuncName, deq, col("__qv")), 6)
-    val payloadCols = encodedIndexed.columns
-      .filterNot(c => c == "codes" || c == "__scale").toSeq
-    val scored = shortlistGuard(
-      pruneToProbedCells(encodedIndexed, probed)
-        .join(broadcast(probed), Seq("cluster"))
-        .withColumn("__approx", approx),
-      cfg, col("__approx"))
-    // the bounded heap keeps the MIN by the ordering struct — negate for
-    // higher-is-better scores, same convention as the exact merge
-    val eff = if (cfg.higherIsBetter) -col("__approx") else col("__approx")
-    val item = struct(
-      struct(eff.as("__a") +:
-        cfg.tieBreakCol.map(c => col(c).as("__t")).toSeq: _*).as("__o"),
-      struct(payloadCols.map(col): _*).as("__p"))
-    val short = scored.groupBy(col(Search.QueryIdCol))
-      .agg(Search.collectTopKPublic(item, cfg.limit * refine).as("__arr"))
-      .select(col(Search.QueryIdCol), explode(col("__arr")).as("__e"))
-      .select(col(Search.QueryIdCol) +:
-        payloadCols.map(c => col(s"__e.__p.$c").as(c)): _*)
-    val shortQ = short.withColumnRenamed(Search.QueryIdCol, "__cand_q")
-    val q2 = queries.withColumn("__cand_q", col(Search.QueryIdCol))
-    Search.multiSearch(shortQ, q2, cfg, joinCols = Seq("__cand_q"))
-      .drop("__cand_q")
+    // the heap keeps the smallest: negate higher-is-better scores, the
+    // exact merge's convention
+    multiShortlistRerank(
+      pruneToProbedCells(encodedIndexed, probed).join(broadcast(probed), Seq("cluster")),
+      if (cfg.higherIsBetter) -approx else approx, queries, cfg, refine)(
+      heapStage(encodedIndexed.columns.filterNot(c => c == "codes" || c == "__scale").toSeq,
+        cfg))
   }
 
   /** The query's m×ksub squared-L2 lookup table vs every sub-centroid. */
@@ -871,27 +916,16 @@ object Ann {
               floor(x / col("__scale") + 0.5d))).cast("byte"))))
   }
 
-  /** Approximate kNN over SQ8 codes: score the DEQUANTIZED codes
-    * (`code · scale`), shortlist `refine · k` by the approximate score
-    * (rounded to 6 so both engines bucket borderline candidates
-    * identically, ties broken by the tie-break column), then re-score the
-    * shortlist exactly on the original vectors. One bounded top-k over
-    * codes + one over `refine·k` rows — the float vectors are only read
-    * for the shortlist. */
+  /** Approximate kNN over SQ8 codes: the shortlist scores the
+    * DEQUANTIZED codes (`code · scale`) with the config's own score
+    * function, rounded to 6 so both engines bucket borderline candidates
+    * identically. */
   def sq8Search(encoded: DataFrame, query: Seq[Float], cfg: SearchConfig,
       refine: Int = 4): DataFrame = {
     val deq = transform(col("codes"), c => c.cast("double") * col("__scale"))
-    val approx = round(
-      ScoreFunctions.score(cfg.scoreFuncName, deq, lit(query.toArray)), 6)
-    val ord =
-      if (cfg.higherIsBetter) Seq(col("__approx").desc) else Seq(col("__approx").asc)
-    val tie = cfg.tieBreakCol.map(c => col(c).asc).toSeq
-    val shortlist = shortlistGuard(
-      encoded.withColumn("__approx", approx), cfg, col("__approx"))
-      .orderBy(ord ++ tie: _*)
-      .limit(cfg.limit * refine)
-      .drop("__approx", "__scale", "codes")
-    Search.search(shortlist, query, cfg)
+    shortlistRerank(encoded,
+      round(ScoreFunctions.score(cfg.scoreFuncName, deq, lit(query.toArray)), 6),
+      cfg.higherIsBetter, query, cfg, refine, "__scale", "codes")
   }
 
   // --------------------------------------- Rademacher random projection
@@ -937,13 +971,12 @@ object Ann {
 
   /** J2 variant: Johnson–Lindenstrauss shortlist + exact rerank. The
     * corpus projects to `projDim` dims map-side (O(d·projDim) per row —
-    * at scale, precompute once and store like the SQ8 codes), the
-    * shortlist is a bounded top-(k·refine) by projected SQUARED L2
-    * (cheap: `projDim` flops per row instead of `d`), and the shortlist
-    * re-scores exactly on the original vectors. Fully oracle-replayable:
-    * signs are integer hash parity, projections and distances are
-    * ordered double folds — the `ann_rp_knn` query is a complete DuckDB
-    * replay (the [[sq8Search]] class of evidence), not a recall floor. */
+    * at scale, precompute once with [[rpEncode]] and store), and the
+    * shortlist ranks by projected SQUARED L2 (`projDim` flops per row
+    * instead of `d`). Fully oracle-replayable: signs are integer hash
+    * parity, projections and distances are ordered double folds — the
+    * `ann_rp_knn` query is a complete DuckDB replay (the [[sq8Search]]
+    * class of evidence), not a recall floor. */
   def rpSearch(data: DataFrame, query: Seq[Float], cfg: SearchConfig,
       projDim: Int = 8, refine: Int = 10): DataFrame = {
     require(projDim >= 1 && refine >= 1, s"projDim=$projDim refine=$refine")
@@ -951,18 +984,8 @@ object Ann {
       "rpSearch shortlists by projected L2 distance — configure a distance " +
         "(lower-is-better) score function; JL preserves distances, not " +
         "similarities")
-    val qp = rpProjectLocal(query, projDim)
-    val withP = data.withColumn("__rp", rpProject(col(cfg.featureCol), projDim))
-    val dist2 = (1 to projDim).map { j =>
-      val d = element_at(col("__rp"), j) - lit(qp(j - 1)); d * d
-    }.foldLeft(lit(0d))(_ + _)
-    val tie = cfg.tieBreakCol.map(c => col(c).asc).toSeq
-    val shortlist = shortlistGuard(withP.withColumn("__rpd", dist2), cfg,
-      col("__rpd"))
-      .orderBy(col("__rpd").asc +: tie: _*)
-      .limit(cfg.limit * refine)
-      .drop("__rp", "__rpd")
-    Search.search(shortlist, query, cfg)
+    rpSearchEncoded(rpEncode(data, cfg.featureCol, projDim), query, cfg,
+      projDim, refine)
   }
 
   /** Materialize the projections next to the original vectors — the
@@ -975,10 +998,17 @@ object Ann {
   def rpEncode(data: DataFrame, featureCol: String, projDim: Int): DataFrame =
     data.withColumn("__rp", rpProject(col(featureCol), projDim))
 
+  /** Squared L2 between the stored `__rp` projection and `q(j)`, the
+    * query's projected coordinate j (1-based), folded in ascending j from
+    * 0 — the order the DuckDB oracles replay. */
+  private def rpDist2(q: Int => Column, projDim: Int): Column =
+    (1 to projDim).map { j =>
+      val d = element_at(col("__rp"), j) - q(j); d * d
+    }.foldLeft(lit(0d))(_ + _)
+
   /** [[rpSearch]] over a PRE-ENCODED table ([[rpEncode]] output): the
     * shortlist scores the stored `__rp` column with codegen'd fixed
-    * arithmetic — no per-scan projection HOF — then reranks exactly on
-    * the original vectors riding the same rows. */
+    * arithmetic — no per-scan projection HOF. */
   def rpSearchEncoded(encoded: DataFrame, query: Seq[Float],
       cfg: SearchConfig, projDim: Int = 8, refine: Int = 10): DataFrame = {
     require(projDim >= 1 && refine >= 1, s"projDim=$projDim refine=$refine")
@@ -988,27 +1018,15 @@ object Ann {
     require(encoded.columns.contains("__rp"),
       "rpSearchEncoded needs the __rp column — encode with rpEncode first")
     val qp = rpProjectLocal(query, projDim)
-    val dist2 = (1 to projDim).map { j =>
-      val d = element_at(col("__rp"), j) - lit(qp(j - 1)); d * d
-    }.foldLeft(lit(0d))(_ + _)
-    val tie = cfg.tieBreakCol.map(c => col(c).asc).toSeq
-    val shortlist = shortlistGuard(encoded.withColumn("__rpd", dist2), cfg,
-      col("__rpd"))
-      .orderBy(col("__rpd").asc +: tie: _*)
-      .limit(cfg.limit * refine)
-      .drop("__rp", "__rpd")
-    Search.search(shortlist, query, cfg)
+    shortlistRerank(encoded, rpDist2(j => lit(qp(j - 1)), projDim),
+      descending = false, query, cfg, refine, "__rp")
   }
 
   /** Batch JL shortlist + exact rerank ([[rpSearch]] for a query batch).
-    * The corpus projects ONCE; candidate generation scores projected
-    * pairs (projDim flops instead of d) over a NARROW (id, query,
-    * projected-distance) frame — the rank filter runs as
-    * `WindowGroupLimit` partial top-k, so only ≤ k·refine skinny rows
-    * per query per partition cross the shuffle and the wide corpus
-    * columns never ride the window. The shortlist ids broadcast back
-    * onto the corpus for the exact rerank. Fully oracle-replayable like
-    * the single-query path (`ann_rp_multi`). */
+    * The corpus projects ONCE and candidate generation scores projected
+    * pairs (projDim flops instead of d) through the [[windowStage]].
+    * Fully oracle-replayable like the single-query path
+    * (`ann_rp_multi`). */
   def rpMultiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
       projDim: Int = 8, refine: Int = 10): DataFrame = {
     require(projDim >= 1 && refine >= 1, s"projDim=$projDim refine=$refine")
@@ -1019,35 +1037,10 @@ object Ann {
       "rpMultiSearch needs tieBreakCol for a deterministic shortlist"))
     val pq = queries.select(col(Search.QueryIdCol),
       rpProject(col(cfg.featureCol), projDim).as("__qrp"))
-    val dist2 = (1 to projDim).map { j =>
-      val d = element_at(col("__rp"), j) - element_at(col("__qrp"), j); d * d
-    }.foldLeft(lit(0d))(_ + _)
-    val pairs = shortlistGuard(data, cfg, lit(0d))
-      .select(col(tie), rpProject(col(cfg.featureCol), projDim).as("__rp"))
-      .crossJoin(broadcast(pq))
-      .select(col(Search.QueryIdCol), col(tie), dist2.as("__rpd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Search.QueryIdCol))
-      .orderBy(col("__rpd").asc, col(tie).asc)
-    val shortIds = pairs.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= cfg.limit * refine)
-      .select(col(Search.QueryIdCol), col(tie))
-    // exact rerank: candidates rejoin the corpus (broadcast id list),
-    // pick up their query vector, score exactly, rank-filter top-k —
-    // multiSearch itself reserves query_id on the data side, so the
-    // per-query-candidate join is spelled here
-    val shortlist = data.join(broadcast(shortIds), Seq(tie))
-      .join(broadcast(queries.select(col(Search.QueryIdCol),
-        col(cfg.featureCol).as("__qf"))), Seq(Search.QueryIdCol))
-    val exact = ScoreFunctions.score(cfg.scoreFuncName,
-      col(cfg.featureCol), col("__qf"))
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Search.QueryIdCol))
-      .orderBy(col(Search.ScoreCol).asc, col(tie).asc)
-    shortlist.withColumn(Search.ScoreCol, exact).drop("__qf")
-      .withColumn("__rn", row_number().over(wf))
-      .where(col("__rn") <= cfg.limit)
-      .drop("__rn")
+    multiShortlistRerank(
+      rpEncode(data, cfg.featureCol, projDim).crossJoin(broadcast(pq)),
+      rpDist2(j => element_at(col("__qrp"), j), projDim),
+      queries, cfg, refine)(windowStage(data, tie))
   }
 
   // ---------------------------------------------------------------- binary
@@ -1133,25 +1126,17 @@ object Ann {
     data.withColumn(BqCol, bqPack(col(featureCol), dim))
 
   /** Binary-quantized search over a PRE-ENCODED table ([[bqEncode]]
-    * output): Hamming shortlist (XOR+popcount on the packed words,
-    * bounded top-(k·refine) with the id tie-break) + exact rerank on
-    * the original vectors riding the same rows. Works for distance AND
-    * similarity exact scores — sign-pattern Hamming approximates the
-    * ANGLE, so low Hamming is the right shortlist for both ends. */
+    * output): the shortlist ranks by Hamming distance (XOR+popcount on
+    * the packed words). Works for distance AND similarity exact scores —
+    * sign-pattern Hamming approximates the ANGLE, so low Hamming is the
+    * right shortlist for both ends. */
   def bqSearchEncoded(encoded: DataFrame, query: Seq[Float],
       cfg: SearchConfig, refine: Int = 10): DataFrame = {
     require(refine >= 1, s"refine=$refine")
     require(encoded.columns.contains(BqCol),
       s"bqSearchEncoded needs the $BqCol column — encode with bqEncode first")
-    val qw = bqPackLocal(query)
-    val tie = cfg.tieBreakCol.map(c => col(c).asc).toSeq
-    val shortlist = shortlistGuard(
-      encoded.withColumn("__bqd", bqHamming(col(BqCol), qw).cast("double")),
-      cfg, col("__bqd"))
-      .orderBy(col("__bqd").asc +: tie: _*)
-      .limit(cfg.limit * refine)
-      .drop(BqCol, "__bqd")
-    Search.search(shortlist, query, cfg)
+    shortlistRerank(encoded, bqHamming(col(BqCol), bqPackLocal(query)),
+      descending = false, query, cfg, refine, BqCol)
   }
 
   /** [[bqSearchEncoded]] with the encode inlined (one-shot scans; at
@@ -1162,45 +1147,19 @@ object Ann {
       cfg, refine)
 
   /** Batch binary-quantized search ([[rpMultiSearch]]'s plan shape over
-    * packed words): the corpus packs ONCE (or arrives pre-encoded),
-    * candidate generation XOR-popcounts packed pairs over a NARROW
-    * (id, query, hamming) frame — the rank filter runs as partial
-    * top-k, so only ≤ k·refine skinny rows per query per partition
-    * cross the shuffle — and the shortlist ids broadcast back onto the
-    * corpus for the exact rerank. */
+    * packed words): the corpus packs ONCE and candidate generation
+    * XOR-popcounts packed pairs through the [[windowStage]]. */
   def bqMultiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
       dim: Int, refine: Int = 10): DataFrame = {
     require(refine >= 1, s"refine=$refine")
     val tie = cfg.tieBreakCol.getOrElse(throw new IllegalArgumentException(
       "bqMultiSearch needs tieBreakCol for a deterministic shortlist"))
-    val words = bqWords(dim)
     val pq = queries.select(col(Search.QueryIdCol),
       bqPack(col(cfg.featureCol), dim).as("__qbq"))
-    val pairs = shortlistGuard(data, cfg, lit(0d))
-      .select(col(tie), bqPack(col(cfg.featureCol), dim).as(BqCol))
-      .crossJoin(broadcast(pq))
-      .select(col(Search.QueryIdCol), col(tie),
-        bqHammingCols(col(BqCol), col("__qbq"), words).as("__bqd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Search.QueryIdCol))
-      .orderBy(col("__bqd").asc, col(tie).asc)
-    val shortIds = pairs.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= cfg.limit * refine)
-      .select(col(Search.QueryIdCol), col(tie))
-    val shortlist = data.join(broadcast(shortIds), Seq(tie))
-      .join(broadcast(queries.select(col(Search.QueryIdCol),
-        col(cfg.featureCol).as("__qf"))), Seq(Search.QueryIdCol))
-    val exact = ScoreFunctions.score(cfg.scoreFuncName,
-      col(cfg.featureCol), col("__qf"))
-    val ord =
-      if (cfg.higherIsBetter) col(Search.ScoreCol).desc else col(Search.ScoreCol).asc
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Search.QueryIdCol))
-      .orderBy(ord, col(tie).asc)
-    shortlist.withColumn(Search.ScoreCol, exact).drop("__qf")
-      .withColumn("__rn", row_number().over(wf))
-      .where(col("__rn") <= cfg.limit)
-      .drop("__rn")
+    multiShortlistRerank(
+      bqEncode(data, cfg.featureCol, dim).crossJoin(broadcast(pq)),
+      bqHammingCols(col(BqCol), col("__qbq"), bqWords(dim)),
+      queries, cfg, refine)(windowStage(data, tie))
   }
 
   /** Name-prefix routing like the reference (search.go:136-141): "Annoy*"

@@ -61,7 +61,7 @@ object HardNegatives {
     scored.groupBy("anchor_id")
       .agg(
         min(when(col("__nlbl") === col("__albl"), col("__d") * s)).as("__pos_eff"),
-        Search.collectTopKPublic(
+        Search.collectTopK(
           when(col("__nlbl") =!= col("__albl"), item), k).as("__negs"))
       .select(col("anchor_id"), col("__pos_eff"),
         explode(col("__negs")).as("__e"))

@@ -287,12 +287,11 @@ object Pca {
       model: PcaModel): DataFrame =
     data.withColumn(WhitenCol, whiten(col(featureCol), model))
 
-  /** PCA-shortlist kNN over a pre-encoded table: top-(k·refine) by
-    * projected L2 (for an orthonormal basis the projected distance
-    * LOWER-BOUNDS the ambient distance, so the shortlist is the same
-    * contraction argument as [[Ann.rpSearchEncoded]] with learned,
-    * variance-optimal axes), then exact rerank on the original
-    * vectors. */
+  /** PCA-shortlist kNN over a pre-encoded table, ranked by projected
+    * squared L2 through [[Ann.shortlistRerank]]. For an orthonormal basis
+    * the projected distance LOWER-BOUNDS the ambient distance, so the
+    * shortlist is the same contraction argument as
+    * [[Ann.rpSearchEncoded]] with learned, variance-optimal axes. */
   def pcaSearchEncoded(encoded: DataFrame, query: Seq[Float],
       model: PcaModel, cfg: SearchConfig, refine: Int = 10): DataFrame = {
     require(refine >= 1, s"refine=$refine")
@@ -305,24 +304,18 @@ object Pca {
     val dist2 = (1 to model.k).map { j =>
       val diff = element_at(col(PcaCol), j) - lit(qp(j - 1)); diff * diff
     }.reduce(_ + _)
-    val tie = cfg.tieBreakCol.map(c => col(c).asc).toSeq
-    val shortlist = encoded
-      .filter(Search.passesFilters(cfg))
-      .withColumn("__pcd", dist2)
-      .orderBy(col("__pcd").asc +: tie: _*)
-      .limit(cfg.limit * refine)
-      .drop(PcaCol, "__pcd")
-    Search.search(shortlist, query, cfg)
+    Ann.shortlistRerank(encoded, dist2, descending = false, query, cfg,
+      refine, PcaCol)
   }
 
   /** Persist a fitted model — and optionally its moment pack, enabling
     * [[pcaUpdate]]-then-resolve maintenance without re-reading the old
     * corpus — as one atomically-swapped sidecar (both are k·d / d²
-    * driver artifacts). Layout: a version header (`pca_v2`; `pca_v1`
-    * files without the `mom` line still load via [[pcaLoad]]), then
-    * `mean\t...`, `eig\t...`, `tvar\t...`, one `comp\t<j>\t...` line per
-    * component, and `mom\t<d>\t...` when moments are supplied; doubles
-    * round-trip exactly via `toString`/`toDouble`. */
+    * driver artifacts). Layout: a `pca_v2\t<d>\t<k>` header (the one
+    * format [[pcaLoad]] reads), then `mean\t...`, `eig\t...`,
+    * `tvar\t...`, one `comp\t<j>\t...` line per component, and
+    * `mom\t<d>\t...` when moments are supplied; doubles round-trip
+    * exactly via `toString`/`toDouble`. */
   def pcaSave(spark: SparkSession, dir: String, model: PcaModel,
       moments: Option[PcaMoments] = None): Unit = {
     moments.foreach(m => require(m.d == model.dim,
@@ -341,12 +334,13 @@ object Pca {
       dir: String): (Array[String], Seq[Array[String]]) = {
     val lines = graft.model.VersionedDir.readSidecar(spark, dir, "pca_model.tsv")
     val h = lines.head.split("\t")
-    require(h(0) == "pca_v1" || h(0) == "pca_v2",
-      s"unknown pca_model.tsv version tag '${h(0)}'")
+    require(h(0) == "pca_v2",
+      s"$dir/pca_model.tsv header tag '${h(0)}' is not pca_v2 — an older or " +
+        "unknown PCA model format; rebuild it with pcaSave")
     (h, lines.tail.map(_.split("\t")))
   }
 
-  /** Load a persisted model ([[pcaSave]]; accepts v1 and v2 files). */
+  /** Load a persisted model ([[pcaSave]]). */
   def pcaLoad(spark: SparkSession, dir: String): PcaModel = {
     val (h, rows) = readModelLines(spark, dir)
     val kk = h(2).toInt
@@ -362,9 +356,9 @@ object Pca {
       fields("tvar")(1).toDouble)
   }
 
-  /** Load the persisted moment pack — loud when the sidecar predates v2
-    * or was saved without moments (maintenance then needs one full
-    * refit via [[moments]] to seed the pack). */
+  /** Load the persisted moment pack — loud when the model was saved
+    * without moments (maintenance then needs one full refit via
+    * [[moments]] to seed the pack). */
   def pcaLoadMoments(spark: SparkSession, dir: String): PcaMoments = {
     val (_, rows) = readModelLines(spark, dir)
     rows.find(_(0) == "mom") match {

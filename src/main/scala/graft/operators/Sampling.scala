@@ -79,7 +79,7 @@ object Sampling {
         struct(h.as("__h"), col(contentCol).as("__c"), col(uniqueCol).as("__u")).as("__o"),
         struct(payloadCols.map(col): _*).as("__p"))
       df.groupBy(col(groupCol).as("__g"))
-        .agg(Search.collectTopKPublic(item, quota).as("__arr"))
+        .agg(Search.collectTopK(item, quota).as("__arr"))
         .select(explode(col("__arr")).as("__e"))
         .select(payloadCols.map(c => col(s"__e.__p.$c").as(c)): _*)
     } else {
@@ -88,7 +88,7 @@ object Sampling {
       // diverge from the single-pass path
       val keys = df
         .groupBy(col(groupCol))
-        .agg(Search.collectTopKPublic(
+        .agg(Search.collectTopK(
           struct(h.as("__h"), col(contentCol).as("__c"), col(uniqueCol).as("__u")),
           quota).as("__arr"))
         .select(col(groupCol), explode(col("__arr")).as("__e"))

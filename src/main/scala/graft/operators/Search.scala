@@ -79,13 +79,9 @@ object Search {
     * reference's bounded Collector, search.go:64-86): per-partition heaps
     * of size k, merged — shuffle carries at most k rows per partition per
     * group instead of every scored row (what a window row_number would do). */
-  private def collectTopK(e: Column, k: Int): Column =
+  private[operators] def collectTopK(e: Column, k: Int): Column =
     Bridge.column(
       new CollectTopK(Bridge.expression(e), k, true).toAggregateExpression())
-
-  /** collectTopK for sibling operators (e.g. Sampling). */
-  private[operators] def collectTopKPublic(e: Column, k: Int): Column =
-    collectTopK(e, k)
 
   private def betterOf(cfg: SearchConfig, cs: Seq[Column]): Column =
     if (cs.size == 1) cs.head // least/greatest require >= 2 args

@@ -692,34 +692,67 @@ class AnnSpec extends SparkTestBase {
     assert(wrongCode.getMessage.contains("out of range"))
   }
 
-  test("pq/sq8 shortlists exclude null-feature rows (nulls sort FIRST ascending)") {
+  /** Every non-IVF shortlist path over `data`, each answering the queries
+    * `qs` as (query_id, vec_id, score) rows: the single-query paths once
+    * per query, the batch paths in one batch. */
+  private def shortlistPaths(data: org.apache.spark.sql.DataFrame,
+      qs: Seq[(Long, Seq[Float])], c: SearchConfig)
+      : Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val dim = qs.head._2.length
+    val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
+    val pca = Pca.fit(emb, "embedding", k = 8)
+    def single(search: Seq[Float] => org.apache.spark.sql.DataFrame) =
+      qs.map { case (id, q) => search(q).withColumn(Search.QueryIdCol, lit(id)) }
+        .reduce(_ unionByName _)
+    val queries = qs.toDF(Search.QueryIdCol, "embedding")
+    Seq(
+      "pq" -> single(Ann.pqSearch(Ann.pqEncode(data, "embedding", cb), cb, _, c, refine = 4)),
+      "sq8" -> single(Ann.sq8Search(Ann.sq8Encode(data, "embedding"), _, c, refine = 4)),
+      "rp" -> single(Ann.rpSearch(data, _, c, projDim = 8, refine = 4)),
+      "rpEncoded" -> single(Ann.rpSearchEncoded(Ann.rpEncode(data, "embedding", 8), _, c,
+        projDim = 8, refine = 4)),
+      "bq" -> single(Ann.bqSearch(data, _, c, refine = 4)),
+      "pca" -> single(Pca.pcaSearchEncoded(Pca.pcaEncode(data, "embedding", pca), _, pca, c,
+        refine = 4)),
+      "rpMulti" -> Ann.rpMultiSearch(data, queries, c, projDim = 8, refine = 4),
+      "bqMulti" -> Ann.bqMultiSearch(data, queries, c, dim = dim, refine = 4))
+      .map { case (name, df) =>
+        name -> df.select(col(Search.QueryIdCol), $"vec_id", col(Search.ScoreCol))
+      }
+  }
+
+  test("shortlist paths exclude null-feature rows (nulls sort FIRST ascending)") {
     // enough null rows to fill the whole limit*refine shortlist if unguarded
     val nulls = spark.range(1000000L, 1000100L)
       .select($"id".as("vec_id"), lit(null).cast("array<float>").as("embedding"))
     val data = emb.select("vec_id", "embedding").unionByName(nulls)
+    val q = queryVec(0L)
+    // a null vector packs to all-zero sign words: Hamming 0 to an
+    // all-negative query
+    val qs = Seq(0L -> q, 1L -> Seq.fill(q.length)(-1f))
     val c = cfg("VectorDistance", higher = false)
-    val sq8 = Ann.sq8Search(Ann.sq8Encode(data, "embedding"), queryVec(0L), c, refine = 4)
-      .select("vec_id").as[Long].collect()
-    assert(sq8.length == 10 && sq8.forall(_ < 1000000L), s"sq8 got ${sq8.toSeq}")
-    val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
-    val pq = Ann.pqSearch(Ann.pqEncode(data, "embedding", cb), cb, queryVec(0L), c, refine = 4)
-      .select("vec_id").as[Long].collect()
-    assert(pq.length == 10 && pq.forall(_ < 1000000L), s"pq got ${pq.toSeq}")
+    val wrong = shortlistPaths(data, qs, c).flatMap { case (name, df) =>
+      val got = df.as[(Long, Long, Option[Double])].collect()
+      qs.map { case (id, _) => (name, id, got.filter(_._1 == id).toSeq) }
+        .filterNot { case (_, _, rows) => rows.length == c.limit &&
+          rows.forall(r => r._2 < 1000000L && r._3.isDefined) }
+    }
+    assert(wrong.isEmpty, wrong.map { case (name, id, rows) =>
+      s"$name query $id got $rows" }.mkString("\n"))
   }
 
-  test("pq/sq8 shortlists apply JSON filters BEFORE the bounded top-k") {
+  test("shortlist paths apply JSON filters BEFORE the bounded top-k") {
     // 10% selectivity: a filter-blind 40-row shortlist keeps ~4 survivors —
     // far under k=10 — while plenty of matching rows exist
     val lab = emb.withColumn("label",
       when($"vec_id" % 10 === 0, lit("""{"keep":1}""")).otherwise(lit("{}")))
     val c = cfg("VectorDistance", higher = false)
       .copy(filters = Seq("keep"), labelCol = "label")
-    val sq8 = Ann.sq8Search(Ann.sq8Encode(lab, "embedding"), queryVec(0L), c, refine = 4)
-    assert(sq8.count() == 10, "sq8 shortlist is filter-blind")
-    val cb = Ann.pqTrain(emb, "embedding", m = 8, ksub = 16)
-    val encoded = Ann.pqEncode(lab, "embedding", cb)
-    assert(Ann.pqSearch(encoded, cb, queryVec(0L), c, refine = 4).count() == 10,
-      "pq shortlist is filter-blind")
+    val wrong = shortlistPaths(lab, Seq(0L -> queryVec(0L)), c)
+      .map { case (name, df) => name -> df.select("vec_id").as[Long].collect().toSeq }
+      .filterNot { case (_, ids) => ids.length == 10 && ids.forall(_ % 10 == 0) }
+    assert(wrong.isEmpty, wrong.map { case (name, ids) =>
+      s"$name shortlist is filter-blind: $ids" }.mkString("\n"))
   }
 
   test("route: Annoy* names go approximate, others exact (search.go:136-141)") {

@@ -140,20 +140,26 @@ class BqSearchSpec extends SparkTestBase {
     val qids = Seq(0L, 17L, 42L)
     val queries = rows.filter(t => qids.contains(t._1))
       .toDF(Search.QueryIdCol, "embedding")
-    val multi = Ann.bqMultiSearch(df, queries, cfg, dim = 64, refine = 4)
-      .select(col(Search.QueryIdCol), $"vec_id",
-        round(col(Search.ScoreCol), 9).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    qids.foreach { q =>
-      val single = Ann.bqSearch(df, rows(q.toInt)._2, cfg, refine = 4)
-        .select($"vec_id", round(col(Search.ScoreCol), 9).as("s"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(single.size === cfg.limit)
-      single.foreach { case (id, s) =>
-        assert(multi.get((q, id)).contains(s),
-          s"query $q doc $id: multi=${multi.get((q, id))} single=$s")
+    // the context config re-scores against a corpus vector in both paths
+    Seq(cfg, cfg.copy(context = SearchContext(vectors = Seq(rows(5)._2))))
+      .foreach { c =>
+        val multi = Ann.bqMultiSearch(df, queries, c, dim = 64, refine = 4)
+          .select(col(Search.QueryIdCol), $"vec_id",
+            round(col(Search.ScoreCol), 9).as("s"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        qids.foreach { q =>
+          val single = Ann.bqSearch(df, rows(q.toInt)._2, c, refine = 4)
+            .select($"vec_id", round(col(Search.ScoreCol), 9).as("s"))
+            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          assert(single.size === c.limit)
+          single.foreach { case (id, s) =>
+            assert(multi.get((q, id)).contains(s),
+              s"context=${c.context} query $q doc $id: " +
+                s"multi=${multi.get((q, id))} single=$s")
+          }
+        }
+        assert(multi.size === qids.size * c.limit)
       }
-    }
   }
 
   test("similarity scores (higherIsBetter) rerank correctly") {

@@ -177,6 +177,18 @@ class PcaSpec extends SparkTestBase {
     assert(e.getMessage.contains("positive eigenvalues"))
   }
 
+  test("a pca_v1 model header fails loudly") {
+    val df = cloud(40, 7, 3L).toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-old").toString
+    Pca.pcaSave(spark, dir, Pca.fit(df, "embedding", k = 2))
+    val lines = graft.model.VersionedDir.readSidecar(spark, dir, "pca_model.tsv")
+    graft.model.VersionedDir.writeSidecar(spark, dir, "pca_model.tsv",
+      lines.head.replace("pca_v2", "pca_v1") +: lines.tail)
+    val e = intercept[IllegalArgumentException](Pca.pcaLoad(spark, dir))
+    assert(e.getMessage.contains(s"$dir/pca_model.tsv") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+  }
+
   test("pcaSearchEncoded at full coverage == exact scan; guards fire") {
     val rows = cloud(80, 12, 9L)
     val df = rows.toDF("vec_id", "embedding")
