@@ -40,8 +40,7 @@ object Plans {
       println(s"\n## $name\n")
       println("```")
       println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .linesIterator.take(80).mkString("\n"))
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       println("```")
     }
     flagships.foreach(name => dump(name, SparkEntry.queries(name)(spark, dir)))

@@ -545,14 +545,14 @@ object Ann {
     for (c <- idCol +: needCols)
       require(stored.columns.contains(c),
         s"$site: stored index has no column '$c' (has ${stored.columns.mkString(", ")})")
-    val kept = stored.join(
-      keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-      // the rewrite reads the OLD version while writing the NEW one: the
-      // semi-joined plan must materialize before ivfSave opens writers,
-      // or executor-side readers could race the sweep of a concurrent
-      // save (single-writer holds, but lazy evaluation would also thrash
-      // the scan once per partition writer)
-      .localCheckpoint(true)
+    // the rewrite reads the OLD version while writing the NEW one: the
+    // semi-joined plan must materialize before ivfSave opens writers,
+    // or executor-side readers could race the sweep of a concurrent
+    // save (single-writer holds, but lazy evaluation would also thrash
+    // the scan once per partition writer)
+    val kept = Materialize.eager(stored.join(
+      keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi"),
+      "Ann.ivfKept")
     (kept, centroids)
   }
 
@@ -624,11 +624,11 @@ object Ann {
       if (normalize) l2Normalize(col(featureCol)) else col(featureCol).cast("array<double>")
     // m sequential fits × maxIter passes each would rescan the source
     // ~m·maxIter times — cache the (sampled) fit input once
-    val base =
+    val fitInput =
       (if (fitFraction >= 1.0) data
        else data.sample(withReplacement = false, fitFraction, seed))
-        .select(feat.as("__f")).cache()
-    try {
+        .select(feat.as("__f"))
+    Materialize.cachedScoped(fitInput, "Ann.pqTrain") { base =>
       val centers = (0 until m).map { j =>
         val sub = base.select(array_to_vector(
           slice(col("__f"), j * subDim + 1, subDim)).as("__v"))
@@ -637,7 +637,7 @@ object Ann {
           .clusterCenters.map(_.toArray.map(_.toFloat))
       }.toArray
       graft.functions.PqCodebook(m, subDim, centers, normalized = normalize)
-    } finally base.unpersist()
+    }
   }
 
   /** Encode: adds a `codes` column (array<int>, one code per subspace) —
@@ -666,14 +666,9 @@ object Ann {
       s"JSON filters configured but ${filterCols.filterNot(df.columns.contains).mkString(",")} " +
         "missing from the shortlist scan — carry the label columns into the codes table " +
         "or the shortlist is filter-blind and returns fewer than k rows")
-    // null or NaN, spelled with ONE reference to the score: the optimizer
-    // pushes this filter below the projection that computes the score and
-    // inlines it there, so every reference is one more evaluation per
-    // row — the two-reference spelling ran the unrolled RP fold three
-    // times per batch pair, ann_rp_multi 4.1 s against 1.4 s at sf0.1
     df.filter(Search.passesFilters(cfg))
       .filter(col(cfg.featureCol).isNotNull)
-      .filter(!isnan(coalesce(col(ApproxCol), lit(Double.NaN))))
+      .filter(Search.definedScore(col(ApproxCol)))
   }
 
   /** One query's shortlist → exact rerank: guard `df`, keep its best

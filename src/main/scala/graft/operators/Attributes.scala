@@ -91,7 +91,7 @@ object Attributes {
       "attrAppend: batch contains ids already in the store — appending them " +
         "would double-count documents in every filterByAttrs join; de-duplicate " +
         "the batch or re-tag via attrSave")
-    val merged = stored.unionByName(more).localCheckpoint()
+    val merged = Materialize.eager(stored.unionByName(more), "Attributes.attrAppend.merged")
     attrSave(spark, dir, merged, id)
   }
 
@@ -107,8 +107,9 @@ object Attributes {
       s"attrUpsert: column mismatch — stored ${stored.columns.sorted.mkString(", ")} " +
         s"vs batch ${batch.columns.sorted.mkString(", ")}; for new taggers use attrExtend")
     requireUniqueIds(batch, id, "attrUpsert")
-    val merged = stored.join(batch.select(id), Seq(id), "left_anti")
-      .unionByName(batch).localCheckpoint()
+    val merged = Materialize.eager(stored.join(batch.select(id), Seq(id), "left_anti")
+      .unionByName(batch),
+      "Attributes.attrUpsert.merged")
     attrSave(spark, dir, merged, id)
   }
 
@@ -118,9 +119,9 @@ object Attributes {
     val (stored, id) = attrLoad(spark, dir)
     require(ids.columns.length == 1,
       s"attrRemove: expected a single id column, got ${ids.columns.mkString(", ")}")
-    val merged = stored.join(
-        ids.select(col(ids.columns.head).as(id)).distinct(), Seq(id), "left_anti")
-      .localCheckpoint()
+    val merged = Materialize.eager(stored.join(
+        ids.select(col(ids.columns.head).as(id)).distinct(), Seq(id), "left_anti"),
+      "Attributes.attrRemove.merged")
     attrSave(spark, dir, merged, id)
   }
 
@@ -140,7 +141,8 @@ object Attributes {
       s"attrExtend: tagger columns ${clash.mkString(", ")} already stored — " +
         "a re-tag of an existing attribute is a new attrSave, not an extend")
     requireUniqueIds(more, id, "attrExtend")
-    val merged = stored.join(more, Seq(id), "left").localCheckpoint()
+    val merged = Materialize.eager(stored.join(more, Seq(id), "left"),
+      "Attributes.attrExtend.merged")
     attrSave(spark, dir, merged, id)
   }
 

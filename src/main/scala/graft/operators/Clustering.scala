@@ -33,8 +33,9 @@ import graft.functions.{NearestCentroid, ScoreFunctions}
   *
   * Iteration scans the source once per pass (an assignment is a cheap
   * codegen map over the scan); callers looping many iterations over an
-  * expensive upstream plan should `localCheckpoint` the input — the
-  * operators do not persist behind the caller's back.
+  * expensive upstream plan should materialize the input first
+  * ([[Materialize.eager]]) — the operators do not persist behind the
+  * caller's back.
   */
 object Clustering {
 
@@ -183,8 +184,8 @@ object Clustering {
       threshold: Double): DataFrame = {
     val batch = rawBatch.dropDuplicates(idCol)
       .join(assignedCorpus.select(col(idCol)), Seq(idCol), "left_anti")
-    val b = assign(batch, centroids, featureCol).drop("dist")
-      .localCheckpoint(true) // corpus join, self join, and the final anti-joins
+    val b = Materialize.eager(assign(batch, centroids, featureCol).drop("dist"),
+      "Clustering.admitSemantic.batch") // corpus join, self join, and the final anti-joins
     val touched = b.select("cluster").distinct()
     val corpusHits = b
       .select(col("cluster"), col(idCol).as("__b_id"), col(featureCol).as("__b_v"))
@@ -343,11 +344,11 @@ object Clustering {
       featureCol: String = "embedding",
       refresh: Boolean = false): ClusterState = {
     val st = clusterLoadState(spark, dir)
-    val kept = keepIds.fold(st.assigned)(ids =>
-      st.assigned.join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi"))
-      // materialize before clusterSave opens writers: the rewrite reads
-      // the OLD version while writing the NEW one (the ivfCompact rationale)
-      .localCheckpoint(true)
+    // materialize before clusterSave opens writers: the rewrite reads
+    // the OLD version while writing the NEW one (the ivfCompact rationale)
+    val kept = Materialize.eager(keepIds.fold(st.assigned)(ids =>
+      st.assigned.join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")),
+      "Clustering.clusterCompact.kept")
     val (rows2, cents2) =
       if (!refresh) (kept, st.centroids)
       else {

@@ -82,7 +82,8 @@ object Dedup {
     // are pruned BEFORE the pair aggregation. The 1e-6 slack keeps pairs
     // whose unrounded J is just under t but rounds to ≥ t (the output
     // filter compares round(J, 6)).
-    val sh = sizedShingles(df, idCol, textCol, n, maxShingleDf).localCheckpoint(true)
+    val sh = Materialize.eager(sizedShingles(df, idCol, textCol, n, maxShingleDf),
+      "Dedup.jaccardPairs.sh")
     val lenOk = greatest(col("a.sz"), col("b.sz")) * (threshold - 1e-6) <=
       least(col("a.sz"), col("b.sz"))
     // shuffle-hash, not sort-merge, WHEN THE BUILD FITS: the 8-byte-key
@@ -204,7 +205,8 @@ object Dedup {
     // the same collision class the hashed universe already trades on.
     // materialized once: the df aggregate and the join below both consume
     // the shingle pipeline
-    val sh = hashedShingles(df, idCol, textCol, n, maxShingleDf).localCheckpoint(true)
+    val sh = Materialize.eager(hashedShingles(df, idCol, textCol, n, maxShingleDf),
+      "Dedup.jaccardPairsPrefix.sh")
     // global rare-first order: (df, hash); each doc keeps its full sorted
     // set (for the verify) and its filter prefix. df is a groupBy + join
     // back, NOT count(*) over Window.partitionBy(h): a window exchange
@@ -230,15 +232,15 @@ object Dedup {
     // the checkpoint stores only (id, shs, sz, __plen): the filter prefix
     // is a SLICE of shs computed at read time (below), not a second
     // materialized array — ~40% less checkpoint volume at t=0.5 (r13)
-    val sets = sh.join(dfByH.hint("shuffle_hash"), Seq("h"))
+    val sets = Materialize.eager(sh.join(dfByH.hint("shuffle_hash"), Seq("h"))
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("__df"), col("h")))).as("__arr"))
       .select(col("id"),
         transform(col("__arr"), x => x.getField("h")).as("shs"),
         size(col("__arr")).as("sz"))
       .withColumn("__plen",
-        (col("sz") - ceil(col("sz") * t) + 1).cast("int"))
-      .localCheckpoint(true) // referenced by the index AND both verify sides
+        (col("sz") - ceil(col("sz") * t) + 1).cast("int")),
+      "Dedup.jaccardPairsPrefix.sets") // referenced by the index AND both verify sides
     val inv = sets.select(col("id"), col("sz"),
       posexplode(slice(col("shs"), lit(1), col("__plen"))))
       .withColumnRenamed("pos", "p").withColumnRenamed("col", "h")
@@ -262,7 +264,7 @@ object Dedup {
     // (340k → under 1k) and the verify's array shuffle with them.
     // candidate pairs are materialized once: they feed the broadcast id
     // set below AND the verify join spine
-    val cand = inv.as("a").join(inv.as("b"),
+    val cand = Materialize.eager(inv.as("a").join(inv.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
           // length filter: J ≥ t bounds the size ratio by t
           greatest(col("a.sz"), col("b.sz")) * t <=
@@ -271,8 +273,8 @@ object Dedup {
           least(col("a.sz") - col("a.p"), col("b.sz") - col("b.p")) >=
             (col("a.sz") + col("b.sz")) * (t / (1 + t)))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(),
+      "Dedup.jaccardPairsPrefix.cand")
     // VERDICT r12 #1 / guide §2.3+§3.2: the verify joins used to shuffle
     // `sets` — the CORPUS's full sorted shingle-hash arrays — by id,
     // twice (O(corpus) at scale), so that a candidate-sized pair table
@@ -440,8 +442,10 @@ object Dedup {
       }
     // hashed + materialized: each side feeds its size agg and the join
     // (see [[hashedShingles]] for the cross-engine hash argument)
-    val shL = shLs.select(col("id"), tokHash61(col("sh")).as("h")).localCheckpoint(true)
-    val shR = shRs.select(col("id"), tokHash61(col("sh")).as("h")).localCheckpoint(true)
+    val shL = Materialize.eager(shLs.select(col("id"), tokHash61(col("sh")).as("h")),
+      "Dedup.crossJaccardPairs.shL")
+    val shR = Materialize.eager(shRs.select(col("id"), tokHash61(col("sh")).as("h")),
+      "Dedup.crossJaccardPairs.shR")
     val szL = shL.groupBy("id").agg(count(lit(1)).as("sz"))
     val szR = shR.groupBy("id").agg(count(lit(1)).as("sz"))
     shL.as("a").join(shR.as("b").hint("shuffle_hash"), col("a.h") === col("b.h"))
@@ -562,11 +566,11 @@ object Dedup {
     require(n >= 1 && minHits >= 1)
     require(bitsPerGram >= 2, s"bitsPerGram=$bitsPerGram — below 2 the " +
       "false-positive rate defeats the pre-filter")
-    val ev = eval.select(col(idCol).as("id_r"),
+    val ev = Materialize.eager(eval.select(col(idCol).as("id_r"),
         explode(shingles(col(textCol), n)).as("sh"))
       .select(col("id_r"), tokHash61(col("sh")).as("h"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(),
+      "Dedup.ngramContaminationBloom.ev")
     // sizing only: (id_r, h) pair count ≥ distinct grams, so the filter is
     // at worst oversized (lower fp) — no extra distinct shuffle to size it
     val nGrams = math.max(1L, ev.count())
@@ -704,8 +708,8 @@ object Dedup {
     * hashes), which every caller consumes twice. */
   private def positionalGrams(df: DataFrame, idCol: String, textCol: String,
       n: Int, hash128: Boolean = false): DataFrame =
-    positionalGramsParityProbe(df, idCol, textCol, n, hash128)
-      .localCheckpoint(true)
+    Materialize.eager(positionalGramsParityProbe(df, idCol, textCol, n, hash128),
+      "Dedup.positionalGrams")
 
   /** [[positionalGrams]]' plan without the production checkpoint —
     * exposed for GramHashesParitySpec (the spec must compare THE plan,
@@ -978,8 +982,8 @@ object Dedup {
     // materialized once — exchange reuse does not dedupe aliased self-join
     // sides (measured on the simhash twin), and this side carries the
     // whole shingle+cap+two-aggregation pipeline
-    val sigSorted = minhashBandKeys(df, idCol, textCol, n, bands, maxShingleDf)
-      .localCheckpoint(true)
+    val sigSorted = Materialize.eager(minhashBandKeys(df, idCol, textCol, n, bands, maxShingleDf),
+      "Dedup.minhashNearDups.sigSorted")
     val cand = sigSorted.as("a")
       .join(sigSorted.as("b").hint("shuffle_hash"), // band keys: no sort value
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -1137,10 +1141,10 @@ object Dedup {
     }
     // materialized once — the self-join would otherwise recompute the
     // upstream simhash scan on both sides
-    val keyed = df.select(col(idCol).as("id"), col(simhashCol),
+    val keyed = Materialize.eager(df.select(col(idCol).as("id"), col(simhashCol),
         explode(array(keys: _*)).as("bk"))
-      .select(col("id"), col(simhashCol).as("h"), col("bk"))
-      .localCheckpoint(true)
+      .select(col("id"), col(simhashCol).as("h"), col("bk")),
+      "Dedup.simhashPairs.keyed")
     // A close pair can agree on several combinations; instead of emitting
     // it per agreeing combination and dropDuplicates-ing (a shuffle of the
     // whole candidate set), keep each pair only at its FIRST agreeing
@@ -1220,7 +1224,8 @@ object Dedup {
     val (src, n) =
       if (knownRows >= 0) (df, knownRows)
       else {
-        val mat = df.select(col(idCol), col(simhashCol)).localCheckpoint(true)
+        val mat = Materialize.eager(df.select(col(idCol), col(simhashCol)),
+          "Dedup.simhashPairsAuto.sizing")
         (mat, mat.count())
       }
     val b = simhashAutoBlocks(n, maxHamming)
@@ -1264,10 +1269,10 @@ object Dedup {
     val space = 1L << 32
     // deterministic sample: the sampleN smallest id-hashes (TakeOrdered —
     // layout-independent, one bounded job)
-    val s = df.select(col(idCol).as("id"), col(simhashCol).as("sig"))
+    val s = Materialize.eager(df.select(col(idCol).as("id"), col(simhashCol).as("sig"))
       .orderBy(pmod(xxhash64(col("id")), lit(space)))
-      .limit(sampleN.toInt)
-      .localCheckpoint(true)
+      .limit(sampleN.toInt),
+      "Dedup.simhashPairDensity.sample")
     val m = s.count()
     if (m < 2) return 0.0
     val pairs = s.as("a").join(s.as("b"),
@@ -1379,9 +1384,9 @@ object Dedup {
     // the id→key index, materialized once: both aggregations and the
     // join read it, and the upstream (often a simhash scan) must not
     // re-run three times
-    val keyed = df.select(col(idCol).as("id"),
-        explode(array(keys: _*)).as("__bk"))
-      .localCheckpoint(true)
+    val keyed = Materialize.eager(df.select(col(idCol).as("id"),
+        explode(array(keys: _*)).as("__bk")),
+      "Dedup.simhashKeyedKeep.keyed")
     val verdicts =
       if (rounds == 1) {
         val bucketMin = keyed.groupBy("__bk").agg(min(col("id")).as("__bmin"))
@@ -1393,8 +1398,8 @@ object Dedup {
         // undecided ids from df, not from the 64×-wider exploded key
         // table (r12: the distinct over `keyed` paid C(B,B−d) times the
         // rows for the same id set — every id has ≥1 key by construction)
-        var undecided = df.select(col(idCol).as("id")).distinct()
-          .localCheckpoint(true)
+        var undecided = Materialize.eager(df.select(col(idCol).as("id")).distinct(),
+          "Dedup.simhashKeyedKeep.undecided")
         var decided: Seq[DataFrame] = Nil
         var r = 0
         var remaining = -1L
@@ -1404,27 +1409,28 @@ object Dedup {
           // materialization of the widest frame; round 1 dominates, the
           // undecided set shrinks geometrically after it)
           val ku = if (r == 0) keyed
-            else keyed.join(undecided, Seq("id")).localCheckpoint(true)
+            else Materialize.eager(keyed.join(undecided, Seq("id")),
+              "Dedup.simhashKeyedKeep.ku.round")
           val bmin = ku.groupBy("__bk").agg(min(col("id")).as("__bmin"))
-          val rep = ku.join(bmin, Seq("__bk"))
-            .groupBy("id").agg(min(col("__bmin")).as("rep"))
-            .localCheckpoint(true)
+          val rep = Materialize.eager(ku.join(bmin, Seq("__bk"))
+            .groupBy("id").agg(min(col("__bmin")).as("rep")),
+            "Dedup.simhashKeyedKeep.rep.round")
           val surv = rep.filter(col("rep") === col("id")).select("id")
           // smallest SURVIVING collider per bucket — the provenance a
           // permanently-dropped doc's rep names
           val survBk = ku.join(surv, Seq("id"))
             .groupBy("__bk").agg(min(col("id")).as("__smin"))
-          val permDropped = ku.join(survBk, Seq("__bk"))
+          val permDropped = Materialize.eager(ku.join(survBk, Seq("__bk"))
             .groupBy("id").agg(min(col("__smin")).as("rep"))
-            .filter(col("rep") =!= col("id")) // survivors carry rep = id below
-            .localCheckpoint(true)
+            .filter(col("rep") =!= col("id")), // survivors carry rep = id below
+            "Dedup.simhashKeyedKeep.permDropped.round")
           decided = decided :+
             surv.select(col("id"), col("id").as("rep"), lit(true).as("keep")) :+
             permDropped.select(col("id"), col("rep"), lit(false).as("keep"))
-          undecided = undecided
+          undecided = Materialize.eager(undecided
             .join(surv, Seq("id"), "left_anti")
-            .join(permDropped, Seq("id"), "left_anti")
-            .localCheckpoint(true)
+            .join(permDropped, Seq("id"), "left_anti"),
+            "Dedup.simhashKeyedKeep.undecided.round")
           remaining = undecided.count()
           log.info(s"simhashKeyedKeep: round ${r + 1}/$rounds — " +
             s"$remaining docs undecided (re-admitted next round)")
@@ -1490,7 +1496,8 @@ object Dedup {
     // materialize the (usually expensive) pair pipeline ONCE — the union
     // of both directions, the per-round joins, and the edge count would
     // each re-run it otherwise
-    val undirected = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    val undirected = Materialize.eager(pairs.select(col("id_a"), col("id_b")),
+      "Dedup.resolve.undirected")
     // The edge set after near-dup detection is orders of magnitude smaller
     // than the corpus (it lists only duplicates), and connected components
     // over a small edge list needs no cluster: under the size gate, a
@@ -1508,9 +1515,9 @@ object Dedup {
     // only CONNECTED nodes iterate — duplicate clusters are a small
     // fraction of any real corpus, so the propagation joins run on the
     // pair-graph nodes, not all N ids; singletons rejoin once at the end
-    var comp = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
+    var comp = Materialize.eager(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")),
+      "Dedup.resolve.comp")
     // labels only ever DECREASE (least of self and neighbors), so the sum
     // of labels strictly decreases iff any row changed — convergence is one
     // cheap aggregate instead of a join against the previous round. Summed
@@ -1542,7 +1549,7 @@ object Dedup {
           .join(propagated.select(col("id").as("comp"), col("comp").as("__cc")),
             Seq("comp"), "left")
           .select(col("id"), coalesce(col("__cc"), col("comp")).as("comp"))
-      val next = jumped.localCheckpoint(true)
+      val next = Materialize.eager(jumped, "Dedup.resolve.round")
       val s = labelSum(next)
       changed = s.compareTo(prevSum) != 0
       prevSum = s
@@ -1786,10 +1793,10 @@ object Dedup {
     // Par.floor first: the bands×r-dot kernel is the expensive map stage
     // and otherwise runs on the scan's one-footer partitioning (guide
     // §2.5; no-op on an already-parallel scan)
-    val keyed = Par.floor(df, idCol)
+    val keyed = Materialize.eager(Par.floor(df, idCol)
       .select(col(idCol).as("id"), col(vecCol).as("v"),
-        explode(srpBandKeys(col(vecCol), planes, bands)).as("bk"))
-      .localCheckpoint(true)
+        explode(srpBandKeys(col(vecCol), planes, bands)).as("bk")),
+      "Dedup.cosineNearDupsLSH.keyed")
     val cand = keyed.as("a").join(keyed.as("b").hint("shuffle_hash"),
         col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),

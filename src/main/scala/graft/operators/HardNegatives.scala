@@ -112,7 +112,7 @@ object HardNegatives {
       .crossJoin(broadcast(a))
       .filter(col("__nid") =!= col("anchor_id"))
       .withColumn("__d", ScoreFunctions.score(kind, col("__nvec"), col("__avec")))
-      .filter(col("__d").isNotNull && !isnan(col("__d")))
+      .filter(Search.definedScore(col("__d")))
       .drop("__nvec", "__avec")
   }
 }

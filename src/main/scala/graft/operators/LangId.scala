@@ -116,8 +116,8 @@ object LangId {
     // spec twin, pinned equal by LangIdSpec
     val grams = df.select(col(langCol).as("lang"),
       explode(graft.functions.LidGramsExpr(col(textCol), nMax)).as("gram"))
-    val counts = grams.groupBy("lang", "gram").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // totals + vocab + pivot read it three times
+    val counts = Materialize.eager(grams.groupBy("lang", "gram").agg(count(lit(1)).as("cnt")),
+      "LangId.train.counts") // totals + vocab + pivot read it three times
     val langs = counts.select("lang").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     require(langs.nonEmpty, "train: no classes — empty corpus?")

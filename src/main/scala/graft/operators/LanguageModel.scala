@@ -297,7 +297,7 @@ object LanguageModel {
 
     val mapSide = (c: String) =>
       when(col(s"__v_$c").isNotNull, col(c)).otherwise(lit(Unk)).as(s"m_$c")
-    val batchAgg = tk.select(explode(pairArray(col("__tk"))).as("p"))
+    val batchPairs = tk.select(explode(pairArray(col("__tk"))).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .join(broadcast(vocabDf.select(col("term").as("w1"), lit(1).as("__v_w1"))),
         Seq("w1"), "left")
@@ -305,30 +305,30 @@ object LanguageModel {
         Seq("w2"), "left")
       .select(mapSide("w1"), mapSide("w2"))
       .groupBy("m_w1", "m_w2").agg(count(lit(1)).as("cnt"))
-      // two bounded fetches read this aggregate — materialize once
-      .localCheckpoint(true)
-    // increments for types ALREADY IN the model always survive: the
-    // model's own key set bounds this fetch (≤ bigramCap rows), so no
-    // cap may drop them — the r9 batch-side limit() silently lost
-    // existing-type increments whenever a batch exceeded the cap,
-    // making merged counts batch-order-dependent (ADVICE r9)
     val modelKeys = { import spark.implicits._
       lm.bigrams.map { case (a, b, _) => (a, b) }.toDF("m_w1", "m_w2") }
-    val inModel = batchAgg
-      .join(broadcast(modelKeys), Seq("m_w1", "m_w2"), "left_semi")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    // types NEW to the model rank-cap at bigramCap BEFORE the driver
-    // fetch (same total order as the merge cap; beyond-cap NEW batch
-    // types are dropped — the documented lossy rule, now scoped to new
-    // types only)
-    val newTypes = batchAgg
-      .join(broadcast(modelKeys), Seq("m_w1", "m_w2"), "left_anti")
-      .orderBy(desc("cnt"), asc("m_w1"), asc("m_w2")).limit(bigramCap)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(batchAgg)
-    val biRows = inModel ++ newTypes
+    // two bounded fetches read this aggregate — materialize once
+    val biRows = Materialize.scoped(batchPairs, "LanguageModel.lmUpdate.batchAgg") { batchAgg =>
+      // increments for types ALREADY IN the model always survive: the
+      // model's own key set bounds this fetch (≤ bigramCap rows), so no
+      // cap may drop them — the r9 batch-side limit() silently lost
+      // existing-type increments whenever a batch exceeded the cap,
+      // making merged counts batch-order-dependent (ADVICE r9)
+      val inModel = batchAgg
+        .join(broadcast(modelKeys), Seq("m_w1", "m_w2"), "left_semi")
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      // types NEW to the model rank-cap at bigramCap BEFORE the driver
+      // fetch (same total order as the merge cap; beyond-cap NEW batch
+      // types are dropped — the documented lossy rule, now scoped to new
+      // types only)
+      val newTypes = batchAgg
+        .join(broadcast(modelKeys), Seq("m_w1", "m_w2"), "left_anti")
+        .orderBy(desc("cnt"), asc("m_w1"), asc("m_w2")).limit(bigramCap)
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      inModel ++ newTypes
+    }
 
     val uni2 = lm.unigrams.map { case (t, c) =>
       t -> (c + uniRows.getOrElse(t, 0L)) }.toMap
@@ -583,24 +583,25 @@ object LanguageModel {
     val vocabDf = { import spark.implicits._
       tlm.base.unigrams.map(_._1).toDF("term") }
     val tk = docs.select(TextAnalysis.tokens(col(textCol)).as("__tk"))
-    val batchAgg = trigramAgg(tk, vocabDf).localCheckpoint(true)
     val modelKeys = { import spark.implicits._
       tlm.trigrams.map { case (a, b, c, _) => (a, b, c) }
         .toDF("m_w1", "m_w2", "m_w3") }
-    val inModel = batchAgg
-      .join(broadcast(modelKeys), Seq("m_w1", "m_w2", "m_w3"), "left_semi")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
-      .toMap
-    val newTypes = batchAgg
-      .join(broadcast(modelKeys), Seq("m_w1", "m_w2", "m_w3"), "left_anti")
-      .orderBy(desc("cnt"), asc("m_w1"), asc("m_w2"), asc("m_w3"))
-      .limit(trigramCap)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
-      .toMap
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(batchAgg)
-    val batchTri = inModel ++ newTypes
+    val batchTri = Materialize.scoped(trigramAgg(tk, vocabDf),
+        "LanguageModel.lmUpdateTrigram.batchAgg") { batchAgg =>
+      val inModel = batchAgg
+        .join(broadcast(modelKeys), Seq("m_w1", "m_w2", "m_w3"), "left_semi")
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+        .toMap
+      val newTypes = batchAgg
+        .join(broadcast(modelKeys), Seq("m_w1", "m_w2", "m_w3"), "left_anti")
+        .orderBy(desc("cnt"), asc("m_w1"), asc("m_w2"), asc("m_w3"))
+        .limit(trigramCap)
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+        .toMap
+      inModel ++ newTypes
+    }
     val oldTri = tlm.trigrams.map { case (a, b, c, n) => (a, b, c) -> n }.toMap
     val merged = (oldTri.keySet ++ batchTri.keySet).toSeq.flatMap { k =>
       val c = oldTri.getOrElse(k, 0L) + batchTri.getOrElse(k, 0L)

@@ -251,13 +251,13 @@ object Mixture {
     // partition index rides as DATA stamped at checkpoint materialization
     // (TaskContext.getPartitionId collapses under a downstream coalesce);
     // the checkpoint pins ONE partitioning that both passes must see
-    val keyed = df.join(broadcast(targetDf), Seq(domainCol), "inner")
+    val keyed = Materialize.eager(df.join(broadcast(targetDf), Seq(domainCol), "inner")
       .withColumn("__h", idHash(col(idCol)))
       .withColumn("__tok", col(tokenCol).cast("long"))
       .repartitionByRange(n, col(domainCol), col("__h"), col(idCol))
       .sortWithinPartitions(col(domainCol), col("__h"), col(idCol))
-      .withColumn("__p", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__p", spark_partition_id()),
+      "Mixture.sampleToBudget.keyed")
     val dI = keyed.schema.fieldIndex(domainCol)
     val tI = keyed.schema.fieldIndex("__tok")
     val gI = keyed.schema.fieldIndex("__target")

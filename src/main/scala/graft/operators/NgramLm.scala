@@ -260,64 +260,63 @@ object NgramLm {
     val spark = docs.sparkSession
     import spark.implicits._
     val vocabDf = m.unigrams.map(_._1).toDF("term")
-    val tk = docs.select(TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .localCheckpoint(true) // one batch scan feeds order-many aggregates
+    val tokens = docs.select(TextAnalysis.tokens(col(textCol)).as("__tk"))
+    // one batch scan feeds order-many aggregates
+    Materialize.scoped(tokens, "NgramLm.update.tokens") { tk =>
+      // unigram side — the lmUpdate spelling: map through the fixed vocab,
+      // track the TRUE-OOV share separately (a literal unk token must not
+      // grow unkCount)
+      val uniAgg = tk.select(explode(col("__tk")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("cnt"))
+        .join(broadcast(vocabDf.withColumn("__v", lit(1))), Seq("term"), "left")
+        .select(when(col("__v").isNotNull, col("term"))
+            .otherwise(lit(LanguageModel.Unk)).as("t"),
+          col("cnt"),
+          when(col("__v").isNull, col("cnt")).otherwise(lit(0L)).as("__oov"))
+        .groupBy("t").agg(sum(col("cnt")).as("cnt"), sum(col("__oov")).as("oov"))
+        .collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val uniRows = uniAgg.map { case (t, (c, _)) => t -> c }
+      val oovTotal = uniAgg.get(LanguageModel.Unk).map(_._2).getOrElse(0L)
+      val batchTotal = uniRows.values.sum
+      val uni2 = m.unigrams.map { case (t, c) =>
+        t -> (c + uniRows.getOrElse(t, 0L)) }
 
-    // unigram side — the lmUpdate spelling: map through the fixed vocab,
-    // track the TRUE-OOV share separately (a literal unk token must not
-    // grow unkCount)
-    val uniAgg = tk.select(explode(col("__tk")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("cnt"))
-      .join(broadcast(vocabDf.withColumn("__v", lit(1))), Seq("term"), "left")
-      .select(when(col("__v").isNotNull, col("term"))
-          .otherwise(lit(LanguageModel.Unk)).as("t"),
-        col("cnt"),
-        when(col("__v").isNull, col("cnt")).otherwise(lit(0L)).as("__oov"))
-      .groupBy("t").agg(sum(col("cnt")).as("cnt"), sum(col("__oov")).as("oov"))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val uniRows = uniAgg.map { case (t, (c, _)) => t -> c }
-    val oovTotal = uniAgg.get(LanguageModel.Unk).map(_._2).getOrElse(0L)
-    val batchTotal = uniRows.values.sum
-    val uni2 = m.unigrams.map { case (t, c) =>
-      t -> (c + uniRows.getOrElse(t, 0L)) }
-
-    val tables2 = (2 to m.order).map { n =>
-      val batchAgg = gramAgg(tk, vocabDf, n).localCheckpoint(true)
-      val old = m.tables(n - 2).toMap
-      val keyCols = (1 to n).map(i => s"m_w$i")
-      val modelKeys = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          old.keysIterator.map(ws => Row.fromSeq(ws)).toSeq, 1),
-        StructType(keyCols.map(c => StructField(c, StringType, nullable = false))))
-      def fetch(df: DataFrame) = df.collect()
-        .map(r => ((0 until n).map(r.getString).toVector, r.getLong(n))).toMap
-      val inModel = fetch(batchAgg
-        .join(broadcast(modelKeys), keyCols, "left_semi"))
-      val newTypes = fetch(batchAgg
-        .join(broadcast(modelKeys), keyCols, "left_anti")
-        .orderBy(desc("cnt") +: keyCols.map(asc): _*)
-        .limit(tableCap))
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(batchAgg)
-      val batch = inModel ++ newTypes
-      val merged = (old.keySet ++ batch.keySet).toSeq.flatMap { k =>
-        val c = old.getOrElse(k, 0L) + batch.getOrElse(k, 0L)
-        val keepIt = old.contains(k) || batch.getOrElse(k, 0L) >= m.minCount
-        if (keepIt) Some(k -> c) else None
+      val tables2 = (2 to m.order).map { n =>
+        val old = m.tables(n - 2).toMap
+        val keyCols = (1 to n).map(i => s"m_w$i")
+        val modelKeys = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            old.keysIterator.map(ws => Row.fromSeq(ws)).toSeq, 1),
+          StructType(keyCols.map(c => StructField(c, StringType, nullable = false))))
+        def fetch(df: DataFrame) = df.collect()
+          .map(r => ((0 until n).map(r.getString).toVector, r.getLong(n))).toMap
+        val batch = Materialize.scoped(gramAgg(tk, vocabDf, n),
+            "NgramLm.update.batchAgg") { batchAgg =>
+          fetch(batchAgg.join(broadcast(modelKeys), keyCols, "left_semi")) ++
+            fetch(batchAgg
+              .join(broadcast(modelKeys), keyCols, "left_anti")
+              .orderBy(desc("cnt") +: keyCols.map(asc): _*)
+              .limit(tableCap))
+        }
+        val merged = (old.keySet ++ batch.keySet).toSeq.flatMap { k =>
+          val c = old.getOrElse(k, 0L) + batch.getOrElse(k, 0L)
+          val keepIt = old.contains(k) || batch.getOrElse(k, 0L) >= m.minCount
+          if (keepIt) Some(k -> c) else None
+        }
+        // tuple-wise word order (the SQL `ORDER BY cnt DESC, w1..wn` total
+        // order) — a joined-string compare could misorder keys whose
+        // tokens contain sub-separator code points
+        val vecOrd: Ordering[Vector[String]] =
+          scala.math.Ordering.Implicits.seqOrdering
+        merged.sortBy { case (ws, c) => (-c, ws) }(
+            Ordering.Tuple2(Ordering.Long, vecOrd))
+          .take(tableCap)
+          .sortBy(_._1)(vecOrd)
       }
-      // tuple-wise word order (the SQL `ORDER BY cnt DESC, w1..wn` total
-      // order) — a joined-string compare could misorder keys whose
-      // tokens contain sub-separator code points
-      val vecOrd: Ordering[Vector[String]] =
-        scala.math.Ordering.Implicits.seqOrdering
-      merged.sortBy { case (ws, c) => (-c, ws) }(
-          Ordering.Tuple2(Ordering.Long, vecOrd))
-        .take(tableCap)
-        .sortBy(_._1)(vecOrd)
+      NgramModel(uni2.sortBy(_._1), tables2, m.totalTokens + batchTotal,
+        m.unkCount + oovTotal, m.vocabCap, m.minCount, m.order)
     }
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(tk)
-    NgramModel(uni2.sortBy(_._1), tables2, m.totalTokens + batchTotal,
-      m.unkCount + oovTotal, m.vocabCap, m.minCount, m.order)
   }
 
   /** Persist a model as one atomically-swapped exact-integer sidecar

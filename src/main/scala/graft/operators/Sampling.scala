@@ -133,41 +133,36 @@ object Sampling {
       .otherwise(raise_error(lit(
         s"deterministicOrderIndex: NULL in id column '$idCol' — " +
           "positions are defined for non-null ids only; filter or fill first")))
-    val keyed = df.select(nonNullId.as("id"))
+    val keyedPlan = df.select(nonNullId.as("id"))
       .withColumn("__k", Mixture.idHash(col("id")))
       .repartitionByRange(n, col("__k"), col("id"))
       .sortWithinPartitions(col("__k"), col("id"))
       .withColumn("__p", spark_partition_id())
       .as[(Long, Long, Int)]
-      .localCheckpoint(true) // both passes must see the SAME partitioning
-    // shuffle-free: each checkpoint partition streams its own (p, count)
-    // rows (normally one per partition) instead of a groupBy exchange
-    val sizes = keyed.mapPartitions { it =>
-      val counts = scala.collection.mutable.HashMap.empty[Int, Long]
-      it.foreach { case (_, _, p) => counts(p) = counts.getOrElse(p, 0L) + 1 }
-      counts.iterator
-    }.collect().toMap
-    val pidsInOrder = sizes.keys.toSeq.sorted
-    val offsets = pidsInOrder.zip(
-      pidsInOrder.map(sizes).scanLeft(0L)(_ + _)).toMap
-    val bc = spark.sparkContext.broadcast(offsets)
-    val result = keyed.mapPartitions { it =>
-      var cur = -1
-      var i = 0L
-      it.map { case (id, _, p) =>
-        if (p != cur) { cur = p; i = bc.value(p) }
-        val r = (id, i); i += 1; r
-      }
-    }.toDF(idCol, "pos")
-      // materialize the (small: two longs/row) result so the big keyed
-      // checkpoint can be RELEASED — otherwise every call pins a full
-      // (id, hash, partition) copy in executor storage for the session's
-      // lifetime (the result's lineage is what kept it reachable).
-      // Dataset.unpersist would be a NO-OP on a checkpoint (it only
-      // uncaches CacheManager entries); the checkpointed RDD itself must
-      // be unpersisted, which needs the private[sql] LogicalRDD — Bridge.
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(keyed)
-    result
+    // both passes must see the SAME partitioning; the keyed checkpoint is
+    // released once the (small: two longs/row) result is materialized on
+    // its own — otherwise every call pins a full (id, hash, partition)
+    // copy in executor storage for the session's lifetime
+    Materialize.scoped(keyedPlan, "Sampling.deterministicOrderIndex.keyed") { keyed =>
+      // shuffle-free: each checkpoint partition streams its own (p, count)
+      // rows (normally one per partition) instead of a groupBy exchange
+      val sizes = keyed.mapPartitions { it =>
+        val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+        it.foreach { case (_, _, p) => counts(p) = counts.getOrElse(p, 0L) + 1 }
+        counts.iterator
+      }.collect().toMap
+      val pidsInOrder = sizes.keys.toSeq.sorted
+      val offsets = pidsInOrder.zip(
+        pidsInOrder.map(sizes).scanLeft(0L)(_ + _)).toMap
+      val bc = spark.sparkContext.broadcast(offsets)
+      Materialize.eager(keyed.mapPartitions { it =>
+        var cur = -1
+        var i = 0L
+        it.map { case (id, _, p) =>
+          if (p != cur) { cur = p; i = bc.value(p) }
+          val r = (id, i); i += 1; r
+        }
+      }.toDF(idCol, "pos"), "Sampling.deterministicOrderIndex.pos")
+    }
   }
 }

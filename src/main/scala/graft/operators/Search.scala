@@ -179,9 +179,18 @@ object Search {
       // descending order here yet last in the negated multi-query order
       // key — an undefined score must not rank at all, and never
       // differently across the two paths
-      .filter(col(ScoreCol).isNotNull && !isnan(col(ScoreCol)))
+      .filter(definedScore(col(ScoreCol)))
       .select((QueryIdCol +: dataCols :+ ScoreCol).map(col): _*)
   }
+
+  /** True where `score` is defined (neither null nor NaN), spelled with
+    * ONE reference to the score: the optimizer pushes this filter below
+    * the projection that computes the score and inlines it there, so
+    * every reference is one more score evaluation per row — the
+    * two-reference spelling ran the unrolled RP fold three times per
+    * batch pair (ann_rp_multi 4.1 s against 1.4 s at sf0.1). */
+  private[operators] def definedScore(score: Column): Column =
+    !isnan(coalesce(score, lit(Double.NaN)))
 
   def multiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
       joinCols: Seq[String] = Nil): DataFrame = {
@@ -260,7 +269,7 @@ object Search {
         contextRescore(cfg, col(cfg.featureCol),
           scoreExpr(cfg, col(cfg.featureCol), lit(query.toArray))))
       // see multiSearch: null-feature and NaN guards (identical semantics)
-      .filter(col(ScoreCol).isNotNull && !isnan(col(ScoreCol)))
+      .filter(definedScore(col(ScoreCol)))
 
   def search(data: DataFrame, query: Seq[Float], cfg: SearchConfig): DataFrame = {
     requireFreeColumns(data,

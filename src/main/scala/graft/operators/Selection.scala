@@ -81,17 +81,16 @@ object Selection {
     require(ps.nonEmpty, "quantiles: need at least one probability")
     ps.foreach(p =>
       require(p >= 0d && p <= 1d, s"probability $p outside [0, 1]"))
-    val xs = df.select(col(c).cast("double").as("__q"))
+    val defined = df.select(col(c).cast("double").as("__q"))
       .where(col("__q").isNotNull && !isnan(col("__q")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.cachedScoped(defined, "Selection.quantiles") { xs =>
       val n = xs.count()
       require(n >= 1, s"quantiles: no non-null rows in $c")
       ps.map { p =>
         val k = math.max(1L, math.ceil(p * n).toLong)
         p -> kthSmallest(xs, "__q", k, knownN = n)
       }
-    } finally xs.unpersist(false)
+    }
   }
 
   /** Keep EXACTLY the top-`keep` rows of `df` under
@@ -131,43 +130,46 @@ object Selection {
       "topK reserves columns __ord, __tiekeep — rename them first")
     val spark = df.sparkSession
     val ordD = col(orderCol).cast("double")
-    val key = df.select(col(tieCol), ordD.as("__ord"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val keyed = df.select(col(tieCol), ordD.as("__ord"))
+    Materialize.cachedScoped(keyed, "Selection.topCore") { key =>
       val n = key.count()
       val keep = keepOf(n)
       require(keep >= 0, s"negative keep $keep")
-      if (keep == 0) return df.limit(0)
-      if (n == 0L || keep >= n) return df
-      require(key.where(col("__ord").isNull).limit(1).count() == 0L,
-        s"topK: null/NaN values in $orderCol corrupt ranks — filter them first")
-      val t = kthLargest(key, "__ord", keep, localLimit = localLimit, knownN = n)
-      val cGt = key.where(col("__ord") > t).count()
-      val r = keep - cGt // ≥ 1 by the kthLargest contract
-      val ties = key.where(col("__ord") === t)
-      val tieCount = ties.limit(maxBoundaryTies + 1).count()
-      if (tieCount == r) return df.filter(ordD >= t)
-      require(tieCount <= maxBoundaryTies,
-        s"topK: > $maxBoundaryTies rows share the boundary value $t of " +
-          s"$orderCol — a degenerate ordering column has no meaningful " +
-          "rank cut; dedup first or raise maxBoundaryTies")
-      // boundary key cut: the r smallest tieCol values inside the
-      // (bounded) tie mass, materialized locally so the returned plan
-      // carries only literals and a broadcast-sized local relation
-      val tieKeep = ties.orderBy(asc(tieCol)).limit(r.toInt)
-        .select(tieCol).collect()
-      val tieKeepDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tieKeep.toSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(df.schema(tieCol))))
-      // one scan of `df`: the broadcast marker join restricts ONLY the
-      // boundary rows (a union of two filters would evaluate the
-      // upstream plan twice)
-      df.filter(ordD >= t)
-        .join(broadcast(tieKeepDf.withColumn("__tiekeep", lit(1))),
-          Seq(tieCol), "left")
-        .filter(ordD > t || col("__tiekeep").isNotNull)
-        .select(df.columns.map(col): _*) // USING-join hoists the key
-    } finally key.unpersist(false)
+      if (keep == 0) df.limit(0)
+      else if (n == 0L || keep >= n) df
+      else {
+        require(key.where(col("__ord").isNull).limit(1).count() == 0L,
+          s"topK: null/NaN values in $orderCol corrupt ranks — filter them first")
+        val t = kthLargest(key, "__ord", keep, localLimit = localLimit, knownN = n)
+        val cGt = key.where(col("__ord") > t).count()
+        val r = keep - cGt // ≥ 1 by the kthLargest contract
+        val ties = key.where(col("__ord") === t)
+        val tieCount = ties.limit(maxBoundaryTies + 1).count()
+        if (tieCount == r) df.filter(ordD >= t)
+        else {
+          require(tieCount <= maxBoundaryTies,
+            s"topK: > $maxBoundaryTies rows share the boundary value $t of " +
+              s"$orderCol — a degenerate ordering column has no meaningful " +
+              "rank cut; dedup first or raise maxBoundaryTies")
+          // boundary key cut: the r smallest tieCol values inside the
+          // (bounded) tie mass, materialized locally so the returned plan
+          // carries only literals and a broadcast-sized local relation
+          val tieKeep = ties.orderBy(asc(tieCol)).limit(r.toInt)
+            .select(tieCol).collect()
+          val tieKeepDf = spark.createDataFrame(
+            spark.sparkContext.parallelize(tieKeep.toSeq, 1),
+            org.apache.spark.sql.types.StructType(Seq(df.schema(tieCol))))
+          // one scan of `df`: the broadcast marker join restricts ONLY the
+          // boundary rows (a union of two filters would evaluate the
+          // upstream plan twice)
+          df.filter(ordD >= t)
+            .join(broadcast(tieKeepDf.withColumn("__tiekeep", lit(1))),
+              Seq(tieCol), "left")
+            .filter(ordD > t || col("__tiekeep").isNotNull)
+            .select(df.columns.map(col): _*) // USING-join hoists the key
+        }
+      }
+    }
   }
 
   /** Keep the top `frac` of rows WITHIN EVERY GROUP under
@@ -293,9 +295,8 @@ object Selection {
       "grouped selection reserves __sel* columns — rename them first")
     val spark = df.sparkSession
     val ordD = col(orderCol).cast("double")
-    val key = df.select(col(groupCol).as("__selg"), col(tieCol), ordD.as("__selx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val keyed = df.select(col(groupCol).as("__selg"), col(tieCol), ordD.as("__selx"))
+    Materialize.cachedScoped(keyed, "Selection.groupCutArtifacts") { key =>
       val gType = df.schema(groupCol).dataType
       def gDf(rows: Seq[Row], extra: Seq[org.apache.spark.sql.types.StructField]) =
         spark.createDataFrame(
@@ -320,57 +321,59 @@ object Selection {
       val cut = keeps.collect { case (g, n, keep) if keep < n =>
         (g, thrByG(g), keep)
       }
-      if (cut.isEmpty) return None
-      val thrDf = gDf(cut.map { case (g, t, _) => Row(g, t) },
-        Seq(StructField("__selthr", DoubleType, nullable = false)))
-      val bCnts = key.join(broadcast(thrDf), Seq("__selg"))
-        .groupBy("__selg").agg(
-          count(when(col("__selx") > col("__selthr"), 1)).as("cGt"),
-          count(when(col("__selx") === col("__selthr"), 1)).as("cEq"))
-        .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val needTie = cut.filter { case (g, _, keep) =>
-        val (cGt, cEq) = bCnts(g); keep - cGt != cEq
-      }
-      needTie.foreach { case (g, _, keep) =>
-        val (cGt, cEq) = bCnts(g)
-        require(cEq <= maxBoundaryTies,
-          s"group $g: $cEq rows share the boundary value — a degenerate " +
-            "distribution has no meaningful rank cut; dedup first or raise " +
-            "maxBoundaryTies")
-        require(keep - cGt >= 1 && keep - cGt <= cEq, s"group $g: boundary " +
-          s"accounting broken (keep=$keep cGt=$cGt cEq=$cEq); report a bug")
-      }
-      require(needTie.map(g => bCnts(g._1)._2).sum <= maxTotalTies,
-        "total boundary tie mass across groups exceeds maxTotalTies — " +
-          "the tie-cut window must stay bounded; dedup or raise the cap")
-      // per-group tie cut: rank over the BOUNDED tie rows only (each
-      // group's tie mass ≤ maxBoundaryTies, total ≤ maxTotalTies — this
-      // window sorts a few thousand rows, never the data)
-      val tieKeepDf =
-        if (needTie.isEmpty) None
-        else {
-          val tieG = gDf(needTie.map { case (g, t, _) => Row(g, t) },
-            Seq(StructField("__selthr", DoubleType, nullable = false)))
-          val rByG = gDf(needTie.map { case (g, _, keep) =>
-            Row(g, Long.box(keep - bCnts(g)._1)) },
-            Seq(StructField("__selr", org.apache.spark.sql.types.LongType,
-              nullable = false)))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__selg")).orderBy(col(tieCol).asc)
-          Some(key.join(broadcast(tieG), Seq("__selg"))
-            .filter(col("__selx") === col("__selthr"))
-            .select(col("__selg"), col(tieCol))
-            .withColumn("__selrn", row_number().over(w))
-            .join(broadcast(rByG), Seq("__selg"))
-            .filter(col("__selrn") <= col("__selr"))
-            .select(col("__selg"), col(tieCol))
-            .localCheckpoint(true))
+      if (cut.isEmpty) None
+      else {
+        val thrDf = gDf(cut.map { case (g, t, _) => Row(g, t) },
+          Seq(StructField("__selthr", DoubleType, nullable = false)))
+        val bCnts = key.join(broadcast(thrDf), Seq("__selg"))
+          .groupBy("__selg").agg(
+            count(when(col("__selx") > col("__selthr"), 1)).as("cGt"),
+            count(when(col("__selx") === col("__selthr"), 1)).as("cEq"))
+          .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        val needTie = cut.filter { case (g, _, keep) =>
+          val (cGt, cEq) = bCnts(g); keep - cGt != cEq
         }
-      val needTieG = needTie.map(_._1).toSet
-      val fullEqDf = gDf(
-        cut.collect { case (g, t, _) if !needTieG(g) => Row(g) }, Nil)
-      Some(GroupCuts(thrDf, fullEqDf, tieKeepDf))
-    } finally key.unpersist(false)
+        needTie.foreach { case (g, _, keep) =>
+          val (cGt, cEq) = bCnts(g)
+          require(cEq <= maxBoundaryTies,
+            s"group $g: $cEq rows share the boundary value — a degenerate " +
+              "distribution has no meaningful rank cut; dedup first or raise " +
+              "maxBoundaryTies")
+          require(keep - cGt >= 1 && keep - cGt <= cEq, s"group $g: boundary " +
+            s"accounting broken (keep=$keep cGt=$cGt cEq=$cEq); report a bug")
+        }
+        require(needTie.map(g => bCnts(g._1)._2).sum <= maxTotalTies,
+          "total boundary tie mass across groups exceeds maxTotalTies — " +
+            "the tie-cut window must stay bounded; dedup or raise the cap")
+        // per-group tie cut: rank over the BOUNDED tie rows only (each
+        // group's tie mass ≤ maxBoundaryTies, total ≤ maxTotalTies — this
+        // window sorts a few thousand rows, never the data)
+        val tieKeepDf =
+          if (needTie.isEmpty) None
+          else {
+            val tieG = gDf(needTie.map { case (g, t, _) => Row(g, t) },
+              Seq(StructField("__selthr", DoubleType, nullable = false)))
+            val rByG = gDf(needTie.map { case (g, _, keep) =>
+              Row(g, Long.box(keep - bCnts(g)._1)) },
+              Seq(StructField("__selr", org.apache.spark.sql.types.LongType,
+                nullable = false)))
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("__selg")).orderBy(col(tieCol).asc)
+            Some(Materialize.eager(key.join(broadcast(tieG), Seq("__selg"))
+              .filter(col("__selx") === col("__selthr"))
+              .select(col("__selg"), col(tieCol))
+              .withColumn("__selrn", row_number().over(w))
+              .join(broadcast(rByG), Seq("__selg"))
+              .filter(col("__selrn") <= col("__selr"))
+              .select(col("__selg"), col(tieCol)),
+              "Selection.groupCutArtifacts.tieKeep"))
+          }
+        val needTieG = needTie.map(_._1).toSet
+        val fullEqDf = gDf(
+          cut.collect { case (g, t, _) if !needTieG(g) => Row(g) }, Nil)
+        Some(GroupCuts(thrDf, fullEqDf, tieKeepDf))
+      }
+    }
   }
 
   /** The grouped rank-value search shared by the row-cut artifacts and
@@ -503,11 +506,10 @@ object Selection {
     ps.foreach(p =>
       require(p >= 0d && p <= 1d, s"probability $p outside [0, 1]"))
     val spark = df.sparkSession
-    val key = df.select(col(groupCol).as("__selg"),
+    val defined = df.select(col(groupCol).as("__selg"),
         col(c).cast("double").as("__selx"))
       .where(col("__selx").isNotNull && !isnan(col("__selx")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.cachedScoped(defined, "Selection.quantilesByGroup") { key =>
       val sizes = key.groupBy("__selg").agg(count(lit(1)).as("n")).collect()
       require(sizes.nonEmpty, s"quantilesByGroup: no non-null rows in $c")
       require(sizes.length <= maxGroups,
@@ -530,7 +532,7 @@ object Selection {
             org.apache.spark.sql.types.DoubleType, nullable = false),
           org.apache.spark.sql.types.StructField("value",
             org.apache.spark.sql.types.DoubleType, nullable = false))))
-    } finally key.unpersist(false)
+    }
   }
 
   private def kthOrderStat(df: DataFrame, c: String, k: Long,

@@ -122,9 +122,9 @@ object Sketches {
   def profileUpdate(spark: SparkSession, dir: String, batch: DataFrame,
       textCol: String, n: Int = 3): DataFrame = {
     val (stored, params, groupCol) = profileLoad(spark, dir)
-    val merged = mergeProfiles(stored,
-      corpusProfile(batch, groupCol, textCol, n, params), groupCol)
-      .localCheckpoint() // sever lineage from the version dir being swapped
+    val merged = Materialize.eager(mergeProfiles(stored,
+      corpusProfile(batch, groupCol, textCol, n, params), groupCol),
+      "Sketches.profileUpdate.merged") // sever lineage from the version dir being swapped
     profileSave(spark, dir, merged, groupCol, params)
     merged
   }

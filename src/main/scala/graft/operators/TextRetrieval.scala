@@ -211,9 +211,9 @@ object TextRetrieval {
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk"))
       .select(col(idCol), size(col("__tk")).as("__dl"), explode(col("__tk")).as(TermCol))
       .join(broadcast(vocab), TermCol)
-    val tf = occurrences.groupBy(col(idCol), col(TermCol))
-      .agg(count(lit(1)).as("__tf"), first(col("__dl")).as("__dl"))
-      .localCheckpoint(true)
+    val tf = Materialize.eager(occurrences.groupBy(col(idCol), col(TermCol))
+      .agg(count(lit(1)).as("__tf"), first(col("__dl")).as("__dl")),
+      "TextRetrieval.bm25Multi.tf")
 
     // df per term from the tf table (already distinct per (doc, term))
     val dfByTerm = tf.groupBy(col(TermCol)).agg(count(lit(1)).as("__df"))
@@ -385,8 +385,9 @@ object TextRetrieval {
     val lines = graft.model.VersionedDir.readSidecar(spark, dir, IndexSidecar)
     val version = lines.head
     val (stats, total, (pn, ptot)) = readStatsLine(dir, lines(1))
-    val batch = indexBuild(docs, idCol, textCol) // AQE sizes the delta
-      .localCheckpoint(true) // one tokenize pass feeds postings and df
+    // one tokenize pass feeds postings and df; AQE sizes the delta
+    val batch = Materialize.eager(indexBuild(docs, idCol, textCol),
+      "TextRetrieval.indexAppend.batch")
     batch.write.mode("append").parquet(s"$dir/$version/postings")
     batch.groupBy(col(TermCol)).agg(count(lit(1)).as("__df"))
       .repartitionByRange(2, col(TermCol)).sortWithinPartitions(TermCol)
@@ -418,16 +419,12 @@ object TextRetrieval {
   def indexCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepIds: DataFrame, idCol: String): LexIndex = {
     val old = indexLoad(spark, dir)
-    val kept = old.postings.join(
-        keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-      // materialize before indexSave opens writers: the rewrite reads the
-      // OLD version while writing the NEW one (the ivfCompact rationale).
-      // DISK_ONLY, not the default MEMORY_AND_DISK: the kept postings
-      // are CORPUS-sized (~430M rows at the 5.25M-doc decade), and the
-      // default stages deserialized row blocks on the heap across every
-      // concurrent task — the r12 decade leg OOM'd an 8 GB driver there.
-      // Disk blocks serialize through a bounded stream per task.
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // materialize before indexSave opens writers: the rewrite reads the
+    // OLD version while writing the NEW one (the ivfCompact rationale);
+    // the kept postings are corpus-sized, hence on disk
+    val kept = Materialize.eagerOnDisk(old.postings.join(
+        keepIds.select(col(idCol)).distinct(), Seq(idCol), "left_semi"),
+      "TextRetrieval.indexCompact.kept")
     saveKept(spark, dir, kept, idCol)
   }
 
@@ -486,9 +483,8 @@ object TextRetrieval {
     // — the semi-join (removed); it is id-column-only and each consumer
     // broadcasts it, so recomputing beats a checkpoint job
     val idSet = ids.select(col(idCol)).distinct()
-    val kept = old.postings.join(idSet, Seq(idCol), "left_anti")
-      // DISK_ONLY: corpus-sized rewrite (the indexCompact rationale)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val kept = Materialize.eagerOnDisk(old.postings.join(idSet, Seq(idCol), "left_anti"),
+      "TextRetrieval.indexRemove.kept")
     if (postingsBytes(spark, dir, lines.head) >= incrementalBytes) {
       // Incremental stats + df (r13, VERDICT r12 #3 / guide §2.4): the
       // sidecar carries the exact postings-doc and token totals, so the

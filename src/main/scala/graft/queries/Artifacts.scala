@@ -24,7 +24,9 @@ import graft.model.VersionedDir
   *    stored-format readers parse exactly one format.
   *  - ONE existence check ([[stored]]): the build runs only while the
   *    artifact's marker sidecar is missing (a torn build never wrote it),
-  *    then the artifact loads from disk. */
+  *    then the artifact loads from disk.
+  *  - ONE scratch rule ([[scratch]]) for the queries that write fresh
+  *    state on every call, all under `java.io.tmpdir/graft_scratch`. */
 private[queries] object Artifacts {
 
   /** Stored-format tag of every artifact directory. Bump it when a stored
@@ -59,6 +61,31 @@ private[queries] object Artifacts {
 
   /** Where the artifact `key` is stored. */
   def dir(key: String): String = s"$root/$key"
+
+  /** The one root every [[scratch]] dir lives under. */
+  def scratchRoot: java.nio.file.Path =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_scratch")
+
+  private val lastScratch = scala.collection.mutable.Map.empty[String, java.io.File]
+
+  private lazy val sweepScratchAtExit =
+    sys.addShutdownHook(lastScratch.synchronized(
+      lastScratch.values.foreach(org.apache.commons.io.FileUtils.deleteQuietly)))
+
+  /** A fresh, empty dir for one call of the query `family`, which writes
+    * per-call state there (a stream sink, a versioned store: rerunning
+    * into an old dir would append to it). The DataFrame a call returns
+    * may still read its dir when evaluated, so the family's previous dir
+    * is deleted at the family's NEXT call, not at return — at most one
+    * dir per family exists at a time — and the last ones at JVM exit. */
+  def scratch(family: String): String = lastScratch.synchronized {
+    sweepScratchAtExit
+    lastScratch.get(family).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    java.nio.file.Files.createDirectories(scratchRoot)
+    val d = java.nio.file.Files.createTempDirectory(scratchRoot, s"${family}_").toFile
+    lastScratch(family) = d
+    d.toString
+  }
 
   private val values = TrieMap.empty[(SparkSession, String), Any]
 

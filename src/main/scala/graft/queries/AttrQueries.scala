@@ -40,8 +40,7 @@ object AttrQueries {
 
   private def censusQ(s: SparkSession, dir: String): DataFrame = {
     val docs = docsOf(s, dir)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_attr_store").toString
+    val store = Artifacts.scratch("attr_store")
     val r1 = run1(docs)
     Attributes.attrSave(s, store, r1.filter(col("doc_id") % 5 =!= 4), "doc_id")
     Attributes.attrAppend(s, store, r1.filter(col("doc_id") % 5 === 4))

@@ -97,7 +97,7 @@ object ClusterQueries {
     * cross-engine mean-arithmetic noise, no boundary flips. */
   private def compactRefreshQ(s: SparkSession, dir: String): DataFrame = {
     val (corpus, cents, batch) = gateParts(s, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cluster_state").toString
+    val tmp = Artifacts.scratch("cluster_state")
     Clustering.clusterSave(tmp, corpus, cents)
     val admitted = Clustering.admitSemantic(batch, corpus, cents,
       "vec_id", "embedding", threshold = 0.9)

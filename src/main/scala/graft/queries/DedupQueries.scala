@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** Deduplication operators as driver-verifiable queries. The inputs are
   * enriched with synthetic near/exact duplicates (documents with doc_id<25
@@ -191,7 +191,8 @@ object DedupQueries {
     * would fail the subset check, not slip through. */
   private def lshPairsVerified(lsh0: DataFrame, exact0: DataFrame,
       planted: DataFrame, simCol: String): DataFrame = {
-    val lsh = lsh0.localCheckpoint(true) // planted semi-join + subset anti-join
+    // planted semi-join + subset anti-join
+    val lsh = Materialize.eager(lsh0, "DedupQueries.lshPairsVerified.lsh")
     val nPlanted = planted.agg(count(lit(1)).as("np"))
     val found = planted.join(lsh.select("id_a", "id_b"), Seq("id_a", "id_b"),
       "left_semi").agg(count(lit(1)).as("pf"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
-import graft.operators.{Attributes, SnapshotDiff}
+import graft.operators.{Attributes, Materialize, SnapshotDiff}
 
 /** Snapshot-diff ([[graft.operators.SnapshotDiff]]) driver queries. Two
   * corpus versions are synthesized deterministically from `documents` —
@@ -52,12 +52,11 @@ object DiffQueries {
     * sidecar-sized joins; the full retag it equals is corpus-sized. */
   private def retagQ(s: SparkSession, dir: String): DataFrame = {
     val (v1, v2) = snapshots(s, dir)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_attr_retag").toString
+    val store = Artifacts.scratch("attr_retag")
     Attributes.attrSave(s, store, AttrQueries.run1(v1), "doc_id")
-    val d = SnapshotDiff.diff(v1, v2, "doc_id",
-      TextAnalysis.fingerprint(col("text")))
-      .localCheckpoint(true) // delta AND removed read it (the indexSyncQ cut)
+    val d = Materialize.eager(SnapshotDiff.diff(v1, v2, "doc_id",
+      TextAnalysis.fingerprint(col("text"))),
+      "DiffQueries.retagQ.diff") // delta AND removed read it (the indexSyncQ cut)
     val delta = d.filter(col("status").isin(SnapshotDiff.Added,
       SnapshotDiff.Changed)).select("doc_id")
     val removed = d.filter(col("status") === SnapshotDiff.Removed)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
-import graft.operators.Dsir
+import graft.operators.{Dsir, Materialize}
 
 /** DSIR importance resampling as driver queries: weight every document by
   * the hashed-n-gram likelihood ratio between the English-subset TARGET
@@ -93,8 +93,8 @@ object DsirQueries {
   private def curateV3Q(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextAnalysis
     val docs = Tables(s, dir, "documents").select("doc_id", "lang", "text")
-    val gated = docs.filter(TextAnalysis.gopherGate(col("text")))
-      .localCheckpoint(true) // feeds two fits' scan + scoring + the draw
+    val gated = Materialize.eager(docs.filter(TextAnalysis.gopherGate(col("text"))),
+      "DsirQueries.curateV3Q.gated") // feeds two fits' scan + scoring + the draw
     val (target, raw) = Dsir.fitBoth(gated, "text", col("lang") === "en", Buckets)
     val scored = Dsir.scoreDocs(gated, "text", Dsir.logRatios(target, raw))
     Dsir.resample(scored, "doc_id", "logw", K3)

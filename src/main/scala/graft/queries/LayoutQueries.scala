@@ -163,15 +163,16 @@ object LayoutQueries {
     * layout per language — the aggregate must equal the raw table (no
     * row lost or duplicated through appends + compactions), and the
     * booleans pin that the gate actually fired and every leaf ended
-    * bounded. Fresh temp dirs per invocation: append semantics make
-    * rerunning into an existing dir double the data. */
+    * bounded. A fresh scratch dir per invocation ([[Artifacts.scratch]]):
+    * append semantics make rerunning into an existing dir double the
+    * data. */
   private def streamSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = Tables(s, dir, "documents")
       .select("doc_id", "lang", "n_chars")
       .as[(Long, String, Long)].collect()
-    val base = java.nio.file.Files.createTempDirectory("graft_slayout_q").toString
+    val base = Artifacts.scratch("stream_sink")
     val out = s"$base/t"
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Long)]

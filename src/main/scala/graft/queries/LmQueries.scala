@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
-import graft.operators.LanguageModel
+import graft.operators.{LanguageModel, Materialize}
 
 /** LM-perplexity quality filtering ([[graft.operators.LanguageModel]]) as
   * driver-verifiable queries: a bigram Stupid-Backoff model trained on the
@@ -120,9 +120,9 @@ object LmQueries {
     * per-language rank boundaries) — a labeling, not a filter, via the
     * same map-side grouped threshold machinery. */
   private def bucketsQ(s: SparkSession, dir: String): DataFrame = {
-    val scored = LanguageModel.scoreDocs(docs(s, dir), "doc_id", "text",
-        lm(s, dir), passthrough = Seq("lang"))
-      .localCheckpoint(true) // two boundary passes + the labeler re-read it
+    val scored = Materialize.eager(LanguageModel.scoreDocs(docs(s, dir), "doc_id", "text",
+        lm(s, dir), passthrough = Seq("lang")),
+      "LmQueries.bucketsQ.scored") // two boundary passes + the labeler re-read it
     graft.operators.Selection.bucketByGroup(scored, "lang",
         "avg_logprob", "doc_id", Seq(1.0 / 3, 2.0 / 3),
         Seq("head", "middle", "tail"))
@@ -164,13 +164,13 @@ object LmQueries {
     // scan's one-footer partitioning (guide §2.5; measured −0.35 s here,
     // harmless at scale). Query-level, not in scoreDocs: flooring inside
     // the operator regressed the multi-consumer chains (curate_v2 +1.9 s).
-    val scored = LanguageModel.scoreDocs(
+    val scored = Materialize.eager(LanguageModel.scoreDocs(
         graft.operators.Par.floor(docs(s, dir), "doc_id"), "doc_id", "text",
-        lm(s, dir), passthrough = Seq("lang"))
+        lm(s, dir), passthrough = Seq("lang")),
       // the selection probes AND the final filter re-read the frame —
       // without the cut the scoring DAG evaluates twice (measured 2.16 s
       // vs the checkpointed per-lang twin's 1.22 s at sf0.1)
-      .localCheckpoint(true)
+      "LmQueries.filterQ.scored")
     LanguageModel.perplexityKeep(scored, "doc_id", KeepFrac)
       .select(col("doc_id"), col("lang"),
         round(col("avg_logprob"), 6).as("avg_lp"))
@@ -184,10 +184,10 @@ object LmQueries {
     * single-task window sort). */
   private def filterPerLangQ(s: SparkSession, dir: String): DataFrame = {
     // Par.floor: the filterQ rationale (measured −0.44 s at sf0.1)
-    val scored = LanguageModel.scoreDocs(
+    val scored = Materialize.eager(LanguageModel.scoreDocs(
         graft.operators.Par.floor(docs(s, dir), "doc_id"), "doc_id", "text",
-        lm(s, dir), passthrough = Seq("lang"))
-      .localCheckpoint(true) // the grouped probes re-read the frame
+        lm(s, dir), passthrough = Seq("lang")),
+      "LmQueries.filterPerLangQ.scored") // the grouped probes re-read the frame
     graft.operators.Selection.topFracByGroup(scored, "lang",
         "avg_logprob", "doc_id", KeepFrac)
       .select(col("doc_id"), col("lang"),
@@ -228,15 +228,15 @@ object LmQueries {
     // gated is ALSO a re-read stage (r12): scoring reads it once, then
     // afterLm and dedKeep each re-ran the join+plants+gopher lineage —
     // the checkpoint trades one materialization job for two re-evaluations
-    val gated = u.filter(TextAnalysis.gopherGate(col("text")))
-      .localCheckpoint(true)
+    val gated = Materialize.eager(u.filter(TextAnalysis.gopherGate(col("text"))),
+      "LmQueries.curateV2Q.gated")
     // checkpoint the two stages the downstream actions re-read: the LM
     // scoring plan feeds perplexityKeep's count + rank cut (two actions),
     // and `ded` feeds centroid computation + assignment + both pair-join
     // sides — without the cuts the scoring DAG re-evaluated ~4× and this
     // query cost 17 s at sf0.1 (the pipeline_curate `clean` rationale)
-    val scored = LanguageModel.scoreDocs(gated, "doc_id", "text", lm(s, dir))
-      .localCheckpoint(true)
+    val scored = Materialize.eager(LanguageModel.scoreDocs(gated, "doc_id", "text", lm(s, dir)),
+      "LmQueries.curateV2Q.scored")
     val kept = LanguageModel.perplexityKeep(scored, "doc_id", 0.9)
     val afterLm = gated.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
     // 64-bit identity + exact length, not document bytes, through the
@@ -246,8 +246,8 @@ object LmQueries {
         length(col("text")).as("__tl"))
       .agg(min("doc_id").as("doc_id"))
       .select("doc_id")
-    val ded = afterLm.join(dedKeep, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val ded = Materialize.eager(afterLm.join(dedKeep, Seq("doc_id"), "left_semi"),
+      "LmQueries.curateV2Q.ded")
     Clustering.semDedup(ded,
         Clustering.groupCentroids(ded, "label", "embedding"),
         "doc_id", "embedding", threshold = 0.9)
@@ -362,9 +362,9 @@ object LmQueries {
     val batch = docs(s, dir).filter(col("doc_id") < 150)
       .select("doc_id", "text")
     val m = graft.functions.LidKernel.model(lid)
-    val withPred = batch.withColumn("__p",
-        graft.functions.LidScoreExpr(col("text"), m).getField("lang_pred"))
-      .localCheckpoint(true) // two training slices + the probe read it
+    val withPred = Materialize.eager(batch.withColumn("__p",
+        graft.functions.LidScoreExpr(col("text"), m).getField("lang_pred")),
+      "LmQueries.curateLangQ.withPred") // two training slices + the probe read it
     def lmFor(lg: String) = LanguageModel.trainBigram(
       withPred.filter(col("__p") === lg), "text",
       vocabCap = 1000, bigramMinCount = 2)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Mixture, Packing}
+import graft.operators.{Materialize, Mixture, Packing}
 
 /** Mixture-sampling and sequence-packing operators as driver queries.
   * Domains = the documents table's `source` column (20 synthetic sources);
@@ -95,8 +95,8 @@ object MixQueries {
     Packing.chunked(docs(s, dir), "doc_id", "n_chars", SeqLen, Shards)
 
   private def packFfd(s: SparkSession, dir: String): DataFrame = {
-    val packed = Packing.ffd(docs(s, dir), "doc_id", "n_chars", SeqLen, Shards)
-      .localCheckpoint(true) // row side + per-bin fill agg
+    val packed = Materialize.eager(Packing.ffd(docs(s, dir), "doc_id", "n_chars", SeqLen, Shards),
+      "MixQueries.packFfd.packed") // row side + per-bin fill agg
     val binFill = packed.groupBy("bin").agg(sum("n_tokens").as("__fill"))
     packed.join(binFill, "bin")
       .select(col("doc_id"), col("shard"), col("n_tokens"),
@@ -121,8 +121,8 @@ object MixQueries {
     val d = Tables(s, dir, "documents").select("doc_id", "source", "n_chars", "text")
     // checkpoint: keep-set AND the semi-join both read the gated stage
     // (r12 — the curateV2Q `gated` rationale)
-    val gated = d.filter(TextAnalysis.gopherGate(col("text")))
-      .localCheckpoint(true)
+    val gated = Materialize.eager(d.filter(TextAnalysis.gopherGate(col("text"))),
+      "MixQueries.pipeline.gated")
     // 64-bit identity through the exchange, not the document bytes (r12,
     // guide §2.3 / the dataset-card hash-identity rationale): the dedup
     // decision needs only "same text", and (xxhash64, length) ships
@@ -139,9 +139,11 @@ object MixQueries {
       .unionByName(d.filter(col("doc_id") >= 15 && col("doc_id") < 20)
         .select((col("doc_id") + 50000000).as("doc_id"), col("text")))
     val deduped = gated.join(keep, Seq("doc_id"), "left_semi")
-    val clean = Dedup.decontaminateExact(deduped, evalSet, "doc_id", "text", n = 13)
-      .select("doc_id", "source", "n_chars")
-      .localCheckpoint(true) // consumed by rate derivation + sample + pack
+    // consumed by rate derivation + sample + pack
+    val clean = Materialize.eager(
+      Dedup.decontaminateExact(deduped, evalSet, "doc_id", "text", n = 13)
+        .select("doc_id", "source", "n_chars"),
+      "MixQueries.pipeline.clean")
     val sampled = Mixture.sampleByRate(clean, "doc_id", "source", ratesOf(clean))
     Packing.chunked(sampled, "doc_id", "n_chars", SeqLen, Shards)
   }

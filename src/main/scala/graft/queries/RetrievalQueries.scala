@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
-import graft.operators.{Search, SearchConfig, TextRetrieval}
+import graft.operators.{Materialize, Search, SearchConfig, TextRetrieval}
 
 /** Lexical retrieval + hybrid fusion ([[graft.operators.TextRetrieval]])
   * as driver-verifiable queries over `documents` (+ `embeddings` for the
@@ -247,8 +247,7 @@ object RetrievalQueries {
     import s.implicits._
     import graft.operators.SnapshotDiff
     val (v1, v2) = DiffQueries.snapshots(s, dir)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_lex_sync").toString + "/idx"
+    val idxDir = s"${Artifacts.scratch("lex_sync")}/idx"
     // 5-field save: the postings totals come from the SAME stats pass
     // (corpusStatsFull) and put the later indexRemove on its incremental
     // (delta-sized) path — see TextRetrieval.indexRemove (r13)
@@ -256,9 +255,9 @@ object RetrievalQueries {
     TextRetrieval.indexSave(idxDir,
       TextRetrieval.indexBuild(v1, "doc_id", "text"),
       v1Stats, v1Pn, v1Ptot)
-    val d = SnapshotDiff.diff(v1, v2, "doc_id",
-        graft.functions.TextAnalysis.fingerprint(col("text")))
-      .localCheckpoint()
+    val d = Materialize.eager(SnapshotDiff.diff(v1, v2, "doc_id",
+        graft.functions.TextAnalysis.fingerprint(col("text"))),
+      "RetrievalQueries.indexSyncQ.diff")
     TextRetrieval.indexRemove(s, idxDir,
       d.filter(col("status").isin(SnapshotDiff.Removed, SnapshotDiff.Changed))
         .select("doc_id"), "doc_id")

@@ -45,8 +45,7 @@ object SamplingQueries {
     * integer arithmetic, so the hash match proves the written shards are
     * the reproducible ones, not just self-consistent. */
   private def exportShardsQ(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_export").toString + "/shards"
+    val out = s"${Artifacts.scratch("export")}/shards"
     val docs = Tables(s, dir, "documents").select("doc_id", "lang")
     graft.sources.TrainingExport.exportShards(docs, "doc_id", out, 8)
     s.read.parquet(out).groupBy("shard").agg(

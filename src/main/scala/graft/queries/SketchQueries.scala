@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Sketches}
+import graft.operators.{Dedup, Materialize, Sketches}
 
 /** Mergeable-sketch corpus profiles ([[Sketches]]) as oracled queries.
   * DuckDB has no Datasketches surface, so the oracle pattern is the
@@ -29,8 +29,7 @@ object SketchQueries {
     * so p40–p60 is a ≳10σ envelope). */
   private def profileQ(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").select("lang", "doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_sketch_q").toString
-    val state = s"$base/profile"
+    val state = s"${Artifacts.scratch("sketch_profile")}/profile"
     val batches = (0 to 2).map(i =>
       docs.filter(pmod(col("doc_id"), lit(3)) === i))
     Sketches.profileSave(s, state,
@@ -88,10 +87,10 @@ object SketchQueries {
     val docs = Tables(s, dir, "documents").select("lang", "text")
     val profile = Sketches.corpusProfile(docs, "lang", "text")
     val est = Sketches.thetaSetOps(profile, "lang", SetPairs)
-    val grams = docs
+    val grams = Materialize.eager(docs
       .select(col("lang"), explode(Dedup.shingles(col("text"), 3)).as("sh"))
-      .select(col("lang"), Dedup.tokHash61(col("sh")).as("h")).distinct()
-      .localCheckpoint()
+      .select(col("lang"), Dedup.tokHash61(col("sh")).as("h")).distinct(),
+      "SketchQueries.setOpsQ.grams")
     val pairsDf = SetPairs.toDF("ga", "gb")
     val a = grams.select(col("lang").as("ga"), col("h"))
     val b = grams.select(col("lang").as("gb"), col("h"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.functions.{TextAnalysis, TextClean}
-import graft.operators.{Clustering, LanguageModel, QualityClassifier}
+import graft.operators.{Clustering, LanguageModel, Materialize, QualityClassifier}
 
 /** The production curation shape, composed: every micro-batch flows
   * clean → quality gates (Gopher, LM perplexity) → lexical near-dup gate
@@ -176,7 +176,7 @@ object CurationPipeline {
     // chain per ledger row set (the bench measured 4× LM re-scoring
     // without it). The non-audit path stays action- and checkpoint-free.
     def stage(out: DataFrame): DataFrame =
-      if (audit) out.localCheckpoint(false) else out
+      if (audit) Materialize.deferred(out, "CurationPipeline.curateBatch.auditStage") else out
     // ---- per-document map-side stages: one fused pass, no action ----
     val cleaned =
       if (cfg.clean)
@@ -213,7 +213,8 @@ object CurationPipeline {
         // allowed language over that language's slice, unioned — each
         // branch re-reads the stage input, so it is materialized once
         // (lazy; audit mode's stage() already checkpointed it)
-        val src = if (audit) gophered else gophered.localCheckpoint(false)
+        val src = if (audit) gophered
+          else Materialize.deferred(gophered, "CurationPipeline.curateBatch.lmRouted")
         val keptIds = cfg.allowLangs.get.toSeq.sorted.map { lg =>
           LanguageModel.scoreDocs(src.filter(col(LangCol) === lg),
               cfg.idCol, cfg.textCol, state.lmByLang(lg))
@@ -247,7 +248,8 @@ object CurationPipeline {
     }
     val classified = cfg.minAvgLogodds.fold(dsirGated) { min =>
       if (state.nbByLang.nonEmpty) {
-        val src = if (audit) dsirGated else dsirGated.localCheckpoint(false)
+        val src = if (audit) dsirGated
+          else Materialize.deferred(dsirGated, "CurationPipeline.curateBatch.nbRouted")
         val keptIds = cfg.allowLangs.get.toSeq.sorted.map { lg =>
           QualityClassifier.scoreDocs(src.filter(col(LangCol) === lg),
               cfg.idCol, cfg.textCol, state.nbByLang(lg))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.model.VersionedDir
-import graft.operators.Attributes
+import graft.operators.{Attributes, Materialize}
 
 /** Streaming attribute maintenance — the tagger side of the
   * [[graft.operators.Attributes]] tagger→mixer split kept CURRENT as
@@ -49,7 +49,8 @@ object StreamingAttributes {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val tagged = Attributes.tag(batch, id, taggers).localCheckpoint()
+        val tagged = Materialize.eager(Attributes.tag(batch, id, taggers),
+          "StreamingAttributes.writer.tagged")
         val dup = tagged.groupBy(col(id)).count()
           .filter(col("count") > 1).limit(1).count()
         require(dup == 0L,

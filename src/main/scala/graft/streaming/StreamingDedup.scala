@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** Incremental near-dup gating at ingest — the streaming face of the
   * dedup family: a training-data pipeline does not re-dedup the whole
@@ -72,8 +72,9 @@ object StreamingDedup {
     // by construction, so it broadcasts
     val hot = dfState
       .filter(_ => cfg.maxCorpusShingleDf != Long.MaxValue)
-      .map(_.filter(col("df") > cfg.maxCorpusShingleDf).select("h")
-        .localCheckpoint(true)) // consumed by band keys AND verify sets
+      .map(st => Materialize.eager( // consumed by band keys AND verify sets
+        st.filter(col("df") > cfg.maxCorpusShingleDf).select("h"),
+        "StreamingDedup.admitWithKeys.hot"))
     // Id hygiene BEFORE any shingling: the verify stage collects shingles
     // grouped by id over batch ∪ corpus-candidates, so an id present twice
     // (at-least-once replay within a batch, or a batch id already admitted
@@ -85,17 +86,17 @@ object StreamingDedup {
     val batch = rawBatch
       .dropDuplicates(cfg.idCol)
       .join(corpus.select(col(cfg.idCol)), Seq(cfg.idCol), "left_anti")
-    val batchKeys = Dedup
+    val batchKeys = Materialize.eager(Dedup
       .minhashBandKeys(batch, cfg.idCol, cfg.textCol, cfg.n, cfg.bands,
-        cfg.maxShingleDf, excludeHashes = hot)
-      .localCheckpoint(true) // ONE signature pass per batch, three consumers
+        cfg.maxShingleDf, excludeHashes = hot),
+      "StreamingDedup.admitWithKeys.batchKeys") // ONE signature pass per batch, three consumers
     // vs corpus: any banded candidate that verifies kills the batch doc
-    val vsCorpus = batchKeys.as("a")
+    val vsCorpus = Materialize.eager(batchKeys.as("a")
       .join(corpusKeys.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(true) // consumed by the semi-join AND the verify
+      .distinct(),
+      "StreamingDedup.admitWithKeys.vsCorpus") // consumed by the semi-join AND the verify
     // verify shingles ONLY candidate rows: batch side is small, corpus
     // side is semi-joined down to the colliding ids first
     val corpusCand = corpus
@@ -106,9 +107,9 @@ object StreamingDedup {
     // pairs) — per-verify rebuilds would shingle the batch three times a
     // micro-batch; sharing also puts both verifies in the same df-cap
     // universe (see the header note on maxShingleDf semantics)
-    val sets = Dedup.shingleSets(batchDocs.unionByName(corpusCand),
-        "id", "t", cfg.n, cfg.maxShingleDf, excludeHashes = hot)
-      .localCheckpoint(true)
+    val sets = Materialize.eager(Dedup.shingleSets(batchDocs.unionByName(corpusCand),
+        "id", "t", cfg.n, cfg.maxShingleDf, excludeHashes = hot),
+      "StreamingDedup.admitWithKeys.sets")
     val corpusHits = Dedup.verifyJaccardPairsWithSets(vsCorpus, sets, cfg.threshold)
       .select(col("id_a").as(cfg.idCol)).distinct()
     // within batch: band self-join on the SAME keys, then verify; the
@@ -127,10 +128,10 @@ object StreamingDedup {
     val batchLosers = Dedup.resolve(inBatchPairs, batchDocs.select(col("id")), "id")
       .filter(!col("keep"))
       .select(col("id").as(cfg.idCol))
-    val novel = batch
+    val novel = Materialize.eager(batch
       .join(corpusHits, Seq(cfg.idCol), "left_anti")
-      .join(batchLosers, Seq(cfg.idCol), "left_anti")
-      .localCheckpoint(true)
+      .join(batchLosers, Seq(cfg.idCol), "left_anti"),
+      "StreamingDedup.admitWithKeys.novel")
     val novelKeys = batchKeys.join(
       novel.select(col(cfg.idCol).as("id")), Seq("id"), "left_semi")
     (novel, novelKeys)
@@ -173,16 +174,17 @@ object StreamingDedup {
       cfg: DedupGateConfig): DataFrame = {
     val hot =
       if (cfg.maxCorpusShingleDf == Long.MaxValue) None
-      else Some(dfState.filter(col("df") > cfg.maxCorpusShingleDf)
-        .select("h").localCheckpoint(true)) // feeds every set build
-    val b = batch.dropDuplicates(cfg.idCol)
-      .join(corpus.select(col(cfg.idCol)), Seq(cfg.idCol), "left_anti")
-      .localCheckpoint(true) // consumed by sets, ids, and the final anti-joins
+      else Some(Materialize.eager( // feeds every set build
+        dfState.filter(col("df") > cfg.maxCorpusShingleDf).select("h"),
+        "StreamingDedup.admitExact.hot"))
+    val b = Materialize.eager(batch.dropDuplicates(cfg.idCol)
+      .join(corpus.select(col(cfg.idCol)), Seq(cfg.idCol), "left_anti"),
+      "StreamingDedup.admitExact.batch") // consumed by sets, ids, and the final anti-joins
     val batchDocs = b.select(col(cfg.idCol).as("id"), col(cfg.textCol).as("t"))
     val corpusDocs = corpus.select(col(cfg.idCol).as("id"), col(cfg.textCol).as("t"))
-    val sets = Dedup.shingleSets(batchDocs.unionByName(corpusDocs), "id", "t",
-        cfg.n, cfg.maxShingleDf, excludeHashes = hot)
-      .localCheckpoint(true) // inverted index + the shared verify
+    val sets = Materialize.eager(Dedup.shingleSets(batchDocs.unionByName(corpusDocs), "id", "t",
+        cfg.n, cfg.maxShingleDf, excludeHashes = hot),
+      "StreamingDedup.admitExact.sets") // inverted index + the shared verify
     // ONE fused candidate join + ONE verify for BOTH families (r13,
     // guide §2.4 — the annVerified pattern): the batch-vs-corpus and
     // batch-vs-batch candidate joins shared the same batch-side inverted
@@ -206,8 +208,8 @@ object StreamingDedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("b.__isb").as("__isb"))
       .distinct()
-    val verified = Dedup.verifyJaccardPairsWithSets(cand, sets, cfg.threshold)
-      .localCheckpoint(true) // corpus-hit filter AND in-batch resolve read it
+    val verified = Materialize.eager(Dedup.verifyJaccardPairsWithSets(cand, sets, cfg.threshold),
+      "StreamingDedup.admitExact.verified") // corpus-hit filter AND in-batch resolve read it
     val corpusHits = verified.filter(!col("__isb"))
       .select(col("id_a").as(cfg.idCol)).distinct()
     val inBatchPairs = verified.filter(col("__isb"))

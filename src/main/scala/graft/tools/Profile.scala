@@ -5,7 +5,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 /** Optimization-round measurement harness (guide §1): runs named queries
   * (or all) against a data dir, timing each with the noop sink and
   * counting Spark jobs / stages / tasks / shuffle bytes via a listener —
-  * the local-mode stand-in for the Spark UI's stage table. Optionally
+  * the local-mode stand-in for the Spark UI's stage table. After each
+  * query's `PROF` line, a `SITES` line splits the warm run's jobs by the
+  * [[graft.operators.Materialize]] site that ran them (the job's
+  * `graft.site` local property; `-` for the query's own jobs). Optionally
   * writes `.explain("formatted")` to plans/<tag>/<query>_<suffix>.txt.
   *
   * Usage: runMain graft.tools.Profile <dataDir> [--plans <dir> <suffix>] [query...]
@@ -30,9 +33,17 @@ object Profile {
     var tasks = 0
     var shuffleRead = 0L
     var shuffleWrite = 0L
+    val jobsBySite = scala.collection.mutable.Map.empty[String, Int]
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        lock.synchronized { jobs += 1 }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val site = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(graft.operators.Materialize.SiteProperty)))
+          .getOrElse("-")
+        lock.synchronized {
+          jobs += 1
+          jobsBySite(site) = jobsBySite.getOrElse(site, 0) + 1
+        }
+      }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         lock.synchronized {
           stages += 1
@@ -43,6 +54,10 @@ object Profile {
         }
     }
     spark.sparkContext.addSparkListener(listener)
+    def reset(): Unit = {
+      jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0
+      jobsBySite.clear()
+    }
     // the listener bus is asynchronous: without a drain, late events from
     // run N bleed into run N+1's counters (ADVICE r12)
     def drainListenerBus(): Unit =
@@ -73,7 +88,7 @@ object Profile {
       // one timed run AFTER the explain (the explain itself plans but
       // does not execute; model caches warm on the first run below)
       spark.sparkContext.setJobDescription(name)
-      lock.synchronized { jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0 }
+      lock.synchronized(reset())
       val t0 = System.nanoTime()
       val ok = try { evaluate(fn(spark, dataDir)); true }
         catch { case e: Throwable =>
@@ -82,7 +97,7 @@ object Profile {
       drainListenerBus()
       val (j1, s1, k1, sr1, sw1) = lock.synchronized {
         val snap = (jobs, stages, tasks, shuffleRead, shuffleWrite)
-        jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0
+        reset()
         snap
       }
       // second timed run: caches/stored indexes warm — the bench's
@@ -91,10 +106,11 @@ object Profile {
       if (ok) try evaluate(fn(spark, dataDir)) catch { case _: Throwable => () }
       val dt2 = (System.nanoTime() - t1) / 1e9
       drainListenerBus()
-      val (j2, s2, k2, sr2, sw2) = lock.synchronized {
-        (jobs, stages, tasks, shuffleRead, shuffleWrite)
+      val (j2, s2, k2, sr2, sw2, bySite) = lock.synchronized {
+        (jobs, stages, tasks, shuffleRead, shuffleWrite, jobsBySite.toSeq.sorted)
       }
       println(f"PROF $name%-28s run1=$dt%7.3fs jobs=$j1%3d stages=$s1%4d tasks=$k1%5d shR=${sr1 / 1024}%8dK shW=${sw1 / 1024}%8dK | run2=$dt2%7.3fs jobs=$j2%3d stages=$s2%4d tasks=$k2%5d shR=${sr2 / 1024}%8dK shW=${sw2 / 1024}%8dK")
+      println(s"SITES $name ${bySite.map { case (s, n) => s"$s=$n" }.mkString(" ")}")
       spark.sparkContext.setJobDescription(null)
     }
     spark.stop()

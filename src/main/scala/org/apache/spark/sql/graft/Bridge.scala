@@ -22,7 +22,9 @@ object Bridge {
     * underlying RDD directly — so the blocks otherwise linger until the
     * driver GCs the RDD and ContextCleaner gets to it. Only call once
     * nothing will read the Dataset again: the truncated lineage cannot
-    * recompute. */
+    * recompute. Its one caller in main is `graft.operators.Materialize`
+    * (the scoped form); operators do not pair checkpoints with releases
+    * by hand. */
   def unpersistCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Unit =
     ds.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)

@@ -186,6 +186,23 @@ class SearchSpec extends SparkTestBase {
     assert(shuffles == 1, s"expected exactly 1 shuffle Exchange, plan:\n$plan")
   }
 
+  test("exact batch plan evaluates the pair score fewer than 3 times") {
+    // the undefined-score drop references the score once: the optimizer
+    // pushes it into the join condition and inlines the score there, so a
+    // two-reference guard costs two extra evaluations per (query, row) pair
+    val df = mkData(
+      (1L, Seq(1f, 0f), "g", "{}"),
+      (2L, Seq(0f, 1f), "g", "{}"))
+    val queries = Seq((10L, Seq(1f, 0f))).toDF(Search.QueryIdCol, "feature")
+    val res = Search.multiSearch(df, queries, cfg.copy(limit = 1, assumeUniqueKeys = true))
+    val scores = res.queryExecution.optimizedPlan.collect { case node =>
+      node.expressions.map(_.collect {
+        case v: graft.functions.VectorScore => v }.size).sum
+    }.sum
+    assert(scores < 3, s"score evaluated $scores times:\n${res.queryExecution.optimizedPlan}")
+    assert(res.select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   test("golden: news-title kNN reproduces reference neighbour (data_test.go:135)") {
     val schema = StructType(Seq(
       StructField("title", StringType),

@@ -11,7 +11,8 @@ import graft.SparkTestBase
 /** The query layer's one artifact cache ([[Artifacts]]): memo hits start
   * no Spark job, the key follows the source's content and the family,
   * the marker sidecar — not the directory — decides whether a build ran,
-  * and no other memo or `/tmp` spelling creeps back into `src/main`. */
+  * per-call scratch keeps one dir per family, and no other memo or `/tmp`
+  * spelling creeps back into `src/main`. */
 class ArtifactsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -99,6 +100,21 @@ class ArtifactsSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(Artifacts.dir(ka), "_SUCCESS")) &&
       Files.exists(Paths.get(Artifacts.dir(kb), "_SUCCESS")))
     assert(Artifacts.dir(ka).startsWith(System.getProperty("java.io.tmpdir")))
+  }
+
+  test("per-call scratch: each family keeps at most one dir, still readable") {
+    val queries = Seq("stream_layout_sink", "sketch_profile", "attr_diff_retag",
+      "retrieval_index_sync", "attr_store_census", "export_shards",
+      "cluster_compact_refresh")
+    for (_ <- 1 to 2; q <- queries)
+      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+    val dirs = Files.list(Artifacts.scratchRoot)
+    val families = try dirs.iterator().asScala.toVector
+      .map(_.getFileName.toString).groupBy(n => n.take(n.lastIndexOf('_')))
+      finally dirs.close()
+    assert(families.size == queries.size, families.keys)
+    assert(families.forall(_._2.size == 1), families.filter(_._2.size > 1))
   }
 
   private def mainSources: Seq[Path] = {

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, Dedup, Search, SearchConfig}
+import graft.operators.{Ann, Dedup, Materialize, Search, SearchConfig}
 
 /** Scale rehearsal at ~sf1 (VERDICT r4 #8): deterministic synthetic
   * corpora 10× the bench SF — 50k documents / 50k 64-dim embeddings
@@ -937,15 +937,15 @@ object ScaleRehearsal {
       }
       def keyedLeg(tag: String, sig: DataFrame, nExpect: Long): Unit = {
         val t0 = System.nanoTime()
-        val verdicts = Dedup.simhashKeyedKeep(sig, "doc_id", "simhash",
-          maxHamming = 4).localCheckpoint(true)
-        val n = verdicts.count()
-        val kept = verdicts.filter($"keep").count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[sf1] simhash_keyed_$tag%-13s $sec%7.2f s ($n verdicts, $kept kept)")
-        assert(n == nExpect, s"verdict rows $n != $nExpect")
-        assert(kept > 0 && kept < nExpect)
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(verdicts)
+        Materialize.scoped(Dedup.simhashKeyedKeep(sig, "doc_id", "simhash",
+            maxHamming = 4), "ScaleRehearsal.keyedLeg") { verdicts =>
+          val n = verdicts.count()
+          val kept = verdicts.filter($"keep").count()
+          val sec = (System.nanoTime() - t0) / 1e9
+          println(f"[sf1] simhash_keyed_$tag%-13s $sec%7.2f s ($n verdicts, $kept kept)")
+          assert(n == nExpect, s"verdict rows $n != $nExpect")
+          assert(kept > 0 && kept < nExpect)
+        }
       }
       keyedLeg("525k", sig525, 525000L)
       keyedLeg("5m", sig10, 5250000L)
@@ -954,16 +954,16 @@ object ScaleRehearsal {
       // keep-first, still completing linearly
       def misLeg(tag: String, sig: DataFrame, nExpect: Long): Unit = {
         val t0 = System.nanoTime()
-        val verdicts = Dedup.simhashKeyedKeep(sig, "doc_id", "simhash",
-          maxHamming = 4, rounds = 3).localCheckpoint(true)
-        val n = verdicts.count()
-        val kept = verdicts.filter($"keep").count()
-        val undecided = verdicts.filter(!$"keep" && $"rep".isNull).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[sf1] simhash_mis3_$tag%-12s $sec%7.2f s " +
-          s"($n verdicts, $kept kept, $undecided undecided)")
-        assert(n == nExpect, s"verdict rows $n != $nExpect")
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(verdicts)
+        Materialize.scoped(Dedup.simhashKeyedKeep(sig, "doc_id", "simhash",
+            maxHamming = 4, rounds = 3), "ScaleRehearsal.misLeg") { verdicts =>
+          val n = verdicts.count()
+          val kept = verdicts.filter($"keep").count()
+          val undecided = verdicts.filter(!$"keep" && $"rep".isNull).count()
+          val sec = (System.nanoTime() - t0) / 1e9
+          println(f"[sf1] simhash_mis3_$tag%-12s $sec%7.2f s " +
+            s"($n verdicts, $kept kept, $undecided undecided)")
+          assert(n == nExpect, s"verdict rows $n != $nExpect")
+        }
       }
       misLeg("525k", sig525, 525000L)
       misLeg("5m", sig10, 5250000L)
