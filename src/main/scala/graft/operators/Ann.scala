@@ -404,37 +404,44 @@ object Ann {
   }
 
   /** Batch ANN (VERDICT round-1 missing #1): every query in `queries`
-    * probes its `nProbe` nearest cells; candidates come from a broadcast
-    * equi-join on `cluster` (each query scores only the rows of its probed
-    * cells — nProbe/k of the table, and partition-pruned when `indexed` is
-    * the stored partitioned layout), then the exact re-score + bounded
-    * top-k of [[Search.multiSearch]]. The reference routes batch searches
+    * probes its `nProbe` nearest cells, and the exact re-score + bounded
+    * top-k of [[Search.multiSearch]] routes each (query, cell) row to the
+    * data rows of that cell only — nProbe/k of the table. The probed
+    * (query, cell) rows are collected once, in one job labelled
+    * `Ann.ivfMultiSearch.probes`; that same collect is the kernel's
+    * query set and names the cells a cluster-partitioned stored layout
+    * is statically pruned to. The reference routes batch searches
     * through the same index as single ones (data/search.go:136-141 from
     * search.go:254-298). */
   def ivfMultiSearch(indexed: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, cfg: SearchConfig, nProbe: Int): DataFrame = {
     val norm = needsNormalize(cfg.scoreFuncName)
-    val pq = queries.select(
+    val pq = Search.queryFrame(queries.select(
       col(Search.QueryIdCol), col(cfg.featureCol),
-      explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster"))
-    Search.multiSearch(pruneToProbedCells(indexed, pq), pq, cfg,
-      joinCols = Seq("cluster"))
+      explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster")),
+      cfg, Seq("cluster"))
+    val probes = Materialize.collect(pq, "Ann.ivfMultiSearch.probes", Search.MaxQueryRows)
+    Search.knn(pruneToCells(indexed, probes.map(_.get(2)).distinct.toSeq),
+      KnnKernel.Queries(probes, Some(pq.schema)), cfg, Seq("cluster"))
   }
 
   /** Statically restrict a cluster-partitioned stored table to the
     * batch's probed cells, so the scan reads ONLY those hive partitions
-    * (the single-query path's `isin` pruning, batch-shaped). The
-    * broadcast equi-join alone gives per-ROW pruning but still SCANS
-    * every partition — the r12 decade measured the difference at 5.25M
-    * rows / k=2564: all-partition scan ~30 s vs pruned ~2 s for a
-    * 100-query batch. The driver fetch is bounded by k (distinct cells),
-    * never by batch size; a batch probing most cells degenerates to the
-    * full scan, which is then genuinely the right plan. */
-  private def pruneToProbedCells(indexed: DataFrame, probed: DataFrame): DataFrame = {
-    val cells = probed.select(col("cluster")).distinct().collect().map(_.get(0))
+    * (the single-query path's `isin` pruning, batch-shaped). Routing
+    * alone gives per-ROW pruning but still SCANS every partition — the
+    * r12 decade measured the difference at 5.25M rows / k=2564:
+    * all-partition scan ~30 s vs pruned ~2 s for a 100-query batch. The
+    * cell list is bounded by k (distinct cells), never by batch size; a
+    * batch probing most cells degenerates to the full scan, which is then
+    * genuinely the right plan. */
+  private def pruneToCells(indexed: DataFrame, cells: Seq[Any]): DataFrame =
     if (cells.isEmpty) indexed.filter(lit(false))
-    else indexed.filter(col("cluster").isin(cells.toIndexedSeq: _*))
-  }
+    else indexed.filter(col("cluster").isin(cells: _*))
+
+  /** [[pruneToCells]] over the distinct cells of a probed frame. */
+  private def pruneToProbedCells(indexed: DataFrame, probed: DataFrame): DataFrame =
+    pruneToCells(indexed,
+      probed.select(col("cluster")).distinct().collect().map(_.get(0)).toSeq)
 
   // -------------------------------------------------------- index persist
 

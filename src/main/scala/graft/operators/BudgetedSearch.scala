@@ -151,173 +151,7 @@ object BudgetedSearch {
       cfg: SearchConfig): DataFrame =
     Search.scoredMulti(data, queries, cfg, Nil)
 
-  // ------------------------------------------------------------ ordering
-
-  /** Driver/executor-side mirror of [[Search.orderCols]]: natively-typed
-    * ascending with nulls first, exactly what `col.asc` does — shared
-    * with [[Dedup.driverOrd]] for the types it covers. */
-  private def nativeOrd(dt: DataType): Ordering[Any] = {
-    val base = Dedup.driverOrd(dt).getOrElse(dt match {
-      case DoubleType => new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = java.lang.Double.compare(
-          a.asInstanceOf[Double], b.asInstanceOf[Double])
-      }
-      case FloatType => new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = java.lang.Float.compare(
-          a.asInstanceOf[Float], b.asInstanceOf[Float])
-      }
-      case ByteType => Ordering.by((x: Any) => x.asInstanceOf[Byte])
-      case BooleanType => Ordering.by((x: Any) => x.asInstanceOf[Boolean])
-      case DateType | TimestampType | TimestampNTZType | _: DecimalType =>
-        new Ordering[Any] {
-          def compare(a: Any, b: Any): Int =
-            a.asInstanceOf[Comparable[Any]].compareTo(b)
-        }
-      case other => throw new IllegalArgumentException(
-        s"BudgetedSearch: tieBreakCol type ${other.catalogString} has no " +
-          "driver-side ordering — use a numeric, string, boolean, " +
-          "date/timestamp or decimal tie-break column")
-    })
-    new Ordering[Any] with Serializable { // col.asc = nulls FIRST
-      def compare(a: Any, b: Any): Int =
-        if (a == null && b == null) 0
-        else if (a == null) -1
-        else if (b == null) 1
-        else base.compare(a, b)
-    }
-  }
-
-  /** Total "better first" row ordering: score in the config's direction,
-    * then the tie-break column in its NATIVE ordering (never stringly). */
-  private def rowOrdering(schema: StructType, cfg: SearchConfig,
-      scoreIdx: Int): Ordering[Row] = {
-    val sign = if (cfg.higherIsBetter) -1 else 1
-    val tie = cfg.tieBreakCol.map { c =>
-      val i = schema.fieldIndex(c)
-      (i, nativeOrd(schema(i).dataType))
-    }
-    new Ordering[Row] with Serializable {
-      def compare(a: Row, b: Row): Int = {
-        val s = sign * java.lang.Double.compare(
-          a.get(scoreIdx).asInstanceOf[Number].doubleValue(),
-          b.get(scoreIdx).asInstanceOf[Number].doubleValue())
-        if (s != 0) s
-        else tie match {
-          case Some((i, ord)) => ord.compare(a.get(i), b.get(i))
-          case None => 0
-        }
-      }
-    }
-  }
-
-  /** Value-equality normalization for map keys: JVM arrays (binary
-    * columns) compare by reference, which would defeat dedup. */
-  private def normKey(v: Any): Any = v match {
-    case a: Array[Byte] => a.toSeq
-    case a: Array[_] => a.toSeq
-    case x => x
-  }
-
-  // ------------------------------------------------------------ pools
-
-  /** Bounded best-k pool over any element type (driver merge folds
-    * external [[Row]]s; task pools fold [[Cand]] wrappers over the
-    * codegen'd InternalRow output). `keyOf` null: a plain worst-first
-    * bounded heap (O(log k) per accepted row, O(1) reject against the
-    * heap max). `keyOf` non-null: exact best-per-key dedup inside the k
-    * slots (≤ k tracked keys — correct because once a key is evicted the
-    * pool's worst entry only ever improves, so the evicted key's best
-    * can never re-enter the top-k without a strictly better row, which
-    * re-inserts it); O(1) reject via the cached worst, O(k) rescan only
-    * on an accepted insert/eviction. `retain` runs exactly once per
-    * element, immediately BEFORE it is first stored — the task side uses
-    * it to copy the iterator-reused InternalRow buffer only for rows
-    * that actually enter a pool. Pool emptiness is tracked SEPARATELY
-    * from `worstKey` (`hasWorst`): a legitimate NULL dedup-key value
-    * must never read as "no worst yet", or a new key would displace the
-    * cached worst unconditionally and the exactness invariant above
-    * would silently break on nullable keyCols. */
-  private final class Pool[E](k: Int, ord: Ordering[E], keyOf: E => Any,
-      retain: E => Unit) {
-    // PriorityQueue dequeues the ord-LARGEST element = the worst
-    // ("smaller is better" ordering), so overflow drops the worst
-    private val heap =
-      if (keyOf == null) mutable.PriorityQueue.empty[E](ord) else null
-    private val best =
-      if (keyOf == null) null else mutable.HashMap.empty[Any, E]
-    private var worstKey: Any = null
-    private var hasWorst = false
-    private def rescanWorst(): Unit = {
-      var wk: Any = null; var wr: E = null.asInstanceOf[E]
-      var found = false
-      best.foreach { case (key, e) =>
-        if (!found || ord.compare(e, wr) > 0) { wk = key; wr = e; found = true }
-      }
-      worstKey = wk
-      hasWorst = found
-    }
-    def add(e: E): Unit = {
-      if (k <= 0) return // limit 0 == the deterministic path's empty limit(0)
-      if (heap != null) {
-        // reject BEFORE retaining: a row no better than the full heap's
-        // worst must not pay the admission copy
-        if (heap.size >= k && ord.compare(e, heap.head) >= 0) return
-        retain(e)
-        heap.enqueue(e)
-        if (heap.size > k) heap.dequeue()
-        return
-      }
-      val key = keyOf(e)
-      best.get(key) match {
-        case Some(cur) =>
-          if (ord.compare(e, cur) < 0) {
-            retain(e)
-            best(key) = e
-            if (hasWorst && key == worstKey) rescanWorst()
-          }
-        case None =>
-          if (best.size < k) {
-            retain(e)
-            best(key) = e
-            if (!hasWorst || ord.compare(e, best(worstKey)) > 0) {
-              worstKey = key
-              hasWorst = true
-            }
-          } else if (ord.compare(e, best(worstKey)) < 0) {
-            retain(e)
-            best -= worstKey
-            best(key) = e
-            rescanWorst()
-          }
-      }
-    }
-    def size: Int = if (heap != null) heap.size else best.size
-    def rows: Iterator[E] =
-      if (heap != null) heap.iterator else best.valuesIterator
-  }
-
-  /** One bounded pool per query (ungrouped) or per (query, group)
-    * (grouped). The SAME shape serves as the per-task reducer (over
-    * [[Cand]]) and as the driver's incremental merge state (over
-    * [[Row]]): folding task pools through a fresh PoolState is exact by
-    * the associativity of best-per-key-then-top-k (ungrouped) /
-    * per-group best-per-key-then-top-groupLimit when keys cannot span
-    * groups (grouped — enforced by the `keyCoversGroup` require). */
-  private final class PoolState[E](k: Int, gL: Int, ord: Ordering[E],
-      keyOf: E => Any, qKeyOf: E => Any, gKeyOf: E => Any,
-      retain: E => Unit) {
-    private val pools = mutable.HashMap.empty[Any, Pool[E]]
-    def add(e: E): Unit = {
-      val pk = if (gL > 0) (qKeyOf(e), gKeyOf(e)) else qKeyOf(e)
-      pools.getOrElseUpdate(pk,
-        new Pool[E](if (gL > 0) gL else k, ord, keyOf, retain)).add(e)
-    }
-    def rowCount: Long = pools.valuesIterator.map(_.size.toLong).sum
-    def elements: Iterator[E] = pools.valuesIterator.flatMap(_.rows)
-    /** (pool key, pool) pairs — ungrouped key is the query id, grouped
-      * key is (query id, normalized group value). */
-    def entries: Iterator[(Any, Pool[E])] = pools.iterator
-  }
+  import KnnKernel.{nativeOrd, normKey, Pool, PoolState}
 
   /** Driver-side extractors: the merge state folds the external Rows the
     * tasks ship back, keyed/grouped exactly as the task pools were. */
@@ -436,7 +270,7 @@ object BudgetedSearch {
       s"BudgetedSearch: configured column(s) ${missingCols.mkString(", ")} " +
         s"absent from the scored schema (${schema.fieldNames.mkString(", ")}) " +
         "— fix keyCols/tieBreakCol; the deterministic path rejects these too")
-    val ord = rowOrdering(schema, cfg, scoreIdx)
+    val ord = KnnKernel.rowOrdering(schema, cfg, scoreIdx)
     val keyIdx = cfg.keyCols.map(schema.fieldIndex).toArray
     val dedup = !cfg.assumeUniqueKeys && keyIdx.nonEmpty
     val groupIdx = if (gL > 0) schema.fieldIndex(cfg.groupLabelCol) else -1
@@ -572,73 +406,24 @@ object BudgetedSearch {
 
   // ------------------------------------------------------------ finalize
 
-  /** Ungrouped finalize: the state's per-query pools already hold the
-    * deduped best ≤ k rows; sort each by the config's order + native
-    * tie-break and truncate to k. */
+  /** Ungrouped finalize: the state's per-query pools, each sorted and cut
+    * to k ([[KnnKernel.topRows]]). */
   private def finalizeRows(spark: SparkSession, schema: StructType,
       state: PoolState[Row], k: Int, ord: Ordering[Row]): DataFrame = {
-    val merged = state.entries.flatMap { case (_, pool) =>
-      pool.rows.toSeq.sorted(ord).take(k)
-    }.toSeq
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(merged.asJava, schema)
+    spark.createDataFrame(KnnKernel.topRows(KnnKernel.poolRows(state), k, ord).toSeq.asJava,
+      schema)
   }
 
-  /** Grouped finalize, the driver mirror of [[Search]]'s grouped merge:
-    * each (query, group) pool holds the deduped top-`groupLimit`
-    * members; the group score is their sum (higherIsBetter) or sum/len²
-    * folded BEST-FIRST (bit-for-bit the order `CollectTopK`'s sorted
-    * array is summed in), the representative is the best member, and the
-    * final top-k runs over group rows with the same order + tie-break. */
+  /** Grouped finalize, the driver mirror of [[Search]]'s grouped merge
+    * ([[KnnKernel.groupRows]]). */
   private def finalizeGrouped(spark: SparkSession, schema: StructType,
       state: PoolState[Row], cfg: SearchConfig, k: Int, qIdx: Int, scoreIdx: Int,
       ord: Ordering[Row], groupIdx: Int): DataFrame = {
-    val payloadIdx = schema.fields.indices.filter { i =>
-      i != qIdx && i != groupIdx && i != scoreIdx
-    }
-    val outSchema = StructType(
-      (if (qIdx >= 0) Seq(schema(qIdx)) else Nil) ++
-        Seq(schema(groupIdx), StructField(Search.ScoreCol, DoubleType, nullable = false)) ++
-        payloadIdx.map(schema.fields))
-    // group-row ordering: score direction + the representative's native
-    // tie-break, exactly Search's final orderCols over the merged frame
-    val sign = if (cfg.higherIsBetter) -1 else 1
-    val tie = cfg.tieBreakCol.map { c =>
-      (schema.fieldIndex(c), nativeOrd(schema(c).dataType))
-    }
-    final case class GroupRow(score: Double, rep: Row, groupVal: Any)
-    val groupOrd = new Ordering[GroupRow] {
-      def compare(a: GroupRow, b: GroupRow): Int = {
-        val s = sign * java.lang.Double.compare(a.score, b.score)
-        if (s != 0) s
-        else tie match {
-          case Some((i, o)) => o.compare(a.rep.get(i), b.rep.get(i))
-          case None => 0
-        }
-      }
-    }
-    val perQuery = state.entries.toSeq.groupBy { case (pk, _) =>
-      pk.asInstanceOf[(Any, Any)]._1
-    }
-    val merged = perQuery.valuesIterator.flatMap { entries =>
-      val groups = entries.iterator.flatMap { case (_, pool) =>
-        val top = pool.rows.toSeq.sorted(ord).take(cfg.groupLimit)
-        if (top.isEmpty) None
-        else {
-          val sum = top.foldLeft(0d)((acc, r) =>
-            acc + r.get(scoreIdx).asInstanceOf[Number].doubleValue())
-          val score = if (cfg.higherIsBetter) sum else sum / (top.size * top.size)
-          Some(GroupRow(score, top.head, top.head.get(groupIdx)))
-        }
-      }
-      groups.toSeq.sorted(groupOrd).take(k).map { g =>
-        val vals =
-          (if (qIdx >= 0) Seq(g.rep.get(qIdx)) else Nil) ++
-            Seq(g.groupVal, g.score) ++ payloadIdx.map(g.rep.get)
-        Row.fromSeq(vals)
-      }
-    }.toSeq
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(merged.asJava, outSchema)
+    spark.createDataFrame(
+      KnnKernel.groupRows(KnnKernel.poolRows(state), schema, cfg, k, qIdx, scoreIdx, ord,
+        groupIdx).toSeq.asJava,
+      KnnKernel.groupedSchema(schema, qIdx, groupIdx, scoreIdx))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** Every point where the library cuts lineage or pins a stage before a
@@ -16,7 +16,8 @@ import org.apache.spark.storage.StorageLevel
   *    blocks in a `finally` once their body returns; the other forms'
   *    blocks live until the driver garbage-collects the Dataset;
   *  - '''how''' its plan-build job is labelled: each job an eager form
-  *    runs carries the local property [[SiteProperty]] set to the call's
+  *    or a bounded [[collect]] runs carries the local property
+  *    [[SiteProperty]] set to the call's
   *    site name (`"Dedup.resolve.round"`), so a listener can attribute
   *    plan-build jobs per site (`graft.tools.Profile` prints them). The
   *    caller's own value is restored afterwards, so an enclosing label
@@ -70,6 +71,22 @@ object Materialize {
   def cachedScoped[T, A](ds: Dataset[T], site: String)(use: Dataset[T] => A): A = {
     val c = ds.persist(StorageLevel.MEMORY_AND_DISK)
     try use(c) finally c.unpersist(blocking = false)
+  }
+
+  /** Collect `df` to the driver in one result job labelled `site` (its
+    * shuffles, if it has any, run as labelled jobs first), failing loudly
+    * — naming the site — when it holds more than `maxRows` rows. Each
+    * task ships at most `maxRows + 1` rows, so an oversized input fails
+    * after a bounded fetch instead of filling the driver heap (a `limit`
+    * would read the same bound through several growing jobs). */
+  def collect(df: DataFrame, site: String, maxRows: Int): Array[Row] = {
+    require(maxRows >= 0 && maxRows < Int.MaxValue, s"$site: maxRows=$maxRows")
+    val rows = labelled(df, site)(
+      df.mapPartitions(_.take(maxRows + 1))(Encoders.row(df.schema)).collect())
+    if (rows.length > maxRows) throw new IllegalStateException(
+      s"$site: the driver collect holds more than $maxRows rows — split the " +
+        "input into smaller calls")
+    rows
   }
 
   private def labelled[A](ds: Dataset[_], site: String)(run: => A): A = {

@@ -43,34 +43,51 @@ final case class SearchConfig(
 
 /** The query engine: multi-query kNN scan → context re-score → JSON filter
   * → best-score dedup → optional grouped top-k → global top-k
-  * (reference lifecycle SURVEY.md §3.1; one declarative plan here).
+  * (reference lifecycle SURVEY.md §3.1).
   *
-  * Scale design (100 TB): queries are broadcast (small side of a nested-loop
-  * join, or a broadcast hash join when routed through an index key), so the
-  * big table is scanned exactly once with no shuffle before scoring;
-  * per-query top-k uses partial per-partition bounded heaps
-  * (`TakeOrderedAndProject` in the single-query path, `CollectTopK` in the
-  * multi-query path) so only k rows per partition per query cross the one
-  * shuffle; the A1 dedup and group stages add a shuffle on (query, key) /
-  * (query, group) only when configured — sources with unique keys set
-  * `assumeUniqueKeys` and skip dedup entirely.
+  * Scale design (100 TB): every search shape runs one per-partition
+  * kernel ([[KnnKernel]]). The batch's queries are collected once on the
+  * driver (bounded by [[MaxQueryRows]]) and broadcast; the big table is
+  * scanned exactly once, its JSON filter a Catalyst `Filter` under the
+  * kernel, and each task scores its rows against every query and folds
+  * the pairs into bounded pools — one per query, or per (query, group) —
+  * that keep the best row per dedup key. Only the pool survivors (k rows
+  * per query per partition; `groupLimit` per (query, group) when
+  * grouped) cross the one shuffle, on `query_id` for a batch, where the
+  * same pools merge and the group-score and top-k step runs. A single
+  * query ends in `orderBy.limit` (`TakeOrderedAndProject`), after its
+  * survivors are folded in one task when it groups or dedups. No stage
+  * shuffles O(rows) data, and no join or aggregate builds per-pair
+  * structs. The one exception is a grouped config whose
+  * dedup keys miss the group column: a key can then span groups, bounded
+  * per-partition group pools are not exact, and it keeps the relational
+  * plan (broadcast join → `min_by` dedup → grouped `CollectTopK`).
   */
 object Search {
 
   val QueryIdCol = "query_id"
   val ScoreCol = "score"
 
+  /** The most query rows (one per query, or per (query, routing key)
+    * when `joinCols` route) one batch may collect. The query set lives on
+    * the driver, is broadcast to every executor, and each task keeps one
+    * bounded pool per query: 100k rows of 1,024-d floats are ~400 MB of
+    * broadcast and, at k = 10, a million pooled rows per task. A larger
+    * batch should be split by the caller; failing loudly here beats an
+    * executor running out of memory. */
+  val MaxQueryRows = 100000
+
   /** Sort order for "better" per config (search.go:75-83). */
   def scoreOrder(cfg: SearchConfig, score: Column): Column =
     if (cfg.higherIsBetter) score.desc else score.asc
 
-  private def orderCols(cfg: SearchConfig, score: Column): Seq[Column] =
+  private[operators] def orderCols(cfg: SearchConfig, score: Column): Seq[Column] =
     scoreOrder(cfg, score) +: cfg.tieBreakCol.map(col(_).asc).toSeq
 
   /** "Smaller is better" composite ordering key: the (possibly negated)
     * score plus the deterministic tie-break. Lets every merge stage use
     * min-style aggregates regardless of score direction. */
-  private def orderKey(cfg: SearchConfig, score: Column): Column = {
+  private[operators] def orderKey(cfg: SearchConfig, score: Column): Column = {
     val eff = if (cfg.higherIsBetter) -score else score
     struct(eff.as("__eff") +: cfg.tieBreakCol.map(c => col(c).as("__tie")).toSeq: _*)
   }
@@ -129,16 +146,6 @@ object Search {
   def notExpired(expireAt: Column, asOf: Column): Column =
     expireAt.isNull || expireAt > asOf
 
-  /** J4 MultiAggregatedSearch: batch kNN of every row in `queries` against
-    * `data`. `queries` must carry a unique `query_id` column and a vector
-    * column named like cfg.featureCol (renamed internally to avoid capture).
-    * Result: query_id, score, data.* — top `limit` rows per query.
-    *
-    * `joinCols`: optional routing key shared by `data` and `queries` (e.g.
-    * the IVF `cluster` id). Empty = every query scans every row (exact,
-    * broadcast nested-loop); non-empty = a broadcast hash equi-join, so
-    * each query only scores the rows of the buckets it probes — the batch
-    * index path. */
   /** The engine owns these output column names; input data carrying one
     * would be silently replaced by `withColumn` and then projected TWICE
     * (ambiguous-reference failures deep in the merge) — reject up front
@@ -151,8 +158,9 @@ object Search {
         "— rename or drop them first (e.g. a previous search result's score)")
   }
 
-  /** The broadcast-join→filter→score stage of [[multiSearch]] (pre-dedup,
-    * pre-top-k) — shared with [[BudgetedSearch]]. */
+  /** The broadcast-join→filter→score stage of the relational batch plan
+    * (pre-dedup, pre-top-k) — [[BudgetedSearch]]'s scored stage and the
+    * spanning-keys plan's. */
   private[operators] def scoredMulti(data: DataFrame, queries: DataFrame,
       cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
     requireFreeColumns(data, Seq(QueryIdCol, ScoreCol, "__query_vec"), "multiSearch")
@@ -192,25 +200,95 @@ object Search {
   private[operators] def definedScore(score: Column): Column =
     !isnan(coalesce(score, lit(Double.NaN)))
 
+  /** The query side of a batch as the kernel collects it: `query_id`, the
+    * vector cast to `array<float>` (under the feature column's name),
+    * then the `joinCols` values. */
+  private[operators] def queryFrame(queries: DataFrame, cfg: SearchConfig,
+      joinCols: Seq[String]): DataFrame =
+    queries.select(
+      col(QueryIdCol) +:
+        col(cfg.featureCol).cast("array<float>").as(cfg.featureCol) +:
+        joinCols.map(col): _*)
+
+  /** J4 MultiAggregatedSearch: batch kNN of every row in `queries` against
+    * `data`. `queries` must carry a `query_id` column and a vector column
+    * named like cfg.featureCol. Result: query_id, data.*, score — the top
+    * `limit` rows per query, best-first within each query.
+    *
+    * `joinCols`: optional routing key shared by `data` and `queries` (e.g.
+    * the IVF `cluster` id). Empty = every query scores every row (exact);
+    * non-empty = each query row scores only the data rows whose key
+    * equals its own (an equi-join: null keys never match) — the batch
+    * index path. The query set is collected here, in one job labelled
+    * `Search.queries`, and fails loudly past [[MaxQueryRows]]; the
+    * returned DataFrame is lazy. */
   def multiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
       joinCols: Seq[String] = Nil): DataFrame = {
-    val scored = scoredMulti(data, queries, cfg, joinCols)
+    val q = queryFrame(queries, cfg, joinCols)
+    knn(data, KnnKernel.Queries(
+      Materialize.collect(q, "Search.queries", MaxQueryRows), Some(q.schema)),
+      cfg, joinCols)
+  }
 
-    val deduped =
-      if (cfg.assumeUniqueKeys) scored else dedupBest(scored, cfg, Seq(QueryIdCol))
-    val merged =
-      if (cfg.groupLimit > 0) groupedMerge(deduped, cfg)
-      else deduped
+  /** J1/J3 single-query exact kNN, ending in `orderBy().limit()` — the
+    * `TakeOrderedAndProject` bounded-heap merge of the reference's
+    * bounded Collector (search.go:64-86) + scatter-gather merge
+    * (search.go:161-241). */
+  def search(data: DataFrame, query: Seq[Float], cfg: SearchConfig): DataFrame =
+    knn(data, KnnKernel.singleQuery(query), cfg, Nil)
 
-    // A5/A6: global top-k per query (partial heaps, k rows per partition
-    // cross the shuffle), resultLimit folds into k
-    val k = if (cfg.resultLimit > 0) math.min(cfg.limit, cfg.resultLimit) else cfg.limit
+  /** Every search shape: the kernel, or — for the one config it cannot
+    * serve exactly — the relational plan. */
+  private[operators] def knn(data: DataFrame, qs: KnnKernel.Queries,
+      cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
+    if (qs.single)
+      requireFreeColumns(data,
+        ScoreCol +: (if (cfg.groupLimit > 0) Seq(QueryIdCol) else Nil), "search")
+    else requireFreeColumns(data, Seq(QueryIdCol, ScoreCol), "multiSearch")
+    if (keysSpanGroups(cfg)) spanningKeysPlan(data, qs, cfg, joinCols)
+    else KnnKernel.plan(data, qs, cfg, joinCols)
+  }
+
+  /** Grouped, with dedup keys that miss the group column: a key may then
+    * surface in several groups, and a member truncated from one
+    * partition's group pool can re-enter the exact answer when another
+    * partition's better same-key row lands in a DIFFERENT group — bounded
+    * per-partition group pools are not exact for it. (The reference's
+    * dedup key is the serialized DatumKey, which contains the group
+    * label, veriservice.proto:56-63, so it never spans groups.) */
+  private def keysSpanGroups(cfg: SearchConfig): Boolean =
+    cfg.groupLimit > 0 && !cfg.assumeUniqueKeys && !cfg.keyCols.contains(cfg.groupLabelCol)
+
+  /** The relational plan for [[keysSpanGroups]] configs: score every pair,
+    * dedup per (query, key) with `min_by`, group with `CollectTopK`, then
+    * the global top-k. */
+  private def spanningKeysPlan(data: DataFrame, qs: KnnKernel.Queries,
+      cfg: SearchConfig, joinCols: Seq[String]): DataFrame =
+    if (qs.single) {
+      val scored = scoredSingle(data, qs.rows(0).getSeq[Float](1), cfg)
+      val grouped = groupedMerge(
+        dedupBest(scored, cfg, Nil).withColumn(QueryIdCol, lit(0)), cfg).drop(QueryIdCol)
+      grouped.orderBy(orderCols(cfg, col(ScoreCol)): _*).limit(topK(cfg))
+    } else {
+      import scala.jdk.CollectionConverters._
+      val queries = data.sparkSession.createDataFrame(qs.rows.toSeq.asJava, qs.schema.get)
+      val scored = scoredMulti(data, queries, cfg, joinCols)
+      topKPerQuery(groupedMerge(dedupBest(scored, cfg, Seq(QueryIdCol)), cfg), cfg)
+    }
+
+  /** `limit`, folded with `resultLimit` (A6). */
+  private[operators] def topK(cfg: SearchConfig): Int =
+    if (cfg.resultLimit > 0) math.min(cfg.limit, cfg.resultLimit) else cfg.limit
+
+  /** A5/A6: global top-k per query (partial heaps, k rows per partition
+    * cross the shuffle). */
+  private[operators] def topKPerQuery(merged: DataFrame, cfg: SearchConfig): DataFrame = {
     val outCols = merged.columns.filterNot(_ == QueryIdCol)
     val item = struct(
       orderKey(cfg, col(ScoreCol)).as("__o"),
       struct(outCols.map(col): _*).as("__p"))
     merged.groupBy(QueryIdCol)
-      .agg(collectTopK(item, k).as("__arr"))
+      .agg(collectTopK(item, topK(cfg)).as("__arr"))
       .select(col(QueryIdCol), explode(col("__arr")).as("__e"))
       .select(col(QueryIdCol) +: outCols.map(c => col(s"__e.__p.$c").as(c)): _*)
   }
@@ -218,7 +296,8 @@ object Search {
   /** A1: best-score dedup per (prefix ++ keyCols) as a hash aggregate with
     * map-side partial combine (`min_by` on the composite order key) — no
     * per-partition sort, no full-row window shuffle (aggregator.go:118-134). */
-  private def dedupBest(scored: DataFrame, cfg: SearchConfig, prefix: Seq[String]): DataFrame = {
+  private[operators] def dedupBest(scored: DataFrame, cfg: SearchConfig,
+      prefix: Seq[String]): DataFrame = {
     val payloadCols = scored.columns.filterNot(prefix.contains)
     val payload = struct(payloadCols.map(col): _*)
     scored
@@ -232,10 +311,8 @@ object Search {
     * top-`groupLimit` members with a bounded heap, then derive the group
     * score — sum(scores) when higherIsBetter else sum(scores)/len² — and
     * the representative (best-ranked member = heap head) from the tiny
-    * array. Replaces a window-sort + regroup: only groupLimit rows per
-    * (query, group) per partition cross the shuffle
-    * (aggregator.go:103-117, 138-180). */
-  private def groupedMerge(deduped: DataFrame, cfg: SearchConfig): DataFrame = {
+    * array (aggregator.go:103-117, 138-180). */
+  private[operators] def groupedMerge(deduped: DataFrame, cfg: SearchConfig): DataFrame = {
     val payloadCols = deduped.columns
       .filterNot(c => c == QueryIdCol || c == cfg.groupLabelCol || c == ScoreCol)
     val item = struct(
@@ -254,13 +331,9 @@ object Search {
         payloadCols.map(c => element_at(col("__arr"), 1).getField("__p").getField(c).as(c)): _*)
   }
 
-  /** J1/J3 single-query exact kNN. Uses `orderBy().limit()` so the physical
-    * plan is `TakeOrderedAndProject` — per-partition bounded heaps merged on
-    * the driver, the Spark-native equivalent of the reference's bounded
-    * Collector (search.go:64-86) + scatter-gather merge (search.go:161-241). */
-  /** The scan→filter→score stage of [[search]] (pre-dedup, pre-top-k) —
-    * shared with [[BudgetedSearch]], which replaces the deterministic
-    * top-k with incremental per-partition collection. */
+  /** The scan→filter→score stage of a single query (pre-dedup,
+    * pre-top-k) — [[BudgetedSearch]]'s scored stage and the
+    * spanning-keys plan's. */
   private[operators] def scoredSingle(data: DataFrame, query: Seq[Float],
       cfg: SearchConfig): DataFrame =
     data
@@ -268,19 +341,6 @@ object Search {
       .withColumn(ScoreCol,
         contextRescore(cfg, col(cfg.featureCol),
           scoreExpr(cfg, col(cfg.featureCol), lit(query.toArray))))
-      // see multiSearch: null-feature and NaN guards (identical semantics)
+      // see scoredMulti: null-feature and NaN guards (identical semantics)
       .filter(definedScore(col(ScoreCol)))
-
-  def search(data: DataFrame, query: Seq[Float], cfg: SearchConfig): DataFrame = {
-    requireFreeColumns(data,
-      ScoreCol +: (if (cfg.groupLimit > 0) Seq(QueryIdCol) else Nil), "search")
-    val scored = scoredSingle(data, query, cfg)
-    val deduped = if (cfg.assumeUniqueKeys) scored else dedupBest(scored, cfg, Nil)
-    val merged =
-      if (cfg.groupLimit > 0)
-        groupedMerge(deduped.withColumn(QueryIdCol, lit(0)), cfg).drop(QueryIdCol)
-      else deduped
-    val k = if (cfg.resultLimit > 0) math.min(cfg.limit, cfg.resultLimit) else cfg.limit
-    merged.orderBy(orderCols(cfg, col(ScoreCol)): _*).limit(k)
-  }
 }

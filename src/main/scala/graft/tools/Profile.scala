@@ -1,11 +1,14 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
 
 /** Optimization-round measurement harness (guide §1): runs named queries
   * (or all) against a data dir, timing each with the noop sink and
   * counting Spark jobs / stages / tasks / shuffle bytes via a listener —
-  * the local-mode stand-in for the Spark UI's stage table. After each
+  * the local-mode stand-in for the Spark UI's stage table. A run's jobs
+  * are those started under the local property [[RunProperty]], set
+  * around that run's plan build and evaluate. After each
   * query's `PROF` line, a `SITES` line splits the warm run's jobs by the
   * [[graft.operators.Materialize]] site that ran them (the job's
   * `graft.site` local property; `-` for the query's own jobs). Optionally
@@ -14,6 +17,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Usage: runMain graft.tools.Profile <dataDir> [--plans <dir> <suffix>] [query...]
   */
 object Profile {
+  /** Local property naming the query run (`<query>#1`, `<query>#2`) a
+    * job belongs to. */
+  val RunProperty = "graft.profile.run"
+
   def main(args: Array[String]): Unit = {
     val (plansDir, suffix, rest) = args.toList match {
       case d :: "--plans" :: p :: s :: qs => (Some(p), s, d :: qs)
@@ -23,45 +30,59 @@ object Profile {
     val only = rest.tail.toSet
     val spark = graft.GraftSession.local()
 
-    // ONE shared monitor for main and the listener callbacks (ADVICE r12:
-    // the previous `synchronized` blocks locked two different objects —
-    // the Profile module in main, the anonymous listener in callbacks —
-    // so resets raced with updates)
+    // each run's jobs and stages are counted by the local property
+    // [[RunProperty]] set around that run's build and evaluate, so a late
+    // listener event or a job another thread starts between runs lands
+    // in its own run's counts, whatever the bus timing; the monitor is
+    // shared by main and the listener callbacks
+    final class Counts {
+      var jobs = 0
+      var stages = 0
+      var tasks = 0
+      var shuffleRead = 0L
+      var shuffleWrite = 0L
+      val jobsBySite = scala.collection.mutable.Map.empty[String, Int]
+    }
     val lock = new Object
-    var jobs = 0
-    var stages = 0
-    var tasks = 0
-    var shuffleRead = 0L
-    var shuffleWrite = 0L
-    val jobsBySite = scala.collection.mutable.Map.empty[String, Int]
+    val counts = scala.collection.mutable.Map.empty[String, Counts]
+    val stageRun = scala.collection.mutable.Map.empty[Int, String]
+    def runOf(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(RunProperty)))
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty(graft.operators.Materialize.SiteProperty)))
-          .getOrElse("-")
-        lock.synchronized {
-          jobs += 1
-          jobsBySite(site) = jobsBySite.getOrElse(site, 0) + 1
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        runOf(js.properties).foreach { run =>
+          val site = Option(js.properties.getProperty(graft.operators.Materialize.SiteProperty))
+            .getOrElse("-")
+          lock.synchronized {
+            val c = counts.getOrElseUpdate(run, new Counts)
+            c.jobs += 1
+            c.jobsBySite(site) = c.jobsBySite.getOrElse(site, 0) + 1
+          }
         }
-      }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        runOf(ss.properties).foreach(run =>
+          lock.synchronized(stageRun(ss.stageInfo.stageId) = run))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         lock.synchronized {
-          stages += 1
-          tasks += sc.stageInfo.numTasks
-          shuffleRead += sc.stageInfo.taskMetrics.shuffleReadMetrics.remoteBytesRead +
-            sc.stageInfo.taskMetrics.shuffleReadMetrics.localBytesRead
-          shuffleWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+          stageRun.remove(sc.stageInfo.stageId).foreach { run =>
+            val c = counts.getOrElseUpdate(run, new Counts)
+            c.stages += 1
+            c.tasks += sc.stageInfo.numTasks
+            c.shuffleRead += sc.stageInfo.taskMetrics.shuffleReadMetrics.remoteBytesRead +
+              sc.stageInfo.taskMetrics.shuffleReadMetrics.localBytesRead
+            c.shuffleWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+          }
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    def reset(): Unit = {
-      jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0
-      jobsBySite.clear()
+    /** Run `body` as `run`, then wait for its events and take its counts. */
+    def counted(run: String)(body: => Unit): Counts = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(RunProperty, run)
+      try body finally sc.setLocalProperty(RunProperty, null)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      lock.synchronized(counts.remove(run).getOrElse(new Counts))
     }
-    // the listener bus is asynchronous: without a drain, late events from
-    // run N bleed into run N+1's counters (ADVICE r12)
-    def drainListenerBus(): Unit =
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
 
     def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
@@ -88,29 +109,24 @@ object Profile {
       // one timed run AFTER the explain (the explain itself plans but
       // does not execute; model caches warm on the first run below)
       spark.sparkContext.setJobDescription(name)
-      lock.synchronized(reset())
-      val t0 = System.nanoTime()
-      val ok = try { evaluate(fn(spark, dataDir)); true }
+      var ok = true
+      var dt, dt2 = 0.0
+      val c1 = counted(s"$name#1") {
+        val t0 = System.nanoTime()
+        try evaluate(fn(spark, dataDir))
         catch { case e: Throwable =>
-          System.err.println(s"[profile] $name failed: $e"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      drainListenerBus()
-      val (j1, s1, k1, sr1, sw1) = lock.synchronized {
-        val snap = (jobs, stages, tasks, shuffleRead, shuffleWrite)
-        reset()
-        snap
+          System.err.println(s"[profile] $name failed: $e"); ok = false }
+        dt = (System.nanoTime() - t0) / 1e9
       }
       // second timed run: caches/stored indexes warm — the bench's
       // best-of-3 effectively measures this one
-      val t1 = System.nanoTime()
-      if (ok) try evaluate(fn(spark, dataDir)) catch { case _: Throwable => () }
-      val dt2 = (System.nanoTime() - t1) / 1e9
-      drainListenerBus()
-      val (j2, s2, k2, sr2, sw2, bySite) = lock.synchronized {
-        (jobs, stages, tasks, shuffleRead, shuffleWrite, jobsBySite.toSeq.sorted)
+      val c2 = counted(s"$name#2") {
+        val t1 = System.nanoTime()
+        if (ok) try evaluate(fn(spark, dataDir)) catch { case _: Throwable => () }
+        dt2 = (System.nanoTime() - t1) / 1e9
       }
-      println(f"PROF $name%-28s run1=$dt%7.3fs jobs=$j1%3d stages=$s1%4d tasks=$k1%5d shR=${sr1 / 1024}%8dK shW=${sw1 / 1024}%8dK | run2=$dt2%7.3fs jobs=$j2%3d stages=$s2%4d tasks=$k2%5d shR=${sr2 / 1024}%8dK shW=${sw2 / 1024}%8dK")
-      println(s"SITES $name ${bySite.map { case (s, n) => s"$s=$n" }.mkString(" ")}")
+      println(f"PROF $name%-28s run1=$dt%7.3fs jobs=${c1.jobs}%3d stages=${c1.stages}%4d tasks=${c1.tasks}%5d shR=${c1.shuffleRead / 1024}%8dK shW=${c1.shuffleWrite / 1024}%8dK | run2=$dt2%7.3fs jobs=${c2.jobs}%3d stages=${c2.stages}%4d tasks=${c2.tasks}%5d shR=${c2.shuffleRead / 1024}%8dK shW=${c2.shuffleWrite / 1024}%8dK")
+      println(s"SITES $name ${c2.jobsBySite.toSeq.sorted.map { case (s, n) => s"$s=$n" }.mkString(" ")}")
       spark.sparkContext.setJobDescription(null)
     }
     spark.stop()

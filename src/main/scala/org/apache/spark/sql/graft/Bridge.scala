@@ -40,6 +40,37 @@ object Bridge {
   def convertedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** A row encoder for `schema` whose `Row`s hold Catalyst's INTERNAL
+    * values (`UTF8String`, `ArrayData`, `InternalRow`, `Decimal`, …)
+    * instead of external ones, both ways: its deserializer wraps the
+    * fields as they are and its serializer reads them back unconverted,
+    * so a `mapPartitions` over such rows pays no per-field decode or
+    * encode, yet the plan keeps its scan and filters under the map. A
+    * deserialized value may point into a buffer the next row reuses:
+    * read it before the next row, and copy what is kept
+    * (`InternalRow.copyValue`). */
+  def internalRowEncoder(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.analysis.GetColumnByOrdinal
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct, Literal}
+    import org.apache.spark.sql.catalyst.expressions.objects.{CreateExternalRow, Invoke}
+    val fields = schema.fields.toIndexedSeq.zipWithIndex
+    val row = BoundReference(0,
+      org.apache.spark.sql.types.ObjectType(classOf[org.apache.spark.sql.Row]), nullable = true)
+    ExpressionEncoder(schema).copy(
+      objSerializer = CreateNamedStruct(fields.flatMap { case (f, i) =>
+        Seq(Literal(f.name),
+          Invoke(row, "get", f.dataType, Seq(Literal(i)), returnNullable = f.nullable))
+      }),
+      objDeserializer = CreateExternalRow(
+        fields.map { case (f, i) => GetColumnByOrdinal(i, f.dataType) }, schema))
+  }
+
+  /** `df` read through [[internalRowEncoder]]. */
+  def internalRows(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Dataset[org.apache.spark.sql.Row] =
+    df.as(internalRowEncoder(df.schema))
+
   /** Block until every listener-bus event posted so far has reached every
     * listener (`LiveListenerBus.waitUntilEmpty` is `private[spark]`);
     * throws a `TimeoutException` if the bus has not drained in a minute. */

@@ -547,7 +547,7 @@ class AnnSpec extends SparkTestBase {
     }
   }
 
-  test("batch IVF over stored layout: dynamic partition pruning + one shuffle") {
+  test("batch IVF over stored layout: static partition pruning + one shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
     val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 8, normalize = false)
     Ann.ivfSave(dir, indexed, centroids)
@@ -559,13 +559,16 @@ class AnnSpec extends SparkTestBase {
       nProbe = 2)
     assert(res.count() == 50)
     val plan = res.queryExecution.executedPlan.toString
-    // the stored-index scan must be pruned to the UNION of probed cells at
-    // runtime (DPP through the broadcast join), not read every partition
-    assert(plan.contains("dynamicpruningexpression"), s"no DPP in:\n${plan.take(3000)}")
-    assert(plan.contains("BroadcastHashJoin"), "probe join must broadcast the query side")
+    // the stored-index scan is pruned to the UNION of probed cells named
+    // by the probe collect itself: a static partition filter, with no
+    // join and no dynamic-pruning subquery left to plan
+    assert("PartitionFilters: \\[[^\\]]*cluster".r.findFirstIn(plan).isDefined,
+      s"no partition pruning in:\n${plan.take(3000)}")
+    assert(!plan.contains("dynamicpruning") && !plan.contains("Join"),
+      s"probe routing must not plan a join:\n${plan.take(3000)}")
     val shuffles = plan.linesIterator
       .count(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
-    assert(shuffles == 1, s"expected one shuffle (CollectTopK), plan:\n${plan.take(3000)}")
+    assert(shuffles == 1, s"expected one shuffle (the per-query merge), plan:\n${plan.take(3000)}")
   }
 
   test("PQ: codes are m small ints; recall@10 >= 0.8 after exact refine") {

@@ -91,6 +91,32 @@ class MaterializeSpec extends SparkTestBase {
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("collect labels its one job and fails loudly past its bound, naming the site") {
+    val df = sc.parallelize((1 to 10).map(i => (i.toLong, i % 3)), 3).toDF("id", "k")
+    val (rows, props) = jobProps(Materialize.collect(df, "MaterializeSpec.collect", 10))
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 10L))
+    assert(props.size == 1, s"one job, got ${props.size}")
+    assert(props.head.getProperty(Materialize.SiteProperty) == "MaterializeSpec.collect")
+    assert(sc.getLocalProperty(Materialize.SiteProperty) == null)
+    val e = intercept[IllegalStateException](
+      Materialize.collect(df, "MaterializeSpec.collect.bounded", 9))
+    assert(e.getMessage.contains("MaterializeSpec.collect.bounded") &&
+      e.getMessage.contains("more than 9 rows"), e.getMessage)
+  }
+
+  test("a batch search's query collect is bounded and labelled Search.queries") {
+    val data = (1 to 20).map(i => (i.toLong, Seq(i.toFloat, 0f))).toDF("id", "feature")
+    val queries = sc.parallelize((1 to 3).map(i => (i.toLong, Seq(i.toFloat, 1f))), 2)
+      .toDF(Search.QueryIdCol, "feature")
+    val cfg = SearchConfig(limit = 2, keyCols = Seq("id"), assumeUniqueKeys = true,
+      tieBreakCol = Some("id"))
+    val (res, props) = jobProps(Search.multiSearch(data, queries, cfg))
+    assert(props.map(_.getProperty(Materialize.SiteProperty)) == Seq("Search.queries"),
+      "the call runs exactly the query collect")
+    assert(res.count() == 6)
+    assert(Search.MaxQueryRows > 0)
+  }
+
   private def mainSources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
@@ -108,24 +134,28 @@ class MaterializeSpec extends SparkTestBase {
     assert(hits.isEmpty, s"raw materialization outside Materialize: ${hits.mkString(", ")}")
   }
 
-  /** The site argument — the last top-level argument of the first
-    * argument list — of every `Materialize.<form>(` call in `src`. */
+  /** The site argument of every `Materialize.<form>(` call in `src`: the
+    * last top-level argument of the first argument list, or the second
+    * for `collect(df, site, maxRows)`. */
   private def siteArgs(src: String): Seq[String] =
-    """Materialize\.(eager|eagerOnDisk|deferred|scoped|cachedScoped)\(""".r
+    """Materialize\.(eager|eagerOnDisk|deferred|scoped|cachedScoped|collect)\(""".r
       .findAllMatchIn(src).map { m =>
-        var (i, depth, lastArg) = (m.end, 1, m.end)
+        var (i, depth) = (m.end, 1)
+        val starts = scala.collection.mutable.ArrayBuffer(m.end)
         while (depth > 0) {
           src.charAt(i) match {
             case '"' => i = src.indexOf('"', i + 1)
             case '/' if src.charAt(i + 1) == '/' => i = src.indexOf('\n', i)
             case '(' | '[' | '{' => depth += 1
             case ')' | ']' | '}' => depth -= 1
-            case ',' if depth == 1 => lastArg = i + 1
+            case ',' if depth == 1 => starts += i + 1
             case _ =>
           }
           i += 1
         }
-        src.substring(lastArg, i - 1).replaceAll("//[^\n]*", "").trim
+        val ends = starts.drop(1).map(_ - 1) :+ (i - 1)
+        val arg = if (m.group(1) == "collect") 1 else starts.size - 1
+        src.substring(starts(arg), ends(arg)).replaceAll("//[^\n]*", "").trim
       }.toSeq
 
   test("every Materialize call site passes its own site literal") {

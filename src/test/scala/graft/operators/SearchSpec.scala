@@ -177,30 +177,31 @@ class SearchSpec extends SparkTestBase {
     // same results as the dedup path when keys really are unique
     val got = res.select(Search.QueryIdCol, "id").as[(Long, Long)].collect().toMap
     assert(got == Map(10L -> 1L, 20L -> 2L))
-    // scale contract: the only shuffle is the CollectTopK partial→final;
-    // the query side is a BroadcastExchange (not a shuffle) and scoring
-    // feeds the bounded heaps directly — no O(rows) dedup exchange
+    // scale contract: the only shuffle carries the per-partition pools'
+    // survivors to the per-query merge; the query side is collected and
+    // broadcast, and scoring feeds the bounded pools directly — no
+    // O(rows) dedup exchange
     val plan = res.queryExecution.executedPlan.toString
     val shuffles = plan.linesIterator
       .count(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
     assert(shuffles == 1, s"expected exactly 1 shuffle Exchange, plan:\n$plan")
   }
 
-  test("exact batch plan evaluates the pair score fewer than 3 times") {
-    // the undefined-score drop references the score once: the optimizer
-    // pushes it into the join condition and inlines the score there, so a
-    // two-reference guard costs two extra evaluations per (query, row) pair
+  test("exact batch plan holds no BroadcastNestedLoopJoin and no ObjectHashAggregate") {
+    // the kernel scores, dedups and keeps the top-k inside each data
+    // partition: no per-pair join output, no per-query struct aggregate
     val df = mkData(
       (1L, Seq(1f, 0f), "g", "{}"),
       (2L, Seq(0f, 1f), "g", "{}"))
     val queries = Seq((10L, Seq(1f, 0f))).toDF(Search.QueryIdCol, "feature")
-    val res = Search.multiSearch(df, queries, cfg.copy(limit = 1, assumeUniqueKeys = true))
-    val scores = res.queryExecution.optimizedPlan.collect { case node =>
-      node.expressions.map(_.collect {
-        case v: graft.functions.VectorScore => v }.size).sum
-    }.sum
-    assert(scores < 3, s"score evaluated $scores times:\n${res.queryExecution.optimizedPlan}")
-    assert(res.select("id").as[Long].collect().toSeq == Seq(1L))
+    for (c <- Seq(cfg, cfg.copy(assumeUniqueKeys = true),
+        cfg.copy(groupLimit = 1, assumeUniqueKeys = true))) {
+      val res = Search.multiSearch(df, queries, c.copy(limit = 1))
+      assert(res.select("id").as[Long].collect().toSeq == Seq(1L))
+      val plan = res.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("ObjectHashAggregate"),
+        s"plan:\n$plan")
+    }
   }
 
   test("golden: news-title kNN reproduces reference neighbour (data_test.go:135)") {
