@@ -187,6 +187,26 @@ class SearchSpec extends SparkTestBase {
     assert(shuffles == 1, s"expected exactly 1 shuffle Exchange, plan:\n$plan")
   }
 
+  test("exact batch plan evaluates the pair score fewer than 3 times") {
+    // the undefined-score drop references the score once: the optimizer
+    // pushes it into the join condition and inlines the score there, so a
+    // two-reference guard costs two extra evaluations per (query, row) pair.
+    // Grouped with dedup keys that miss the group column is the config that
+    // keeps the relational plan, so its plan still holds the score expression
+    val df = mkData(
+      (1L, Seq(1f, 0f), "g", "{}"),
+      (2L, Seq(0f, 1f), "g", "{}"))
+    val queries = Seq((10L, Seq(1f, 0f))).toDF(Search.QueryIdCol, "feature")
+    val res = Search.multiSearch(df, queries, cfg.copy(limit = 1, groupLimit = 1))
+    val scores = res.queryExecution.optimizedPlan.collect { case node =>
+      node.expressions.map(_.collect {
+        case v: graft.functions.VectorScore => v }.size).sum
+    }.sum
+    assert(scores > 0 && scores < 3,
+      s"score evaluated $scores times:\n${res.queryExecution.optimizedPlan}")
+    assert(res.select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   test("exact batch plan holds no BroadcastNestedLoopJoin and no ObjectHashAggregate") {
     // the kernel scores, dedups and keeps the top-k inside each data
     // partition: no per-pair join output, no per-query struct aggregate
