@@ -8,7 +8,8 @@ object Plans {
     * `SparkEntry.queries`), instead of the doc silently going stale
     * (VERDICT r7 #8). */
   val flagships: Seq[String] = Seq(
-    "knn_multi_100", "ann_ivf_multi", "ann_lsh_multi", "ann_sq8_knn",
+    "knn_multi_100", "ann_ivf_multi", "ann_ivfpq_multi", "ann_ivfsq8_multi",
+    "ann_lsh_multi", "ann_sq8_knn",
     "dedup_jaccard_pairs", "dedup_jaccard_skew_prefix", "dedup_minhash_lsh",
     "dedup_simhash_pairs", "dedup_strip_spans", "dedup_substring_strip",
     "dedup_contains_ngram",

@@ -48,10 +48,9 @@ object CentroidKernel {
   *
   * The centroid matrix rides along as a flattened literal (broadcast with
   * the serialized expression, referenced via `addReferenceObj` in codegen) —
-  * the same inlined-small-side shape as [[graft.operators.Ann.probeCells]],
-  * but one codegen'd static call per row instead of k interpreted
-  * higher-order-function evaluations, so assignment stays inside
-  * whole-stage codegen at any k. */
+  * the same reference-object shape as [[NearestCellsExpr]]: one codegen'd
+  * static call per row instead of k interpreted higher-order-function
+  * evaluations, so assignment stays inside whole-stage codegen at any k. */
 case class NearestCentroid(child: Expression, ids: Array[Int],
     flat: Array[Double], d: Int) extends UnaryExpression {
 

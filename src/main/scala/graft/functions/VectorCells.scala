@@ -8,22 +8,26 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
-/** Nearest-cell routing kernel for [[graft.operators.Ann]]'s IVF probe
-  * paths — the [[LidScoreExpr]] reference-object pattern applied to the
-  * coarse quantizer. The inline Column spelling
-  * ([[graft.operators.Ann.probeCellsInline]]) builds one literal
-  * sub-expression PER CENTROID, which is fine at the caller-fixed k ≤ 64
-  * the driver SFs use but collapses at auto-sized k (r12: 2564 cells ×
-  * 64 dims ≈ 160k literals in one expression tree — past codegen's
-  * method limits and quadratic to analyze). Here the centroid matrix
-  * rides the serialized expression to every executor as ONE reference
-  * object, and each row routes in a single O(k·d) primitive-array walk.
+/** Nearest-cell routing for [[graft.operators.Ann]]'s IVF paths — the one
+  * routing every IVF path uses: the single query and the routed batches
+  * call [[VectorCells.nearest]] on the driver, and `ivfAppend` assigns
+  * appended rows through [[NearestCellsExpr]], the [[LidScoreExpr]]
+  * reference-object pattern applied to the coarse quantizer. The centroid
+  * matrix rides the serialized expression to every executor as ONE
+  * reference object, and each row routes in a single O(k·d)
+  * primitive-array walk — where an inline Column spelling (one literal
+  * sub-expression per centroid, kept in test scope as the parity
+  * reference) runs k interpreted higher-order functions per row and, at
+  * auto-sized k (r12: 2564 cells × 64 dims ≈ 160k literals in one
+  * expression tree), passes codegen's method limits and is quadratic to
+  * analyze.
   *
   * Parity contract (VectorCellsParity spec): bit-identical to the inline
   * spelling — same double cast, same in-order normalize
   * ([[graft.operators.Ann.l2Normalize]]), same in-order squared-L2 fold,
   * same (distance, index) ascending order with Spark's SQL double
-  * ordering (NaN greatest; sums of squares never produce -0.0). */
+  * ordering (NaN greatest; sums of squares never produce -0.0). A null
+  * element or a dimension other than the centroids' fails loudly. */
 object VectorCells {
 
   /** Broadcastable coarse-quantizer payload. */
@@ -42,8 +46,7 @@ object VectorCells {
     else -1
 
   /** The `nProbe` nearest cell ids for one vector, by (squared L2,
-    * index) ascending — [[graft.operators.Ann.probeCellsInline]] in one
-    * walk. */
+    * index) ascending, in one walk. */
   def nearest(v: ArrayData, cells: Cells, isFloat: Boolean,
       normalize: Boolean, nProbe: Int): GenericArrayData = {
     val n = v.numElements()

@@ -92,13 +92,108 @@ object VectorMath {
     // tail of the longer vector only contributes to its own norm
     while (i < la) { val x = a.getFloat(i).toDouble; aa += x * x; i += 1 }
     while (i < lb) { val y = b.getFloat(i).toDouble; bb += y * y; i += 1 }
+    cosineOf(ab, aa, bb)
+  }
+
+  def angular(a: ArrayData, b: ArrayData): Double = angularOf(cosine(a, b))
+
+  /** Cosine from its cross term and the two squared norms. */
+  def cosineOf(ab: Double, aa: Double, bb: Double): Double =
     if (aa == 0.0 || bb == 0.0) 0.0
     else {
       val s = ab / (math.sqrt(aa) * math.sqrt(bb))
       if (s > 1.0) 1.0 else if (s < -1.0) -1.0 else s
     }
+
+  def angularOf(cosine: Double): Double = 1.0 - math.acos(cosine) / math.Pi
+
+  // ------------------------------------------------ primitive-array forms
+
+  /* The same formulas over decoded `float[]`s, for a caller that scores
+   * one vector against many (the kNN kernel): it checks each vector for
+   * null elements once, passes n = min(len), and runs a formula as a fold
+   * ([[fold]], [[fold4]]) then a [[finish]]. Each fold is the ArrayData
+   * loop above with the accessor replaced by an array read — the same
+   * float→double steps in the same element order — so every score is
+   * bit-identical to the ArrayData form. Cosine's norms fold each vector
+   * over its own full length, independently of the other vector, so
+   * [[normSq]] computes them once per vector. */
+
+  /** The fold's per-element term: (x−y)² for l2, |x−y| for l1, x·y for
+    * dot and the cosine cross term. */
+  val SqDiff = 0
+  val AbsDiff = 1
+  val Product = 2
+
+  def term(kind: ScoreKind): Int = kind match {
+    case ScoreKind.L2 => SqDiff
+    case ScoreKind.L1 => AbsDiff
+    case _ => Product
   }
 
-  def angular(a: ArrayData, b: ArrayData): Double =
-    1.0 - math.acos(cosine(a, b)) / math.Pi
+  /** Σ term(a(i), b(i)) over i < n, in element order. */
+  def fold(term: Int, a: Array[Float], b: Array[Float], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    term match {
+      case SqDiff =>
+        while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
+      case AbsDiff =>
+        while (i < n) { acc += math.abs(a(i).toDouble - b(i).toDouble); i += 1 }
+      case _ =>
+        while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    }
+    acc
+  }
+
+  /** Four [[fold]]s of `a` against `b0`…`b3` in one pass over `a`: four
+    * independent accumulators, each summed in element order, so
+    * `out(o + j)` is `fold(term, a, bj, n)` bit for bit. */
+  def fold4(term: Int, a: Array[Float], b0: Array[Float], b1: Array[Float],
+      b2: Array[Float], b3: Array[Float], n: Int, out: Array[Double], o: Int): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    term match {
+      case SqDiff =>
+        while (i < n) {
+          val x = a(i).toDouble
+          val d0 = x - b0(i).toDouble; val d1 = x - b1(i).toDouble
+          val d2 = x - b2(i).toDouble; val d3 = x - b3(i).toDouble
+          s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
+          i += 1
+        }
+      case AbsDiff =>
+        while (i < n) {
+          val x = a(i).toDouble
+          s0 += math.abs(x - b0(i).toDouble); s1 += math.abs(x - b1(i).toDouble)
+          s2 += math.abs(x - b2(i).toDouble); s3 += math.abs(x - b3(i).toDouble)
+          i += 1
+        }
+      case _ =>
+        while (i < n) {
+          val x = a(i).toDouble
+          s0 += x * b0(i).toDouble; s1 += x * b1(i).toDouble
+          s2 += x * b2(i).toDouble; s3 += x * b3(i).toDouble
+          i += 1
+        }
+    }
+    out(o) = s0; out(o + 1) = s1; out(o + 2) = s2; out(o + 3) = s3
+  }
+
+  /** Σ x² over a vector's first `len` elements, in element order. */
+  def normSq(a: Array[Float], len: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < len) { val x = a(i).toDouble; acc += x * x; i += 1 }
+    acc
+  }
+
+  /** A formula's score from its fold `acc` and, for cosine and angular,
+    * the two vectors' [[normSq]]. */
+  def finish(kind: ScoreKind, acc: Double, aa: Double, bb: Double): Double = kind match {
+    case ScoreKind.L2 => math.sqrt(acc)
+    case ScoreKind.Cosine => cosineOf(acc, aa, bb)
+    case ScoreKind.Angular => angularOf(cosineOf(acc, aa, bb))
+    case _ => acc
+  }
 }

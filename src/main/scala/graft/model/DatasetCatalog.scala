@@ -4,6 +4,7 @@ import scala.annotation.tailrec
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The reference's `Dataset` catalog (SURVEY.md §2.1 S3/S5): named datasets
   * with `DataConfig` properties, persisted as JSON lines (the `index.save`
@@ -195,10 +196,14 @@ final class DatasetCatalog(spark: SparkSession, rootDir: String) {
   /** Write a dataset hive-partitioned by `partitionCol` — the layout for
     * low-cardinality routing keys (IVF cluster ids): equality/IN filters
     * prune whole directories unconditionally (PartitionFilters on the
-    * scan), so an nProbe search reads nProbe/k of the table. */
+    * scan), so an nProbe search reads nProbe/k of the table. The write
+    * rebalances on `partitionCol` first, as `Ann.ivfSave`/`ivfAppend` do:
+    * each writer task then holds whole values, so a value's directory
+    * gets one file (AQE splits only a skewed value) instead of one per
+    * writer task, and a probe opens nProbe files, not nProbe × tasks. */
   def writePartitioned(name: String, df: DataFrame, partitionCol: String): Unit =
-    writeVersioned(name)(
-      df.write.mode("overwrite").partitionBy(partitionCol).parquet(_))
+    writeVersioned(name)(df.hint("rebalance", col(partitionCol))
+      .write.mode("overwrite").partitionBy(partitionCol).parquet(_))
 
   /** Write a dataset bucketed+sorted by `bucketCol` (registered as a
     * session table, `<name>` in the catalog's namespace — [[table]] resolves

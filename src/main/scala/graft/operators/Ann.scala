@@ -4,10 +4,12 @@ import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomP
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.functions.ScoreFunctions
+import graft.functions.{NearestCellsExpr, ScoreFunctions, VectorCells}
 
 /** Approximate-nearest-neighbour search — the Spark-native stand-in for the
   * reference's Annoy index scan (SURVEY.md §2.4 J2, data/search.go:301-344).
@@ -337,96 +339,75 @@ object Ann {
     (model.transform(prepared).drop("__v"), model.clusterCenters.map(_.toArray))
   }
 
-  /** The `nProbe` cluster ids nearest the (normalized-if-needed) query. */
-  private def nearestCells(centroids: Array[Array[Double]], query: Seq[Float],
-      cfg: SearchConfig, nProbe: Int): Array[Int] = {
-    val norm = needsNormalize(cfg.scoreFuncName)
-    val qRaw = query.map(_.toDouble).toArray
-    val q =
-      if (!norm) qRaw
-      else {
-        val n = math.sqrt(qRaw.map(x => x * x).sum)
-        if (n == 0) qRaw else qRaw.map(_ / n)
-      }
-    def dist(c: Array[Double]): Double =
-      math.sqrt(c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
-    centroids.zipWithIndex
-      .sortBy { case (c, _) => dist(c) }
-      .take(nProbe).map(_._2)
-  }
+  /** The `nProbe` cell ids nearest `vec` (a vector's boxed floats, no
+    * nulls), by squared L2 to the (normalized when `normalize`) vector,
+    * ties by cell id — [[VectorCells.nearest]], the one routing every IVF
+    * path uses. A null element or a dimension other than the centroids'
+    * fails loudly. */
+  private def nearestCells(cells: VectorCells.Cells, vec: Seq[Any],
+      normalize: Boolean, nProbe: Int): Array[Int] =
+    VectorCells.nearest(new GenericArrayData(vec.toArray), cells, isFloat = true,
+      normalize, nProbe).toIntArray()
 
   /** J2 via IVF: probe the `nProbe` cells whose centroids are nearest the
-    * query (tiny driver-side argmin over the model), then exact kNN inside
-    * the probed cells — a partition-pruned scan when the table is stored
-    * bucketed by `cluster`. */
+    * query (tiny driver-side argmin over the model, [[nearestCells]]), then
+    * exact kNN inside the probed cells — a partition-pruned scan when the
+    * table is stored partitioned by `cluster`. */
   def ivfSearch(indexed: DataFrame, centroids: Array[Array[Double]],
       query: Seq[Float], cfg: SearchConfig, nProbe: Int): DataFrame = {
-    val probes = nearestCells(centroids, query, cfg, nProbe)
+    val probes = nearestCells(new VectorCells.Cells(centroids), query,
+      needsNormalize(cfg.scoreFuncName), nProbe)
     Search.search(indexed.filter(col("cluster").isin(probes: _*)), query, cfg)
   }
 
-  /** Past this cell count, [[probeCells]] routes through the
-    * [[graft.functions.NearestCellsExpr]] kernel instead of the inline
-    * literal spelling: one literal sub-expression per centroid is fine
-    * at the caller-fixed k ≤ 64 of the driver SFs but an auto-sized
-    * quantizer (k ≈ n/2048) would put ~160k literals in one expression
-    * tree at the 5.25M decade — past codegen's method limits and
-    * quadratic to analyze. Both spellings are parity-spec'd
-    * row-identical (VectorCellsParity in AnnSpec). */
+  /** The cell count past which [[ivfBuild]] seeds KMeans with random
+    * init instead of k-means|| (whose driver-side KMeans++ over ~2·k·steps
+    * candidates takes minutes at auto-sized k). */
   val ProbeCellsInlineMaxK: Int = 64
 
-  /** Per-row probe list: the `nProbe` cluster ids whose centroids are
-    * nearest `vec` — as a column expression, so a query BATCH computes its
-    * probes distributed (no driver-side collect). Small quantizers inline
-    * the centroids as literals; large (auto-sized) ones ride a reference
-    * object through the [[graft.functions.NearestCellsExpr]] kernel (see
-    * [[ProbeCellsInlineMaxK]]). */
-  def probeCells(centroids: Array[Array[Double]], vec: Column,
-      normalize: Boolean, nProbe: Int): Column =
-    if (centroids.length <= ProbeCellsInlineMaxK)
-      probeCellsInline(centroids, vec, normalize, nProbe)
-    else
-      graft.functions.NearestCellsExpr(vec, centroids, normalize, nProbe)
-
-  /** The inline literal spelling of [[probeCells]] — the executable spec
-    * the kernel is parity-tested against (the `scoreDocsExpanded`
-    * discipline). */
-  private[graft] def probeCellsInline(centroids: Array[Array[Double]],
-      vec: Column, normalize: Boolean, nProbe: Int): Column = {
-    val qv = if (normalize) l2Normalize(vec) else vec.cast("array<double>")
-    val cells = array(centroids.zipWithIndex.map { case (c, i) =>
-      struct(
-        aggregate(zip_with(qv, lit(c), (a, b) => (a - b) * (a - b)),
-          lit(0d), _ + _).as("d"),
-        lit(i).as("i"))
-    }: _*)
-    transform(slice(array_sort(cells), 1, nProbe), s => s.getField("i"))
+  /** A batch's query rows routed to their cells on the driver, as the
+    * kernel's query set: [[Search.queryFrame]] collected once, in one job
+    * labelled `Ann.routedQueries` and bounded so the routed rows stay
+    * within [[Search.MaxQueryRows]], then every row with a non-null vector
+    * routed by [[nearestCells]] — the single-query path's own routing, so
+    * single and batch IVF probe the same cells. One (query_id, vector,
+    * cluster) row per probe; a null vector routes nowhere. */
+  private def routedQueries(queries: DataFrame, cfg: SearchConfig,
+      centroids: Array[Array[Double]], nProbe: Int): KnnKernel.Queries = {
+    val cells = new VectorCells.Cells(centroids)
+    val norm = needsNormalize(cfg.scoreFuncName)
+    val q = Search.queryFrame(queries, cfg, Nil)
+    val rows = Materialize.collect(q, "Ann.routedQueries",
+      Search.MaxQueryRows / math.max(1, math.min(nProbe, centroids.length)))
+    val routed = rows.filterNot(_.isNullAt(1)).flatMap { r =>
+      nearestCells(cells, r.getSeq[Any](1), norm, nProbe).map(c => Row(r.get(0), r.get(1), c))
+    }
+    KnnKernel.Queries(routed,
+      Some(q.schema.add(StructField("cluster", IntegerType, nullable = false))))
   }
+
+  /** A driver-side frame of `rows` under `schema` (a local relation). */
+  private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Batch ANN (VERDICT round-1 missing #1): every query in `queries`
     * probes its `nProbe` nearest cells, and the exact re-score + bounded
     * top-k of [[Search.multiSearch]] routes each (query, cell) row to the
-    * data rows of that cell only — nProbe/k of the table. The probed
-    * (query, cell) rows are collected once, in one job labelled
-    * `Ann.ivfMultiSearch.probes`; that same collect is the kernel's
-    * query set and names the cells a cluster-partitioned stored layout
-    * is statically pruned to. The reference routes batch searches
-    * through the same index as single ones (data/search.go:136-141 from
-    * search.go:254-298). */
+    * data rows of that cell only — nProbe/k of the table. The queries are
+    * collected and routed on the driver once ([[routedQueries]]); that one
+    * routed set is the kernel's query set and names the cells a
+    * cluster-partitioned stored layout is statically pruned to, so the
+    * bounded collect is the only job at call time and the result is lazy.
+    * The reference routes batch searches through the same index as single
+    * ones (data/search.go:136-141 from search.go:254-298). */
   def ivfMultiSearch(indexed: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, cfg: SearchConfig, nProbe: Int): DataFrame = {
-    val norm = needsNormalize(cfg.scoreFuncName)
-    val pq = Search.queryFrame(queries.select(
-      col(Search.QueryIdCol), col(cfg.featureCol),
-      explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster")),
-      cfg, Seq("cluster"))
-    val probes = Materialize.collect(pq, "Ann.ivfMultiSearch.probes", Search.MaxQueryRows)
-    Search.knn(pruneToCells(indexed, probes.map(_.get(2)).distinct.toSeq),
-      KnnKernel.Queries(probes, Some(pq.schema)), cfg, Seq("cluster"))
+    val qs = routedQueries(queries, cfg, centroids, nProbe)
+    Search.knn(pruneToCells(indexed, qs), qs, cfg, Seq("cluster"))
   }
 
-  /** Statically restrict a cluster-partitioned stored table to the
-    * batch's probed cells, so the scan reads ONLY those hive partitions
+  /** Statically restrict a cluster-partitioned stored table to the cells
+    * a routed batch probes, so the scan reads ONLY those hive partitions
     * (the single-query path's `isin` pruning, batch-shaped). Routing
     * alone gives per-ROW pruning but still SCANS every partition — the
     * r12 decade measured the difference at 5.25M rows / k=2564:
@@ -434,14 +415,11 @@ object Ann {
     * cell list is bounded by k (distinct cells), never by batch size; a
     * batch probing most cells degenerates to the full scan, which is then
     * genuinely the right plan. */
-  private def pruneToCells(indexed: DataFrame, cells: Seq[Any]): DataFrame =
+  private def pruneToCells(indexed: DataFrame, routed: KnnKernel.Queries): DataFrame = {
+    val cells = routed.rows.map(_.getInt(2)).distinct
     if (cells.isEmpty) indexed.filter(lit(false))
-    else indexed.filter(col("cluster").isin(cells: _*))
-
-  /** [[pruneToCells]] over the distinct cells of a probed frame. */
-  private def pruneToProbedCells(indexed: DataFrame, probed: DataFrame): DataFrame =
-    pruneToCells(indexed,
-      probed.select(col("cluster")).distinct().collect().map(_.get(0)).toSeq)
+    else indexed.filter(col("cluster").isin(cells.toSeq: _*))
+  }
 
   // -------------------------------------------------------- index persist
 
@@ -491,9 +469,10 @@ object Ann {
 
   /** Assignment-only index maintenance: append `rows` to a persisted IVF
     * index WITHOUT refitting the coarse quantizer — each appended row gets
-    * the cluster id of its nearest STORED centroid ([[probeCells]] at
-    * nProbe = 1) and lands as new files inside the sidecar-named version's
-    * partitioned layout, so existing probes see it immediately. The
+    * the cluster id of its nearest STORED centroid
+    * ([[graft.functions.NearestCellsExpr]] at nProbe = 1) and lands as new
+    * files inside the sidecar-named version's partitioned layout, so
+    * existing probes see it immediately. The
     * incremental analog of the reference's insert-count-gated Annoy
     * rebuild (data/newsync.go:98-101, 169-222), shaped for streaming: a
     * KMeans refit per micro-batch would rescan the corpus, assignment is
@@ -508,9 +487,10 @@ object Ann {
     val (version, centroids) = readIvfSidecar(spark, dir)
     // a null vector has no nearest centroid; letting it through would file
     // the row under a null hive partition no probe ever scans — refuse
-    // loudly instead (the row is unreachable, which is never intended)
+    // loudly instead (the row is unreachable, which is never intended); a
+    // null element or a dimension mismatch fails inside the kernel
     val cell = when(col(featureCol).isNotNull,
-      element_at(probeCells(centroids, col(featureCol), normalize, 1), 1))
+      element_at(NearestCellsExpr(col(featureCol), centroids, normalize, 1), 1))
       .otherwise(raise_error(lit(
         s"ivfAppend: NULL in feature column '$featureCol' — a null vector " +
           "cannot be indexed; filter or fill before appending")))
@@ -767,76 +747,67 @@ object Ann {
         "pqTrain(..., normalize = true): squared-L2 ADC only ranks like " +
         "cosine/angular on the unit sphere")
 
-  /** Batch IVF×PQ — the full 100-TB batch-ANN composition: every query
-    * probes its `nProbe` nearest cells (partition-pruned on the stored
-    * layout via the broadcast equi-join on `cluster`), the surviving
-    * cells are scored on CODES only (one codegen'd LUT lookup per
-    * subspace per (row, query) — [[graft.functions.PqAdcMulti]] carries
-    * the whole batch's LUTs as one reference object), and each query's
-    * shortlist comes from the bounded heap ([[heapStage]]). One scan of
-    * the codes + two bounded-top-k shuffles, regardless of batch size.
-    * Queries are collected to the driver for LUT construction — the
-    * batch is broadcast-sized by contract, exactly like
-    * [[Search.multiSearch]]'s broadcast. */
+  /** Batch IVF×PQ — the full 100-TB batch-ANN composition: the queries
+    * are collected and routed once on the driver ([[routedQueries]]), the
+    * same rows build each query's LUT, and the routed (query, cell) rows
+    * join the codes on `cluster` as a broadcast local frame over the
+    * statically pruned stored layout. The probed cells are scored on
+    * CODES only (one codegen'd LUT lookup per subspace per (row, query) —
+    * [[graft.functions.PqAdcMulti]] carries the whole batch's LUTs as one
+    * reference object), and each query's shortlist comes from the bounded
+    * heap ([[heapStage]]). One scan of the codes + two bounded-top-k
+    * shuffles, regardless of batch size; the batch is broadcast-sized by
+    * contract, exactly like [[Search.multiSearch]]'s broadcast. */
   def ivfPqMultiSearch(encodedIndexed: DataFrame, centroids: Array[Array[Double]],
       cb: graft.functions.PqCodebook, queries: DataFrame, cfg: SearchConfig,
       nProbe: Int, refine: Int = 8): DataFrame = {
     requirePqScoreSpace(cb, cfg)
-    val spark = encodedIndexed.sparkSession
-    val norm = needsNormalize(cfg.scoreFuncName)
-    // a null query vector has no LUT and no meaning — dropped here like
-    // the exact batch path drops it (null score filter), not an NPE in
-    // pqLut on the driver
-    val qRows = queries
-      .filter(col(cfg.featureCol).isNotNull)
-      .select(col(Search.QueryIdCol), col(cfg.featureCol).cast("array<float>"))
-      .collect()
-    val luts = qRows.map(r => pqLut(cb, r.getSeq[Float](1)))
-    // dense per-query index → LUT slot; joined back so the pairing is a
-    // pure column (no assumptions about the query-id type)
-    val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      queries.schema(Search.QueryIdCol).copy(name = Search.QueryIdCol),
-      org.apache.spark.sql.types.StructField("__qidx",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val idxDf = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row(r.get(0), i) }: _*), idxSchema)
-    val probed = queries.join(broadcast(idxDf), Seq(Search.QueryIdCol))
-      .select(col(Search.QueryIdCol), col("__qidx"),
-        explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster"))
+    val qs = routedQueries(queries, cfg, centroids, nProbe)
+    // one LUT per query, in the routed rows' order; a null query vector
+    // routes nowhere, so it has no LUT and scores nothing
+    def id(r: Row): Any = KnnKernel.normKey(r.get(0))
+    val vecs = qs.rows.map(r => id(r) -> r.getSeq[Float](1)).toMap
+    val ids = qs.rows.map(id).distinct
+    val qIdx = ids.zipWithIndex.toMap
+    val luts = ids.map(i => pqLut(cb, vecs(i)))
+    val probed = localFrame(encodedIndexed.sparkSession,
+      qs.rows.toSeq.map(r => Row(r.get(0), qIdx(id(r)), r.getInt(2))),
+      StructType(Seq(qs.schema.get.fields(0),
+        StructField("__qidx", IntegerType, nullable = false),
+        StructField("cluster", IntegerType, nullable = false))))
     multiShortlistRerank(
-      pruneToProbedCells(encodedIndexed, probed).join(broadcast(probed), Seq("cluster")),
+      pruneToCells(encodedIndexed, qs).join(broadcast(probed), Seq("cluster")),
       graft.functions.PqAdcMulti(col("codes"), col("__qidx"), luts),
       queries, cfg, refine)(
       heapStage(encodedIndexed.columns.filterNot(_ == "codes").toSeq, cfg))
   }
 
   /** Batch IVF×SQ8 — the codebook-free sibling of [[ivfPqMultiSearch]]:
-    * every query probes its `nProbe` nearest cells (broadcast equi-join
-    * on `cluster` over the stored partitioned layout), and surviving
-    * cells score DEQUANTIZED int8 codes against the query vector carried
-    * on the broadcast side (`code · scale` through the codegen'd score
-    * kernel — no driver-side LUT collection at all, the whole batch is
-    * pure columns). One scan of the codes + two bounded-top-k shuffles,
-    * regardless of batch size. Approximate scores round to 6 like
-    * [[sq8Search]], so single-query and batch shortlists bucket
-    * borderline candidates identically. */
+    * the queries are collected and routed once on the driver
+    * ([[routedQueries]]), and the routed (query, cell) rows, each carrying
+    * its query vector, join the codes on `cluster` as a broadcast local
+    * frame over the statically pruned stored layout. Probed cells score
+    * DEQUANTIZED int8 codes against the carried query vector
+    * (`code · scale` through the codegen'd score kernel — no LUTs at
+    * all). One scan of the codes + two bounded-top-k shuffles, regardless
+    * of batch size. Approximate scores round to 6 like [[sq8Search]], so
+    * single-query and batch shortlists bucket borderline candidates
+    * identically. */
   def ivfSq8MultiSearch(encodedIndexed: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, cfg: SearchConfig, nProbe: Int,
       refine: Int = 4): DataFrame = {
-    val norm = needsNormalize(cfg.scoreFuncName)
     require(!encodedIndexed.columns.contains("__qv"),
       "ivfSq8MultiSearch reserves column __qv")
-    val probed = queries
-      .filter(col(cfg.featureCol).isNotNull) // a null query scores nothing
-      .select(col(Search.QueryIdCol), col(cfg.featureCol).as("__qv"),
-        explode(probeCells(centroids, col(cfg.featureCol), norm, nProbe)).as("cluster"))
+    val qs = routedQueries(queries, cfg, centroids, nProbe)
+    val fields = qs.schema.get.fields
+    val probed = localFrame(encodedIndexed.sparkSession, qs.rows.toSeq,
+      StructType(Seq(fields(0), fields(1).copy(name = "__qv"), fields(2))))
     val deq = transform(col("codes"), c => c.cast("double") * col("__scale"))
     val approx = round(ScoreFunctions.score(cfg.scoreFuncName, deq, col("__qv")), 6)
     // the heap keeps the smallest: negate higher-is-better scores, the
     // exact merge's convention
     multiShortlistRerank(
-      pruneToProbedCells(encodedIndexed, probed).join(broadcast(probed), Seq("cluster")),
+      pruneToCells(encodedIndexed, qs).join(broadcast(probed), Seq("cluster")),
       if (cfg.higherIsBetter) -approx else approx, queries, cfg, refine)(
       heapStage(encodedIndexed.columns.filterNot(c => c == "codes" || c == "__scale").toSeq,
         cfg))

@@ -6,8 +6,7 @@ import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
@@ -25,14 +24,21 @@ import graft.functions.{ScoreFunctions, ScoreKind, VectorMath}
   * [[VectorMath]]'s formulas — the `array<float>` cast on both sides,
   * context re-scoring with Spark's `least`/`greatest` semantics (nulls
   * skipped, NaN above every number, the first of equals kept), and the
-  * null/NaN drop — and folds every (query, row) pair into bounded pools:
-  * one per query, or one per (query, group) when `groupLimit > 0`, each
-  * keeping the best row per dedup key unless `assumeUniqueKeys`. Only the
-  * pool survivors leave the task. A second `mapPartitions` after one
-  * shuffle ([[Merge]]) folds them into the same pools again and does the
+  * null/NaN drop. Scoring is a primitive loop: each task decodes the
+  * query set once into `float[]`s, reads each row's vector once, and runs
+  * VectorMath's `float[]` folds (four queries per pass), bit-identical to
+  * its `ArrayData` expression path. Every (query, row) pair is folded
+  * into bounded pools: one per query, or one per (query, group) when
+  * `groupLimit > 0`, each keeping the best row per dedup key unless
+  * `assumeUniqueKeys`. A full ungrouped pool rejects a pair strictly
+  * worse than its worst before anything is allocated for it (see
+  * [[Scan]] for why a stale threshold is safe). Only the pool survivors
+  * leave the task. A second `mapPartitions` after one shuffle
+  * ([[Merge]]) folds them into the same pools again and does the
   * group-score and top-k step; a batch shuffles on `query_id`, a single
-  * query to one partition, and ends in `orderBy.limit`. A single ungrouped query with unique keys needs no
-  * merge: `orderBy.limit` alone is its `TakeOrderedAndProject` merge.
+  * query to one partition, and ends in `orderBy.limit`. A single
+  * ungrouped query with unique keys needs no merge: `orderBy.limit`
+  * alone is its `TakeOrderedAndProject` merge.
   * Both maps read and write rows of Catalyst's internal values
   * ([[org.apache.spark.sql.graft.Bridge.internalRowEncoder]]), so no
   * scanned or shuffled row is decoded field by field; only what a pool
@@ -220,6 +226,13 @@ private[operators] object KnnKernel {
     def size: Int = if (heap != null) heap.size else best.size
     def rows: Iterator[E] =
       if (heap != null) heap.iterator else best.valuesIterator
+    /** The worst element once the pool holds k, else null. It only ever
+      * improves from then on: an admission replaces the worst or an entry
+      * by something better. */
+    def worstIfFull: E =
+      if (k <= 0 || size < k) null.asInstanceOf[E]
+      else if (heap != null) heap.head
+      else worst
   }
 
   /** One bounded pool per query (ungrouped) or per (query, group)
@@ -234,11 +247,11 @@ private[operators] object KnnKernel {
       keyOf: E => Any, qKeyOf: E => Any, gKeyOf: E => Any,
       retain: E => Unit) {
     private val pools = mutable.HashMap.empty[Any, Pool[E]]
-    def add(e: E): Unit = {
-      val pk = if (gL > 0) (qKeyOf(e), gKeyOf(e)) else qKeyOf(e)
-      pools.getOrElseUpdate(pk,
-        new Pool[E](if (gL > 0) gL else k, ord, keyOf, retain)).add(e)
-    }
+    /** The pool under key `pk`, made on first use. */
+    def pool(pk: Any): Pool[E] =
+      pools.getOrElseUpdate(pk, new Pool[E](if (gL > 0) gL else k, ord, keyOf, retain))
+    def add(e: E): Unit =
+      pool(if (gL > 0) (qKeyOf(e), gKeyOf(e)) else qKeyOf(e)).add(e)
     def rowCount: Long = pools.valuesIterator.map(_.size.toLong).sum
     def elements: Iterator[E] = pools.valuesIterator.flatMap(_.rows)
     /** (pool key, pool) pairs — ungrouped key is the query id, grouped
@@ -336,30 +349,80 @@ private[operators] object KnnKernel {
   /** One scored (query row, data row) pair. */
   private final class Hit(val score: Double, val qi: Int, val src: Src)
 
-  /** A collected query or context vector as [[VectorMath]] reads it:
-    * the row encoder hands `array<float>` over as a Seq of boxed floats,
-    * nulls included. */
-  private def arrayData(v: Any): ArrayData = v match {
-    case null => null
-    case s: scala.collection.Seq[_] =>
-      if (s.contains(null)) new GenericArrayData(s.toArray[Any])
-      else UnsafeArrayData.fromPrimitiveArray(s.iterator.map(_.asInstanceOf[Float]).toArray)
+  /** The query or context vectors one task scores against, decoded once
+    * from the row encoder's Seq of boxed floats: `vecs(i)` is null for a
+    * null vector, `nan(i)` marks one holding a null element (which
+    * [[VectorMath]] scores NaN against everything), and `norms(i)` is its
+    * squared norm when the kind needs it. */
+  private final class Side(raw: Seq[Any], sc: RowScorer) {
+    val n: Int = raw.length
+    val vecs = new Array[Array[Float]](n)
+    val nan = new Array[Boolean](n)
+    val norms = new Array[Double](n)
+    for ((v, i) <- raw.iterator.zipWithIndex) v match {
+      case null =>
+      case s: scala.collection.Seq[_] =>
+        if (s.contains(null)) nan(i) = true
+        else {
+          val f = s.iterator.map(_.asInstanceOf[Float]).toArray
+          vecs(i) = f
+          norms(i) = sc.norm(f, f.length)
+        }
+    }
   }
 
-  /** A [[VectorMath]] formula behind a primitive-returning call (a
-    * `Function2` over `ArrayData` would box every pair's score). */
-  private abstract class Scorer extends Serializable {
-    def apply(a: ArrayData, b: ArrayData): Double
-  }
+  /** One kind's [[VectorMath]] formula over decoded vectors: a fold over
+    * n = min(len) elements, then the finish. A row scores against four
+    * side vectors of one length in one pass ([[VectorMath.fold4]]); the
+    * rest, ragged blocks and the remainder, one by one. */
+  private final class RowScorer(kind: ScoreKind) {
+    private val term = VectorMath.term(kind)
+    private val normed = kind == ScoreKind.Cosine || kind == ScoreKind.Angular
 
-  private def scorer(kind: ScoreKind): Scorer = kind match {
-    case ScoreKind.L2 => new Scorer { def apply(a: ArrayData, b: ArrayData) = VectorMath.l2(a, b) }
-    case ScoreKind.L1 => new Scorer { def apply(a: ArrayData, b: ArrayData) = VectorMath.l1(a, b) }
-    case ScoreKind.Dot => new Scorer { def apply(a: ArrayData, b: ArrayData) = VectorMath.dot(a, b) }
-    case ScoreKind.Cosine =>
-      new Scorer { def apply(a: ArrayData, b: ArrayData) = VectorMath.cosine(a, b) }
-    case ScoreKind.Angular =>
-      new Scorer { def apply(a: ArrayData, b: ArrayData) = VectorMath.angular(a, b) }
+    /** The squared norm of `a`'s first `len` floats, if the kind uses it. */
+    def norm(a: Array[Float], len: Int): Double =
+      if (normed) VectorMath.normSq(a, len) else 0d
+
+    /** Row `a` (its first `la` floats, squared norm `aa`) against side
+      * vector `j`; NaN for a null element, and for a null vector, which
+      * the caller skips. */
+    def one(a: Array[Float], la: Int, aa: Double, side: Side, j: Int): Double = {
+      val b = side.vecs(j)
+      if (b == null) Double.NaN
+      else VectorMath.finish(kind, VectorMath.fold(term, a, b, math.min(la, b.length)),
+        aa, side.norms(j))
+    }
+
+    /** The fold length of row `a` (`la` floats) against side vector `q`,
+      * or -1 for a null vector. */
+    private def foldLen(la: Int, side: Side, q: Int): Int = {
+      val b = side.vecs(q)
+      if (b == null) -1 else math.min(la, b.length)
+    }
+
+    /** `out(j)` = row `a` against side vector `targets(j)`, as [[one]]
+      * scores it; four targets of one fold length share a pass. */
+    def all(a: Array[Float], la: Int, aa: Double, side: Side, targets: Array[Int],
+        out: Array[Double]): Unit = {
+      val nt = targets.length
+      var j = 0
+      while (j + 4 <= nt) {
+        val q0 = targets(j); val q1 = targets(j + 1)
+        val q2 = targets(j + 2); val q3 = targets(j + 3)
+        val n = foldLen(la, side, q0)
+        if (n >= 0 && n == foldLen(la, side, q1) && n == foldLen(la, side, q2) &&
+            n == foldLen(la, side, q3)) {
+          VectorMath.fold4(term, a, side.vecs(q0), side.vecs(q1), side.vecs(q2),
+            side.vecs(q3), n, out, j)
+          out(j) = VectorMath.finish(kind, out(j), aa, side.norms(q0))
+          out(j + 1) = VectorMath.finish(kind, out(j + 1), aa, side.norms(q1))
+          out(j + 2) = VectorMath.finish(kind, out(j + 2), aa, side.norms(q2))
+          out(j + 3) = VectorMath.finish(kind, out(j + 3), aa, side.norms(q3))
+          j += 4
+        } else { out(j) = one(a, la, aa, side, q0); j += 1 }
+      }
+      while (j < nt) { out(j) = one(a, la, aa, side, targets(j)); j += 1 }
+    }
   }
 
   /** `c` strictly beats `r` under Spark's `greatest` (hib) / `least`
@@ -429,8 +492,23 @@ private[operators] object KnnKernel {
   /** Stage 1: score one partition's rows against every query, keep the
     * bounded pools, emit the survivors as (query_id?, data…, score). Rows
     * in and out hold Catalyst's internal values
-    * ([[Bridge.internalRowEncoder]]): the vector is read as the scan's own
-    * `ArrayData`, and only the values the pools keep are copied. */
+    * ([[Bridge.internalRowEncoder]]): each row's vector is read once into
+    * a `float[]`, and only the values the pools keep are copied.
+    *
+    * The per-row loop: a row whose vector holds a null element scores NaN
+    * against every query and context vector, so it forms no pair and is
+    * dropped after one null check. Otherwise the row is scored against
+    * its target queries by [[RowScorer.all]] and every pair is offered
+    * to its pool. An ungrouped pool is reached by query index, and once
+    * it holds k a pair strictly worse than its worst score is dropped
+    * before anything is allocated for it; an equal score still takes the
+    * pool's full (score, tie-break) compare. The threshold is kept per
+    * query row and read from the pool after each admission. Query rows
+    * that share a query id (one per probed cell or band under `joinCols`)
+    * share its pool, so a row's threshold can be stale: the pool's worst
+    * only ever improves, so a stale threshold is only looser, and
+    * dropping what is strictly worse than it drops nothing the pool would
+    * keep. Grouped pools, keyed by (query, group), take every defined pair. */
   private final class Scan(cfg: SearchConfig, k: Int, schema: StructType, nData: Int,
       vecIdx: Int, tieIdx: Int, groupIdx: Int, keyIdx: Array[Int],
       joinIdx: Array[Int], queries: Broadcast[Queries]) extends Serializable {
@@ -438,7 +516,9 @@ private[operators] object KnnKernel {
     def apply(rows: Iterator[Row]): Iterator[Row] = {
       val qs = queries.value
       val nq = qs.rows.length
-      val qVecs = qs.rows.map(r => arrayData(r.get(1)))
+      val scorer = new RowScorer(ScoreFunctions.resolve(cfg.scoreFuncName))
+      val qv = new Side(qs.rows.toSeq.map(_.get(1)), scorer)
+      val ctx = new Side(cfg.context.vectors, scorer)
       val qKeys: Array[Any] = qs.rows.map(r => if (qs.single) () else normKey(r.get(0)))
       val qIds: Array[Any] = qs.schema.map { sc =>
         val c = CatalystTypeConverters.createToCatalystConverter(sc(0).dataType)
@@ -464,47 +544,66 @@ private[operators] object KnnKernel {
             if (key == null) none else m.getOrElse(key, none)
           }
         }
-      val score = scorer(ScoreFunctions.resolve(cfg.scoreFuncName))
       val hib = cfg.higherIsBetter
-      val ctx = cfg.context.vectors.map(arrayData).toArray
-      val prioritize = cfg.context.prioritize && ctx.nonEmpty
+      val prioritize = cfg.context.prioritize && ctx.n > 0
       val st = hitPools(cfg, k, if (tieIdx >= 0) schema(tieIdx).dataType else null,
         keyIdx, nData, h => qKeys(h.qi))
+      // ungrouped: each query row's pool and its admission threshold, as
+      // sign·score (smaller is better); +∞ until the pool is full
+      val pools = if (cfg.groupLimit > 0) null else qKeys.map(st.pool)
+      val sign = if (hib) -1d else 1d
+      val thr = Array.fill(nq)(Double.PositiveInfinity)
+      var buf = new Array[Float](0)
+      val own = new Array[Double](nq)
 
       while (rows.hasNext) {
         val r = rows.next()
         val qi = targets(r)
         // a null vector scores null against every query and context
         if (qi.nonEmpty && !r.isNullAt(vecIdx)) {
-          val a = r.get(vecIdx).asInstanceOf[ArrayData]
-          // least/greatest over (own, ctx…) folds left keeping the first
-          // of equals, so the context's best can be folded once per row
-          var hasCtx = false
-          var ctxBest = 0d
-          var c = 0
-          while (c < ctx.length) {
-            val s = score(a, ctx(c))
-            if (!hasCtx || beats(hib, s, ctxBest)) { ctxBest = s; hasCtx = true }
-            c += 1
-          }
-          var src: Src = null
-          var j = 0
-          while (j < qi.length) {
-            val q = qi(j)
-            val qv = qVecs(q)
-            var defined = true
-            val s =
-              if (prioritize) ctxBest
-              else if (qv == null) { defined = hasCtx; ctxBest }
-              else {
-                val own = score(a, qv)
-                if (hasCtx && beats(hib, ctxBest, own)) ctxBest else own
+          val v = r.get(vecIdx).asInstanceOf[ArrayData]
+          val la = v.numElements()
+          if (buf.length < la) buf = new Array[Float](la)
+          var i = 0
+          while (i < la && !v.isNullAt(i)) { buf(i) = v.getFloat(i); i += 1 }
+          if (i == la) {
+            val aa = scorer.norm(buf, la)
+            // least/greatest over (own, ctx…) folds left keeping the first
+            // of equals, so the context's best can be folded once per row
+            var hasCtx = false
+            var ctxBest = 0d
+            var c = 0
+            while (c < ctx.n) {
+              if (ctx.vecs(c) != null || ctx.nan(c)) {
+                val s = scorer.one(buf, la, aa, ctx, c)
+                if (!hasCtx || beats(hib, s, ctxBest)) { ctxBest = s; hasCtx = true }
               }
-            if (defined && !s.isNaN) {
-              if (src == null) src = KnnKernel.src(r, tie, tieIdx, groupIdx, null)
-              st.add(new Hit(s, q, src))
+              c += 1
             }
-            j += 1
+            if (!prioritize) scorer.all(buf, la, aa, qv, qi, own)
+            var src: Src = null
+            var j = 0
+            while (j < qi.length) {
+              val q = qi(j)
+              var defined = true
+              val s =
+                if (prioritize) { defined = hasCtx; ctxBest }
+                else if (qv.vecs(q) == null && !qv.nan(q)) { defined = hasCtx; ctxBest }
+                else if (hasCtx && beats(hib, ctxBest, own(j))) ctxBest
+                else own(j)
+              if (defined && !s.isNaN && !(sign * s > thr(q))) {
+                if (src == null) src = KnnKernel.src(r, tie, tieIdx, groupIdx, null)
+                val h = new Hit(s, q, src)
+                if (pools == null) st.add(h)
+                else {
+                  val pool = pools(q)
+                  pool.add(h)
+                  val w = pool.worstIfFull
+                  if (w != null) thr(q) = sign * w.score
+                }
+              }
+              j += 1
+            }
           }
         }
       }

@@ -174,4 +174,25 @@ class DatasetCatalogSpec extends SparkTestBase {
       .withColumnRenamed("expireAt", "expire_at"))
     assert(c.table("fresh").count() == 1)
   }
+
+  test("writePartitioned leaves one file per partition value") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val dir = tmp()
+    val c = new DatasetCatalog(spark, dir)
+    // every one of the 4 input partitions holds rows of all 32 cells
+    val df = spark.range(0, 3200, 1, 4)
+      .select(col("id"), (col("id") % 32).cast("int").as("cluster"))
+    c.writePartitioned("cells", df, "cluster")
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    val files = try walk.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }.toVector finally walk.close()
+    val perCell = files.groupBy(_.getParent.getFileName.toString)
+    assert(perCell.size == 32, perCell.keys.toSeq.sorted)
+    assert(perCell.values.forall(_.size == 1),
+      perCell.collect { case (d, fs) if fs.size != 1 => s"$d: ${fs.size}" })
+    assert(c.table("cells").count() == 3200)
+  }
 }

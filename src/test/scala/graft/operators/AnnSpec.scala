@@ -256,28 +256,83 @@ class AnnSpec extends SparkTestBase {
     assert(c3.length < c2.length)
   }
 
+  /** The inline literal spelling of IVF routing — one `zip_with` /
+    * `aggregate` sub-expression per centroid, sorted by (squared L2,
+    * index) — kept as the executable spec the routing kernel is
+    * parity-tested against (the `scoreDocsExpanded` discipline). */
+  private def probeCellsInline(centroids: Array[Array[Double]],
+      vec: org.apache.spark.sql.Column, normalize: Boolean,
+      nProbe: Int): org.apache.spark.sql.Column = {
+    val qv = if (normalize) Ann.l2Normalize(vec) else vec.cast("array<double>")
+    val cells = array(centroids.zipWithIndex.map { case (c, i) =>
+      struct(
+        aggregate(zip_with(qv, lit(c), (a, b) => (a - b) * (a - b)),
+          lit(0d), _ + _).as("d"),
+        lit(i).as("i"))
+    }: _*)
+    transform(slice(array_sort(cells), 1, nProbe), s => s.getField("i"))
+  }
+
   test("VectorCellsParity: nearest_cells kernel == inline probeCells spelling") {
     val (_, centroids) = Ann.ivfBuild(emb, "embedding", k = 32, normalize = false)
     for (norm <- Seq(false, true); nProbe <- Seq(1, 4, 40)) {
       val both = emb.select(
         $"vec_id",
-        Ann.probeCellsInline(centroids, $"embedding", norm, nProbe).as("a"),
+        probeCellsInline(centroids, $"embedding", norm, nProbe).as("a"),
         graft.functions.NearestCellsExpr($"embedding", centroids, norm, nProbe).as("b"))
       val bad = both.filter(not($"a" <=> $"b")).count()
       assert(bad == 0L, s"norm=$norm nProbe=$nProbe: $bad rows diverge")
     }
-    // a quantizer past the inline cap routes through the kernel and the
-    // whole IVF batch path still returns the exact result at full probe
-    val big = (1 to (Ann.ProbeCellsInlineMaxK + 1))
-      .map(i => Array.fill(4)(i.toDouble)).toArray
-    assert(org.apache.spark.sql.graft.Bridge.convertedExpression(
-      Ann.probeCells(big, $"v", normalize = false, nProbe = 2))
-      .toString.contains("nearest_cells")) // kernel, not inline
     // null vector passes through as null (UnaryExpression null contract)
     val withNull = Seq((1L, null: Array[Float])).toDF("vec_id", "v")
     assert(withNull.select(graft.functions.NearestCellsExpr(
       $"v", centroids, normalize = false, nProbe = 2).as("c"))
       .filter($"c".isNull).count() == 1L)
+  }
+
+  test("single and batch IVF probe the same cells on near-tie centroids") {
+    // two centroids whose squared distances to the query differ in the
+    // last bit while their square roots are equal: cell 1 is nearer by
+    // squared L2, the routing every IVF path and perfbench's oracle use
+    val rnd = new scala.util.Random(11)
+    def sq(c: Array[Double]): Double = c.foldLeft(0d)((acc, x) => acc + x * x)
+    val (c0, c1) = Iterator.continually {
+      val c = Array(1.2 + rnd.nextDouble() * 0.1, 1.2 + rnd.nextDouble() * 0.1)
+      val n = Array(c(0), Math.nextDown(c(1)))
+      (c, n)
+    }.find { case (c, n) =>
+      sq(n) < sq(c) && math.sqrt(sq(n)) == math.sqrt(sq(c))
+    }.get
+    val centroids = Array(c0, c1, Array(9d, 9d))
+    val data = Seq((0L, Seq(1.2f, 1.2f), 0), (1L, Seq(1.3f, 1.3f), 1), (2L, Seq(9f, 9f), 2))
+      .toDF("vec_id", "embedding", "cluster")
+    val c = cfg("VectorDistance", higher = false)
+    val single = Ann.ivfSearch(data, centroids, Seq(0f, 0f), c, nProbe = 1)
+      .select("vec_id").as[Long].collect().toSeq
+    val batch = Ann.ivfMultiSearch(data, centroids,
+        Seq((7L, Seq(0f, 0f))).toDF(Search.QueryIdCol, "embedding"), c, nProbe = 1)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(single == Seq(1L) && batch == single, s"single $single, batch $batch")
+  }
+
+  test("IVF routing fails loudly on a dimension mismatch or a null element") {
+    val (indexed, centroids) = Ann.ivfBuild(emb, "embedding", k = 4, normalize = false)
+    val c = cfg("VectorDistance", higher = false)
+    val short = queryVec(0L).dropRight(1)
+    val e1 = intercept[IllegalArgumentException](
+      Ann.ivfSearch(indexed, centroids, short, c, nProbe = 2))
+    assert(e1.getMessage.contains("dim"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](Ann.ivfMultiSearch(indexed, centroids,
+      Seq((1L, short)).toDF(Search.QueryIdCol, "embedding"), c, nProbe = 2))
+    assert(e2.getMessage.contains("dim"), e2.getMessage)
+    import org.apache.spark.sql.types._
+    val withNull = spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(1L, queryVec(0L).updated(3, null))),
+      StructType(Seq(StructField(Search.QueryIdCol, LongType),
+        StructField("embedding", ArrayType(FloatType, containsNull = true)))))
+    val e3 = intercept[IllegalArgumentException](
+      Ann.ivfMultiSearch(indexed, centroids, withNull, c, nProbe = 2))
+    assert(e3.getMessage.contains("NULL element"), e3.getMessage)
   }
 
   test("ivfCompact with the complement keep-set; update = compact+append") {

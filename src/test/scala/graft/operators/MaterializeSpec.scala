@@ -134,6 +134,21 @@ class MaterializeSpec extends SparkTestBase {
     assert(hits.isEmpty, s"raw materialization outside Materialize: ${hits.mkString(", ")}")
   }
 
+  test("the search modules collect to the driver only through Materialize.collect") {
+    // a bare Dataset collect has no row bound and no site label
+    val bare = """\.collect(\(\)|\s*$|\s*[.),])""".r
+    val files = mainSources.filter(f =>
+      Set("Ann.scala", "Search.scala", "KnnKernel.scala")(f.getFileName.toString))
+    assert(files.size == 3, files)
+    val hits = for {
+      f <- files
+      (ln, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = ln.replaceAll("//.*", "")
+      if !code.trim.startsWith("*") && bare.findFirstIn(code).isDefined
+    } yield s"$f:${i + 1}: ${ln.trim}"
+    assert(hits.isEmpty, s"unbounded driver collect: ${hits.mkString(", ")}")
+  }
+
   /** The site argument of every `Materialize.<form>(` call in `src`: the
     * last top-level argument of the first argument list, or the second
     * for `collect(df, site, maxRows)`. */

@@ -187,4 +187,66 @@ class SearchParityPropertySpec extends SparkTestBase {
         SearchReference.multiSearch(pairs, candQs, c, Seq("__cand_q")))
     }
   }
+
+  /** Five score kinds over `ragged` rows: each row's dimension is the
+    * query dimension 8 or one off it, some rows are zero vectors (cosine's
+    * zero-norm guard), and the 9-query batch — not a multiple of the
+    * four-query scoring block — holds one query one element longer, one
+    * with a null element and one null vector, so blocks, ragged blocks
+    * and the remainder all run. */
+  test("ragged rows and a 9-query batch == relational reference, all five kinds") {
+    val qDim = 8
+    def gauss(rnd: Random, d: Int): Seq[Any] = Seq.fill(d)(rnd.nextGaussian().toFloat)
+    for (seed <- 6 to 7) {
+      val rnd = new Random(seed)
+      val rows = (0 until 240).map { i =>
+        val d = qDim - 1 + rnd.nextInt(3)
+        val feature = if (rnd.nextInt(20) == 0) Seq.fill(d)(0f) else gauss(rnd, d)
+        Row(i.toLong, i.toLong, feature, s"g${rnd.nextInt(4)}", "{}", rnd.nextInt(4),
+          java.nio.ByteBuffer.allocate(8).putLong(i.toLong).array())
+      }
+      val data = spark.createDataFrame(spark.sparkContext.parallelize(rows, Parts), schema)
+      val qVecs = Seq.fill(6)(gauss(rnd, qDim)) ++
+        Seq(gauss(rnd, qDim + 1), gauss(rnd, qDim).updated(2, null), null)
+      val qs = spark.createDataFrame(spark.sparkContext.parallelize(
+        qVecs.zipWithIndex.map { case (v, i) => Row(200L + i, v) }, 2), StructType(Seq(
+          StructField(Search.QueryIdCol, LongType, nullable = false),
+          StructField("feature", ArrayType(FloatType, containsNull = true)))))
+      val q = gauss(rnd, qDim + 1).map(_.asInstanceOf[Float])
+      for ((name, c) <- configs.take(5) :+ ("context least" -> base.copy(context =
+          SearchContext(Seq(Seq.fill(qDim - 1)(0.5f), Seq.fill(qDim)(-0.25f)))))) {
+        val what = s"seed $seed ragged $name"
+        checkBatch(s"$what batch", Search.multiSearch(data, qs, c),
+          SearchReference.multiSearch(data, qs, c))
+        checkSingle(s"$what single", Search.search(data, q, c),
+          SearchReference.search(data, q, c))
+      }
+    }
+  }
+
+  /** Every row shares one of three vectors, so scores tie exactly, and
+    * each partition holds its rows in DESCENDING tie-break order: once a
+    * pool is full, every later row ties its worst entry on score and
+    * must still displace it on the tie-break. Query rows sharing a query
+    * id (two cells each) share one pool. */
+  test("a full pool meets exact-score ties at its worst entry") {
+    val vecs = Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f), Seq(1f, 1f, 0f))
+    val rows = (299 to 0 by -1).map { i =>
+      Row(i.toLong, (i % 40).toLong, vecs(i % 3), s"g${i % 5}", "{}", i % 4,
+        java.nio.ByteBuffer.allocate(8).putLong(i.toLong).array())
+    }
+    val data = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val qs = queries(9, ties = true)
+    val single = qs.dropDuplicates(Search.QueryIdCol).drop("cluster")
+    for ((name, c) <- configs if name != "limit 0") {
+      checkBatch(s"tied pools $name batch", Search.multiSearch(data, single, c),
+        SearchReference.multiSearch(data, single, c))
+      checkSingle(s"tied pools $name single", Search.search(data, Seq(1f, 0f, 1f), c),
+        SearchReference.search(data, Seq(1f, 0f, 1f), c))
+      if (name != "grouped spanning keys")
+        checkBatch(s"tied pools $name cluster",
+          Search.multiSearch(data, qs, c, Seq("cluster")),
+          SearchReference.multiSearch(data, qs, c, Seq("cluster")))
+    }
+  }
 }
