@@ -27,7 +27,7 @@ object Plans {
 
   /** The extra hand-built section documenting the budgeted path's
     * per-batch stage (not a `SparkEntry.queries` key). */
-  val budgetSection = "knn_budget_* (per-batch scored stage)"
+  val budgetSection = "knn_budget_* (per-batch kernel scan)"
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -47,8 +47,8 @@ object Plans {
     flagships.foreach(name => dump(name, SparkEntry.queries(name)(spark, dir)))
     // the budgeted path's per-batch plan: its queries (knn_budget_*)
     // return driver-merged local relations by design, so the plan worth
-    // reading is the scan→score stage each incremental batch job runs —
-    // identical shape to the deterministic scan minus the top-k
+    // reading is the kernel scan each incremental batch job runs — the
+    // deterministic batch plan's stage 1, without the shuffle and merge
     locally {
       import org.apache.spark.sql.functions.col
       import graft.operators.{BudgetedSearch, Search, SearchConfig}
@@ -61,7 +61,7 @@ object Plans {
         keyCols = Seq("vec_id"), tieBreakCol = Some("vec_id"),
         assumeUniqueKeys = true)
       dump(budgetSection,
-        BudgetedSearch.scoredStageMulti(emb, queries, cfg))
+        BudgetedSearch.batchStageMulti(emb, queries, cfg))
     }
     spark.stop()
   }

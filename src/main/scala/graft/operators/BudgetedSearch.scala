@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
@@ -16,27 +14,30 @@ import org.apache.spark.sql.types._
   * input, same output, every time — and THIS entry point trades that
   * determinism for a latency bound, explicitly.
   *
-  * Mechanics: the scan→filter→score stage is evaluated INCREMENTALLY, a
-  * batch of partitions per Spark job, each task reducing its partition to
-  * a bounded pool; the driver folds every completed batch into ONE
-  * merge state of the same bounded-pool shape (best-score dedup per
-  * `cfg.keyCols` unless `assumeUniqueKeys`, grouped collapse when
-  * `groupLimit > 0`, then top-k at the end). The fold is exact because
-  * best-per-key-then-top-k is associative across row subsets — the same
-  * argument that makes the per-partition pools exact — so merging after
-  * every batch returns bit-identical rows to merging once at the end,
-  * while the driver never holds more than the merge state plus one
-  * batch's pools (the reference's own merge is streamed the same way,
-  * `data/search.go:271-294`). When the budget expires, no further
-  * batches launch, any in-flight batch is cancelled via its job group
-  * (`interruptOnCancel`), and the state folded from the partitions that
-  * DID complete is returned with `complete = false` — the exact result
-  * over a documented subset of the data, veri's own contract. A finished
-  * scan returns the same rows as the deterministic path, row for row:
-  * the driver merge uses the SAME score direction, key dedup, group
-  * scoring and native-typed tie-break ordering as [[Search]] (a
-  * lexicographic tie-break would diverge on numeric columns —
-  * "10" < "9").
+  * Mechanics: the budgeted path runs the exact searches' own stage 1,
+  * [[KnnKernel.scan]] — the same scan, JSON filter, primitive scoring and
+  * per-partition bounded pools (best-score dedup per `cfg.keyCols` unless
+  * `assumeUniqueKeys`, one pool per (query, group) when `groupLimit > 0`)
+  * that [[Search.search]]/[[Search.multiSearch]] plan — and evaluates it
+  * INCREMENTALLY, a batch of partitions per Spark job. Each task returns
+  * its partition's pool survivors, decoded to external rows; the driver
+  * folds every completed batch into ONE merge state of the same
+  * bounded-pool shape, then groups and cuts to top-k at the end. The fold
+  * is exact because best-per-key-then-top-k is associative across row
+  * subsets — the same argument that makes the per-partition pools exact
+  * — so merging after every batch returns bit-identical rows to merging
+  * once at the end, while the driver never holds more than the merge
+  * state plus one batch's pools (the reference's own merge is streamed
+  * the same way, `data/search.go:271-294`). When the budget expires, no
+  * further batches launch, any in-flight batch is cancelled via its job
+  * group (`interruptOnCancel`), and the state folded from the partitions
+  * that DID complete is returned with `complete = false` — the exact
+  * result over a documented subset of the data, veri's own contract. A
+  * finished scan returns the same rows, in the same schema, as the
+  * deterministic path, row for row: the driver merge uses the SAME
+  * score direction, key dedup, group scoring and native-typed tie-break
+  * ordering as [[Search]] (a lexicographic tie-break would diverge on
+  * numeric columns — "10" < "9").
   *
   * Grouped queries (`groupLimit > 0`) run two-level pools, mirroring the
   * reference's grouped aggregator under its timeout drain
@@ -54,8 +55,8 @@ import org.apache.spark.sql.types._
   * fires. Silently relabeling data errors as "ran out of time" would be
   * the silent-wrong-results mode this repo rejects. Misconfiguration is
   * equally loud: `keyCols`/`tieBreakCol` naming columns absent from the
-  * scored schema are rejected up front, exactly where the deterministic
-  * path would throw its `AnalysisException`.
+  * scored schema are rejected up front, as the deterministic path
+  * rejects them at plan build.
   *
   * Scale: per-partition pools ship k rows per partition (per query; per
   * (query, group) bounded by `groupLimit` when grouped) to the driver.
@@ -111,19 +112,22 @@ object BudgetedSearch {
       maxDriverRows: Long = DefaultMaxDriverRows): BudgetedResult = {
     require(budgetMs > 0 && batchPartitions >= 0 && maxDriverRows > 0)
     Search.requireFreeColumns(data, Seq(Search.ScoreCol), "BudgetedSearch.search")
-    val scored = Search.scoredSingle(data, query, cfg)
-    run(scored, cfg, budgetMs, batchPartitions, perQuery = false, maxDriverRows)
+    run(data, KnnKernel.singleQuery(query), cfg, budgetMs, batchPartitions, maxDriverRows)
   }
 
   /** [[Search.multiSearch]] under a shared wall-clock budget: one bounded
-    * pool PER QUERY per partition, merged per query on the driver.
-    * `batchPartitions = 0` (the default) = [[autoBatchPartitions]]. */
+    * pool PER QUERY per partition, merged per query on the driver. The
+    * query set is collected as [[Search.multiSearch]] collects it, before
+    * the budget clock starts. `batchPartitions = 0` (the default) =
+    * [[autoBatchPartitions]]. */
   def multiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
       budgetMs: Long, batchPartitions: Int = 0,
       maxDriverRows: Long = DefaultMaxDriverRows): BudgetedResult = {
     require(budgetMs > 0 && batchPartitions >= 0 && maxDriverRows > 0)
-    val scored = Search.scoredMulti(data, queries, cfg, Nil)
-    run(scored, cfg, budgetMs, batchPartitions, perQuery = true, maxDriverRows)
+    Search.requireFreeColumns(data, Seq(Search.QueryIdCol, Search.ScoreCol),
+      "BudgetedSearch.multiSearch")
+    run(data, Search.collectQueries(queries, cfg, Nil), cfg, budgetMs, batchPartitions,
+      maxDriverRows)
   }
 
   /** The automatic batch size (`batchPartitions = 0`): one full scheduler
@@ -142,128 +146,48 @@ object BudgetedSearch {
   private[operators] def autoBatchPartitions(sc: org.apache.spark.SparkContext): Int =
     math.max(sc.defaultParallelism, 8)
 
-  /** The scan→filter→score stage a budgeted multi-query run evaluates
-    * per batch of partitions — exposed for plan inspection
-    * ([[graft.Plans]]); the per-partition pools and the driver merge are
-    * deliberately NOT Catalyst plans (they are the budget machinery), so
-    * this is the part of the budgeted path with a physical plan. */
-  def scoredStageMulti(data: DataFrame, queries: DataFrame,
+  /** The stage a budgeted multi-query run evaluates per batch of
+    * partitions — [[KnnKernel.scan]] over the collected `queries`, the
+    * per-partition pool survivors — exposed for plan inspection
+    * ([[graft.Plans]]); the driver fold is deliberately NOT a Catalyst
+    * plan (it is the budget machinery), so this is the part of the
+    * budgeted path with a physical plan. */
+  def batchStageMulti(data: DataFrame, queries: DataFrame,
       cfg: SearchConfig): DataFrame =
-    Search.scoredMulti(data, queries, cfg, Nil)
+    KnnKernel.scan(data, Search.collectQueries(queries, cfg, Nil), cfg, Nil).toDF()
 
-  import KnnKernel.{nativeOrd, normKey, Pool, PoolState}
+  import KnnKernel.{normKey, PoolState}
 
-  /** Driver-side extractors: the merge state folds the external Rows the
-    * tasks ship back, keyed/grouped exactly as the task pools were. */
+  /** The driver's dedup key over the external Rows the tasks ship back,
+    * keyed exactly as the scan's pools were (no key columns: one key for
+    * every row). */
   private def rowKeyOf(keyIdx: Array[Int]): Row => Any =
-    if (keyIdx.isEmpty) null
-    else if (keyIdx.length == 1) (r: Row) => normKey(r.get(keyIdx(0)))
+    if (keyIdx.length == 1) (r: Row) => normKey(r.get(keyIdx(0)))
     else (r: Row) => keyIdx.map(i => normKey(r.get(i))).toSeq
 
-  // ------------------------------------------------- task-side reducer
-
-  /** Task-pool element over the scan's codegen'd [[InternalRow]] output.
-    * The ordering/dedup/grouping fields are extracted once per row with
-    * cheap typed accessors; `row` stays a reference into the iterator's
-    * REUSED buffer until pool admission copies it (`UnsafeRow.copy` —
-    * one buffer memcpy, no per-field materialization). Only the bounded
-    * pool survivors are decoded to external [[Row]]s at task end, so the
-    * budgeted scan's per-row cost tracks the codegen'd
-    * `TakeOrderedAndProject` shape instead of paying a whole-row decode
-    * per SCANNED row. The r8 `BudgetProbe` measured that decode (then
-    * via `scored.rdd`) as this path's dominant overhead — ~0.07-0.11 s
-    * over the exact twin at sf0.1, a term that grows with the data; the
-    * r9 probe with THIS reducer wired measures the residual at
-    * ~0.023-0.027 s (budget 0.162-0.166 s vs exact 0.139 s, best-of-5,
-    * one JVM), which is per-job submission, not per-row work
-    * (BASELINE.md r9). */
-  private final class Cand(val score: Double, val tie: Any, val key: Any,
-      val qk: Any, val gk: Any, var row: InternalRow)
-
-  /** Builds the per-task reducer: iterate the partition's InternalRows,
-    * keep the bounded pools, return ONLY the survivors as external Rows.
-    * Everything captured is serializable (schema, index/type info,
-    * orderings — `scala.math.Ordering` extends Serializable); the
-    * Catalyst↔Scala converters are built INSIDE the task, and produce
-    * the same Scala values the driver's Row path reads, so task pools
-    * and the driver fold order/dedup/group identically. */
-  private[operators] def taskReducer(schema: StructType, k: Int, gL: Int, sign: Int,
-      scoreIdx: Int, tieIdx: Option[Int], qIdx: Int, groupIdx: Int,
-      dedupIdx: Array[Int]): Iterator[InternalRow] => Array[Row] = {
-    val tieOrd: Ordering[Any] =
-      tieIdx.map(i => nativeOrd(schema(i).dataType)).orNull
-    val candOrd: Ordering[Cand] = new Ordering[Cand] with Serializable {
-      def compare(a: Cand, b: Cand): Int = {
-        val s = sign * java.lang.Double.compare(a.score, b.score)
-        if (s != 0) s
-        else if (tieOrd == null) 0
-        else tieOrd.compare(a.tie, b.tie)
-      }
-    }
-    val dedup = dedupIdx.nonEmpty
-
-    (it: Iterator[InternalRow]) => {
-      def normGet(i: Int): InternalRow => Any = {
-        val dt = schema(i).dataType
-        val conv = CatalystTypeConverters.createToScalaConverter(dt)
-        r => if (r.isNullAt(i)) null else normKey(conv(r.get(i, dt)))
-      }
-      // the plan filters score to non-null non-NaN, so no null check here
-      val getScore: InternalRow => Double = schema(scoreIdx).dataType match {
-        case DoubleType => r => r.getDouble(scoreIdx)
-        case FloatType => r => r.getFloat(scoreIdx).toDouble
-        case IntegerType => r => r.getInt(scoreIdx).toDouble
-        case LongType => r => r.getLong(scoreIdx).toDouble
-        case dt =>
-          val conv = CatalystTypeConverters.createToScalaConverter(dt)
-          r => conv(r.get(scoreIdx, dt)).asInstanceOf[Number].doubleValue()
-      }
-      val getTie: InternalRow => Any = tieIdx match {
-        case Some(i) =>
-          val dt = schema(i).dataType
-          val conv = CatalystTypeConverters.createToScalaConverter(dt)
-          r => if (r.isNullAt(i)) null else conv(r.get(i, dt))
-        case None => _ => null
-      }
-      val getKey: InternalRow => Any =
-        if (!dedup) _ => null
-        else if (dedupIdx.length == 1) normGet(dedupIdx(0))
-        else {
-          val gets = dedupIdx.map(normGet)
-          r => gets.map(_(r)).toSeq
-        }
-      val getQ: InternalRow => Any = if (qIdx >= 0) normGet(qIdx) else _ => ()
-      val getG: InternalRow => Any = if (gL > 0) normGet(groupIdx) else _ => null
-      val st = new PoolState[Cand](k, gL, candOrd,
-        if (dedup) (c: Cand) => c.key else null,
-        (c: Cand) => c.qk, (c: Cand) => c.gk,
-        (c: Cand) => c.row = c.row.copy())
-      while (it.hasNext) {
-        val r = it.next()
-        st.add(new Cand(getScore(r), getTie(r), getKey(r), getQ(r), getG(r), r))
-      }
-      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      st.elements.map(c => toRow(c.row).asInstanceOf[Row]).toArray
-    }
+  /** A task's partition of the scan — its pool survivors, in the scan's
+    * reused output buffer — decoded to external Rows for the driver. */
+  private def decode(schema: StructType): Iterator[InternalRow] => Array[Row] = it => {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    it.map(r => toRow(r).asInstanceOf[Row]).toArray
   }
 
   // ------------------------------------------------------------ runner
 
-  private def run(scored: DataFrame, cfg: SearchConfig, budgetMs: Long,
-      batchPartitions0: Int, perQuery: Boolean,
-      maxDriverRows: Long): BudgetedResult = {
-    val spark = scored.sparkSession
+  private def run(data: DataFrame, qs: KnnKernel.Queries, cfg: SearchConfig,
+      budgetMs: Long, batchPartitions0: Int, maxDriverRows: Long): BudgetedResult = {
+    val spark = data.sparkSession
     val sc = spark.sparkContext
     val batchPartitions =
       if (batchPartitions0 > 0) batchPartitions0 else autoBatchPartitions(sc)
-    val schema = scored.schema
-    val k = if (cfg.resultLimit > 0) math.min(cfg.limit, cfg.resultLimit) else cfg.limit
+    val schema = KnnKernel.hitSchema(data.schema, qs, cfg)
+    val k = Search.topK(cfg)
     val gL = cfg.groupLimit
     val scoreIdx = schema.fieldIndex(Search.ScoreCol)
-    val qIdx = if (perQuery) schema.fieldIndex(Search.QueryIdCol) else -1
-    // a typo'd keyCol/tieBreakCol must fail HERE, exactly like the
-    // deterministic path's AnalysisException — silently skipping it would
-    // silently disable dedup or the tie-break (ADVICE r6)
+    val qIdx = if (qs.single) -1 else schema.fieldIndex(Search.QueryIdCol)
+    // a typo'd keyCol/tieBreakCol must fail HERE, as the deterministic
+    // path fails at plan build — silently skipping it would silently
+    // disable dedup or the tie-break (ADVICE r6)
     val missingCols =
       (cfg.keyCols ++ cfg.tieBreakCol).distinct.filterNot(schema.fieldNames.contains)
     require(missingCols.isEmpty,
@@ -285,27 +209,18 @@ object BudgetedSearch {
         "per-partition group pools are not associative) — add the group " +
         "column to keyCols, set assumeUniqueKeys, or use the deterministic path")
 
-    val dedupIdx = if (dedup) keyIdx else Array.empty[Int]
-    val sign = if (cfg.higherIsBetter) -1 else 1
-    val tieIdx = cfg.tieBreakCol.map(schema.fieldIndex)
-    // per-task bounded pool(s): each task folds the scan's codegen'd
-    // InternalRow output directly ([[taskReducer]]) — order within a pool
-    // is irrelevant, the driver re-sorts; only pool survivors are decoded
-    // to external Rows and cross to the driver
-    val poolOf = taskReducer(schema, k, gL, sign, scoreIdx, tieIdx, qIdx,
-      groupIdx, dedupIdx)
-
-    // toRdd = the physical plan's InternalRow output, skipping the
-    // whole-scan external-Row decode `.rdd` would pay (accessing it
-    // materializes any broadcast stages up front, before the clock starts)
-    val rdd = scored.queryExecution.toRdd
+    // toRdd = the scan's InternalRow output, the pool survivors of each
+    // partition, so only they are decoded (accessing it materializes any
+    // shuffle stages of `data` up front, before the clock starts)
+    val rdd = KnnKernel.scan(data, qs, cfg, Nil).queryExecution.toRdd
     val nParts = rdd.getNumPartitions
     val deadline = System.nanoTime() + budgetMs * 1000000L
     val groupId = s"graft-budget-${java.util.UUID.randomUUID()}"
     // the driver's incremental merge state: each completed batch folds in
     // immediately, so the driver never holds more than this state plus
     // one batch's pools (VERDICT r6 #1 — no growth in batch count)
-    val state = new PoolState[Row](k, gL, ord, rowKeyOf(dedupIdx),
+    val state = new PoolState[Row](k, gL, ord,
+      if (cfg.assumeUniqueKeys) null else rowKeyOf(keyIdx),
       if (qIdx >= 0) (r: Row) => normKey(r.get(qIdx)) else (_: Row) => (),
       if (gL > 0) (r: Row) => normKey(r.get(groupIdx)) else (_: Row) => null,
       (_: Row) => ()) // external Rows are already materialized — no copy
@@ -338,7 +253,7 @@ object BudgetedSearch {
           }
           timer.schedule(cancel, leftMs)
           try {
-            val res = sc.runJob(rdd, poolOf, batch)
+            val res = sc.runJob(rdd, decode(schema), batch)
             var batchRows = 0L
             res.foreach(batchRows += _.length)
             peakRows = math.max(peakRows, state.rowCount + batchRows)

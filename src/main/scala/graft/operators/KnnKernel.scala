@@ -4,7 +4,7 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
@@ -13,10 +13,12 @@ import org.apache.spark.sql.types._
 
 import graft.functions.{ScoreFunctions, ScoreKind, VectorMath}
 
-/** The per-partition kNN kernel behind [[Search.search]] and
-  * [[Search.multiSearch]] (and so behind every ANN batch path, the
-  * shortlist reranks and `Ann.multiRoute`), plus the bounded pools it
-  * shares with [[BudgetedSearch]].
+/** The per-partition kNN kernel behind every exact search:
+  * [[Search.search]] and [[Search.multiSearch]] (and so every ANN batch
+  * path, the shortlist reranks and `Ann.multiRoute`), and
+  * [[BudgetedSearch]], which runs its stage 1 ([[scan]]) in partition
+  * batches and folds the survivors on the driver through the same
+  * bounded pools.
   *
   * Plan: the JSON filter stays a Catalyst `Filter` over the data scan;
   * a `Dataset.mapPartitions` over the filtered rows (stage 1, [[Scan]])
@@ -144,25 +146,23 @@ private[operators] object KnnKernel {
 
   // ------------------------------------------------------------ pools
 
-  /** Bounded best-k pool over any element type (the kernel's stage 1
-    * folds [[Hit]]s, its merge and the budgeted driver fold external
-    * [[Row]]s, the budgeted task pools fold `Cand` wrappers over the
-    * codegen'd InternalRow output). `keyOf` null: a plain worst-first
-    * bounded heap (O(log k) per accepted row, O(1) reject against the
-    * heap max). `keyOf` non-null: exact best-per-key dedup inside the k
-    * slots (≤ k tracked keys — correct because once a key is evicted the
-    * pool's worst entry only ever improves, so the evicted key's best
-    * can never re-enter the top-k without a strictly better row, which
-    * re-inserts it); a full pool rejects anything no better than its
-    * cached worst before computing the key, and an accepted
-    * insert/eviction pays an O(k) rescan. `retain` runs exactly once per
-    * element, immediately BEFORE it is first stored — the task side uses
-    * it to copy the iterator-reused InternalRow buffer only for rows
-    * that actually enter a pool. Pool emptiness is tracked SEPARATELY
-    * from `worstKey` (`hasWorst`): a legitimate NULL dedup-key value
-    * must never read as "no worst yet", or a new key would displace the
-    * cached worst unconditionally and the exactness invariant above
-    * would silently break on nullable keyCols. */
+  /** Bounded best-k pool over any element type (the kernel's scan and
+    * merge fold [[Hit]]s, the budgeted driver fold external [[Row]]s).
+    * `keyOf` null: a plain worst-first bounded heap (O(log k) per
+    * accepted row, O(1) reject against the heap max). `keyOf` non-null:
+    * exact best-per-key dedup inside the k slots (≤ k tracked keys —
+    * correct because once a key is evicted the pool's worst entry only
+    * ever improves, so the evicted key's best can never re-enter the
+    * top-k without a strictly better row, which re-inserts it); a full
+    * pool rejects anything no better than its cached worst before
+    * computing the key, and an accepted insert/eviction pays an O(k)
+    * rescan. `retain` runs exactly once per element, immediately BEFORE
+    * it is first stored — the kernel uses it to copy a row's values out
+    * of the scan's reused buffers only once a pair of it enters a pool.
+    * Pool emptiness is tracked SEPARATELY from `worstKey` (`hasWorst`): a
+    * legitimate NULL dedup-key value must never read as "no worst yet",
+    * or a new key would displace the cached worst unconditionally and the
+    * exactness invariant above would silently break on nullable keyCols. */
   final class Pool[E](k: Int, ord: Ordering[E], keyOf: E => Any,
       retain: E => Unit) {
     // PriorityQueue dequeues the ord-LARGEST element = the worst
@@ -236,13 +236,12 @@ private[operators] object KnnKernel {
   }
 
   /** One bounded pool per query (ungrouped) or per (query, group)
-    * (grouped). The SAME shape serves as the kernel's per-task pools (over
-    * [[Hit]]), as its merge and as the budgeted driver's incremental
-    * state (over [[Row]]), and as the budgeted task reducer: folding
-    * pools through a fresh PoolState is exact by the associativity of
-    * best-per-key-then-top-k (ungrouped) / per-group
-    * best-per-key-then-top-groupLimit when keys cannot span groups
-    * (grouped). */
+    * (grouped). The SAME shape serves as the kernel's per-task pools and
+    * its merge (over [[Hit]]) and as the budgeted driver's incremental
+    * state (over [[Row]]): folding pools through a fresh PoolState is
+    * exact by the associativity of best-per-key-then-top-k (ungrouped) /
+    * per-group best-per-key-then-top-groupLimit when keys cannot span
+    * groups (grouped). */
   final class PoolState[E](k: Int, gL: Int, ord: Ordering[E],
       keyOf: E => Any, qKeyOf: E => Any, gKeyOf: E => Any,
       retain: E => Unit) {
@@ -648,13 +647,29 @@ private[operators] object KnnKernel {
     }
   }
 
-  /** The kernel plan for `data` against the collected `qs`. Lazy: no job
-    * runs here. `data` has already passed the reserved-column check. */
-  def plan(data: DataFrame, qs: Queries, cfg: SearchConfig,
-      joinCols: Seq[String]): DataFrame = {
-    val spark = data.sparkSession
-    val k = Search.topK(cfg)
+  /** Stage 1's output schema over `data`: the query id (a batch), the
+    * data columns, then the score. It is the schema the relational plan
+    * declares: its dedup (`min_by`'s struct) and group (the
+    * representative) aggregates make every column but the query id and
+    * the grouping key nullable, and the score is nullable throughout. */
+  def hitSchema(data: StructType, qs: Queries, cfg: SearchConfig): StructType = {
     val gL = cfg.groupLimit
+    val dedup = !cfg.assumeUniqueKeys
+    val dataFields = data.fields.map { f =>
+      if ((dedup || gL > 0) && !(gL > 0 && !dedup && f.name == cfg.groupLabelCol))
+        f.copy(nullable = true)
+      else f
+    }
+    StructType(qs.schema.map(_(Search.QueryIdCol)).toSeq ++ dataFields :+
+      StructField(Search.ScoreCol, DoubleType, nullable = true))
+  }
+
+  /** Stage 1 alone: the pool survivors of each partition of the
+    * JSON-filtered `data`, holding internal values, in [[hitSchema]] —
+    * one output partition per scanned partition. Lazy: no job runs here.
+    * `data` has already passed the reserved-column check. */
+  def scan(data: DataFrame, qs: Queries, cfg: SearchConfig,
+      joinCols: Seq[String]): Dataset[Row] = {
     val filtered = data.filter(Search.passesFilters(cfg))
     val nData = data.columns.length
     // score against array<float>, cast by Catalyst exactly as the
@@ -670,36 +685,33 @@ private[operators] object KnnKernel {
       if (input.columns.length > nData) nData else data.schema.fieldIndex(cfg.featureCol)
     val schema = data.schema
     val tieIdx = cfg.tieBreakCol.map(schema.fieldIndex).getOrElse(-1)
-    val groupIdx = if (gL > 0) schema.fieldIndex(cfg.groupLabelCol) else -1
+    val groupIdx = if (cfg.groupLimit > 0) schema.fieldIndex(cfg.groupLabelCol) else -1
     val keyIdx =
       if (cfg.assumeUniqueKeys) Array.emptyIntArray
       else cfg.keyCols.map(schema.fieldIndex).toArray
     val joinIdx = joinCols.map(schema.fieldIndex).toArray
-
-    val qField = qs.schema.map(_(Search.QueryIdCol)).toSeq
-    // the schema the relational plan declares: its dedup (`min_by`'s
-    // struct) and group (the representative) aggregates make every column
-    // but the query id and the grouping key nullable, and the score is
-    // nullable throughout
-    val dedup = !cfg.assumeUniqueKeys
-    val dataFields = schema.fields.map { f =>
-      if ((dedup || gL > 0) && !(gL > 0 && !dedup && f.name == cfg.groupLabelCol))
-        f.copy(nullable = true)
-      else f
-    }
-    val hitSchema = StructType(qField ++ dataFields :+
-      StructField(Search.ScoreCol, DoubleType, nullable = true))
+    val hits = hitSchema(schema, qs, cfg)
     // an unorderable tie-break type fails here, at plan build
-    rowOrdering(hitSchema, cfg, hitSchema.fieldIndex(Search.ScoreCol))
+    rowOrdering(hits, cfg, hits.fieldIndex(Search.ScoreCol))
 
-    val bq = spark.sparkContext.broadcast(qs)
-    val scan = new Scan(cfg, k, input.schema, nData, vecIdx, tieIdx, groupIdx, keyIdx, joinIdx, bq)
-    val hits = Bridge.internalRows(input).mapPartitions(scan.apply _)(
-      Bridge.internalRowEncoder(hitSchema))
+    val bq = data.sparkSession.sparkContext.broadcast(qs)
+    val scan = new Scan(cfg, Search.topK(cfg), input.schema, nData, vecIdx, tieIdx, groupIdx,
+      keyIdx, joinIdx, bq)
+    Bridge.internalRows(input).mapPartitions(scan.apply _)(Bridge.internalRowEncoder(hits))
+  }
 
+  /** The kernel plan for `data` against the collected `qs`: [[scan]],
+    * then the merge. Lazy: no job runs here. `data` has already passed
+    * the reserved-column check. */
+  def plan(data: DataFrame, qs: Queries, cfg: SearchConfig,
+      joinCols: Seq[String]): DataFrame = {
+    val k = Search.topK(cfg)
+    val gL = cfg.groupLimit
+    val hits = scan(data, qs, cfg, joinCols)
     val merged =
       if (qs.single && gL == 0 && cfg.assumeUniqueKeys) hits.toDF()
       else {
+        val hitSchema = KnnKernel.hitSchema(data.schema, qs, cfg)
         val qIdx = if (qs.single) -1 else 0
         val outSchema =
           if (gL == 0) hitSchema

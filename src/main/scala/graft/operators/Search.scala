@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
 import graft.functions.ScoreFunctions
 
@@ -158,9 +159,10 @@ object Search {
         "— rename or drop them first (e.g. a previous search result's score)")
   }
 
-  /** The broadcast-join→filter→score stage of the relational batch plan
-    * (pre-dedup, pre-top-k) — [[BudgetedSearch]]'s scored stage and the
-    * spanning-keys plan's. */
+  /** The broadcast-join→filter→score stage of the relational plan
+    * (pre-dedup, pre-top-k): every (query, row) pair, scored. Main runs it
+    * only in the spanning-keys plan, a single query as a one-row query
+    * frame; the relational parity reference runs it for every config. */
   private[operators] def scoredMulti(data: DataFrame, queries: DataFrame,
       cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
     requireFreeColumns(data, Seq(QueryIdCol, ScoreCol, "__query_vec"), "multiSearch")
@@ -223,11 +225,17 @@ object Search {
     * `Search.queries`, and fails loudly past [[MaxQueryRows]]; the
     * returned DataFrame is lazy. */
   def multiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
-      joinCols: Seq[String] = Nil): DataFrame = {
+      joinCols: Seq[String] = Nil): DataFrame =
+    knn(data, collectQueries(queries, cfg, joinCols), cfg, joinCols)
+
+  /** A batch's query set as the kernel takes it: [[queryFrame]] collected
+    * in one job labelled `Search.queries`, failing loudly past
+    * [[MaxQueryRows]] — for [[multiSearch]] and
+    * [[BudgetedSearch.multiSearch]]. */
+  private[operators] def collectQueries(queries: DataFrame, cfg: SearchConfig,
+      joinCols: Seq[String]): KnnKernel.Queries = {
     val q = queryFrame(queries, cfg, joinCols)
-    knn(data, KnnKernel.Queries(
-      Materialize.collect(q, "Search.queries", MaxQueryRows), Some(q.schema)),
-      cfg, joinCols)
+    KnnKernel.Queries(Materialize.collect(q, "Search.queries", MaxQueryRows), Some(q.schema))
   }
 
   /** J1/J3 single-query exact kNN, ending in `orderBy().limit()` — the
@@ -261,20 +269,20 @@ object Search {
 
   /** The relational plan for [[keysSpanGroups]] configs: score every pair,
     * dedup per (query, key) with `min_by`, group with `CollectTopK`, then
-    * the global top-k. */
+    * the global top-k. A single query runs as a one-row query frame (its
+    * id null) and ends in `orderBy.limit`. */
   private def spanningKeysPlan(data: DataFrame, qs: KnnKernel.Queries,
-      cfg: SearchConfig, joinCols: Seq[String]): DataFrame =
-    if (qs.single) {
-      val scored = scoredSingle(data, qs.rows(0).getSeq[Float](1), cfg)
-      val grouped = groupedMerge(
-        dedupBest(scored, cfg, Nil).withColumn(QueryIdCol, lit(0)), cfg).drop(QueryIdCol)
-      grouped.orderBy(orderCols(cfg, col(ScoreCol)): _*).limit(topK(cfg))
-    } else {
-      import scala.jdk.CollectionConverters._
-      val queries = data.sparkSession.createDataFrame(qs.rows.toSeq.asJava, qs.schema.get)
-      val scored = scoredMulti(data, queries, cfg, joinCols)
-      topKPerQuery(groupedMerge(dedupBest(scored, cfg, Seq(QueryIdCol)), cfg), cfg)
-    }
+      cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val schema = qs.schema.getOrElse(StructType(Seq(
+      StructField(QueryIdCol, IntegerType), StructField(cfg.featureCol, ArrayType(FloatType)))))
+    val queries = data.sparkSession.createDataFrame(qs.rows.toSeq.asJava, schema)
+    val grouped = groupedMerge(
+      dedupBest(scoredMulti(data, queries, cfg, joinCols), cfg, Seq(QueryIdCol)), cfg)
+    if (qs.single)
+      grouped.drop(QueryIdCol).orderBy(orderCols(cfg, col(ScoreCol)): _*).limit(topK(cfg))
+    else topKPerQuery(grouped, cfg)
+  }
 
   /** `limit`, folded with `resultLimit` (A6). */
   private[operators] def topK(cfg: SearchConfig): Int =
@@ -330,17 +338,4 @@ object Search {
       Seq(col(QueryIdCol), col(cfg.groupLabelCol), groupScore.as(ScoreCol)) ++
         payloadCols.map(c => element_at(col("__arr"), 1).getField("__p").getField(c).as(c)): _*)
   }
-
-  /** The scan→filter→score stage of a single query (pre-dedup,
-    * pre-top-k) — [[BudgetedSearch]]'s scored stage and the
-    * spanning-keys plan's. */
-  private[operators] def scoredSingle(data: DataFrame, query: Seq[Float],
-      cfg: SearchConfig): DataFrame =
-    data
-      .filter(passesFilters(cfg))
-      .withColumn(ScoreCol,
-        contextRescore(cfg, col(cfg.featureCol),
-          scoreExpr(cfg, col(cfg.featureCol), lit(query.toArray))))
-      // see scoredMulti: null-feature and NaN guards (identical semantics)
-      .filter(definedScore(col(ScoreCol)))
 }

@@ -16,6 +16,12 @@ class BudgetedSearchSpec extends SparkTestBase {
     .map(i => (i.toLong, Array.tabulate(4)(d => (i * 4 + d).toFloat)))
     .toDF("vec_id", "feature")
 
+  /** Names, types and nullability, field by field. */
+  private def assertSameSchema(budgeted: org.apache.spark.sql.DataFrame,
+      exact: org.apache.spark.sql.DataFrame): Unit =
+    assert(budgeted.schema == exact.schema,
+      s"budgeted schema ${budgeted.schema.treeString} != deterministic ${exact.schema.treeString}")
+
   private def cfg = SearchConfig(
     scoreFuncName = "VectorDistance", higherIsBetter = false, limit = 5,
     featureCol = "feature", keyCols = Seq("vec_id"), tieBreakCol = Some("vec_id"),
@@ -31,6 +37,7 @@ class BudgetedSearchSpec extends SparkTestBase {
     val want = Search.search(data, q, cfg).select("vec_id", Search.ScoreCol)
       .as[(Long, Double)].collect().toSeq
     assert(got == want, s"got $got want $want")
+    assertSameSchema(r.rows, Search.search(data, q, cfg))
   }
 
   test("ample budget, multi: equals deterministic multiSearch per query") {
@@ -44,6 +51,7 @@ class BudgetedSearchSpec extends SparkTestBase {
     val want = Search.multiSearch(data, queries, cfg)
       .select(Search.QueryIdCol, "vec_id").as[(Long, Long)].collect().toSet
     assert(got == want)
+    assertSameSchema(r.rows, Search.multiSearch(data, queries, cfg))
   }
 
   test("dedup semantics survive the driver merge (duplicate keys, best kept)") {
@@ -161,6 +169,7 @@ class BudgetedSearchSpec extends SparkTestBase {
         .select("group_label", Search.ScoreCol, "vec_id")
         .as[(String, Double, Long)].collect().toSeq
       assert(got == want, s"cfg $c: got $got want $want")
+      assertSameSchema(r.rows, Search.search(data, q, c))
     }
   }
 

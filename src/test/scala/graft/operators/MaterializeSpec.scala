@@ -115,6 +115,14 @@ class MaterializeSpec extends SparkTestBase {
       "the call runs exactly the query collect")
     assert(res.count() == 6)
     assert(Search.MaxQueryRows > 0)
+    // the budgeted batch collects its queries the same way; its batch
+    // jobs run under the budget's own job group, so only the collect is
+    // seen here
+    val (budgeted, budgetedProps) =
+      jobProps(BudgetedSearch.multiSearch(data, queries, cfg, budgetMs = 120000L))
+    assert(budgetedProps.map(_.getProperty(Materialize.SiteProperty)) == Seq("Search.queries"),
+      "the budgeted call runs one labelled query collect")
+    assert(budgeted.complete && budgeted.rows.count() == 6)
   }
 
   private def mainSources: Seq[Path] = {
@@ -138,8 +146,9 @@ class MaterializeSpec extends SparkTestBase {
     // a bare Dataset collect has no row bound and no site label
     val bare = """\.collect(\(\)|\s*$|\s*[.),])""".r
     val files = mainSources.filter(f =>
-      Set("Ann.scala", "Search.scala", "KnnKernel.scala")(f.getFileName.toString))
-    assert(files.size == 3, files)
+      Set("Ann.scala", "Search.scala", "KnnKernel.scala", "BudgetedSearch.scala")(
+        f.getFileName.toString))
+    assert(files.size == 4, files)
     val hits = for {
       f <- files
       (ln, i) <- Files.readAllLines(f).asScala.zipWithIndex

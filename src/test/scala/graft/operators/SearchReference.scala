@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions.{col, lit}
   * broadcast nested-loop (or hash, with `joinCols`) join → score →
   * `min_by` dedup → grouped `CollectTopK` → per-query `CollectTopK`, and
   * scan → score → dedup → group → `orderBy.limit` for one query. Main
-  * reaches these stages only for grouped configs whose dedup keys span
-  * groups. */
+  * reaches the batch stages only for grouped configs whose dedup keys
+  * span groups, a single query included; the single-query scored stage
+  * lives only here. */
 object SearchReference {
 
   def multiSearch(data: DataFrame, queries: DataFrame, cfg: SearchConfig,
@@ -22,7 +23,7 @@ object SearchReference {
   }
 
   def search(data: DataFrame, query: Seq[Float], cfg: SearchConfig): DataFrame = {
-    val scored = Search.scoredSingle(data, query, cfg)
+    val scored = scoredSingle(data, query, cfg)
     val deduped = if (cfg.assumeUniqueKeys) scored else Search.dedupBest(scored, cfg, Nil)
     val merged =
       if (cfg.groupLimit > 0)
@@ -31,4 +32,15 @@ object SearchReference {
       else deduped
     merged.orderBy(Search.orderCols(cfg, col(Search.ScoreCol)): _*).limit(Search.topK(cfg))
   }
+
+  /** The scan → filter → score stage of one query (pre-dedup, pre-top-k),
+    * with the same null-feature and NaN guard as [[Search.scoredMulti]]. */
+  private def scoredSingle(data: DataFrame, query: Seq[Float],
+      cfg: SearchConfig): DataFrame =
+    data
+      .filter(Search.passesFilters(cfg))
+      .withColumn(Search.ScoreCol,
+        Search.contextRescore(cfg, col(cfg.featureCol),
+          Search.scoreExpr(cfg, col(cfg.featureCol), lit(query.toArray))))
+      .filter(Search.definedScore(col(Search.ScoreCol)))
 }

@@ -23,7 +23,7 @@ object BudgetProbe {
       featureCol = "embedding", keyCols = Seq("vec_id"),
       tieBreakCol = Some("vec_id"), assumeUniqueKeys = true)
     val nParts = emb.rdd.getNumPartitions
-    println(s"[probe] scored stage partitions: $nParts")
+    println(s"[probe] scan partitions: $nParts")
 
     def best5(label: String)(body: => Long): Unit = {
       val times = (1 to 5).map { _ =>
@@ -46,8 +46,9 @@ object BudgetProbe {
 
     // r9: the scale leg — 10× the corpus over 16 partitions, where the
     // per-SCANNED-row decode the r8 path paid (scored.rdd) would grow
-    // 10×; with the InternalRow task reducer the budget-vs-exact delta
-    // should stay the per-job constant, not scale with the rows.
+    // 10×; the budgeted path decodes only the kernel scan's pool
+    // survivors, so the budget-vs-exact delta should stay the per-job
+    // constant, not scale with the rows.
     import spark.implicits._
     val d = emb.select(col("embedding")).head().getSeq[Float](0).size
     val big = spark.range(525000L).map { id =>

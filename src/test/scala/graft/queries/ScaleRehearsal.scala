@@ -610,17 +610,18 @@ object ScaleRehearsal {
           assert(pairs.groupBy(_._1).values.forall(_.size <= sCfg.limit),
             "a query returned more than limit rows")
           // every returned row is a REAL state row with its true score:
-          // join the ≤250 pairs against the deterministic scored stage
+          // join the ≤250 pairs against the per-batch kernel scan over
+          // the whole table, whose per-partition survivors hold them
           val pairDf = pairs.toDF("q", "v", "s")
           val joined = BudgetedSearch
-            .scoredStageMulti(state, probeQueries, sCfg)
+            .batchStageMulti(state, probeQueries, sCfg)
             .join(org.apache.spark.sql.functions.broadcast(pairDf),
               col(Search.QueryIdCol) === col("q") && col("vec_id") === col("v"))
             .select(col(Search.ScoreCol), col("s"))
             .as[(Double, Double)].collect()
           assert(joined.length == pairs.size,
             s"tight probe returned ${pairs.size - joined.length} rows absent " +
-              "from the scored stage")
+              "from the kernel scan")
           joined.foreach { case (truth, got) =>
             assert(truth == got, s"tight probe score $got != true $truth") }
           println(f"[sf1] sb_tight_probe$b         $tightSec%7.2f s " +
