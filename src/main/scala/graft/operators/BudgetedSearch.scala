@@ -1,89 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.Bridge
 
-/** Timeout-bounded best-effort search — the reference's one deliberately
-  * dropped semantic, reinstated as an OPT-IN (VERDICT r4 #7). veri's
-  * whole latency model is a per-query time budget with truncated results
+/** Timeout-bounded best-effort kNN: veri's per-query time budget
   * ("more time gives more accurate results", reference README.md:50;
-  * `data/search.go:162-165,219-224` drains result channels until the
-  * timeout and returns whatever arrived). The deterministic
-  * [[Search.search]]/[[Search.multiSearch]] remain the default — same
-  * input, same output, every time — and THIS entry point trades that
-  * determinism for a latency bound, explicitly.
+  * `data/search.go:162-165,219-224` drains its result channels until the
+  * timeout and returns whatever arrived), as an OPT-IN. The deterministic
+  * [[Search.search]]/[[Search.multiSearch]] stay the default.
   *
-  * Mechanics: the budgeted path runs the exact searches' own stage 1,
-  * [[KnnKernel.scan]] — the same scan, JSON filter, primitive scoring and
-  * per-partition bounded pools (best-score dedup per `cfg.keyCols` unless
-  * `assumeUniqueKeys`, one pool per (query, group) when `groupLimit > 0`)
-  * that [[Search.search]]/[[Search.multiSearch]] plan — and evaluates it
-  * INCREMENTALLY, a batch of partitions per Spark job. Each task returns
-  * its partition's pool survivors, decoded to external rows; the driver
-  * folds every completed batch into ONE merge state of the same
-  * bounded-pool shape, then groups and cuts to top-k at the end. The fold
-  * is exact because best-per-key-then-top-k is associative across row
-  * subsets — the same argument that makes the per-partition pools exact
-  * — so merging after every batch returns bit-identical rows to merging
-  * once at the end, while the driver never holds more than the merge
-  * state plus one batch's pools (the reference's own merge is streamed
-  * the same way, `data/search.go:271-294`). When the budget expires, no
-  * further batches launch, any in-flight batch is cancelled via its job
-  * group (`interruptOnCancel`), and the state folded from the partitions
-  * that DID complete is returned with `complete = false` — the exact
-  * result over a documented subset of the data, veri's own contract. A
-  * finished scan returns the same rows, in the same schema, as the
-  * deterministic path, row for row: the driver merge uses the SAME
-  * score direction, key dedup, group scoring and native-typed tie-break
-  * ordering as [[Search]] (a lexicographic tie-break would diverge on
-  * numeric columns — "10" < "9").
+  * The contract: the exact searches' own kernel runs here,
+  * [[KnnKernel.scan]] over a batch of partitions per Spark job, each
+  * finished batch folded on the driver through [[KnnKernel.Merge]] (see
+  * [[KnnKernel]] for the pools and why folding them batch by batch is
+  * exact). At the deadline no further batch launches, the batch in
+  * flight is cancelled through its job group, and the rows are the exact
+  * answer over the partitions that completed, with `complete = false`. A
+  * complete scan returns the deterministic rows and schema. A config the
+  * kernel refuses (grouped dedup keys that span groups) is refused here.
   *
-  * Grouped queries (`groupLimit > 0`) run two-level pools, mirroring the
-  * reference's grouped aggregator under its timeout drain
-  * (aggregator.go:103-117 merged at search.go:271-294): each partition
-  * keeps the top-`groupLimit` members per (query, group), the driver
-  * folds them into its own per-(query, group) pools and finally
-  * re-collapses groups and scores them exactly like [[Search]]'s grouped
-  * merge (sum, or sum/len², folded best-first).
+  * Only a budget cancellation becomes a partial result: the timer must
+  * have fired AND the failure must carry this run's [[cancelReason]], so
+  * a genuine task failure propagates even when it lands as the timer
+  * fires.
   *
-  * Failure semantics: ONLY a budget-timer cancellation is converted into
-  * a partial result — the timer must have fired AND the driver-side
-  * failure must name this run's job group (the cancellation reason
-  * carries it), so a genuine task failure (corrupt input, scoring
-  * error) propagates even when it lands in the same instant the timer
-  * fires. Silently relabeling data errors as "ran out of time" would be
-  * the silent-wrong-results mode this repo rejects. Misconfiguration is
-  * equally loud: `keyCols`/`tieBreakCol` naming columns absent from the
-  * scored schema are rejected up front, as the deterministic path
-  * rejects them at plan build.
-  *
-  * Scale: per-partition pools ship k rows per partition (per query; per
-  * (query, group) bounded by `groupLimit` when grouped) to the driver.
-  * With the incremental fold the driver holds O(k·queries) merge state
-  * plus ONE batch's pools at any instant — per batch the same
-  * O(k·partitions) load as `TakeOrderedAndProject`, and no growth term
-  * in the number of batches. Grouped pools are bounded per
-  * (query, group) but NOT in the number of distinct groups: an exact
-  * grouped answer must see every group, so the merge state is
-  * O(queries · distinct-groups · groupLimit). A high-cardinality group
-  * column can therefore still overwhelm the driver — `maxDriverRows`
-  * (default 8M) bounds the state and fails LOUDLY when crossed, naming
-  * the cause, instead of letting the driver die of heap. Key dedup
-  * inside a pool is a bounded best-per-key map (never more than k
-  * entries), exact because once a key is evicted the pool's worst entry
-  * only ever improves, so the evicted key's best can never re-enter the
-  * top-k without a strictly better row, which re-inserts it. Grouped
-  * dedup where `keyCols` does NOT cover the group column is REFUSED
-  * loudly: a key could then surface in several groups, and a member
-  * truncated from one partition's group pool can re-enter the exact
-  * answer when another partition's better same-key row collapses into a
-  * DIFFERENT group — per-partition truncation is not associative there,
-  * and an exact merge would have to ship every group member (unbounded).
-  * The reference cannot hit this: its dedup key is the serialized
-  * DatumKey, which CONTAINS the group label (veriservice.proto:56-63),
-  * so a key never spans groups — route such configs through the
-  * deterministic path or add the group column to keyCols. */
+  * The driver holds the merge state plus one batch's survivors
+  * (`driverPeakRows`): O(k · queries) ungrouped, O(queries · distinct
+  * groups · groupLimit) grouped, since an exact grouped answer must see
+  * every group. `maxDriverRows` bounds that state and fails loudly. */
 object BudgetedSearch {
 
   /** Driver merge state is bounded by this many rows; crossing it fails
@@ -111,7 +56,6 @@ object BudgetedSearch {
       budgetMs: Long, batchPartitions: Int = 0,
       maxDriverRows: Long = DefaultMaxDriverRows): BudgetedResult = {
     require(budgetMs > 0 && batchPartitions >= 0 && maxDriverRows > 0)
-    Search.requireFreeColumns(data, Seq(Search.ScoreCol), "BudgetedSearch.search")
     run(data, KnnKernel.singleQuery(query), cfg, budgetMs, batchPartitions, maxDriverRows)
   }
 
@@ -124,8 +68,6 @@ object BudgetedSearch {
       budgetMs: Long, batchPartitions: Int = 0,
       maxDriverRows: Long = DefaultMaxDriverRows): BudgetedResult = {
     require(budgetMs > 0 && batchPartitions >= 0 && maxDriverRows > 0)
-    Search.requireFreeColumns(data, Seq(Search.QueryIdCol, Search.ScoreCol),
-      "BudgetedSearch.multiSearch")
     run(data, Search.collectQueries(queries, cfg, Nil), cfg, budgetMs, batchPartitions,
       maxDriverRows)
   }
@@ -149,81 +91,32 @@ object BudgetedSearch {
   /** The stage a budgeted multi-query run evaluates per batch of
     * partitions — [[KnnKernel.scan]] over the collected `queries`, the
     * per-partition pool survivors — exposed for plan inspection
-    * ([[graft.Plans]]); the driver fold is deliberately NOT a Catalyst
-    * plan (it is the budget machinery), so this is the part of the
-    * budgeted path with a physical plan. */
+    * ([[graft.Plans]]); the driver's fold ([[KnnKernel.Merge]]) runs
+    * outside Catalyst, so this is the part of the budgeted path with a
+    * physical plan. */
   def batchStageMulti(data: DataFrame, queries: DataFrame,
       cfg: SearchConfig): DataFrame =
     KnnKernel.scan(data, Search.collectQueries(queries, cfg, Nil), cfg, Nil).toDF()
-
-  import KnnKernel.{normKey, PoolState}
-
-  /** The driver's dedup key over the external Rows the tasks ship back,
-    * keyed exactly as the scan's pools were (no key columns: one key for
-    * every row). */
-  private def rowKeyOf(keyIdx: Array[Int]): Row => Any =
-    if (keyIdx.length == 1) (r: Row) => normKey(r.get(keyIdx(0)))
-    else (r: Row) => keyIdx.map(i => normKey(r.get(i))).toSeq
-
-  /** A task's partition of the scan — its pool survivors, in the scan's
-    * reused output buffer — decoded to external Rows for the driver. */
-  private def decode(schema: StructType): Iterator[InternalRow] => Array[Row] = it => {
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    it.map(r => toRow(r).asInstanceOf[Row]).toArray
-  }
 
   // ------------------------------------------------------------ runner
 
   private def run(data: DataFrame, qs: KnnKernel.Queries, cfg: SearchConfig,
       budgetMs: Long, batchPartitions0: Int, maxDriverRows: Long): BudgetedResult = {
-    val spark = data.sparkSession
-    val sc = spark.sparkContext
+    val sc = data.sparkSession.sparkContext
     val batchPartitions =
       if (batchPartitions0 > 0) batchPartitions0 else autoBatchPartitions(sc)
-    val schema = KnnKernel.hitSchema(data.schema, qs, cfg)
-    val k = Search.topK(cfg)
-    val gL = cfg.groupLimit
-    val scoreIdx = schema.fieldIndex(Search.ScoreCol)
-    val qIdx = if (qs.single) -1 else schema.fieldIndex(Search.QueryIdCol)
-    // a typo'd keyCol/tieBreakCol must fail HERE, as the deterministic
-    // path fails at plan build — silently skipping it would silently
-    // disable dedup or the tie-break (ADVICE r6)
-    val missingCols =
-      (cfg.keyCols ++ cfg.tieBreakCol).distinct.filterNot(schema.fieldNames.contains)
-    require(missingCols.isEmpty,
-      s"BudgetedSearch: configured column(s) ${missingCols.mkString(", ")} " +
-        s"absent from the scored schema (${schema.fieldNames.mkString(", ")}) " +
-        "— fix keyCols/tieBreakCol; the deterministic path rejects these too")
-    val ord = KnnKernel.rowOrdering(schema, cfg, scoreIdx)
-    val keyIdx = cfg.keyCols.map(schema.fieldIndex).toArray
-    val dedup = !cfg.assumeUniqueKeys && keyIdx.nonEmpty
-    val groupIdx = if (gL > 0) schema.fieldIndex(cfg.groupLabelCol) else -1
-    // a key appearing in ONE group only ⇒ per-group pools may dedup
-    // locally and stay exact; a key spanning groups breaks per-partition
-    // truncation associativity (see scaladoc) and is refused
-    val keyCoversGroup = cfg.keyCols.contains(cfg.groupLabelCol)
-    require(gL == 0 || !dedup || keyCoversGroup,
-      s"BudgetedSearch: grouped top-k with dedup keys (${cfg.keyCols.mkString(", ")}) " +
-        s"that do not cover the group column '${cfg.groupLabelCol}' cannot be " +
-        "served exactly under a budget (a key may span groups, so bounded " +
-        "per-partition group pools are not associative) — add the group " +
-        "column to keyCols, set assumeUniqueKeys, or use the deterministic path")
-
     // toRdd = the scan's InternalRow output, the pool survivors of each
-    // partition, so only they are decoded (accessing it materializes any
-    // shuffle stages of `data` up front, before the clock starts)
+    // partition (accessing it materializes any shuffle stages of `data`
+    // up front, before the clock starts)
     val rdd = KnnKernel.scan(data, qs, cfg, Nil).queryExecution.toRdd
+    val hits = KnnKernel.hitSchema(data.schema, qs, cfg)
     val nParts = rdd.getNumPartitions
     val deadline = System.nanoTime() + budgetMs * 1000000L
     val groupId = s"graft-budget-${java.util.UUID.randomUUID()}"
     // the driver's incremental merge state: each completed batch folds in
     // immediately, so the driver never holds more than this state plus
-    // one batch's pools (VERDICT r6 #1 — no growth in batch count)
-    val state = new PoolState[Row](k, gL, ord,
-      if (cfg.assumeUniqueKeys) null else rowKeyOf(keyIdx),
-      if (qIdx >= 0) (r: Row) => normKey(r.get(qIdx)) else (_: Row) => (),
-      if (gL > 0) (r: Row) => normKey(r.get(groupIdx)) else (_: Row) => null,
-      (_: Row) => ()) // external Rows are already materialized — no copy
+    // one batch's survivors
+    val merge = new KnnKernel.Merge(cfg, hits, qs.single)
     var scanned = 0
     var peakRows = 0L
     val timer = new java.util.Timer("graft-budget-cancel", true)
@@ -253,13 +146,14 @@ object BudgetedSearch {
           }
           timer.schedule(cancel, leftMs)
           try {
-            val res = sc.runJob(rdd, decode(schema), batch)
-            var batchRows = 0L
-            res.foreach(batchRows += _.length)
-            peakRows = math.max(peakRows, state.rowCount + batchRows)
-            res.foreach(_.foreach(state.add))
+            // a task's output row is a reused buffer: ship copies
+            val res = sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray,
+              batch)
+            val batchRows = res.map(_.length.toLong).sum
+            peakRows = math.max(peakRows, merge.rowCount + batchRows)
+            res.foreach(rs => merge.add(rs.iterator.map(r => Row.fromSeq(r.toSeq(hits)))))
             scanned += batch.size
-            val held = state.rowCount
+            val held = merge.rowCount
             // the true instantaneous peak includes the moment right
             // AFTER the fold, when the post-fold state and the
             // still-referenced batch arrays coexist
@@ -288,12 +182,9 @@ object BudgetedSearch {
         }
       }
     } finally timer.cancel()
-    val merged =
-      if (gL == 0) finalizeRows(spark, schema, state, k, ord)
-      else finalizeGrouped(spark, schema, state, cfg, k, qIdx, scoreIdx, ord,
-        groupIdx)
-    BudgetedResult(merged, complete = scanned == nParts, scanned, nParts,
-      peakRows)
+    val rows = data.sparkSession.createDataset(merge.result.toSeq)(
+      Bridge.internalRowEncoder(merge.schema)).toDF()
+    BudgetedResult(rows, complete = scanned == nParts, scanned, nParts, peakRows)
   }
 
   /** The self-controlled cancellation reason passed to
@@ -317,28 +208,5 @@ object BudgetedSearch {
       t = t.getCause
     }
     false
-  }
-
-  // ------------------------------------------------------------ finalize
-
-  /** Ungrouped finalize: the state's per-query pools, each sorted and cut
-    * to k ([[KnnKernel.topRows]]). */
-  private def finalizeRows(spark: SparkSession, schema: StructType,
-      state: PoolState[Row], k: Int, ord: Ordering[Row]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(KnnKernel.topRows(KnnKernel.poolRows(state), k, ord).toSeq.asJava,
-      schema)
-  }
-
-  /** Grouped finalize, the driver mirror of [[Search]]'s grouped merge
-    * ([[KnnKernel.groupRows]]). */
-  private def finalizeGrouped(spark: SparkSession, schema: StructType,
-      state: PoolState[Row], cfg: SearchConfig, k: Int, qIdx: Int, scoreIdx: Int,
-      ord: Ordering[Row], groupIdx: Int): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      KnnKernel.groupRows(KnnKernel.poolRows(state), schema, cfg, k, qIdx, scoreIdx, ord,
-        groupIdx).toSeq.asJava,
-      KnnKernel.groupedSchema(schema, qIdx, groupIdx, scoreIdx))
   }
 }

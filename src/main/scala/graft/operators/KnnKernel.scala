@@ -17,8 +17,8 @@ import graft.functions.{ScoreFunctions, ScoreKind, VectorMath}
   * [[Search.search]] and [[Search.multiSearch]] (and so every ANN batch
   * path, the shortlist reranks and `Ann.multiRoute`), and
   * [[BudgetedSearch]], which runs its stage 1 ([[scan]]) in partition
-  * batches and folds the survivors on the driver through the same
-  * bounded pools.
+  * batches and folds each batch's survivors on the driver through the
+  * same stage 2 ([[Merge]]).
   *
   * Plan: the JSON filter stays a Catalyst `Filter` over the data scan;
   * a `Dataset.mapPartitions` over the filtered rows (stage 1, [[Scan]])
@@ -56,8 +56,8 @@ import graft.functions.{ScoreFunctions, ScoreKind, VectorMath}
   * reaches the merge through its own partition. Grouped pools are the
   * same argument per (query, group), which holds when a key cannot span
   * groups: keys cover the group column, or there is no dedup. The one
-  * config outside that (dedup keys missing the group column) keeps the
-  * relational plan, selected in [[Search]]. */
+  * config outside that is [[keysSpanGroups]]: [[Search]] plans it
+  * relationally and [[scan]] refuses it. */
 private[operators] object KnnKernel {
 
   /** The collected query side. `schema` is `query_id`, the vector cast
@@ -110,19 +110,17 @@ private[operators] object KnnKernel {
     }
   }
 
-  /** Total "better first" row ordering: score in the config's direction,
-    * then the tie-break column in its NATIVE ordering (never stringly).
-    * Rows that hold internal values pass `internal`: the tie-break is
-    * then converted before it is compared. */
-  def rowOrdering(schema: StructType, cfg: SearchConfig,
-      scoreIdx: Int, internal: Boolean = false): Ordering[Row] = {
+  /** Total "better first" ordering of rows holding internal values: score
+    * in the config's direction, then the tie-break column in its NATIVE
+    * ordering (never stringly), converted before it is compared. */
+  private def rowOrdering(schema: StructType, cfg: SearchConfig,
+      scoreIdx: Int): Ordering[Row] = {
     val sign = if (cfg.higherIsBetter) -1 else 1
     val tie = cfg.tieBreakCol.map { c =>
       val i = schema.fieldIndex(c)
-      val conv: Any => Any = if (internal) toScala(schema(i).dataType) else identity
-      (i, nativeOrd(schema(i).dataType), conv)
+      (i, nativeOrd(schema(i).dataType), toScala(schema(i).dataType))
     }
-    new Ordering[Row] with Serializable {
+    new Ordering[Row] {
       def compare(a: Row, b: Row): Int = {
         val s = sign * java.lang.Double.compare(
           a.get(scoreIdx).asInstanceOf[Number].doubleValue(),
@@ -144,38 +142,48 @@ private[operators] object KnnKernel {
     case x => x
   }
 
+  /** Grouped, with dedup keys that miss the group column: a key may then
+    * surface in several groups, and a member truncated from one
+    * partition's group pool can re-enter the exact answer when another
+    * partition's better same-key row lands in a DIFFERENT group — bounded
+    * per-partition group pools are not exact for it. No key columns with
+    * dedup on is one key for every row, which spans every group.
+    * [[Search]] plans such a config relationally and [[scan]] refuses it.
+    * (The reference's dedup key is the serialized DatumKey, which
+    * contains the group label, veriservice.proto:56-63, so it never spans
+    * groups.) */
+  def keysSpanGroups(cfg: SearchConfig): Boolean =
+    cfg.groupLimit > 0 && !cfg.assumeUniqueKeys && !cfg.keyCols.contains(cfg.groupLabelCol)
+
   // ------------------------------------------------------------ pools
 
-  /** Bounded best-k pool over any element type (the kernel's scan and
-    * merge fold [[Hit]]s, the budgeted driver fold external [[Row]]s).
-    * `keyOf` null: a plain worst-first bounded heap (O(log k) per
-    * accepted row, O(1) reject against the heap max). `keyOf` non-null:
-    * exact best-per-key dedup inside the k slots (≤ k tracked keys —
-    * correct because once a key is evicted the pool's worst entry only
-    * ever improves, so the evicted key's best can never re-enter the
-    * top-k without a strictly better row, which re-inserts it); a full
-    * pool rejects anything no better than its cached worst before
-    * computing the key, and an accepted insert/eviction pays an O(k)
-    * rescan. `retain` runs exactly once per element, immediately BEFORE
-    * it is first stored — the kernel uses it to copy a row's values out
-    * of the scan's reused buffers only once a pair of it enters a pool.
-    * Pool emptiness is tracked SEPARATELY from `worstKey` (`hasWorst`): a
-    * legitimate NULL dedup-key value must never read as "no worst yet",
-    * or a new key would displace the cached worst unconditionally and the
-    * exactness invariant above would silently break on nullable keyCols. */
-  final class Pool[E](k: Int, ord: Ordering[E], keyOf: E => Any,
-      retain: E => Unit) {
+  /** Bounded best-k pool of [[Hit]]s. `keyOf` null: a plain worst-first
+    * bounded heap (O(log k) per accepted hit, O(1) reject against the
+    * heap max). `keyOf` non-null: exact best-per-key dedup inside the k
+    * slots (≤ k tracked keys — correct because once a key is evicted the
+    * pool's worst entry only ever improves, so the evicted key's best can
+    * never re-enter the top-k without a strictly better row, which
+    * re-inserts it); a full pool rejects anything no better than its
+    * cached worst before computing the key, and an accepted
+    * insert/eviction pays an O(k) rescan. A hit's first `nKept` row
+    * values are copied out of the scan's reused buffers ([[Src.keep]])
+    * only once a pair of it is stored. Pool emptiness is tracked
+    * SEPARATELY from `worstKey` (`hasWorst`): a legitimate NULL dedup-key
+    * value must never read as "no worst yet", or a new key would displace
+    * the cached worst unconditionally and the exactness invariant above
+    * would silently break on nullable keyCols. */
+  private final class Pool(k: Int, ord: Ordering[Hit], keyOf: Hit => Any, nKept: Int) {
     // PriorityQueue dequeues the ord-LARGEST element = the worst
     // ("smaller is better" ordering), so overflow drops the worst
     private val heap =
-      if (keyOf == null) mutable.PriorityQueue.empty[E](ord) else null
+      if (keyOf == null) mutable.PriorityQueue.empty[Hit](ord) else null
     private val best =
-      if (keyOf == null) null else mutable.HashMap.empty[Any, E]
+      if (keyOf == null) null else mutable.HashMap.empty[Any, Hit]
     private var worstKey: Any = null
-    private var worst: E = null.asInstanceOf[E]
+    private var worst: Hit = null
     private var hasWorst = false
     private def rescanWorst(): Unit = {
-      var wk: Any = null; var wr: E = null.asInstanceOf[E]
+      var wk: Any = null; var wr: Hit = null
       var found = false
       best.foreach { case (key, e) =>
         if (!found || ord.compare(e, wr) > 0) { wk = key; wr = e; found = true }
@@ -184,13 +192,13 @@ private[operators] object KnnKernel {
       worst = wr
       hasWorst = found
     }
-    def add(e: E): Unit = {
+    def add(e: Hit): Unit = {
       if (k <= 0) return // limit 0 == the deterministic path's empty limit(0)
       if (heap != null) {
-        // reject BEFORE retaining: a row no better than the full heap's
+        // reject BEFORE keeping: a row no better than the full heap's
         // worst must not pay the admission copy
         if (heap.size >= k && ord.compare(e, heap.head) >= 0) return
-        retain(e)
+        e.src.keep(nKept)
         heap.enqueue(e)
         if (heap.size > k) heap.dequeue()
         return
@@ -203,12 +211,12 @@ private[operators] object KnnKernel {
       best.get(key) match {
         case Some(cur) =>
           if (ord.compare(e, cur) < 0) {
-            retain(e)
+            e.src.keep(nKept)
             best(key) = e
             if (hasWorst && key == worstKey) rescanWorst()
           }
         case None =>
-          retain(e)
+          e.src.keep(nKept)
           if (best.size < k) {
             best(key) = e
             if (!hasWorst || ord.compare(e, worst) > 0) {
@@ -224,78 +232,106 @@ private[operators] object KnnKernel {
       }
     }
     def size: Int = if (heap != null) heap.size else best.size
-    def rows: Iterator[E] =
+    def rows: Iterator[Hit] =
       if (heap != null) heap.iterator else best.valuesIterator
-    /** The worst element once the pool holds k, else null. It only ever
+    /** The worst hit once the pool holds k, else null. It only ever
       * improves from then on: an admission replaces the worst or an entry
       * by something better. */
-    def worstIfFull: E =
-      if (k <= 0 || size < k) null.asInstanceOf[E]
+    def worstIfFull: Hit =
+      if (k <= 0 || size < k) null
       else if (heap != null) heap.head
       else worst
   }
 
   /** One bounded pool per query (ungrouped) or per (query, group)
-    * (grouped). The SAME shape serves as the kernel's per-task pools and
-    * its merge (over [[Hit]]) and as the budgeted driver's incremental
-    * state (over [[Row]]): folding pools through a fresh PoolState is
-    * exact by the associativity of best-per-key-then-top-k (ungrouped) /
-    * per-group best-per-key-then-top-groupLimit when keys cannot span
-    * groups (grouped). */
-  final class PoolState[E](k: Int, gL: Int, ord: Ordering[E],
-      keyOf: E => Any, qKeyOf: E => Any, gKeyOf: E => Any,
-      retain: E => Unit) {
-    private val pools = mutable.HashMap.empty[Any, Pool[E]]
+    * (grouped): the scan's per-task pools and the [[Merge]]'s. Hits are
+    * ordered as `Search` orders rows (score, then the native tie-break of
+    * `tieType`, null for none); the dedup key is the row's `keyIdx`
+    * values, computed on first demand (only pairs that pass a full pool's
+    * worst need it; no key columns: one key for every row, as `groupBy()`
+    * has). Dedup and group keys are copies of internal values, which
+    * compare by value (`UTF8String`, `UnsafeArrayData` by their bytes).
+    * `qKeyOf` gives a hit's query key. Folding pools through a fresh state
+    * is exact by the associativity of best-per-key-then-top-k
+    * (ungrouped) / per-group best-per-key-then-top-groupLimit when keys
+    * cannot span groups (grouped). */
+  private final class PoolState(cfg: SearchConfig, k: Int, tieType: DataType,
+      keyIdx: Array[Int], nKept: Int, qKeyOf: Hit => Any) {
+    private val gL = cfg.groupLimit
+    private val ord: Ordering[Hit] = {
+      val sign = if (cfg.higherIsBetter) -1 else 1
+      val tieOrd = if (tieType != null) nativeOrd(tieType) else null
+      new Ordering[Hit] {
+        def compare(a: Hit, b: Hit): Int = {
+          val s = sign * java.lang.Double.compare(a.score, b.score)
+          if (s != 0 || tieOrd == null) s else tieOrd.compare(a.src.tie, b.src.tie)
+        }
+      }
+    }
+    private val keyOf: Hit => Any =
+      if (cfg.assumeUniqueKeys) null
+      else h => {
+        val s = h.src
+        if (!s.keyed) {
+          s.key =
+            if (keyIdx.length == 1) InternalRow.copyValue(s.row.get(keyIdx(0)))
+            else keyIdx.map(i => InternalRow.copyValue(s.row.get(i))).toSeq
+          s.keyed = true
+        }
+        s.key
+      }
+    private val pools = mutable.HashMap.empty[Any, Pool]
     /** The pool under key `pk`, made on first use. */
-    def pool(pk: Any): Pool[E] =
-      pools.getOrElseUpdate(pk, new Pool[E](if (gL > 0) gL else k, ord, keyOf, retain))
-    def add(e: E): Unit =
-      pool(if (gL > 0) (qKeyOf(e), gKeyOf(e)) else qKeyOf(e)).add(e)
+    def pool(pk: Any): Pool =
+      pools.getOrElseUpdate(pk, new Pool(if (gL > 0) gL else k, ord, keyOf, nKept))
+    def add(h: Hit): Unit =
+      pool(if (gL > 0) (qKeyOf(h), h.src.group) else qKeyOf(h)).add(h)
     def rowCount: Long = pools.valuesIterator.map(_.size.toLong).sum
-    def elements: Iterator[E] = pools.valuesIterator.flatMap(_.rows)
-    /** (pool key, pool) pairs — ungrouped key is the query id, grouped
-      * key is (query id, normalized group value). */
-    def entries: Iterator[(Any, Pool[E])] = pools.iterator
+    def elements: Iterator[Hit] = pools.valuesIterator.flatMap(_.rows)
+    /** (pool key, pool) pairs — ungrouped key is the query key, grouped
+      * key is (query key, group value). */
+    def entries: Iterator[(Any, Pool)] = pools.iterator
   }
 
   // ------------------------------------------------------------ finalize
 
-  /** A state's pools as (pool key, rows) pairs, for the finalizers. */
-  def poolRows(state: PoolState[Row]): Iterator[(Any, Seq[Row])] =
-    state.entries.map { case (pk, pool) => pk -> pool.rows.toSeq }
-
   /** Ungrouped finalize: each pool already holds the deduped best ≤ k
     * rows; sort each by the config's order + native tie-break and
     * truncate to k — best-first within each query. */
-  def topRows(pools: Iterator[(Any, Seq[Row])], k: Int, ord: Ordering[Row]): Iterator[Row] =
+  private def topRows(pools: Iterator[(Any, Seq[Row])], k: Int,
+      ord: Ordering[Row]): Iterator[Row] =
     pools.flatMap { case (_, rows) => rows.sorted(ord).take(k) }
 
-  /** The grouped output schema over a scored schema: query id (if any),
-    * group, group score, then the representative's other columns. */
-  def groupedSchema(schema: StructType, qIdx: Int, groupIdx: Int,
-      scoreIdx: Int): StructType =
-    StructType(
-      (if (qIdx >= 0) Seq(schema(qIdx)) else Nil) ++
-        Seq(schema(groupIdx), StructField(Search.ScoreCol, DoubleType, nullable = true)) ++
-        schema.fields.indices.filter(i => i != qIdx && i != groupIdx && i != scoreIdx)
-          .map(schema.fields))
+  /** The merge's output schema over [[hitSchema]] `hits`: the hits
+    * themselves, or, grouped, the query id (a batch), group, group score,
+    * then the representative's other columns. */
+  def mergedSchema(hits: StructType, cfg: SearchConfig, single: Boolean): StructType =
+    if (cfg.groupLimit == 0) hits
+    else {
+      val (qIdx, groupIdx, scoreIdx) = (if (single) -1 else 0,
+        hits.fieldIndex(cfg.groupLabelCol), hits.fieldIndex(Search.ScoreCol))
+      StructType(
+        (if (qIdx >= 0) Seq(hits(qIdx)) else Nil) ++
+          Seq(hits(groupIdx), StructField(Search.ScoreCol, DoubleType, nullable = true)) ++
+          hits.fields.indices.filter(i => i != qIdx && i != groupIdx && i != scoreIdx)
+            .map(hits.fields))
+    }
 
   /** Grouped finalize (A3+A4): each (query, group) pool holds the deduped
     * top-`groupLimit` members; the group score is their sum
     * (higherIsBetter) or sum/len², folded BEST-FIRST, the representative
     * is the best member, and each query keeps its top-k group rows by
     * the same order + the representative's tie-break, best-first. Rows
-    * follow [[groupedSchema]]. */
-  def groupRows(pools: Iterator[(Any, Seq[Row])], schema: StructType, cfg: SearchConfig,
-      k: Int, qIdx: Int, scoreIdx: Int, ord: Ordering[Row],
-      groupIdx: Int, internal: Boolean = false): Iterator[Row] = {
+    * follow [[mergedSchema]]. */
+  private def groupRows(pools: Iterator[(Any, Seq[Row])], schema: StructType,
+      cfg: SearchConfig, k: Int, qIdx: Int, scoreIdx: Int, ord: Ordering[Row],
+      groupIdx: Int): Iterator[Row] = {
     val payloadIdx = schema.fields.indices.filter { i =>
       i != qIdx && i != groupIdx && i != scoreIdx
     }
     val sign = if (cfg.higherIsBetter) -1 else 1
     val tie = cfg.tieBreakCol.map { c =>
-      val conv: Any => Any = if (internal) toScala(schema(c).dataType) else identity
-      (schema.fieldIndex(c), nativeOrd(schema(c).dataType), conv)
+      (schema.fieldIndex(c), nativeOrd(schema(c).dataType), toScala(schema(c).dataType))
     }
     final case class GroupRow(score: Double, rep: Row, groupVal: Any)
     val groupOrd = new Ordering[GroupRow] {
@@ -343,6 +379,9 @@ private[operators] object KnnKernel {
     var key: Any = null
     var keyed = false
     var kept: Array[Any] = null
+    /** Copies the row's first `n` values, the first time it is called. */
+    def keep(n: Int): Unit =
+      if (kept == null) kept = Array.tabulate(n)(i => InternalRow.copyValue(row.get(i)))
   }
 
   /** One scored (query row, data row) pair. */
@@ -444,42 +483,6 @@ private[operators] object KnnKernel {
     v => if (v == null) null else c(v)
   }
 
-  /** The pools one task folds [[Hit]]s into — the scan's and the merge's —
-    * with `Search`'s order (score, then the native tie-break), the dedup
-    * key computed from the pair's row on first demand (no key columns:
-    * one key for every row, as `groupBy()` has), and the row's first
-    * `nKept` internal values copied once a pair of it is stored. Dedup
-    * and group keys are copies of internal values, which compare by
-    * value (`UTF8String`, `UnsafeArrayData` by their bytes). */
-  private def hitPools(cfg: SearchConfig, k: Int, tieType: DataType, keyIdx: Array[Int],
-      nKept: Int, qKeyOf: Hit => Any): PoolState[Hit] = {
-    val sign = if (cfg.higherIsBetter) -1 else 1
-    val tieOrd = if (tieType != null) nativeOrd(tieType) else null
-    val ord = new Ordering[Hit] {
-      def compare(a: Hit, b: Hit): Int = {
-        val s = sign * java.lang.Double.compare(a.score, b.score)
-        if (s != 0 || tieOrd == null) s else tieOrd.compare(a.src.tie, b.src.tie)
-      }
-    }
-    val keyOf: Hit => Any =
-      if (cfg.assumeUniqueKeys) null
-      else h => {
-        val s = h.src
-        if (!s.keyed) {
-          s.key =
-            if (keyIdx.length == 1) InternalRow.copyValue(s.row.get(keyIdx(0)))
-            else keyIdx.map(i => InternalRow.copyValue(s.row.get(i))).toSeq
-          s.keyed = true
-        }
-        s.key
-      }
-    new PoolState[Hit](k, cfg.groupLimit, ord, keyOf, qKeyOf, h => h.src.group,
-      h => {
-        val s = h.src
-        if (s.kept == null) s.kept = Array.tabulate(nKept)(i => InternalRow.copyValue(s.row.get(i)))
-      })
-  }
-
   /** The [[Src]] of a row holding internal values; `tie` converts the
     * tie-break value for [[nativeOrd]]. */
   private def src(r: Row, tie: Any => Any, tieIdx: Int, groupIdx: Int, q: Any): Src =
@@ -545,7 +548,7 @@ private[operators] object KnnKernel {
         }
       val hib = cfg.higherIsBetter
       val prioritize = cfg.context.prioritize && ctx.n > 0
-      val st = hitPools(cfg, k, if (tieIdx >= 0) schema(tieIdx).dataType else null,
+      val st = new PoolState(cfg, k, if (tieIdx >= 0) schema(tieIdx).dataType else null,
         keyIdx, nData, h => qKeys(h.qi))
       // ungrouped: each query row's pool and its admission threshold, as
       // sign·score (smaller is better); +∞ until the pool is full
@@ -617,33 +620,46 @@ private[operators] object KnnKernel {
     }
   }
 
-  /** Stage 2: fold the survivors of every partition into the same pools,
-    * then the group-score and top-k step. Rows in and out hold internal
-    * values, as in [[Scan]]. `qIdx`: the query id's field, or -1 for a single
-    * query (whose data may carry a `query_id`). */
-  private final class Merge(cfg: SearchConfig, k: Int, schema: StructType, qIdx: Int)
-      extends Serializable {
-    def apply(rows: Iterator[Row]): Iterator[Row] = {
-      val scoreIdx = schema.fieldIndex(Search.ScoreCol)
-      val gL = cfg.groupLimit
-      val groupIdx = if (gL > 0) schema.fieldIndex(cfg.groupLabelCol) else -1
-      val tieIdx = cfg.tieBreakCol.map(schema.fieldIndex).getOrElse(-1)
-      val tie = if (tieIdx >= 0) toScala(schema(tieIdx).dataType) else null
-      val st = hitPools(cfg, k, if (tieIdx >= 0) schema(tieIdx).dataType else null,
-        if (cfg.assumeUniqueKeys) Array.emptyIntArray
-        else cfg.keyCols.map(schema.fieldIndex).toArray,
-        schema.length, h => h.src.q)
+  /** Stage 2, the one fold every kernel search merges through: the
+    * survivors of any set of partitions, folded into the scan's pools,
+    * then the group-score and top-k step. [[plan]] folds each shuffled
+    * partition in a task; [[BudgetedSearch]] folds each finished batch of
+    * partitions on the driver. Rows in and out hold internal values, as
+    * in [[Scan]]; `hits` is their [[hitSchema]] and `single` marks one
+    * query, whose data may carry a `query_id`. */
+  final class Merge(cfg: SearchConfig, hits: StructType, single: Boolean) {
+    private val k = Search.topK(cfg)
+    private val qIdx = if (single) -1 else 0
+    private val scoreIdx = hits.fieldIndex(Search.ScoreCol)
+    private val groupIdx = if (cfg.groupLimit > 0) hits.fieldIndex(cfg.groupLabelCol) else -1
+    private val tieIdx = cfg.tieBreakCol.map(hits.fieldIndex).getOrElse(-1)
+    private val tie = if (tieIdx >= 0) toScala(hits(tieIdx).dataType) else null
+    private val st = new PoolState(cfg, k, if (tieIdx >= 0) hits(tieIdx).dataType else null,
+      if (cfg.assumeUniqueKeys) Array.emptyIntArray
+      else cfg.keyCols.map(hits.fieldIndex).toArray,
+      hits.length, h => h.src.q)
+
+    /** The finished rows' schema ([[mergedSchema]]). */
+    val schema: StructType = mergedSchema(hits, cfg, single)
+
+    def add(rows: Iterator[Row]): Unit =
       while (rows.hasNext) {
         val r = rows.next()
         val q = if (qIdx >= 0) InternalRow.copyValue(r.get(qIdx)) else ()
         st.add(new Hit(r.getDouble(scoreIdx), -1, src(r, tie, tieIdx, groupIdx, q)))
       }
-      val ord = rowOrdering(schema, cfg, scoreIdx, internal = true)
+
+    /** The rows the pools hold now. */
+    def rowCount: Long = st.rowCount
+
+    /** Each query's finished rows, best-first, one query after another. */
+    def result: Iterator[Row] = {
+      val ord = rowOrdering(hits, cfg, scoreIdx)
       val pools = st.entries.map { case (pk, pool) =>
         pk -> pool.rows.map(h => Row.fromSeq(ArraySeq.unsafeWrapArray(h.src.kept))).toSeq
       }
-      if (gL == 0) topRows(pools, k, ord)
-      else groupRows(pools, schema, cfg, k, qIdx, scoreIdx, ord, groupIdx, internal = true)
+      if (cfg.groupLimit == 0) topRows(pools, k, ord)
+      else groupRows(pools, hits, cfg, k, qIdx, scoreIdx, ord, groupIdx)
     }
   }
 
@@ -667,9 +683,20 @@ private[operators] object KnnKernel {
   /** Stage 1 alone: the pool survivors of each partition of the
     * JSON-filtered `data`, holding internal values, in [[hitSchema]] —
     * one output partition per scanned partition. Lazy: no job runs here.
-    * `data` has already passed the reserved-column check. */
+    * Every kernel search enters here, so the input checks live here:
+    * `data` may not carry `score`, nor, for a batch, `query_id`, and a
+    * config whose [[keysSpanGroups]] is refused. */
   def scan(data: DataFrame, qs: Queries, cfg: SearchConfig,
       joinCols: Seq[String]): Dataset[Row] = {
+    Search.requireFreeColumns(data,
+      Search.ScoreCol +: (if (qs.single) Nil else Seq(Search.QueryIdCol)),
+      if (qs.single) "search" else "multiSearch")
+    require(!keysSpanGroups(cfg),
+      s"KnnKernel: grouped top-k with dedup keys ${cfg.keyCols.mkString("[", ", ", "]")} " +
+        s"that do not cover the group column '${cfg.groupLabelCol}' cannot run on " +
+        "bounded per-partition pools (a key may span groups, so truncating a " +
+        "partition's group pool is not exact) — add the group column to keyCols, " +
+        "set assumeUniqueKeys, or use Search.search/multiSearch, which plan it relationally")
     val filtered = data.filter(Search.passesFilters(cfg))
     val nData = data.columns.length
     // score against array<float>, cast by Catalyst exactly as the
@@ -701,8 +728,7 @@ private[operators] object KnnKernel {
   }
 
   /** The kernel plan for `data` against the collected `qs`: [[scan]],
-    * then the merge. Lazy: no job runs here. `data` has already passed
-    * the reserved-column check. */
+    * then the [[Merge]]. Lazy: no job runs here. */
   def plan(data: DataFrame, qs: Queries, cfg: SearchConfig,
       joinCols: Seq[String]): DataFrame = {
     val k = Search.topK(cfg)
@@ -712,18 +738,18 @@ private[operators] object KnnKernel {
       if (qs.single && gL == 0 && cfg.assumeUniqueKeys) hits.toDF()
       else {
         val hitSchema = KnnKernel.hitSchema(data.schema, qs, cfg)
-        val qIdx = if (qs.single) -1 else 0
-        val outSchema =
-          if (gL == 0) hitSchema
-          else groupedSchema(hitSchema, qIdx,
-            hitSchema.fieldIndex(cfg.groupLabelCol), hitSchema.fieldIndex(Search.ScoreCol))
+        // the task closure below captures this flag, not the query set
+        val single = qs.single
         // a batch merges per query; a single query's survivors (k rows
         // per partition, or groupLimit per group per partition) fold in
         // one task, as TakeOrderedAndProject folds its k rows per partition
         val shuffled =
           if (qs.single) hits.repartition(1) else hits.repartition(col(Search.QueryIdCol))
-        Bridge.internalRows(shuffled.toDF()).mapPartitions(
-          new Merge(cfg, k, hitSchema, qIdx).apply _)(Bridge.internalRowEncoder(outSchema)).toDF()
+        Bridge.internalRows(shuffled.toDF()).mapPartitions { rows =>
+          val m = new Merge(cfg, hitSchema, single)
+          m.add(rows)
+          m.result
+        }(Bridge.internalRowEncoder(mergedSchema(hitSchema, cfg, single))).toDF()
       }
     if (qs.single) merged.orderBy(Search.orderCols(cfg, col(Search.ScoreCol)): _*).limit(k)
     else merged

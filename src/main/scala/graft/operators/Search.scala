@@ -246,31 +246,17 @@ object Search {
     knn(data, KnnKernel.singleQuery(query), cfg, Nil)
 
   /** Every search shape: the kernel, or — for the one config it cannot
-    * serve exactly — the relational plan. */
+    * serve exactly, [[KnnKernel.keysSpanGroups]] — the relational plan.
+    * Each checks the reserved columns it writes. */
   private[operators] def knn(data: DataFrame, qs: KnnKernel.Queries,
-      cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
-    if (qs.single)
-      requireFreeColumns(data,
-        ScoreCol +: (if (cfg.groupLimit > 0) Seq(QueryIdCol) else Nil), "search")
-    else requireFreeColumns(data, Seq(QueryIdCol, ScoreCol), "multiSearch")
-    if (keysSpanGroups(cfg)) spanningKeysPlan(data, qs, cfg, joinCols)
+      cfg: SearchConfig, joinCols: Seq[String]): DataFrame =
+    if (KnnKernel.keysSpanGroups(cfg)) spanningKeysPlan(data, qs, cfg, joinCols)
     else KnnKernel.plan(data, qs, cfg, joinCols)
-  }
 
-  /** Grouped, with dedup keys that miss the group column: a key may then
-    * surface in several groups, and a member truncated from one
-    * partition's group pool can re-enter the exact answer when another
-    * partition's better same-key row lands in a DIFFERENT group — bounded
-    * per-partition group pools are not exact for it. (The reference's
-    * dedup key is the serialized DatumKey, which contains the group
-    * label, veriservice.proto:56-63, so it never spans groups.) */
-  private def keysSpanGroups(cfg: SearchConfig): Boolean =
-    cfg.groupLimit > 0 && !cfg.assumeUniqueKeys && !cfg.keyCols.contains(cfg.groupLabelCol)
-
-  /** The relational plan for [[keysSpanGroups]] configs: score every pair,
-    * dedup per (query, key) with `min_by`, group with `CollectTopK`, then
-    * the global top-k. A single query runs as a one-row query frame (its
-    * id null) and ends in `orderBy.limit`. */
+  /** The relational plan for [[KnnKernel.keysSpanGroups]] configs: score
+    * every pair, dedup per (query, key) with `min_by`, group with
+    * `CollectTopK`, then the global top-k. A single query runs as a
+    * one-row query frame (its id null) and ends in `orderBy.limit`. */
   private def spanningKeysPlan(data: DataFrame, qs: KnnKernel.Queries,
       cfg: SearchConfig, joinCols: Seq[String]): DataFrame = {
     import scala.jdk.CollectionConverters._

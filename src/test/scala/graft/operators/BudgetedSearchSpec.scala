@@ -186,6 +186,19 @@ class BudgetedSearchSpec extends SparkTestBase {
       BudgetedSearch.search(groupedCorpus(50), Seq(0f, 0f, 0f, 0f), c,
         budgetMs = 120000L))
     assert(e.getMessage.contains("do not cover the group column"))
+    // dedup on no key columns keys every row alike, so that one key spans
+    // every group: the deterministic answer is a single row
+    val noKeys = groupedCfg.copy(keyCols = Nil, assumeUniqueKeys = false)
+    val sixGroups = (0 until 60)
+      .map(i => (i.toLong, s"g${i % 6}", Array.tabulate(4)(d => (i * 4 + d).toFloat)))
+      .toDF("vec_id", "group_label", "feature").repartition(4)
+    val q = Seq(50f, 51f, 52f, 53f)
+    val eNoKeys = intercept[IllegalArgumentException](
+      BudgetedSearch.search(sixGroups, q, noKeys, budgetMs = 120000L))
+    assert(eNoKeys.getMessage.contains("do not cover the group column"))
+    assert(Search.search(sixGroups, q, noKeys)
+      .select("group_label", "vec_id", Search.ScoreCol).as[(String, Long, Double)]
+      .collect().toSeq == Seq(("g0", 12L, 4.0)))
     // the deterministic path still serves it — build the reviewer's exact
     // scenario and pin its answer as the contract the budget path must
     // not silently corrupt: key 0 in groups G (score worse) and H (best)
@@ -198,6 +211,30 @@ class BudgetedSearchSpec extends SparkTestBase {
         c.copy(limit = 2, tieBreakCol = Some("vec_id")))
       .select("group_label", "vec_id").as[(String, Long)].collect().toSet
     assert(det == Set(("H", 0L), ("G", 1L)), s"deterministic said $det")
+  }
+
+  test("reserved columns: score always, query_id only for a batch, on both entry points") {
+    val data = groupedCorpus(40).withColumn(Search.QueryIdCol, lit(7L)).repartition(4)
+    val q = Seq(0f, 1f, 2f, 3f)
+    // a single query writes no query_id, so data may carry one, grouped or not
+    for (c <- Seq(cfg, groupedCfg)) {
+      val r = BudgetedSearch.search(data, q, c, budgetMs = 120000L)
+      val want = Search.search(data, q, c)
+      val cols = Seq("group_label", "vec_id", Search.QueryIdCol, Search.ScoreCol).map(col)
+      assert(r.rows.select(cols: _*).collect().toSeq == want.select(cols: _*).collect().toSeq)
+      assertSameSchema(r.rows, want)
+    }
+    val queries = groupedCorpus(40).filter($"vec_id" < 2)
+      .select($"vec_id".as(Search.QueryIdCol), $"feature")
+    val scored = data.withColumn(Search.ScoreCol, lit(0.0))
+    for (c <- Seq(cfg, groupedCfg); e <- Seq(
+        intercept[IllegalArgumentException](Search.multiSearch(data, queries, c)),
+        intercept[IllegalArgumentException](
+          BudgetedSearch.multiSearch(data, queries, c, budgetMs = 120000L)),
+        intercept[IllegalArgumentException](Search.search(scored, q, c)),
+        intercept[IllegalArgumentException](
+          BudgetedSearch.search(scored, q, c, budgetMs = 120000L))))
+      assert(e.getMessage.contains("reserved column"), e.getMessage)
   }
 
   test("grouped top-k, ample budget, multi: equals deterministic multiSearch per query") {

@@ -90,8 +90,14 @@ class SearchParityPropertySpec extends SparkTestBase {
       keyCols = Seq("key", "group_label"), assumeUniqueKeys = false),
     "grouped spanning keys" -> base.copy(groupLimit = 2, limit = 3,
       keyCols = Seq("key"), assumeUniqueKeys = false),
+    "grouped on no key columns" -> base.copy(groupLimit = 2, limit = 3,
+      keyCols = Nil, assumeUniqueKeys = false),
     "binary tie-break" -> base.copy(tieBreakCol = Some("blob")),
     "limit 0" -> base.copy(limit = 0))
+
+  /** The configs the kernel refuses and `Search` plans relationally, so
+    * the reference meets itself there. */
+  private def spans(c: SearchConfig): Boolean = KnnKernel.keysSpanGroups(c)
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
@@ -155,10 +161,38 @@ class SearchParityPropertySpec extends SparkTestBase {
     }
   }
 
+  /** The budgeted entry points, with a budget no scan exhausts, fold 8
+    * partitions three at a time through the same merge: the same rows,
+    * scores, schema and order as [[Search]], and the same refusals. */
+  test("budgeted search and multiSearch == Search, folded over several batches") {
+    for (ties <- Seq(true, false); seed <- 1 to 2) {
+      val data = corpus(seed, 150 + 40 * seed, ties)
+      val qs = queries(seed, ties).dropDuplicates(Search.QueryIdCol).drop("cluster")
+      val q = new Random(seed).shuffle(Seq(1f, 0f, 2f).take(Dim))
+      for ((name, c0) <- configs;
+          c <- if (ties) Seq(c0) else Seq(c0, c0.copy(tieBreakCol = None))) {
+        val what = s"seed $seed $name tie=${c.tieBreakCol.isDefined} budgeted"
+        def single() = BudgetedSearch.search(data, q, c, budgetMs = 600000L,
+          batchPartitions = 3)
+        def batch() = BudgetedSearch.multiSearch(data, qs, c, budgetMs = 600000L,
+          batchPartitions = 3)
+        if (spans(c)) {
+          for (e <- Seq(intercept[IllegalArgumentException](single()),
+              intercept[IllegalArgumentException](batch())))
+            assert(e.getMessage.contains("do not cover the group column"), s"$what: $e")
+        } else {
+          val (s, b) = (single(), batch())
+          assert(s.complete && b.complete && b.scannedPartitions == Parts, what)
+          checkSingle(s"$what single", s.rows, Search.search(data, q, c))
+          checkBatch(s"$what batch", b.rows, Search.multiSearch(data, qs, c))
+        }
+      }
+    }
+  }
+
   test("joinCols routing == relational reference: IVF cells, LSH band keys, __cand_q") {
     import org.apache.spark.sql.functions._
-    for (seed <- 4 to 5; (name, c) <- configs
-        if name != "grouped spanning keys" && c.limit > 0) {
+    for (seed <- 4 to 5; (name, c) <- configs if !spans(c) && c.limit > 0) {
       val data = corpus(seed, 200, ties = true)
       val qs = queries(seed, ties = true)
       // IVF: each query row scores only its probed cell
@@ -243,10 +277,33 @@ class SearchParityPropertySpec extends SparkTestBase {
         SearchReference.multiSearch(data, single, c))
       checkSingle(s"tied pools $name single", Search.search(data, Seq(1f, 0f, 1f), c),
         SearchReference.search(data, Seq(1f, 0f, 1f), c))
-      if (name != "grouped spanning keys")
+      if (!spans(c))
         checkBatch(s"tied pools $name cluster",
           Search.multiSearch(data, qs, c, Seq("cluster")),
           SearchReference.multiSearch(data, qs, c, Seq("cluster")))
     }
+  }
+
+  /** The merge must not fork again: only KnnKernel.scala may build a
+    * pool or run the top-k and group finishing step. */
+  test("one stage-2 fold: only KnnKernel builds pools or finishes rows") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val forms = Seq("""new\s+(Pool|PoolState)\b""".r, """\b(topRows|groupRows)\s*\(""".r)
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    val hits = for {
+      f <- sources
+      (ln, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = ln.replaceAll("//.*", "")
+      if !code.trim.startsWith("*")
+      form <- forms if form.findFirstIn(code).isDefined
+    } yield (f.getFileName.toString, form, s"$f:${i + 1}: ${ln.trim}")
+    val (kernel, others) = hits.partition(_._1 == "KnnKernel.scala")
+    assert(forms.forall(form => kernel.exists(_._2 == form)),
+      s"the check no longer sees the kernel's own fold: ${kernel.map(_._3)}")
+    assert(others.isEmpty, s"a second stage-2 fold: ${others.map(_._3).mkString(", ")}")
   }
 }
